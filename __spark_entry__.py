@@ -14,7 +14,9 @@ lines up.
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
+from functools import partial, reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -25,6 +27,25 @@ from serverless_data_pipeline_spark.schemas import (
     SCHEMAS, load_table, register_views,
 )
 from serverless_data_pipeline_spark.operators import stages
+from serverless_data_pipeline_spark.operators.bpe import (
+    bpe_decode_ids, bpe_encode_ids, tokenizer_fertility,
+)
+from serverless_data_pipeline_spark.operators.bpe_artifact import (
+    BPE_RAW_BASE_CHARS, BYTE_LEVEL_COMMITTED_MERGES, COMMITTED_MERGES,
+    RAW_COMMITTED_MERGES, build_byte_level_vocab, build_vocab,
+)
+from serverless_data_pipeline_spark.operators.corpus import (
+    block_loss_mask, block_positions, bloom_decontaminate, chunk_documents,
+    contamination_report, corpus_datasheet, corpus_mix, decontaminate,
+    global_shuffle, leakage_safe_split, pack_bins, pack_sequences,
+    pack_token_blocks, passage_dedup, repeat_by_epochs, reshuffle_blocks,
+    resume_token_blocks, segment_dedup, snapshot_diff, temperature_mix,
+    token_budget_mix, train_test_split, vocabulary,
+)
+from serverless_data_pipeline_spark.operators.graph import pagerank
+from serverless_data_pipeline_spark.operators.incremental import (
+    bootstrap_corpus, commit_batch, incremental_dedup,
+)
 from serverless_data_pipeline_spark.operators.relational import (
     asof_join, dedupe_latest, range_join, top_k, top_k_per_group,
 )
@@ -32,18 +53,40 @@ from serverless_data_pipeline_spark.functions.text import (
     fingerprint, quality_score_expr, shingles_from_tokens, tokens,
 )
 from serverless_data_pipeline_spark.operators.dedup import (
-    dedupe_by_components, embedding_neardup_pairs, minhash_lsh_pairs,
-    neardup_components, ngram_jaccard_pairs, simhash_pairs,
+    corpus_jaccard, dedupe_by_components, duplicate_ngram_fraction,
+    embedding_neardup_pairs, minhash_lsh_pairs, neardup_components,
+    ngram_jaccard_pairs, semantic_dedup, simhash_pairs,
 )
 from serverless_data_pipeline_spark.operators.similarity import (
-    ann_topk, brute_force_topk_join, ivf_topk,
+    achlioptas_matrix, add_sign_lsh_buckets, ann_topk, ann_topk_indexed,
+    ann_topk_join, assign_ivf_cells, brute_force_topk_join,
+    build_ivfpq_index, cluster_balanced_sample, hard_negatives, ivf_topk,
+    ivf_topk_indexed, ivfpq_topk, pq_topk, random_projection,
+    train_ivf_centroids, train_pq_codebooks,
+)
+from serverless_data_pipeline_spark.operators.similarity_artifact import (
+    IVF_COMMITTED_CENTROIDS, PQ_COMMITTED_CODEBOOKS, PQ_ORACLE_QUERY,
+)
+from serverless_data_pipeline_spark.operators.sketches import (
+    cms_build, cms_estimate, hll_build, hll_estimate, hll_merge,
 )
 from serverless_data_pipeline_spark.operators.text import (
-    language_id, quality_features, token_stats,
+    bm25_topk, c4_clean, char_entropy, classifier_quality_score,
+    default_quality_weights, dsir_select, gopher_rules, language_id,
+    lexicon_tag, lm_score, quality_features, redact_pii, repetition_signals,
+    token_stats, top_tfidf_terms,
 )
 from serverless_data_pipeline_spark.operators.multimodal import (
-    attach_binary_payload, extract_features, frame_sample,
-    media_metadata_stats, multimodal_join,
+    attach_binary_payload, extract_features, extract_image_features,
+    extract_video_features, frame_sample, media_metadata_stats,
+    multimodal_join, synthesize_bmp_payload, synthesize_wav_payload,
+    synthesize_y4m_payload,
+)
+from serverless_data_pipeline_spark.operators.urls import (
+    canonicalize_url_sql, host_quota_sample, host_rank, url_host_sql,
+)
+from serverless_data_pipeline_spark.operators.util import (
+    build_concurrently, spread_checkpoint, spread_small_input,
 )
 from serverless_data_pipeline_spark.streaming.windows import (
     session_agg, sliding_agg, stream_stream_join, tumbling_agg,
@@ -98,6 +141,73 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: revenue-by-returnflag aggregation over lineitem (G1 path:
     scan → filter → groupBy → agg → orderBy) at sf0.001."""
     return _q_g1_groupby_agg(spark, "/root/testdata/sf0.001")
+
+
+# ============================================================= arm tables
+#
+# A tagged-union row is an ordered {arm_name: builder} table. A builder
+# takes the row call's `_Shared` intermediates and returns its arm exactly
+# as the row projects it; the row unions the arms in table order, and a
+# bench subquery (`bench_subqueries`) builds one arm alone — so per-arm
+# attribution times the plan the oracle checks.
+
+
+class _Shared:
+    """The intermediates one row call shares between its arms, from a
+    {name: maker(shared)} table. Each is built on first use and then
+    reused: a row builds it once, a single arm builds only what it
+    reads. Per-name locks keep that true when arms build concurrently."""
+
+    def __init__(self, spark, sf, makers):
+        self.spark, self.sf, self._makers = spark, sf, makers
+        self._locks = {name: threading.Lock() for name in makers}
+
+    def __getattr__(self, name):
+        if name.startswith("_") or name not in self._makers:
+            raise AttributeError(name)
+        with self._locks[name]:
+            if name not in self.__dict__:
+                self.__dict__[name] = self._makers[name](self)
+        return self.__dict__[name]
+
+    def t(self, table: str) -> DataFrame:
+        return _t(self.spark, self.sf, table)
+
+
+def _build(arms, s: _Shared, concurrent: bool = False) -> list[DataFrame]:
+    """Every arm of a table, in table order. ``concurrent`` builds them in
+    driver threads (`build_concurrently`) — for rows whose arms do
+    independent EAGER work (checkpoints, CC rounds, k-means fits, writes)
+    while being built; the frames are the same either way."""
+    if concurrent:
+        return build_concurrently(*(partial(b, s) for b in arms.values()))
+    return [b(s) for b in arms.values()]
+
+
+def _union(arms, s: _Shared, concurrent: bool = False) -> DataFrame:
+    return reduce(DataFrame.unionAll, _build(arms, s, concurrent))
+
+
+def _null(dtype: str):
+    return F.lit(None).cast(dtype)
+
+
+def _slots(df, tag_col, tag, layout, **cols) -> DataFrame:
+    """``df`` projected into a union row's layout: the tag column, then
+    the (name, type) slots of ``layout``. A slot given in ``cols`` (a
+    Column or a column name) is taken as is; one left out is a NULL of
+    its type."""
+    unknown = set(cols) - {name for name, _ in layout}
+    if unknown:
+        raise ValueError(f"no such slot: {sorted(unknown)}")
+
+    def slot(name, dtype):
+        c = cols.get(name)
+        if isinstance(c, str):
+            return F.col(c) if c == name else F.col(c).alias(name)
+        return (_null(dtype) if c is None else c).alias(name)
+    tag = F.lit(tag) if isinstance(tag, str) else tag
+    return df.select(tag.alias(tag_col), *(slot(n, t) for n, t in layout))
 
 
 # =============================================================== scans (S)
@@ -216,114 +326,142 @@ def _q_t5_quality_score(spark, sf):
     detail (fractions, per-category PSI and JS terms) — the lang
     summary and detail share ONE checkpointed per-category frame.
     Slot mapping documented at the arm construction below."""
-    score = stages.quality_score(_t(spark, sf, "documents"),
+    return _union(_T5_ARMS, _Shared(spark, sf, _T5_SHARED))
+
+
+_T5_LAYOUT = (("col_name", "string"), ("n_rows", "long"), ("n_null", "long"),
+              ("null_frac", "double"), ("n_distinct", "long"),
+              ("vmin", "double"), ("vmax", "double"), ("vavg", "double"),
+              ("smin", "string"), ("smax", "string"), ("score", "double"))
+
+
+def _t5_row(kind, df, **cols):
+    return _slots(df, "kind", kind, _T5_LAYOUT, **cols)
+
+
+def _t5_score(s):
+    score = stages.quality_score(s.t("documents"),
                                  rules=[F.col("n_chars") >= 200])
-    nulld = F.lit(None).cast("double")
-    nulls = F.lit(None).cast("string")
-    nulll = F.lit(None).cast("long")
-    srow = (spark.createDataFrame([(round(score, 6),)], "score double")
-            .select(F.lit("score").alias("kind"),
-                    nulls.alias("col_name"), nulll.alias("n_rows"),
-                    nulll.alias("n_null"), nulld.alias("null_frac"),
-                    nulll.alias("n_distinct"), nulld.alias("vmin"),
-                    nulld.alias("vmax"), nulld.alias("vavg"),
-                    nulls.alias("smin"), nulls.alias("smax"), "score"))
-    prof = (stages.profile_columns(
-                _t(spark, sf, "events"),
-                ["event_id", "user_id", "event_type", "value", "ts"])
-            .select(F.lit("profile").alias("kind"),
-                    F.col("column").alias("col_name"), "n_rows",
-                    "n_null", "null_frac", "n_distinct", "vmin", "vmax",
-                    "vavg", "smin", "smax", nulld.alias("score")))
+    return _t5_row("score", s.spark.createDataFrame([(round(score, 6),)],
+                                                    "score double"),
+                   score="score")
+
+
+def _t5_profile(s):
+    return _t5_row("profile", stages.profile_columns(
+                       s.t("events"),
+                       ["event_id", "user_id", "event_type", "value", "ts"]),
+                   col_name="column",
+                   **{c: c for c in ("n_rows", "n_null", "null_frac",
+                                     "n_distinct", "vmin", "vmax", "vavg",
+                                     "smin", "smax")})
+
+
+def _t5_anomaly(s):
     # anomaly arm (r7): flag_outliers — per-event-type z>3 outlier
     # monitoring with exact decimal-accumulated stats; rows carry
     # (n_rows, n_null=flagged count, null_frac=flagged rate,
     # n_distinct=non-null count) per event_type
-    an = (stages.flag_outliers(_t(spark, sf, "events"),
-                               "event_type", "value")
+    an = (stages.flag_outliers(s.t("events"), "event_type", "value")
           .groupBy("event_type")
           .agg(F.count("*").alias("__n"),
                F.sum(F.col("is_outlier").cast("long")).alias("__o"),
                F.max("n_g").alias("__g")))
-    arow = an.select(
-        F.lit("anomaly").alias("kind"),
-        F.col("event_type").alias("col_name"),
-        F.col("__n").cast("long").alias("n_rows"),
-        F.col("__o").cast("long").alias("n_null"),
-        F.round(F.col("__o") / F.col("__n"), 6).alias("null_frac"),
-        F.col("__g").cast("long").alias("n_distinct"),
-        nulld.alias("vmin"), nulld.alias("vmax"), nulld.alias("vavg"),
-        nulls.alias("smin"), nulls.alias("smax"), nulld.alias("score"))
-    # drift/mix/mixcat arms (r8): dataset-VERSION QA — the report a
-    # curator reads before promoting corpus v(N+1). Version B is
-    # derived from documents the same way the x8 diff arm derives its
-    # snapshot (%11 removed, %7 edited — here n_chars+10 — ids <20
-    # re-added at +1000000 with lang='xx', a NEW category exercising
-    # the PSI eps-smoothing path):
-    #   drift  -> profile_drift per column: (n_rows=rows_a,
-    #             n_null=rows_b, null_frac=null_frac_delta,
-    #             n_distinct=distinct delta, vmin/vmax=distinct rates,
-    #             vavg=vavg_delta, smin=status,
-    #             score=distinct_rate_delta)
-    #   mix    -> mix_shift_summary per categorical column (lang,
-    #             source): (n_rows=n_cat_a, n_null=n_cat_b,
-    #             n_distinct=n_added, null_frac=tvd, vmin=PSI,
-    #             vmax=JS)
-    #   mixcat -> mix_shift per-lang detail: (col_name='lang:'||cat,
-    #             n_rows=n_a, n_null=n_b, null_frac=frac_delta,
-    #             vmin/vmax=fracs, vavg=psi_term, score=js_term)
-    asnap, bsnap = _t5_snapshots(spark, sf)
-    nulll2 = F.lit(None).cast("long")
-    drift = (stages.profile_drift(asnap, bsnap)
-             .select(F.lit("drift").alias("kind"),
-                     F.col("column").alias("col_name"),
-                     F.col("n_rows_a").alias("n_rows"),
-                     F.col("n_rows_b").alias("n_null"),
-                     F.col("null_frac_delta").alias("null_frac"),
-                     (F.col("n_distinct_b") - F.col("n_distinct_a"))
-                     .cast("long").alias("n_distinct"),
-                     F.col("distinct_rate_a").alias("vmin"),
-                     F.col("distinct_rate_b").alias("vmax"),
-                     F.col("vavg_delta").alias("vavg"),
-                     F.col("status").alias("smin"),
-                     nulls.alias("smax"),
-                     F.col("distinct_rate_delta").alias("score")))
+    return _t5_row("anomaly", an, col_name="event_type",
+                   n_rows=F.col("__n").cast("long"),
+                   n_null=F.col("__o").cast("long"),
+                   null_frac=F.round(F.col("__o") / F.col("__n"), 6),
+                   n_distinct=F.col("__g").cast("long"))
+
+
+# drift/mix/mixcat arms (r8): dataset-VERSION QA — the report a
+# curator reads before promoting corpus v(N+1). Version B is derived
+# from documents the same way the x8 diff arm derives its snapshot
+# (%11 removed, %7 edited — here n_chars+10 — ids <20 re-added at
+# +1000000 with lang='xx', a NEW category exercising the PSI
+# eps-smoothing path):
+#   drift  -> profile_drift per column: (n_rows=rows_a,
+#             n_null=rows_b, null_frac=null_frac_delta,
+#             n_distinct=distinct delta, vmin/vmax=distinct rates,
+#             vavg=vavg_delta, smin=status,
+#             score=distinct_rate_delta)
+#   mix    -> mix_shift_summary per categorical column (lang,
+#             source): (n_rows=n_cat_a, n_null=n_cat_b,
+#             n_distinct=n_added, null_frac=tvd, vmin=PSI,
+#             vmax=JS)
+#   mixcat -> mix_shift per-lang detail: (col_name='lang:'||cat,
+#             n_rows=n_a, n_null=n_b, null_frac=frac_delta,
+#             vmin/vmax=fracs, vavg=psi_term, score=js_term)
+def _t5_drift(s):
+    return _t5_row("drift", stages.profile_drift(*s.snaps),
+                   col_name="column", n_rows="n_rows_a", n_null="n_rows_b",
+                   null_frac="null_frac_delta",
+                   n_distinct=(F.col("n_distinct_b") - F.col("n_distinct_a"))
+                   .cast("long"),
+                   vmin="distinct_rate_a", vmax="distinct_rate_b",
+                   vavg="vavg_delta", smin="status",
+                   score="distinct_rate_delta")
+
+
+def _t5_mix(s):
+    mix = None
+    for c, summ in (("lang", stages.mix_shift_summarize(s.per_lang)),
+                    ("source",
+                     stages.mix_shift_summary(*s.snaps, "source"))):
+        row = _t5_row("mix", summ, col_name=F.lit(c),
+                      n_rows=F.col("n_cat_a").cast("long"),
+                      n_null=F.col("n_cat_b").cast("long"),
+                      null_frac="tvd",
+                      n_distinct=F.col("n_added").cast("long"),
+                      vmin="psi", vmax="js")
+        mix = row if mix is None else mix.unionAll(row)
+    return mix
+
+
+def _t5_mixcat(s):
+    return _t5_row("mixcat", s.per_lang,
+                   col_name=F.concat(F.lit("lang:"), F.col("category")),
+                   n_rows=F.col("n_a").cast("long"),
+                   n_null=F.col("n_b").cast("long"),
+                   null_frac="frac_delta", vmin="frac_a", vmax="frac_b",
+                   vavg="psi_term", score="js_term")
+
+
+def _t5_snapshots(s):
+    """Corpus versions A and B for the t5 drift arms. B derives from
+    documents the way the x8 diff arm derives its snapshot: %11
+    removed, %7 edited (n_chars+10), ids <20 re-added at +1000000 under
+    the NEW language 'xx' (exercises PSI eps-smoothing). Both sides
+    lazily checkpointed — every drift/mix arm reads them without
+    re-deriving from the scan."""
+    docs = s.t("documents")
+    asnap = (docs.select("doc_id", "n_chars", "lang", "source")
+             .localCheckpoint(eager=False))
+    bsnap = ((docs.filter(F.col("doc_id") % 11 != 0)
+              .select("doc_id",
+                      F.when(F.col("doc_id") % 7 == 0,
+                             F.col("n_chars") + 10)
+                      .otherwise(F.col("n_chars")).alias("n_chars"),
+                      "lang", "source")
+              .unionAll(docs.filter(F.col("doc_id") < 20)
+                        .select((F.col("doc_id") + 1000000)
+                                .alias("doc_id"), "n_chars",
+                                F.lit("xx").alias("lang"), "source")))
+             .localCheckpoint(eager=False))
+    return asnap, bsnap
+
+
+_T5_SHARED = {
+    "snaps": _t5_snapshots,
     # the lang per-category frame feeds BOTH the mixcat detail and the
     # lang summary (mix_shift_summarize) — one checkpointed computation,
     # same single-pass discipline as x12's dupboth / x2's curl
-    per_lang = (stages.mix_shift(asnap, bsnap, "lang")
-                .localCheckpoint(eager=False))
-    mix = None
-    for c, summ in (("lang", stages.mix_shift_summarize(per_lang)),
-                    ("source",
-                     stages.mix_shift_summary(asnap, bsnap, "source"))):
-        row = (summ
-               .select(F.lit("mix").alias("kind"),
-                       F.lit(c).alias("col_name"),
-                       F.col("n_cat_a").cast("long").alias("n_rows"),
-                       F.col("n_cat_b").cast("long").alias("n_null"),
-                       F.col("tvd").alias("null_frac"),
-                       F.col("n_added").cast("long").alias("n_distinct"),
-                       F.col("psi").alias("vmin"),
-                       F.col("js").alias("vmax"),
-                       nulld.alias("vavg"), nulls.alias("smin"),
-                       nulls.alias("smax"), nulld.alias("score")))
-        mix = row if mix is None else mix.unionAll(row)
-    mixcat = (per_lang
-              .select(F.lit("mixcat").alias("kind"),
-                      F.concat(F.lit("lang:"), F.col("category"))
-                      .alias("col_name"),
-                      F.col("n_a").cast("long").alias("n_rows"),
-                      F.col("n_b").cast("long").alias("n_null"),
-                      F.col("frac_delta").alias("null_frac"),
-                      nulll2.alias("n_distinct"),
-                      F.col("frac_a").alias("vmin"),
-                      F.col("frac_b").alias("vmax"),
-                      F.col("psi_term").alias("vavg"),
-                      nulls.alias("smin"), nulls.alias("smax"),
-                      F.col("js_term").alias("score")))
-    return (srow.unionAll(prof).unionAll(arow).unionAll(drift)
-            .unionAll(mix).unionAll(mixcat))
+    "per_lang": lambda s: (stages.mix_shift(*s.snaps, "lang")
+                           .localCheckpoint(eager=False)),
+}
+_T5_ARMS = {"score": _t5_score, "profile": _t5_profile,
+            "anomaly": _t5_anomaly, "drift": _t5_drift, "mix": _t5_mix,
+            "mixcat": _t5_mixcat}
 
 
 def _q_t7_filter_project(spark, sf):
@@ -1551,23 +1689,14 @@ def _q_x3_topk_similarity(spark, sf):
     pass, so the row keeps the form that exercises the public
     operator (the x7/x13 checkpoint-no-win precedent). Columns harmonized to (mode, query_id,
     neighbor_id, score)."""
-    from serverless_data_pipeline_spark.operators.similarity import (
-        cluster_balanced_sample, hard_negatives, random_projection,
-    )
-    from serverless_data_pipeline_spark.operators.text import bm25_topk
-    from serverless_data_pipeline_spark.operators.util import (
-        build_concurrently,
-    )
-    # r13: per-subtree spread rejected (see _ann_flavours). r14
+    # r13: per-subtree spread rejected (see the x_approx ANN arms). r14
     # (verdict #9): ONE shared spread_checkpoint leaf feeding all
     # x3/x_approx arms re-tried and REJECTED harder — x3 2.43->3.15 s,
     # x_approx 4.80->9.83 s (alternated min-of-3): the eager checkpoint
     # barrier serializes ahead of every concurrent arm build and the
     # 2000-row table spread to 32 partitions hands 62-row batches to
     # every Arrow stage.
-    e = _t(spark, sf, "embeddings")
-    docs = _t(spark, sf, "documents")
-
+    #
     # r13 (optimization round, guide §2.6): the five arms are lazy but
     # their CONSTRUCTION is ~2.5 s of driver-side expression building
     # and Catalyst analysis (bm25 twice, random-projection's 1024-term
@@ -1575,79 +1704,84 @@ def _q_x3_topk_similarity(spark, sf):
     # release the GIL, so the arm builds parallelize cleanly in JVM
     # threads (interleaved min-of-3 at sf0.1: total 4.8 s -> 3.5 s).
     # Same frames, same rows.
-    def _mk_hn():
-        # hardneg arm (r7 s6): hard-negative mining — top-10
-        # most-similar corpus vectors per query EXCLUDING the query and
-        # its two listed positives (q+1, q+2); ranked on the round-6
-        # cosine in BOTH engines, so the ranking comparison is exact
-        hn_pos = (e.filter(F.col("vec_id") < 5)
-                  .select("vec_id",
-                          F.explode(F.array(F.col("vec_id") + 1,
-                                            F.col("vec_id") + 2))
-                          .alias("pos_id")))
-        return (hard_negatives(e.filter(F.col("vec_id") < 5), hn_pos, e,
-                               "vec_id", "embedding", "vec_id",
-                               "embedding", k=10, dim=64)
-                .select(F.lit("hardneg").alias("mode"), "query_id",
-                        F.col("neg_id").cast("long")
-                        .alias("neighbor_id"),
-                        F.col("cosine").alias("score")))
+    return _union(_X3_ARMS, _Shared(spark, sf, _X3_SHARED), concurrent=True)
 
-    def _mk_cb():
-        return (cluster_balanced_sample(
-                    e, "vec_id", "embedding",
-                    _X3_CENTROIDS, per_cluster=25)
-                .select(F.concat(F.lit("cbal_"),
-                                 F.when(F.col("sampled"), F.lit("s"))
-                                 .otherwise(F.lit("u"))).alias("mode"),
-                        F.col("vec_id").alias("query_id"),
-                        F.col("cell").cast("long").alias("neighbor_id"),
-                        F.col("cell_score").alias("score")))
 
-    def _mk_rp():
-        return (random_projection(e, "embedding", 16, in_dim=64,
-                                  seed=1234)
-                .select(F.lit("rp").alias("mode"),
-                        F.col("vec_id").alias("query_id"),
-                        F.posexplode("proj"))
-                .select("mode", "query_id",
-                        F.col("pos").cast("long").alias("neighbor_id"),
-                        F.col("col").alias("score")))
+def _x3_cosine(s):
+    e = s.e
+    queries_df = e.filter(F.col("vec_id") < 5)
+    return (brute_force_topk_join(queries_df, e, "vec_id",
+                                  "embedding", "vec_id",
+                                  "embedding", k=10)
+            .select(F.lit("cosine").alias("mode"), "query_id",
+                    F.col("neighbor_id").cast("long"),
+                    F.col("cosine").alias("score")))
 
-    def _mk_cos():
-        queries_df = e.filter(F.col("vec_id") < 5)
-        return (brute_force_topk_join(queries_df, e, "vec_id",
-                                      "embedding", "vec_id",
-                                      "embedding", k=10)
-                .select(F.lit("cosine").alias("mode"), "query_id",
-                        F.col("neighbor_id").cast("long"),
-                        F.col("cosine").alias("score")))
 
-    def _mk_bm():
-        bm = None
-        for qid, q in enumerate(("spark join order window",
-                                 "merge sort key table scan")):
-            arm = (bm25_topk(docs, "doc_id", "text", q, k=10)
-                   .select(F.lit("bm25").alias("mode"),
-                           F.lit(qid).cast("long").alias("query_id"),
-                           F.col("doc_id").cast("long")
-                           .alias("neighbor_id"),
-                           F.round("bm25", 6).alias("score")))
-            bm = arm if bm is None else bm.unionAll(arm)
-        return bm
+def _x3_bm25(s):
+    bm = None
+    for qid, q in enumerate(("spark join order window",
+                             "merge sort key table scan")):
+        arm = (bm25_topk(s.docs, "doc_id", "text", q, k=10)
+               .select(F.lit("bm25").alias("mode"),
+                       F.lit(qid).cast("long").alias("query_id"),
+                       F.col("doc_id").cast("long")
+                       .alias("neighbor_id"),
+                       F.round("bm25", 6).alias("score")))
+        bm = arm if bm is None else bm.unionAll(arm)
+    return bm
 
-    cos, bm, rp, cb, hn = build_concurrently(
-        _mk_cos, _mk_bm, _mk_rp, _mk_cb, _mk_hn)
-    return cos.unionAll(bm).unionAll(rp).unionAll(cb).unionAll(hn)
+
+def _x3_rp(s):
+    return (random_projection(s.e, "embedding", 16, in_dim=64, seed=1234)
+            .select(F.lit("rp").alias("mode"),
+                    F.col("vec_id").alias("query_id"),
+                    F.posexplode("proj"))
+            .select("mode", "query_id",
+                    F.col("pos").cast("long").alias("neighbor_id"),
+                    F.col("col").alias("score")))
+
+
+def _x3_cbal(s):
+    return (cluster_balanced_sample(
+                s.e, "vec_id", "embedding", _X3_CENTROIDS, per_cluster=25)
+            .select(F.concat(F.lit("cbal_"),
+                             F.when(F.col("sampled"), F.lit("s"))
+                             .otherwise(F.lit("u"))).alias("mode"),
+                    F.col("vec_id").alias("query_id"),
+                    F.col("cell").cast("long").alias("neighbor_id"),
+                    F.col("cell_score").alias("score")))
+
+
+def _x3_hardneg(s):
+    # hardneg arm (r7 s6): hard-negative mining — top-10 most-similar
+    # corpus vectors per query EXCLUDING the query and its two listed
+    # positives (q+1, q+2); ranked on the round-6 cosine in BOTH
+    # engines, so the ranking comparison is exact
+    e = s.e
+    hn_pos = (e.filter(F.col("vec_id") < 5)
+              .select("vec_id",
+                      F.explode(F.array(F.col("vec_id") + 1,
+                                        F.col("vec_id") + 2))
+                      .alias("pos_id")))
+    return (hard_negatives(e.filter(F.col("vec_id") < 5), hn_pos, e,
+                           "vec_id", "embedding", "vec_id",
+                           "embedding", k=10, dim=64)
+            .select(F.lit("hardneg").alias("mode"), "query_id",
+                    F.col("neg_id").cast("long").alias("neighbor_id"),
+                    F.col("cosine").alias("score")))
+
+
+_X3_SHARED = {"e": lambda s: s.t("embeddings"),
+              "docs": lambda s: s.t("documents")}
+_X3_ARMS = {"cosine": _x3_cosine, "bm25": _x3_bm25, "rp": _x3_rp,
+            "cbal": _x3_cbal, "hardneg": _x3_hardneg}
 
 
 def _x3_centroids() -> list[list[float]]:
     """The committed x3 cbal centroids: the 4 transposed columns of
     achlioptas_matrix(64, 4, seed=99) — signed-sparse, seed-derived,
     reproducible anywhere."""
-    from serverless_data_pipeline_spark.operators.similarity import (
-        achlioptas_matrix,
-    )
     return [[float(x) for x in col]
             for col in zip(*achlioptas_matrix(64, 4, seed=99))]
 
@@ -1675,30 +1809,39 @@ def _q_x5_text_signals(spark, sf):
     integer accumulation, value-checked. Measured sf0.1:
     7.5s cold / 2.5s warm for the 4-frame join form -> 4.3 / 2.0
     single-pass (pre-r7)."""
-    from serverless_data_pipeline_spark.operators.text import (
-        char_entropy, top_tfidf_terms,
-    )
-    docs = _t(spark, sf, "documents")
-    base = quality_features(language_id(docs)).select(
-        "doc_id", "lang", "predicted_lang", "q_chars", "q_tokens",
-        "q_punct_ratio", "q_stopword_ratio", "q_score",
-        fingerprint("text").alias("fp"))
-    dupc = base.groupBy("fp").agg(F.count("*").alias("dup_count"))
-    stats = token_stats(docs).select(
-        "lang", "total_tokens", "total_bpe_tokens", "vocab")
-    kw = top_tfidf_terms(docs, "doc_id", "text", top_n=3)
-    ent = char_entropy(docs.select("doc_id", "text"), "doc_id", "text")
-    return (base.join(dupc, "fp")
+    sig, dups, stats, terms, ent = _build(
+        _X5_ARMS, _Shared(spark, sf, _X5_SHARED))
+    return (sig.join(dups, "fp")
             .join(F.broadcast(stats), "lang").drop("lang")
-            .join(kw, "doc_id", "left")
+            .join(terms, "doc_id", "left")
             .withColumn("top_terms", F.coalesce("top_terms", F.lit("")))
-            .join(ent.select("doc_id", "n_distinct_chars",
-                             "char_entropy"), "doc_id", "left")
+            .join(ent, "doc_id", "left")
             .select("doc_id", "predicted_lang", "q_chars", "q_tokens",
                     "q_punct_ratio", "q_stopword_ratio", "q_score",
                     "fp", "dup_count", "total_tokens", "total_bpe_tokens",
                     "vocab", "top_terms", "n_distinct_chars",
                     "char_entropy"))
+
+
+_X5_SHARED = {
+    "docs": lambda s: s.t("documents"),
+    "base": lambda s: quality_features(language_id(s.docs)).select(
+        "doc_id", "lang", "predicted_lang", "q_chars", "q_tokens",
+        "q_punct_ratio", "q_stopword_ratio", "q_score",
+        fingerprint("text").alias("fp")),
+}
+# a join row, not a union: the arms are the join inputs, in join order
+_X5_ARMS = {
+    "signals": lambda s: s.base,
+    "dups": lambda s: s.base.groupBy("fp").agg(
+        F.count("*").alias("dup_count")),
+    "stats": lambda s: token_stats(s.docs).select(
+        "lang", "total_tokens", "total_bpe_tokens", "vocab"),
+    "terms": lambda s: top_tfidf_terms(s.docs, "doc_id", "text", top_n=3),
+    "entropy": lambda s: char_entropy(
+        s.docs.select("doc_id", "text"), "doc_id", "text").select(
+        "doc_id", "n_distinct_chars", "char_entropy"),
+}
 
 
 def _q_x6_multimodal(spark, sf):
@@ -1748,22 +1891,33 @@ def _q_x6_multimodal(spark, sf):
     sample_sum, rms, NULL); img rows carry (media_id, pixel_sum,
     corner_rgb, wsum, NULL, 'WxH'); vid rows carry (media_id,
     plane_sum, corner_yuv, wsum, frame-weighted-luma-sum, 'WxHxN')."""
-    joined = multimodal_join(_t(spark, sf, "documents"),
-                             _t(spark, sf, "embeddings"))
+    return _union(_X6_ARMS, _Shared(spark, sf, {}))
+
+
+_X6_LAYOUT = (("key", "string"), ("a", "long"), ("b", "long"), ("c", "long"),
+              ("v", "double"), ("h", "string"))
+
+
+def _x6_row(kind, df, **cols):
+    """An x6 arm: media-grain arms key on the media id."""
+    cols.setdefault("key", F.col("media_id").cast("string"))
+    return _slots(df, "kind", kind, _X6_LAYOUT, **cols)
+
+
+def _x6_media(s):
+    joined = multimodal_join(s.t("documents"), s.t("embeddings"))
     joined = joined.withColumn(
         "src_label", F.concat_ws("#", "source",
                                  F.pmod(F.col("label"), F.lit(2))))
     media_j = attach_binary_payload(joined, "doc_id", "text", "src_label")
-    media = (media_metadata_stats(media_j)
-             .select(F.lit("media").alias("kind"),
-                     F.concat_ws("|", "mime", "source").alias("key"),
-                     F.col("n_items").cast("long").alias("a"),
-                     F.col("total_bytes").cast("long").alias("b"),
-                     F.lit(None).cast("long").alias("c"),
-                     F.col("avg_bytes").alias("v"),
-                     F.lit(None).cast("string").alias("h")))
+    return _x6_row("media", media_metadata_stats(media_j),
+                   key=F.concat_ws("|", "mime", "source"),
+                   a=F.col("n_items").cast("long"),
+                   b=F.col("total_bytes").cast("long"), v="avg_bytes")
 
-    payload = attach_binary_payload(_t(spark, sf, "documents"),
+
+def _x6_binary(s):
+    payload = attach_binary_payload(s.t("documents"),
                                     "doc_id", "text", "source")
     feats = extract_features(payload).select(
         "media_id", "n_bytes",
@@ -1776,28 +1930,21 @@ def _q_x6_multimodal(spark, sf):
               .groupBy("media_id")
               .agg(F.count("*").alias("n_frames"),
                    F.max("byte_offset").alias("last_offset")))
-    binary = (feats.join(frames, "media_id")
-              .select(F.lit("binary").alias("kind"),
-                      F.col("media_id").cast("string").alias("key"),
-                      F.col("n_bytes").cast("long").alias("a"),
-                      F.col("n_frames").cast("long").alias("b"),
-                      F.col("last_offset").cast("long").alias("c"),
-                      F.lit(None).cast("double").alias("v"),
-                      F.col("counts_csv").alias("h")))
+    return _x6_row("binary", feats.join(frames, "media_id"),
+                   a=F.col("n_bytes").cast("long"),
+                   b=F.col("n_frames").cast("long"),
+                   c=F.col("last_offset").cast("long"), h="counts_csv")
 
-    from serverless_data_pipeline_spark.operators.multimodal import (
-        synthesize_wav_payload,
-    )
+
+def _x6_decoded(s):
     wav = synthesize_wav_payload(
-        _t(spark, sf, "documents").select("doc_id"), "doc_id")
-    decoded = (extract_features(wav, decode_stub=False)
-               .select(F.lit("decoded").alias("kind"),
-                       F.col("media_id").cast("string").alias("key"),
-                       F.col("n_frames").alias("a"),
-                       F.col("sample_rate").cast("long").alias("b"),
-                       F.col("sample_sum").alias("c"),
-                       F.col("rms").alias("v"),
-                       F.lit(None).cast("string").alias("h")))
+        s.t("documents").select("doc_id"), "doc_id")
+    return _x6_row("decoded", extract_features(wav, decode_stub=False),
+                   a="n_frames", b=F.col("sample_rate").cast("long"),
+                   c="sample_sum", v="rms")
+
+
+def _x6_img(s):
     # img arm (r11, closing the image half of the decode stub): a REAL
     # image decode — synthesize_bmp_payload builds a genuine 24-bit
     # uncompressed BMP per doc, extract_image_features parses it back
@@ -1805,80 +1952,53 @@ def _q_x6_multimodal(spark, sf):
     # oracle recomputes pixel_sum / corner_rgb / wsum from the
     # generator's closed form, so a scrambled row or channel order
     # hash-mismatches even when the order-invariant sum agrees.
-    from serverless_data_pipeline_spark.operators.multimodal import (
-        extract_image_features, synthesize_bmp_payload,
-    )
     bmp = synthesize_bmp_payload(
-        _t(spark, sf, "documents").select("doc_id"), "doc_id")
-    img = (extract_image_features(bmp)
-           .select(F.lit("img").alias("kind"),
-                   F.col("media_id").cast("string").alias("key"),
-                   F.col("pixel_sum").alias("a"),
-                   F.col("corner_rgb").alias("b"),
-                   F.col("wsum").alias("c"),
-                   F.lit(None).cast("double").alias("v"),
-                   F.concat_ws("x", F.col("width").cast("string"),
-                               F.col("height").cast("string"))
-                   .alias("h")))
-    # vid arm (r12, closing the video half — the LAST decode stub): a
-    # REAL video demux — synthesize_y4m_payload builds a genuine
-    # YUV4MPEG2 stream per doc (ASCII header + FRAME markers + three
-    # raw C444 planes per frame), extract_video_features parses it
-    # back and frame_sample(decode_stub=False) re-demuxes it at frame
-    # grain; the oracle recomputes plane_sum / corner_yuv / wsum AND
-    # the frame-weighted luma sum from the generator's closed form, so
-    # swapped planes, reordered frames, or a mis-seeked FRAME marker
-    # hash-mismatch even when the order-invariant sum agrees.
-    from serverless_data_pipeline_spark.operators.multimodal import (
-        extract_video_features, synthesize_y4m_payload,
-    )
+        s.t("documents").select("doc_id"), "doc_id")
+    return _x6_row("img", extract_image_features(bmp), a="pixel_sum",
+                   b="corner_rgb", c="wsum",
+                   h=F.concat_ws("x", F.col("width").cast("string"),
+                                 F.col("height").cast("string")))
+
+
+def _x6_video(s, kind, **synth):
+    """vid arm (r12, closing the video half — the LAST decode stub): a
+    REAL video demux — synthesize_y4m_payload builds a genuine
+    YUV4MPEG2 stream per doc (ASCII header + FRAME markers + three raw
+    C444 planes per frame), extract_video_features parses it back and
+    frame_sample(decode_stub=False) re-demuxes it at frame grain; the
+    oracle recomputes plane_sum / corner_yuv / wsum AND the
+    frame-weighted luma sum from the generator's closed form, so
+    swapped planes, reordered frames, or a mis-seeked FRAME marker
+    hash-mismatch even when the order-invariant sum agrees.
+
+    vid420 arm (r13, r12 verdict #2): the SAME demux contract over
+    Y4M's own header-default colorspace (``cspace="420"``) — C420
+    chroma planes are (w/2)x(h/2), so a demuxer that assumed full-size
+    planes reads into the next frame and fails the marker check; wsum
+    weights each plane by ITS OWN grid, which the oracle replays with a
+    separate luma/chroma closed-form expansion."""
     # checkpoint: the synthesized payloads feed TWO demux lineages
     # (features + frame sampling) — without this the synthesis UDF,
     # the arm's dominant cost, would run twice
     y4m = synthesize_y4m_payload(
-        _t(spark, sf, "documents").select("doc_id"), "doc_id") \
-        .localCheckpoint(eager=False)
+        s.t("documents").select("doc_id"), "doc_id",
+        **synth).localCheckpoint(eager=False)
     fsum = (frame_sample(y4m, decode_stub=False)
             .groupBy("media_id")
             .agg(F.sum((F.col("frame_idx") + 1) * F.col("y_sum"))
                  .alias("__fy")))
-    vid = (extract_video_features(y4m).join(fsum, "media_id")
-           .select(F.lit("vid").alias("kind"),
-                   F.col("media_id").cast("string").alias("key"),
-                   F.col("plane_sum").alias("a"),
-                   F.col("corner_yuv").alias("b"),
-                   F.col("wsum").alias("c"),
-                   F.col("__fy").cast("double").alias("v"),
-                   F.concat_ws("x", F.col("width").cast("string"),
-                               F.col("height").cast("string"),
-                               F.col("n_frames").cast("string"))
-                   .alias("h")))
-    # vid420 arm (r13, r12 verdict #2): the SAME demux contract over
-    # Y4M's own header-default colorspace — C420 chroma planes are
-    # (w/2)x(h/2), so a demuxer that assumed full-size planes reads
-    # into the next frame and fails the marker check; wsum weights
-    # each plane by ITS OWN grid, which the oracle replays with a
-    # separate luma/chroma closed-form expansion.
-    y4m420 = synthesize_y4m_payload(
-        _t(spark, sf, "documents").select("doc_id"), "doc_id",
-        cspace="420").localCheckpoint(eager=False)
-    fsum420 = (frame_sample(y4m420, decode_stub=False)
-               .groupBy("media_id")
-               .agg(F.sum((F.col("frame_idx") + 1) * F.col("y_sum"))
-                    .alias("__fy")))
-    vid420 = (extract_video_features(y4m420).join(fsum420, "media_id")
-              .select(F.lit("vid420").alias("kind"),
-                      F.col("media_id").cast("string").alias("key"),
-                      F.col("plane_sum").alias("a"),
-                      F.col("corner_yuv").alias("b"),
-                      F.col("wsum").alias("c"),
-                      F.col("__fy").cast("double").alias("v"),
-                      F.concat_ws("x", F.col("width").cast("string"),
-                                  F.col("height").cast("string"),
-                                  F.col("n_frames").cast("string"))
-                      .alias("h")))
-    return (media.unionAll(binary).unionAll(decoded).unionAll(img)
-            .unionAll(vid).unionAll(vid420))
+    return _x6_row(kind, extract_video_features(y4m).join(fsum, "media_id"),
+                   a="plane_sum", b="corner_yuv", c="wsum",
+                   v=F.col("__fy").cast("double"),
+                   h=F.concat_ws("x", F.col("width").cast("string"),
+                                 F.col("height").cast("string"),
+                                 F.col("n_frames").cast("string")))
+
+
+_X6_ARMS = {"media": _x6_media, "binary": _x6_binary,
+            "decoded": _x6_decoded, "img": _x6_img,
+            "vid": lambda s: _x6_video(s, "vid"),
+            "vid420": lambda s: _x6_video(s, "vid420", cspace="420")}
 
 
 def _q_x4_pq_exact(spark, sf):
@@ -1910,31 +2030,36 @@ def _q_x4_pq_exact(spark, sf):
     min nonzero ADC gap 3.9e-8/7.1e-8, min distance to a 6dp rounding
     boundary 2.9e-4/3.5e-4; floors pytest-pinned in
     tests/test_similarity.py). Columns (method, id, cosine)."""
-    from serverless_data_pipeline_spark.operators.similarity import (
-        build_ivfpq_index, ivfpq_topk, pq_topk,
-    )
-    from serverless_data_pipeline_spark.operators.similarity_artifact import (
-        IVF_COMMITTED_CENTROIDS, PQ_COMMITTED_CODEBOOKS, PQ_ORACLE_QUERY,
-    )
-    e = _t(spark, sf, "embeddings")
-    q, books = PQ_ORACLE_QUERY, PQ_COMMITTED_CODEBOOKS
+    return _union(_X4_ARMS, _Shared(spark, sf, _X4_SHARED))
+
+
+def _x4_pq(s, method, k, refine):
+    return _x4_tag(pq_topk(s.e, "vec_id", "embedding",
+                           PQ_ORACLE_QUERY, k=k,
+                           codebooks=PQ_COMMITTED_CODEBOOKS,
+                           refine=refine), method)
+
+
+def _x4_ivfpq(s):
+    e, books = s.e, PQ_COMMITTED_CODEBOOKS
     cents = IVF_COMMITTED_CENTROIDS
-
-    def tag(df, m):
-        return df.select(F.lit(m).alias("method"),
-                         F.col("vec_id").cast("long").alias("id"),
-                         "cosine")
-
-    adc = tag(pq_topk(e, "vec_id", "embedding", q, k=20,
-                      codebooks=books, refine=0), "pq_adc")
-    ref = tag(pq_topk(e, "vec_id", "embedding", q, k=10,
-                      codebooks=books, refine=50), "pq_refined")
     idx = build_ivfpq_index(e, "vec_id", "embedding", 64,
                             centroids=cents, codebooks=books)
-    ivq = tag(ivfpq_topk(idx, e, "vec_id", "embedding", q, k=10,
-                         centroids=cents, codebooks=books,
-                         n_probe=4, refine=50), "ivfpq")
-    return adc.unionAll(ref).unionAll(ivq)
+    return _x4_tag(ivfpq_topk(idx, e, "vec_id", "embedding",
+                              PQ_ORACLE_QUERY, k=10, centroids=cents,
+                              codebooks=books, n_probe=4, refine=50),
+                   "ivfpq")
+
+
+def _x4_tag(df, m):
+    return df.select(F.lit(m).alias("method"),
+                     F.col("vec_id").cast("long").alias("id"), "cosine")
+
+
+_X4_SHARED = {"e": lambda s: s.t("embeddings")}
+_X4_ARMS = {"pq_adc": lambda s: _x4_pq(s, "pq_adc", k=20, refine=0),
+            "pq_refined": lambda s: _x4_pq(s, "pq_refined", k=10, refine=50),
+            "ivfpq": _x4_ivfpq}
 
 
 def _q_udf_pandas_vectorized(spark, sf):
@@ -1993,7 +2118,7 @@ def _q_x_approx_suite(spark, sf):
       approx value) — G2/G6 approximate aggregates;
     - the four X2 near-dup flavours (minhash/simhash/embedding/semantic)
       carry (NULL, id_a, id_b, flavour score);
-    - the six X4 ANN shapes carry (NULL, query_id, neighbor_id,
+    - the seven X4 ANN shapes carry (NULL, query_id, neighbor_id,
       cosine);
     - `sketch_cms` rows (NEW r7 — Count-Min point-frequency sketch,
       the third standard sketch beside HLL and KLL: depth×width bounded
@@ -2008,774 +2133,189 @@ def _q_x_approx_suite(spark, sf):
       distinct counting) carry (lang, NULL, NULL, estimated distinct
       docs); the merge-within-error-band-of-whole-build and accuracy
       laws are pytest-pinned (tests/test_sketches.py)."""
-    from serverless_data_pipeline_spark.functions.text import tokens
-    from serverless_data_pipeline_spark.operators.sketches import (
-        cms_build, cms_estimate, hll_build, hll_estimate, hll_merge,
-    )
-    from serverless_data_pipeline_spark.operators.util import (
-        spread_small_input,
-    )
-    ids = [F.lit(None).cast("long").alias("id_a"),
-           F.lit(None).cast("long").alias("id_b")]
-    sk = (_t(spark, sf, "orders").groupBy("o_orderstatus")
-          .agg(F.approx_count_distinct("o_custkey").alias("approx_custs"),
-               F.percentile_approx("o_totalprice", 0.5)
-                .alias("approx_median_price")))
-    hll = sk.select(F.lit("sketch_hll").alias("method"),
-                    F.col("o_orderstatus").alias("key"), *ids,
-                    F.col("approx_custs").cast("double").alias("metric"))
-    p50 = sk.select(F.lit("sketch_p50").alias("method"),
-                    F.col("o_orderstatus").alias("key"), *ids,
-                    F.col("approx_median_price").alias("metric"))
-    tok = (spread_small_input(_t(spark, sf, "documents"))
-           .select(F.explode(tokens("text")).alias("t")))
-    cms = cms_build(tok, "t", depth=4, width=4096)
-    probe = tok.sparkSession.createDataFrame(
-        [("table",), ("spark",), ("data",), ("vector",), ("window",)],
-        "t string")
-    cmse = (cms_estimate(cms, probe, "t", depth=4, width=4096)
-            .select(F.lit("sketch_cms").alias("method"),
-                    F.col("t").alias("key"), *ids,
-                    F.col("est").cast("double").alias("metric")))
-    # mergeable-HLL arm: per-source sketches merged per lang — batches
-    # never rescanned, the distinct-doc-id estimate read off the union
-    docs_h = _t(spark, sf, "documents").select(
-        "lang", "source", F.col("doc_id").cast("string").alias("did"))
-    hsk = hll_build(docs_h, "did", by=("lang", "source"))
-    hmg = (hll_estimate(hll_merge(hsk, by=("lang",)), by=("lang",))
-           .select(F.lit("sketch_hll_merged").alias("method"),
-                   F.col("lang").alias("key"), *ids,
-                   F.col("n_distinct_est").cast("double").alias("metric")))
-    nkey = F.lit(None).cast("string").alias("key")
-    # r13 (optimization round, guide §2.6): the flavour chains perform
+    # r13 (optimization round, guide §2.6): the LSH and ANN arms perform
     # independent EAGER construction work — the minhash signature
     # checkpoint, the SemDeDup k-means fit, the IVF k-means fit and the
     # PQ sample collect (7.1 s build / 61 jobs of the row's 11.6 s
     # profile at sf0.1, sequential). Build them concurrently; frames
     # and rows are unchanged.
-    from serverless_data_pipeline_spark.operators.util import (
-        build_concurrently,
-    )
-    mh_f, sh_f, em_f, se_f, ann_f = build_concurrently(
-        lambda: _lsh_flavour_minhash(spark, sf),
-        lambda: _lsh_flavour_simhash(spark, sf),
-        lambda: _lsh_flavour_embedding(spark, sf),
-        lambda: _lsh_flavour_semantic(spark, sf),
-        lambda: _ann_flavours(spark, sf))
-    lsh = (mh_f.unionAll(sh_f).unionAll(em_f).unionAll(se_f)
-           .select("method", nkey, "id_a", "id_b", "metric"))
-    ann = ann_f.select(
-        "method", nkey,
-        F.col("query_id").alias("id_a"),
-        F.col("neighbor_id").alias("id_b"),
-        F.col("cosine").alias("metric"))
-    return (hll.unionAll(p50).unionAll(cmse).unionAll(hmg)
-            .unionAll(lsh).unionAll(ann))
+    return _union(_XA_ARMS, _Shared(spark, sf, _XA_SHARED), concurrent=True)
 
 
-def _sketch_flavour(spark, sf):
-    """bench attribution arm: the G2/G6 sketch aggregates alone."""
-    return (_t(spark, sf, "orders").groupBy("o_orderstatus")
-            .agg(F.approx_count_distinct("o_custkey").alias("approx_custs"),
-                 F.percentile_approx("o_totalprice", 0.5)
-                  .alias("approx_median_price")))
+def _xa(df, method, metric, id_a=None, id_b=None, key=None):
+    """An x_approx arm: sketch arms carry NULL ids, pair/ANN arms a NULL
+    key."""
+    return _slots(df, "method", method,
+                  (("key", "string"), ("id_a", "long"), ("id_b", "long"),
+                   ("metric", "double")),
+                  key=key, id_a=id_a, id_b=id_b, metric=metric)
 
 
-def _ann_flavours(spark, sf):
-    """X4 — all seven ANN shapes in one tagged union (rows-only: LSH/IVF
-    pruning isn't SQL-expressible; recall vs the exact X3 result is
-    pytest-asserted per flavour in tests/test_similarity.py):
+def _xa_pairs(df, method, metric):
+    return _xa(df, method, metric, "id_a", "id_b")
 
-    - `lsh_inline`: single-vector sign-LSH probe, buckets computed on the
-      scan (query_id = -1);
-    - `lsh_indexed`: same probe over MATERIALIZED bucket columns
-      (add_sign_lsh_buckets) — the index-build/probe split that is
-      partition-prunable at 100 TB (query_id = -2);
-    - `lsh_join`: two-table batch ANN join on bucket collisions (5 query
-      vectors) — the scale path when the query set can't broadcast;
-    - `ivf`: probed top-k with a TRAINED k-means codebook
-      (train_ivf_centroids, the real offline index build; query_id = -3);
-    - `ivf_indexed` (r6): the same probe over MATERIALIZED cell ids
-      (assign_ivf_cells) — the inverted-file build/probe split whose
-      single-column IN filter partition-prunes (query_id = -5);
-    - `pq_refined`: product-quantization ADC top-50 shortlist from
-      trained per-subspace codebooks, exact-cosine re-rank to top-10
-      (train_pq_codebooks/pq_topk — the m-bytes-per-vector billion-scale
-      index shape; query_id = -4);
-    - `ivfpq` (r7): the COMPOSED IVFADC layout (Jégou et al. TPAMI'11 /
-      FAISS IVFPQ) — build_ivfpq_index's codes-only (id, cell, code)
-      frame probed by cell pruning + ADC + exact re-rank on a broadcast
-      shortlist join (query_id = -6).
-    """
-    from serverless_data_pipeline_spark.operators.similarity import (
-        add_sign_lsh_buckets, ann_topk_indexed, ann_topk_join,
-        train_ivf_centroids,
-    )
+
+def _xa_sketch_cms(s):
+    tok = (spread_small_input(s.t("documents"))
+           .select(F.explode(tokens("text")).alias("t")))
+    cms = cms_build(tok, "t", depth=4, width=4096)
+    probe = tok.sparkSession.createDataFrame(
+        [("table",), ("spark",), ("data",), ("vector",), ("window",)],
+        "t string")
+    return _xa(cms_estimate(cms, probe, "t", depth=4, width=4096),
+               "sketch_cms", F.col("est").cast("double"), key="t")
+
+
+def _xa_sketch_hll_merged(s):
+    # mergeable-HLL arm: per-source sketches merged per lang — batches
+    # never rescanned, the distinct-doc-id estimate read off the union
+    docs_h = s.t("documents").select(
+        "lang", "source", F.col("doc_id").cast("string").alias("did"))
+    hsk = hll_build(docs_h, "did", by=("lang", "source"))
+    return _xa(hll_estimate(hll_merge(hsk, by=("lang",)), by=("lang",)),
+               "sketch_hll_merged", F.col("n_distinct_est").cast("double"),
+               key="lang")
+
+
+def _xa_semantic(s):
+    """SemDeDup: k-means clusters + within-cluster greedy cosine dedup;
+    dropped rows surface as (dropped, kept-representative) pairs."""
+    # max_iter=5: dedup only needs clusters that co-locate near-identical
+    # vectors, which k-means reaches in a few rounds — at 100 TB the
+    # codebook comes from one offline training anyway.
+    out = semantic_dedup(s.t("embeddings"), "vec_id", "embedding",
+                         threshold=0.3, n_clusters=16, dim=64, max_iter=5)
+    return _xa(out.filter(~F.col("keep")), "semantic", F.col("dup_sim"),
+               F.col("vec_id"), F.col("dup_of"))
+
+
+# The seven X4 ANN shapes (rows-only: LSH/IVF pruning isn't
+# SQL-expressible; recall vs the exact X3 result is pytest-asserted per
+# shape in tests/test_similarity.py), each probing q = [0.1] * 64:
+# - `lsh_inline`: single-vector sign-LSH probe, buckets computed on the
+#   scan (query_id = -1);
+# - `lsh_indexed`: same probe over MATERIALIZED bucket columns
+#   (add_sign_lsh_buckets) — the index-build/probe split that is
+#   partition-prunable at 100 TB (query_id = -2);
+# - `lsh_join`: two-table batch ANN join on bucket collisions (5 query
+#   vectors) — the scale path when the query set can't broadcast;
+# - `ivf`: probed top-k with a TRAINED k-means codebook
+#   (train_ivf_centroids, the real offline index build; query_id = -3);
+# - `ivf_indexed` (r6): the same probe over MATERIALIZED cell ids
+#   (assign_ivf_cells) — the inverted-file build/probe split whose
+#   single-column IN filter partition-prunes (query_id = -5);
+# - `pq_refined`: product-quantization ADC top-50 shortlist from
+#   trained per-subspace codebooks, exact-cosine re-rank to top-10
+#   (train_pq_codebooks/pq_topk — the m-bytes-per-vector billion-scale
+#   index shape; query_id = -4);
+# - `ivfpq` (r7): the COMPOSED IVFADC layout (Jégou et al. TPAMI'11 /
+#   FAISS IVFPQ) — build_ivfpq_index's codes-only (id, cell, code)
+#   frame probed by cell pruning + ADC + exact re-rank on a broadcast
+#   shortlist join (query_id = -6). Reuses the cells/codebooks trained
+#   for `ivf`/`pq_refined`, so the arm's added cost is the probe
+#   itself; the written-partitionBy(cell) form's pruning + codes-only
+#   ReadSchema are plan-asserted in tests/test_similarity.py.
+# multiprobe=2 at the cheap 2x8 LSH config (r6): measured recall@10 on
+# the adversarial random-vector fixture (scripts/ann_recall.py, sf0.1)
+# 0.14 exact-bucket -> 0.30 at 1 flip -> 0.64 at 2 flips — 37 probed
+# buckets/table, zero extra index storage.
+_XA_Q = [0.1] * 64
+
+
+def _xa_ann(df, method, qid=None):
+    nid = "neighbor_id" if "neighbor_id" in df.columns else "vec_id"
+    qcol = F.col("query_id") if qid is None else F.lit(qid).cast("long")
+    return _xa(df, method, F.col("cosine"), qcol, F.col(nid))
+
+
+def _xa_lsh_indexed(s):
+    return _xa_ann(ann_topk_indexed(
+        add_sign_lsh_buckets(s.e, "embedding", dim=64, n_tables=2,
+                             n_planes=8),
+        "vec_id", "embedding", _XA_Q, k=10, n_tables=2, n_planes=8,
+        multiprobe=2), "lsh_indexed", -2)
+
+
+def _xa_lsh_join(s):
+    queries_df = s.e.filter(F.col("vec_id") < 5).selectExpr(
+        "vec_id as q_id", "embedding as qvec")
+    return _xa_ann(ann_topk_join(queries_df, s.e, "q_id", "qvec",
+                                 "vec_id", "embedding", dim=64, k=10,
+                                 n_tables=2, n_planes=8), "lsh_join")
+
+
+def _xa_ivf_indexed(s):
+    return _xa_ann(ivf_topk_indexed(
+        assign_ivf_cells(s.e, "embedding", s.cents, dim=64),
+        "vec_id", "embedding", _XA_Q, k=10, n_probe=4, centroids=s.cents),
+        "ivf_indexed", -5)
+
+
+def _xa_ivfpq(s):
+    ivfpq_index = build_ivfpq_index(s.e, "vec_id", "embedding", 64,
+                                    centroids=s.cents, codebooks=s.books)
+    return _xa_ann(ivfpq_topk(ivfpq_index, s.e, "vec_id", "embedding",
+                              _XA_Q, k=10, centroids=s.cents,
+                              codebooks=s.books, n_probe=4, refine=50),
+                   "ivfpq", -6)
+
+
+_XA_SHARED = {
+    "sk": lambda s: (s.t("orders").groupBy("o_orderstatus")
+                     .agg(F.approx_count_distinct("o_custkey")
+                          .alias("approx_custs"),
+                          F.percentile_approx("o_totalprice", 0.5)
+                          .alias("approx_median_price"))),
     # r13: spreading the 2000-row embeddings scan was A/B-measured and
     # REJECTED (interleaved min-of-3 at sf0.1: x_approx 5.5 s one-
     # partition vs 8.4 s spread) — the repartition instantiates per
     # consumer subtree and 62-row Arrow batches pay more per-task
     # overhead than the parallelism returns on a 2000x64 table.
-    e = _t(spark, sf, "embeddings")
-    q = [0.1] * 64
-
-    def tag(df, method, qid=None):
-        qcol = (F.lit(qid).cast("long").alias("query_id") if qid is not None
-                else F.col("query_id"))
-        nid = ("neighbor_id" if "neighbor_id" in df.columns
-               else F.col("vec_id").alias("neighbor_id"))
-        return df.select(F.lit(method).alias("method"), qcol, nid, "cosine")
-
-    # multiprobe=2 at the cheap 2x8 config (r6): measured recall@10 on
-    # the adversarial random-vector fixture (scripts/ann_recall.py,
-    # sf0.1) 0.14 exact-bucket -> 0.30 at 1 flip -> 0.64 at 2 flips —
-    # 37 probed buckets/table, zero extra index storage.
-    inline = tag(ann_topk(e, "vec_id", "embedding", q, k=10,
-                          n_tables=2, n_planes=8, multiprobe=2),
-                 "lsh_inline", -1)
-    indexed = tag(ann_topk_indexed(
-        add_sign_lsh_buckets(e, "embedding", dim=64, n_tables=2, n_planes=8),
-        "vec_id", "embedding", q, k=10, n_tables=2, n_planes=8,
-        multiprobe=2),
-        "lsh_indexed", -2)
-    queries_df = e.filter(F.col("vec_id") < 5).selectExpr(
-        "vec_id as q_id", "embedding as qvec")
-    batch = tag(ann_topk_join(queries_df, e, "q_id", "qvec",
-                              "vec_id", "embedding", dim=64, k=10,
-                              n_tables=2, n_planes=8), "lsh_join")
-    # r13 (guide §2.6): the two offline trainings — the MLlib IVF
-    # k-means fit and the PQ codebook sample-collect + driver Lloyd —
-    # are independent; run them concurrently instead of back to back.
-    from serverless_data_pipeline_spark.operators.similarity import (
-        train_pq_codebooks,
-    )
-    from serverless_data_pipeline_spark.operators.util import (
-        build_concurrently,
-    )
-    cents, books = build_concurrently(
-        lambda: train_ivf_centroids(e, "embedding", n_cells=8, seed=42,
-                                    max_iter=5),
-        lambda: train_pq_codebooks(e, "embedding", dim=64, m=8, ksub=16,
-                                   seed=42, sample_n=2048))
-    ivf = tag(ivf_topk(e, "vec_id", "embedding", q, k=10, n_probe=4,
-                       centroids=cents), "ivf", -3)
-    from serverless_data_pipeline_spark.operators.similarity import (
-        assign_ivf_cells, ivf_topk_indexed,
-    )
-    ivf_ix = tag(ivf_topk_indexed(
-        assign_ivf_cells(e, "embedding", cents, dim=64),
-        "vec_id", "embedding", q, k=10, n_probe=4, centroids=cents),
-        "ivf_indexed", -5)
-    from serverless_data_pipeline_spark.operators.similarity import (
-        pq_topk,
-    )
-    pq = tag(pq_topk(e, "vec_id", "embedding", q, k=10, codebooks=books,
-                     refine=50), "pq_refined", -4)
-    from serverless_data_pipeline_spark.operators.similarity import (
-        build_ivfpq_index, ivfpq_topk,
-    )
-    # 7th shape (r7, verdict #3): the COMPOSED IVF-PQ index — coarse
-    # cell pruning over a codes-only (id, cell, code) frame + ADC
-    # shortlist + exact re-rank via a broadcast id join back to the raw
-    # vectors. Reuses the cells/codebooks trained above, so the arm's
-    # added cost is the probe itself; the written-partitionBy(cell)
-    # form's pruning + codes-only ReadSchema are plan-asserted in
-    # tests/test_similarity.py.
-    ivfpq_index = build_ivfpq_index(e, "vec_id", "embedding", 64,
-                                    centroids=cents, codebooks=books)
-    ivfpq = tag(ivfpq_topk(ivfpq_index, e, "vec_id", "embedding", q,
-                           k=10, centroids=cents, codebooks=books,
-                           n_probe=4, refine=50), "ivfpq", -6)
-    return (inline.unionAll(indexed).unionAll(batch).unionAll(ivf)
-            .unionAll(ivf_ix).unionAll(pq).unionAll(ivfpq))
-
-
-def _lsh_flavours(spark, sf):
-    """X2 — the four sketch/cluster near-dup flavours in one tagged union
-    (rows-only: LSH sketches and k-means aren't SQL-expressible; each
-    flavour is planted-pair-tested in tests/test_dedup.py): MinHash+LSH
-    banded bucket join, SimHash pigeonhole piece join, sign-LSH embedding
-    bucketing, and SemDeDup k-means-cluster semantic dedup (dropped item
-    -> kept representative pairs). `metric` is the flavour's own score
-    (est. Jaccard / Hamming distance / cosine)."""
-    return (_lsh_flavour_minhash(spark, sf)
-            .unionAll(_lsh_flavour_simhash(spark, sf))
-            .unionAll(_lsh_flavour_embedding(spark, sf))
-            .unionAll(_lsh_flavour_semantic(spark, sf)))
-
-
-def _lsh_flavour_minhash(spark, sf):
-    return (minhash_lsh_pairs(_t(spark, sf, "documents"), "doc_id", "text",
-                              jaccard_threshold=0.4,
-                              materialize_signatures=True)
-            .select(F.lit("minhash").alias("method"), "id_a", "id_b",
-                    F.col("jaccard_est").alias("metric")))
-
-
-def _lsh_flavour_simhash(spark, sf):
-    return (simhash_pairs(_t(spark, sf, "documents"), "doc_id", "text")
-            .select(F.lit("simhash").alias("method"), "id_a", "id_b",
-                    F.col("hamming").cast("double").alias("metric")))
-
-
-def _lsh_flavour_embedding(spark, sf):
-    return (embedding_neardup_pairs(_t(spark, sf, "embeddings"), "vec_id",
-                                    "embedding", threshold=0.3, n_planes=6,
-                                    dim=64)
-            .select(F.lit("embedding").alias("method"), "id_a", "id_b",
-                    F.col("cosine").alias("metric")))
-
-
-def _lsh_flavour_semantic(spark, sf):
-    """SemDeDup: k-means clusters + within-cluster greedy cosine dedup;
-    dropped rows surface as (dropped, kept-representative) pairs."""
-    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
-    # max_iter=5: dedup only needs clusters that co-locate near-identical
-    # vectors, which k-means reaches in a few rounds — at 100 TB the
-    # codebook comes from one offline training anyway.
-    out = semantic_dedup(_t(spark, sf, "embeddings"), "vec_id", "embedding",
-                         threshold=0.3, n_clusters=16, dim=64, max_iter=5)
-    return (out.filter(~F.col("keep"))
-            .select(F.lit("semantic").alias("method"),
-                    F.col("vec_id").alias("id_a"),
-                    F.col("dup_of").alias("id_b"),
-                    F.col("dup_sim").alias("metric")))
-
-
-def bench_subqueries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Per-flavour breakdown of composite headline queries, so bench.py can
-    attribute a composite's wall-clock to its components round over round.
-    NOT part of the driver registry (no leading `_q_`)."""
-    # x_approx_suite.* were named x2_lsh_pairs.* / x4_ann_suite /
-    # g_approx_sketches through r5 — same code, consolidated row (r6).
-    return {
-        "x_approx_suite.minhash": _lsh_flavour_minhash,
-        "x_approx_suite.simhash": _lsh_flavour_simhash,
-        "x_approx_suite.embedding": _lsh_flavour_embedding,
-        "x_approx_suite.semantic": _lsh_flavour_semantic,
-        "x_approx_suite.ann": _ann_flavours,
-        "x_approx_suite.sketches": _sketch_flavour,
-        "x2_dedup_clusters.pairs":
-            lambda spark, sf: _capped_pairs(spark, sf),
-        "x2_dedup_clusters.label":
-            lambda spark, sf: _clusters_flavour(spark, sf, "label_prop"),
-        "x2_dedup_clusters.star":
-            lambda spark, sf: _clusters_flavour(spark, sf, "star"),
-        "x2_dedup_clusters.auto":
-            lambda spark, sf: _clusters_flavour(spark, sf, "auto"),
-        "x12_segment_dedup.segment": _x12_flavour_segment,
-        "x12_segment_dedup.passage": _x12_flavour_passage,
-        # r7: x7 split — one-shot pipeline vs incremental maintenance
-        "x7_corpus_exact.full": _x7_flavour_full,
-        "x7_corpus_exact.incr": _x7_flavour_incr,
-        # r7: x10 gained the report (audit) arm — attribute it
-        "x10_decontaminate.report": _x10_flavour_report,
-        # r7: x13 gained the quantile-bucket arm — attribute it
-        "x13_lm_score.bucket": _x13_flavour_bucket,
-        # r7 session 4: x11 gained the C4 + Gopher page recipes and
-        # x_approx the Count-Min arm — attribute both
-        "x11_text_hygiene.c4gopher": _x11_flavour_c4gopher,
-        "x_approx_suite.cms": _approx_flavour_cms,
-        # r7 session 5: x8 gained the no-split bin-packing arm
-        "x8_corpus_utils.bins": _x8_flavour_bins,
-        # r7 session 6: the six new arms — attribute each
-        "x2_dedup_clusters.pagerank": _x2_flavour_pagerank,
-        "x12_segment_dedup.dupfrac": _x12_flavour_dupfrac,
-        "x3_topk_similarity.rp": _x3_flavour_rp,
-        "x3_topk_similarity.cbal": _x3_flavour_cbal,
-        "x13_lm_score.dsir": _x13_flavour_dsir,
-        "x13_lm_score.lbucket": _x13_flavour_lbucket,
-        "x11_text_hygiene.lex": _x11_flavour_lex,
-        "x5_text_signals.entropy": _x5_flavour_entropy,
-        "x_approx_suite.hllm": _approx_flavour_hllm,
-        "x3_topk_similarity.hardneg": _x3_flavour_hardneg,
-        # r8: x8 gained the tokenizer last mile (BPE encode -> ids ->
-        # packed bins) and t5 the dataset-version drift report —
-        # attribute both
-        "x8_corpus_utils.tok": _x8_flavour_tok,
-        "x8_corpus_utils.rtok": _x8_flavour_rtok,
-        "x8_corpus_utils.atok": _x8_flavour_atok,
-        "t5_quality_score.drift": _t5_flavour_drift,
-        "x2_dedup_clusters.hostrank": _x2_flavour_hostrank,
-        # r9: the directed (hyperlink-semantics) host-rank sibling
-        "x2_dedup_clusters.hostrankd": _x2_flavour_hostrankd,
-        # r10: packed-block materialization, tokenizer fertility, and
-        # the ordered host-quota path — attribute each
-        "x8_corpus_utils.blk": _x8_flavour_blk,
-        "x8_corpus_utils.fert": _x8_flavour_fert,
-        "x2_dedup_clusters.hquotaq": _x2_flavour_hquotaq,
-        # r13 (r12 verdict #6): the last two unattributed x2 arms —
-        # all 10 now carry per-arm warm bands in the README table
-        "x2_dedup_clusters.url": _x2_flavour_url,
-        "x2_dedup_clusters.hquota": _x2_flavour_hquota,
-        # r11: the block trainer companions (pos + eshuf), the real
-        # BMP image decode, and the byte-level tokenizer — attribute
-        # each
-        "x8_corpus_utils.companions": _x8_flavour_companions,
-        "x6_multimodal.img": _x6_flavour_img,
-        "x6_multimodal.vid": _x6_flavour_vid,
-        "x8_corpus_utils.btok": _x8_flavour_btok,
-        # r12: the committed-artifact PQ/IVF-PQ oracle row (outside the
-        # headline like btok/img) — attribute its probe cost
-        "x4_pq_exact.all": _q_x4_pq_exact,
-        # r12: the SFT loss-mask companion arm
-        "x8_corpus_utils.lmask": _x8_flavour_lmask,
-    }
-
-
-def _x2_curl(spark, sf):
-    """doc_id -> canonical URL for the x2 url/hostrank arms — ONE
-    definition shared by the gated arm and the bench flavour (the
-    messy-URL derivation and the generated canonicalization must stay
-    the plan the oracle value-checks). Lazily checkpointed: the url
-    rows and the host map read it without re-running the regex
-    chain."""
-    from serverless_data_pipeline_spark.operators.urls import (
-        canonicalize_url_sql,
-    )
-    return (_t(spark, sf, "documents")
-            .select("doc_id", F.expr(_X2_RAW_URL_SQL).alias("__raw"))
-            .select("doc_id",
-                    F.expr(canonicalize_url_sql("__raw", "spark"))
-                    .alias("cu"))
-            .localCheckpoint(eager=False))
-
-
-def _x2_flavour_hostrank(spark, sf):
-    from serverless_data_pipeline_spark.operators.urls import (
-        host_rank, url_host_sql,
-    )
-    dochost = _x2_curl(spark, sf).select(
-        "doc_id", F.expr(url_host_sql("cu", "spark")).alias("host"))
-    return host_rank(_capped_pairs(spark, sf), dochost, iters=3)
-
-
-def _x2_flavour_hostrankd(spark, sf):
-    from serverless_data_pipeline_spark.operators.urls import (
-        host_rank, url_host_sql,
-    )
-    dochost = _x2_curl(spark, sf).select(
-        "doc_id", F.expr(url_host_sql("cu", "spark")).alias("host"))
-    return host_rank(_capped_pairs(spark, sf), dochost, iters=3,
-                     directed=True)
-
-
-def _t5_snapshots(spark, sf):
-    """Corpus versions A and B for the t5 drift arms — ONE definition
-    shared by the gated arm and the bench flavour, so the flavour
-    always times exactly the plan the oracle value-checks. B derives
-    from documents the way the x8 diff arm derives its snapshot: %11
-    removed, %7 edited (n_chars+10), ids <20 re-added at +1000000
-    under the NEW language 'xx' (exercises PSI eps-smoothing). Both
-    sides lazily checkpointed — every drift/mix arm reads them without
-    re-deriving from the scan."""
-    docs = _t(spark, sf, "documents")
-    asnap = (docs.select("doc_id", "n_chars", "lang", "source")
-             .localCheckpoint(eager=False))
-    bsnap = ((docs.filter(F.col("doc_id") % 11 != 0)
-              .select("doc_id",
-                      F.when(F.col("doc_id") % 7 == 0,
-                             F.col("n_chars") + 10)
-                      .otherwise(F.col("n_chars")).alias("n_chars"),
-                      "lang", "source")
-              .unionAll(docs.filter(F.col("doc_id") < 20)
-                        .select((F.col("doc_id") + 1000000)
-                                .alias("doc_id"), "n_chars",
-                                F.lit("xx").alias("lang"), "source")))
-             .localCheckpoint(eager=False))
-    return asnap, bsnap
-
-
-def _t5_flavour_drift(spark, sf):
-    from serverless_data_pipeline_spark.operators import stages
-    asnap, bsnap = _t5_snapshots(spark, sf)
-    prof = stages.profile_drift(asnap, bsnap)
-    mixl = stages.mix_shift_summary(asnap, bsnap, "lang")
-    return prof.select("column").unionAll(mixl.select(
-        F.lit("lang").alias("column")))
-
-
-def _x8_flavour_tok(spark, sf):
-    # times exactly the arm's plan (r9): planted messy suffix, byte
-    # fallback, unk accounting — the flavour and the gated arm must
-    # never drift apart
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_encode_ids,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        COMMITTED_MERGES, build_vocab,
-    )
-    from serverless_data_pipeline_spark.operators.corpus import pack_bins
-    encd = bpe_encode_ids(
-        _t(spark, sf, "documents")
-        .select("doc_id", F.expr(_X8_TOK_TEXT_SQL).alias("text")),
-        "text", COMMITTED_MERGES, build_vocab(),
-        byte_fallback=True, unk_col="unk_rate")
-    return pack_bins(encd.withColumn("ntok", F.size("token_ids")),
-                     "doc_id", None, budget=1024, n_shards=8,
-                     weight_col="ntok")
-
-
-def _x8_flavour_blk(spark, sf):
-    # times exactly the r10 blk arm's plan: encode -> EOS-appended
-    # per-shard concat -> fixed-length block materialization
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_encode_ids,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        COMMITTED_MERGES, build_vocab,
-    )
-    from serverless_data_pipeline_spark.operators.corpus import (
-        pack_token_blocks,
-    )
-    encd = bpe_encode_ids(
-        _t(spark, sf, "documents")
-        .select("doc_id", F.expr(_X8_TOK_TEXT_SQL).alias("text")),
-        "text", COMMITTED_MERGES, build_vocab(),
-        byte_fallback=True).localCheckpoint(eager=False)
-    return pack_token_blocks(encd.select("doc_id", "token_ids"),
-                             "doc_id", "token_ids",
-                             block_len=_X8_BLK_LEN,
-                             eos_id=_BPE_EOS_ID, n_shards=8)
-
-
-def _x8_flavour_companions(spark, sf):
-    # times exactly the r11 pos+eshuf arms' incremental work beyond
-    # blk: the span-arithmetic companions (no shuffle) and the epoch
-    # reshuffle (one hash exchange over block rows)
-    from serverless_data_pipeline_spark.operators.corpus import (
-        block_positions, reshuffle_blocks,
-    )
-    blkraw = _x8_flavour_blk(spark, sf).localCheckpoint(eager=False)
-    p = block_positions(blkraw).select(
-        "shard", "block_id", F.size("position_ids").alias("n"))
-    e = reshuffle_blocks(blkraw, seed=1, epoch=2, num_shards=4).select(
-        "shard", "block_id", F.col("pos").alias("n"))
-    return p.unionByName(e)
-
-
-def _x8_flavour_lmask(spark, sf):
-    # times exactly the r12 lmask arm's incremental work beyond blk:
-    # one span-grain window + broadcast prompt join + one fine-keyed
-    # regroup back to block grain
-    from serverless_data_pipeline_spark.operators.corpus import (
-        block_loss_mask,
-    )
-    blkraw = _x8_flavour_blk(spark, sf).localCheckpoint(eager=False)
-    prompts = _t(spark, sf, "documents").select(
-        "doc_id",
-        F.when(F.pmod("doc_id", F.lit(3)) != 0,
-               F.pmod("doc_id", F.lit(7))).alias("prompt_len"))
-    return block_loss_mask(blkraw, prompts, "doc_id",
-                           "prompt_len").select(
-        "shard", "block_id",
-        F.expr("aggregate(loss_mask, 0L, (s, x) -> s + x)").alias("n"))
-
-
-def _x8_flavour_btok(spark, sf):
-    # times exactly the r11 btok arm's plan: byte-level encode over
-    # the planted raw text + decode + round-trip compare — one Python
-    # crossing, foldable-map lookups, zero exchanges
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_decode_ids, bpe_encode_ids,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        BYTE_LEVEL_COMMITTED_MERGES, build_byte_level_vocab,
-    )
-    bvocab = build_byte_level_vocab()
-    enc = bpe_encode_ids(
-        _t(spark, sf, "documents")
-        .select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
-        "text", BYTE_LEVEL_COMMITTED_MERGES, bvocab, byte_level=True)
-    return bpe_decode_ids(enc, "token_ids", bvocab, byte_level=True)
-
-
-def _x6_flavour_img(spark, sf):
-    # times exactly the r11 img arm's plan: BMP synth + real decode
-    from serverless_data_pipeline_spark.operators.multimodal import (
-        extract_image_features, synthesize_bmp_payload,
-    )
-    return extract_image_features(synthesize_bmp_payload(
-        _t(spark, sf, "documents").select("doc_id"), "doc_id"))
-
-
-def _x6_flavour_vid(spark, sf):
-    # times exactly the r12 vid arm's plan: Y4M synth + real demux +
-    # real frame sampling
-    from serverless_data_pipeline_spark.operators.multimodal import (
-        extract_video_features, frame_sample, synthesize_y4m_payload,
-    )
-    y4m = synthesize_y4m_payload(
-        _t(spark, sf, "documents").select("doc_id"), "doc_id") \
-        .localCheckpoint(eager=False)
-    return extract_video_features(y4m).join(
-        frame_sample(y4m, decode_stub=False)
-        .groupBy("media_id")
-        .agg(F.sum((F.col("frame_idx") + 1) * F.col("y_sum"))
-             .alias("fy")), "media_id")
-
-
-def _x8_flavour_fert(spark, sf):
-    # times exactly the r10 fert arm's plan: encode -> one
-    # per-language fertility aggregation
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_encode_ids, tokenizer_fertility,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        COMMITTED_MERGES, build_vocab,
-    )
-    encd = bpe_encode_ids(
-        _t(spark, sf, "documents")
-        .select("doc_id", "lang", F.expr(_X8_TOK_TEXT_SQL).alias("text")),
-        "text", COMMITTED_MERGES, build_vocab(), byte_fallback=True)
-    return tokenizer_fertility(encd, "text", "token_ids",
-                               group_col="lang")
-
-
-def _x2_flavour_url(spark, sf):
-    # times exactly the url arm's plan: the messy-URL derivation +
-    # generated canonicalization (r13: per-arm band attribution —
-    # r12 verdict #6 — so a regression in one x2 arm can't hide
-    # inside the composite row's noise)
-    return _x2_curl(spark, sf)
-
-
-def _x2_flavour_hquota(spark, sf):
-    # times exactly the r9 hquota arm's plan: seeded md5-rank window
-    # sample under per-host caps over the canonical host map
-    from serverless_data_pipeline_spark.operators.urls import (
-        host_quota_sample, url_host_sql,
-    )
-    dochost = _x2_curl(spark, sf).select(
-        "doc_id", F.expr(url_host_sql("cu", "spark")).alias("host"))
-    return host_quota_sample(
-        dochost, {"src0.example.com": 5, "src1.example.com": 12},
-        default_quota=8, seed=7)
-
-
-def _x2_flavour_hquotaq(spark, sf):
-    # times exactly the r10 hquotaq arm's plan: derived score,
-    # ordered bucketed path with 16 score-range buckets
-    from serverless_data_pipeline_spark.operators.urls import (
-        host_quota_sample, url_host_sql,
-    )
-    dochost = _x2_curl(spark, sf).select(
-        "doc_id", F.expr(url_host_sql("cu", "spark")).alias("host"))
-    return host_quota_sample(
-        dochost.withColumn("q", F.pmod(F.col("doc_id") * 37,
-                                       F.lit(101))),
-        {"src0.example.com": 5, "src1.example.com": 12},
-        default_quota=8, seed=7, order_col="q",
-        rank_via="bucketed", n_score_buckets=16)
-
-
-def _x8_flavour_rtok(spark, sf):
-    # times exactly the r10 rtok arm's plan: raw-mode encode over the
-    # planted case/whitespace text, raw decode, round-trip compare
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_decode_ids, bpe_encode_ids,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        COMMITTED_MERGES, build_vocab,
-    )
-    rencd = bpe_encode_ids(
-        _t(spark, sf, "documents")
-        .select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
-        "text", COMMITTED_MERGES, build_vocab(),
-        byte_fallback=True, raw=True, unk_col="unk_rate")
-    return (bpe_decode_ids(rencd, "token_ids", build_vocab(),
-                           raw=True, out_col="__rt")
-            .select("doc_id", F.size("token_ids").alias("ntok"),
-                    (F.col("__rt") == F.col("text")).alias("rt_ok")))
-
-
-def _x8_flavour_atok(spark, sf):
-    # times exactly the r10 atok arm's plan: the raw-service artifact
-    # (attached pretokens, space-prefixed merges) end-to-end
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_decode_ids, bpe_encode_ids,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        BPE_RAW_BASE_CHARS, RAW_COMMITTED_MERGES, build_vocab,
-    )
-    rvocab = build_vocab(RAW_COMMITTED_MERGES, BPE_RAW_BASE_CHARS)
-    aencd = bpe_encode_ids(
-        _t(spark, sf, "documents")
-        .select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
-        "text", RAW_COMMITTED_MERGES, rvocab,
-        byte_fallback=True, raw=True, attach_ws=True,
-        unk_col="unk_rate")
-    return (bpe_decode_ids(aencd, "token_ids", rvocab,
-                           raw=True, out_col="__rt")
-            .select("doc_id", F.size("token_ids").alias("ntok"),
-                    (F.col("__rt") == F.col("text")).alias("rt_ok")))
-
-
-def _x3_flavour_hardneg(spark, sf):
-    from serverless_data_pipeline_spark.operators.similarity import (
-        hard_negatives,
-    )
-    e = _t(spark, sf, "embeddings")
-    pos = (e.filter(F.col("vec_id") < 5)
-           .select("vec_id",
-                   F.explode(F.array(F.col("vec_id") + 1,
-                                     F.col("vec_id") + 2))
-                   .alias("pos_id")))
-    return hard_negatives(e.filter(F.col("vec_id") < 5), pos, e,
-                          "vec_id", "embedding", "vec_id", "embedding",
-                          k=10, dim=64)
-
-
-def _approx_flavour_hllm(spark, sf):
-    from serverless_data_pipeline_spark.operators.sketches import (
-        hll_build, hll_estimate, hll_merge,
-    )
-    docs_h = _t(spark, sf, "documents").select(
-        "lang", "source", F.col("doc_id").cast("string").alias("did"))
-    return hll_estimate(
-        hll_merge(hll_build(docs_h, "did", by=("lang", "source")),
-                  by=("lang",)), by=("lang",))
-
-
-def _x5_flavour_entropy(spark, sf):
-    from serverless_data_pipeline_spark.operators.text import char_entropy
-    return (char_entropy(_t(spark, sf, "documents")
-                         .select("doc_id", "text"), "doc_id", "text")
-            .select("doc_id", "n_distinct_chars", "char_entropy"))
-
-
-def _x2_flavour_pagerank(spark, sf):
-    from serverless_data_pipeline_spark.operators.graph import pagerank
-    p = _capped_pairs(spark, sf)
-    return pagerank(p.select(F.col("id_a").alias("src"),
-                             F.col("id_b").alias("dst")),
-                    undirected=True, iters=5)
-
-
-def _x12_flavour_dupfrac(spark, sf):
-    from serverless_data_pipeline_spark.operators.dedup import (
-        duplicate_ngram_fraction,
-    )
-    return (duplicate_ngram_fraction(_t(spark, sf, "documents"),
-                                     "doc_id", "text", n=5)
-            .select("doc_id", "n_ngrams", "dup_ngrams", "dup_ngram_frac"))
-
-
-def _x3_flavour_rp(spark, sf):
-    from serverless_data_pipeline_spark.operators.similarity import (
-        random_projection,
-    )
-    return (random_projection(_t(spark, sf, "embeddings"), "embedding",
-                              16, in_dim=64, seed=1234)
-            .select("vec_id", "proj"))
-
-
-def _x3_flavour_cbal(spark, sf):
-    from serverless_data_pipeline_spark.operators.similarity import (
-        cluster_balanced_sample,
-    )
-    return (cluster_balanced_sample(_t(spark, sf, "embeddings"),
-                                    "vec_id", "embedding",
-                                    _X3_CENTROIDS, per_cluster=25)
-            .select("vec_id", "cell", "cell_score", "sampled"))
-
-
-def _x13_flavour_dsir(spark, sf):
-    from serverless_data_pipeline_spark.operators.text import dsir_select
-    docs = _t(spark, sf, "documents")
-    return (dsir_select(docs, docs.filter(F.col("lang") == "en"),
-                        "doc_id", "text", keep_frac=0.25)
-            .select("doc_id", "dsir_weight", "dsir_kept"))
-
-
-def _x13_flavour_lbucket(spark, sf):
-    from serverless_data_pipeline_spark.operators.stages import (
-        quantile_buckets,
-    )
-    from serverless_data_pipeline_spark.operators.text import lm_score
-    docs = _t(spark, sf, "documents")
-    return (quantile_buckets(
-                lm_score(docs, "doc_id", "text")
-                .join(docs.select("doc_id", "lang"), "doc_id"),
-                "lm_logp", round_scale=6, by="lang")
-            .select("doc_id", "lang", "bucket"))
-
-
-def _x11_flavour_lex(spark, sf):
-    from serverless_data_pipeline_spark.operators.text import lexicon_tag
-    return (lexicon_tag(_t(spark, sf, "documents"), "text",
-                        _X11_LEXICONS, block_categories=("banned",),
-                        min_hits=2)
-            .select("doc_id", "lex_banned", "lex_compute",
-                    "lex_storage", "lex_top", "lex_blocked"))
-
-
-def _x8_flavour_bins(spark, sf):
-    from serverless_data_pipeline_spark.operators.corpus import pack_bins
-    return pack_bins(_t(spark, sf, "documents"), "doc_id", "text",
-                     budget=512, n_shards=8)
-
-
-def _x11_flavour_c4gopher(spark, sf):
-    c4, gop = _x11_page_recipes(_t(spark, sf, "documents"))
-    return c4.join(gop, "doc_id")
-
-
-def _approx_flavour_cms(spark, sf):
-    from serverless_data_pipeline_spark.functions.text import tokens
-    from serverless_data_pipeline_spark.operators.sketches import (
-        cms_build, cms_estimate,
-    )
-    from serverless_data_pipeline_spark.operators.util import (
-        spread_small_input,
-    )
-    tok = (spread_small_input(_t(spark, sf, "documents"))
-           .select(F.explode(tokens("text")).alias("t")))
-    cms = cms_build(tok, "t", depth=4, width=4096)
-    probe = spark.createDataFrame(
-        [("table",), ("spark",), ("data",), ("vector",), ("window",)],
-        "t string")
-    return cms_estimate(cms, probe, "t", depth=4, width=4096)
-
-
-def _x13_flavour_bucket(spark, sf):
-    from serverless_data_pipeline_spark.operators.stages import (
-        quantile_buckets,
-    )
-    from serverless_data_pipeline_spark.operators.text import lm_score
-    return quantile_buckets(
-        lm_score(_t(spark, sf, "documents"), "doc_id", "text"),
-        "lm_logp", round_scale=6)
-
-
-def _x10_flavour_report(spark, sf):
-    from serverless_data_pipeline_spark.operators.corpus import (
-        contamination_report, train_test_split,
-    )
-    split = train_test_split(_t(spark, sf, "documents"), "doc_id",
-                             hashed=False)
-    return contamination_report(split.filter(F.col("split") == "train"),
-                                split.filter(F.col("split") == "eval"),
-                                "doc_id", "text", n=5)
-
-
-def _x12_flavour_segment(spark, sf):
-    from serverless_data_pipeline_spark.operators.corpus import segment_dedup
-    return segment_dedup(_t(spark, sf, "documents"), "doc_id", "text",
-                         segment_words=10)
-
-
-def _x12_flavour_passage(spark, sf):
-    from serverless_data_pipeline_spark.operators.corpus import passage_dedup
-    return passage_dedup(_t(spark, sf, "documents"), "doc_id", "text", k=8)
-
-
-def _capped_pairs(spark, sf):
-    """The df-capped exact-Jaccard pair list shared by x2_dedup_clusters'
-    three arms (and benched standalone as x2_dedup_clusters.pairs)."""
-    return ngram_jaccard_pairs(_t(spark, sf, "documents"), "doc_id", "text",
-                               n=3, threshold=0.4, max_doc_freq=100,
-                               materialize_index=True)
+    "e": lambda s: s.t("embeddings"),
+    # the two offline trainings (the MLlib IVF k-means fit and the PQ
+    # codebook sample-collect + driver Lloyd) are independent; the arms
+    # that read them build concurrently, so they train concurrently
+    "cents": lambda s: train_ivf_centroids(s.e, "embedding", n_cells=8,
+                                           seed=42, max_iter=5),
+    "books": lambda s: train_pq_codebooks(s.e, "embedding", dim=64, m=8,
+                                          ksub=16, seed=42, sample_n=2048),
+}
+_XA_ARMS = {
+    "sketch_hll": lambda s: _xa(s.sk, "sketch_hll",
+                                F.col("approx_custs").cast("double"),
+                                key="o_orderstatus"),
+    "sketch_p50": lambda s: _xa(s.sk, "sketch_p50",
+                                F.col("approx_median_price"),
+                                key="o_orderstatus"),
+    "sketch_cms": _xa_sketch_cms,
+    "sketch_hll_merged": _xa_sketch_hll_merged,
+    "minhash": lambda s: _xa_pairs(
+        minhash_lsh_pairs(s.t("documents"), "doc_id", "text",
+                          jaccard_threshold=0.4,
+                          materialize_signatures=True),
+        "minhash", F.col("jaccard_est")),
+    "simhash": lambda s: _xa_pairs(
+        simhash_pairs(s.t("documents"), "doc_id", "text"), "simhash",
+        F.col("hamming").cast("double")),
+    "embedding": lambda s: _xa_pairs(
+        embedding_neardup_pairs(s.t("embeddings"), "vec_id", "embedding",
+                                threshold=0.3, n_planes=6, dim=64),
+        "embedding", F.col("cosine")),
+    "semantic": _xa_semantic,
+    "lsh_inline": lambda s: _xa_ann(
+        ann_topk(s.e, "vec_id", "embedding", _XA_Q, k=10, n_tables=2,
+                 n_planes=8, multiprobe=2), "lsh_inline", -1),
+    "lsh_indexed": _xa_lsh_indexed,
+    "lsh_join": _xa_lsh_join,
+    "ivf": lambda s: _xa_ann(ivf_topk(s.e, "vec_id", "embedding", _XA_Q,
+                                      k=10, n_probe=4, centroids=s.cents),
+                             "ivf", -3),
+    "ivf_indexed": _xa_ivf_indexed,
+    "pq_refined": lambda s: _xa_ann(
+        pq_topk(s.e, "vec_id", "embedding", _XA_Q, k=10, codebooks=s.books,
+                refine=50), "pq_refined", -4),
+    "ivfpq": _xa_ivfpq,
+}
 
 
 def _q_x2_dedup_clusters(spark, sf):
@@ -2847,37 +2387,13 @@ def _q_x2_dedup_clusters(spark, sf):
     jobs, 12.3 s of the row's 13.3 s profile at sf0.1). The chains are
     independent given the checkpointed pair list, so they now build
     through `build_concurrently`: the host/url chain overlaps pair-gen,
-    and the two CC algorithms overlap each other the moment the pair
-    leaf lands. Same frames, same rows — only the schedule changes."""
-    from serverless_data_pipeline_spark.operators.util import (
-        build_concurrently,
-    )
-
-    def _chain_hosts():
-        from serverless_data_pipeline_spark.operators.urls import (
-            host_quota_sample, url_host_sql,
-        )
-        curl = _x2_curl(spark, sf)
-        dochost = curl.select(
-            "doc_id", F.expr(url_host_sql("cu", "spark")).alias("host"))
-        hq_df = host_quota_sample(dochost,
-                                  {"src0.example.com": 5,
-                                   "src1.example.com": 12},
-                                  default_quota=8, seed=7)
-        hqq_df = host_quota_sample(
-            dochost.withColumn(
-                "q", F.pmod(F.col("doc_id") * 37, F.lit(101))),
-            {"src0.example.com": 5, "src1.example.com": 12},
-            default_quota=8, seed=7, order_col="q",
-            rank_via="bucketed", n_score_buckets=16)
-        return curl, dochost, hq_df, hqq_df
-
+    and the CC chain overlaps the rank-kernel builds the moment the
+    pair leaf lands. Same frames, same rows — only the schedule
+    changes."""
+    s = _Shared(spark, sf, _X2_SHARED)
     # Stage 1: the pair-gen checkpoint and the host/url chain (its
     # quota-guard collect + bucketed percentile probes) are independent.
-    pairs, (curl, dochost, hq_df, hqq_df) = build_concurrently(
-        lambda: _capped_pairs(spark, sf).localCheckpoint(eager=True),
-        _chain_hosts)
-
+    build_concurrently(lambda: s.pairs, lambda: (s.hq, s.hqq))
     # Stage 2, all over the checkpointed pair leaf: the two CC chains
     # (driver-round-latency-bound: tiny checkpoint + probe jobs per
     # round) and the three PageRank-kernel BUILDS. The latter are
@@ -2888,110 +2404,115 @@ def _q_x2_dedup_clusters(spark, sf):
     # SEQUENTIAL in one chain: concurrent label/star measured SLOWER
     # than back-to-back (9.9 s vs 7.5 s entry build — their interleaved
     # rounds queue on the driver event loop instead of overlapping).
-    from serverless_data_pipeline_spark.operators.graph import pagerank
-    from serverless_data_pipeline_spark.operators.urls import host_rank
+    build_concurrently(lambda: (s.labmap, s.starmap), lambda: s.pr,
+                       lambda: s.hrank, lambda: s.hrankd)
+    return _union(_X2_ARMS, s)
 
-    def _chain_cc():
-        # the label-prop component map feeds BOTH the label arm and the
-        # csize histogram — checkpoint it so the CC rounds run once
-        labmap = (neardup_components(pairs, algorithm="label_prop")
-                  .localCheckpoint(eager=True))
-        starmap = neardup_components(pairs, algorithm="star")
-        return labmap, starmap
 
-    ((labmap, starmap), pr_ranks, hrank_ranks, hrankd_ranks) = \
-        build_concurrently(
-            _chain_cc,
-            lambda: pagerank(pairs.select(F.col("id_a").alias("src"),
-                                          F.col("id_b").alias("dst")),
-                             undirected=True, iters=5),
-            lambda: host_rank(pairs, dochost, iters=3),
-            lambda: host_rank(pairs, dochost, iters=3, directed=True))
-    nmetric = F.lit(None).cast("double").alias("metric")
-    nh = F.lit(None).cast("string").alias("h")
-    pair_rows = pairs.select(F.lit("pairs").alias("algo"), "id_a", "id_b",
-                             F.col("jaccard").alias("metric"), nh)
-    label = labmap.select(F.lit("label").alias("algo"),
-                          F.col("id").alias("id_a"),
-                          F.col("component_id").alias("id_b"), nmetric,
-                          nh)
-    star = (starmap
-            .select(F.lit("star").alias("algo"),
-                    F.col("id").alias("id_a"),
-                    F.col("component_id").alias("id_b"), nmetric, nh))
-    pr = (pr_ranks
-          .select(F.lit("pagerank").alias("algo"),
-                  F.col("id").alias("id_a"),
-                  F.lit(None).cast("long").alias("id_b"),
-                  F.col("rank").alias("metric"), nh))
+def _x2_curl(s):
+    """doc_id -> canonical URL for the x2 url/hostrank arms (the
+    messy-URL derivation + the generated canonicalization the oracle
+    value-checks). Lazily checkpointed: the url rows and the host map
+    read it without re-running the regex chain."""
+    return (s.t("documents")
+            .select("doc_id", F.expr(_X2_RAW_URL_SQL).alias("__raw"))
+            .select("doc_id",
+                    F.expr(canonicalize_url_sql("__raw", "spark"))
+                    .alias("cu"))
+            .localCheckpoint(eager=False))
+
+
+def _x2_quota(s, **order):
+    dochost = s.dochost
+    if order:
+        dochost = dochost.withColumn(
+            "q", F.pmod(F.col("doc_id") * 37, F.lit(101)))
+    return host_quota_sample(dochost,
+                             {"src0.example.com": 5,
+                              "src1.example.com": 12},
+                             default_quota=8, seed=7, **order)
+
+
+def _x2_host_rank(s, **kw):
+    return host_rank(s.pairs, s.dochost, iters=3, **kw)
+
+
+_X2_LAYOUT = (("id_a", "long"), ("id_b", "long"), ("metric", "double"),
+              ("h", "string"))
+
+
+def _x2_row(algo, df, **cols):
+    return _slots(df, "algo", algo, _X2_LAYOUT, **cols)
+
+
+def _x2_csize(s):
     # csize arm (r7 s6): the duplicate-cluster size HISTOGRAM — the
     # standard before/after dedup report line ("N clusters of size s").
-    # Reuses the label-prop component map already computed above:
-    # id_a = cluster size, id_b = number of clusters of that size.
-    csize = (labmap
-             .groupBy("component_id").agg(F.count("*").alias("__sz"))
-             .groupBy("__sz").agg(F.count("*").alias("__n"))
-             .select(F.lit("csize").alias("algo"),
-                     F.col("__sz").cast("long").alias("id_a"),
-                     F.col("__n").cast("long").alias("id_b"), nmetric,
-                     nh))
-    # url + hostrank arms (r8) — see docstring; curl/dochost, the two
-    # quota frames and the three rank kernels were built by the
-    # concurrent chains above
-    nulll = F.lit(None).cast("long")
-    url_rows = curl.select(F.lit("url").alias("algo"),
-                           F.col("doc_id").alias("id_a"),
-                           nulll.alias("id_b"), nmetric,
-                           F.col("cu").alias("h"))
-    hrank = (hrank_ranks
-             .select(F.lit("hostrank").alias("algo"),
-                     nulll.alias("id_a"), nulll.alias("id_b"),
-                     F.col("rank").alias("metric"),
-                     F.col("id").alias("h")))
-    # hostrankd arm (r9 verdict #3): the DIRECTED sibling — the same
-    # doc-grain pair list read as hyperlink-shaped edges (id_a links
-    # TO id_b), so edge direction survives the host lift and the
-    # kernel's dangling-mass correction is live; all 3 iterations run
-    # through the directed unrolled-CTE oracle (prefix 'hd')
-    hrankd = (hrankd_ranks
-              .select(F.lit("hostrankd").alias("algo"),
-                      nulll.alias("id_a"), nulll.alias("id_b"),
-                      F.col("rank").alias("metric"),
-                      F.col("id").alias("h")))
-    # hquota arm (r9): the curation step that CONSUMES host signals —
-    # per-host doc caps (src0 capped at 5, src1 at 12, every other
-    # host at the default 8) picked by the seeded md5 rank, every
-    # kept (doc, rank) value-checked; the oracle replays the identical
-    # window over the same dhost map
-    hq = (hq_df
-          .select(F.lit("hquota").alias("algo"),
-                  F.col("doc_id").alias("id_a"),
-                  F.col("host_rank_pos").cast("long").alias("id_b"),
-                  nmetric, F.col("host").alias("h")))
-    # hquotaq arm (r10): the ORDERED variant — keep each host's
-    # HIGHEST-quality docs instead of a random sample, through the
-    # skew-safe bucketed path with score-RANGE buckets
-    # (n_score_buckets=16 so many scores share a bucket and the
-    # offset reconstruction is genuinely exercised). The quality
-    # score is the deterministic (doc_id*37)%101 — derived, not a
-    # documents re-scan (x2's checkpoint-only/no-FileScan plan pin),
-    # and 101 distinct values over the corpus guarantee heavy ties so
-    # the md5 tiebreak is genuinely value-checked; the oracle replays
-    # the identical (score DESC, md5, id) window
-    hqq = (hqq_df
-           .select(F.lit("hquotaq").alias("algo"),
-                   F.col("doc_id").alias("id_a"),
-                   F.col("host_rank_pos").cast("long").alias("id_b"),
-                   nmetric, F.col("host").alias("h")))
-    return (pair_rows.unionAll(label).unionAll(star).unionAll(pr)
-            .unionAll(csize).unionAll(url_rows).unionAll(hrank)
-            .unionAll(hrankd).unionAll(hq).unionAll(hqq))
+    # Reuses the label-prop component map: id_a = cluster size, id_b =
+    # number of clusters of that size.
+    return _x2_row("csize", s.labmap
+                   .groupBy("component_id").agg(F.count("*").alias("__sz"))
+                   .groupBy("__sz").agg(F.count("*").alias("__n")),
+                   id_a=F.col("__sz").cast("long"),
+                   id_b=F.col("__n").cast("long"))
 
 
-def _clusters_flavour(spark, sf, algorithm):
-    return (neardup_components(_capped_pairs(spark, sf),
-                               algorithm=algorithm)
-            .select(F.col("id").alias("doc_id"), "component_id"))
+def _x2_quota_row(algo, quota):
+    return _x2_row(algo, quota, id_a="doc_id",
+                   id_b=F.col("host_rank_pos").cast("long"), h="host")
+
+
+_X2_SHARED = {
+    # the df-capped exact-Jaccard pair list every pair-graph arm reads,
+    # checkpointed once
+    "pairs": lambda s: ngram_jaccard_pairs(
+        s.t("documents"), "doc_id", "text", n=3, threshold=0.4,
+        max_doc_freq=100, materialize_index=True).localCheckpoint(eager=True),
+    "curl": _x2_curl,
+    "dochost": lambda s: s.curl.select(
+        "doc_id", F.expr(url_host_sql("cu", "spark")).alias("host")),
+    "hq": _x2_quota,
+    "hqq": lambda s: _x2_quota(s, order_col="q", rank_via="bucketed",
+                               n_score_buckets=16),
+    # the label-prop component map feeds BOTH the label arm and the
+    # csize histogram — checkpoint it so the CC rounds run once
+    "labmap": lambda s: (neardup_components(s.pairs, algorithm="label_prop")
+                         .localCheckpoint(eager=True)),
+    "starmap": lambda s: neardup_components(s.pairs, algorithm="star"),
+    "pr": lambda s: pagerank(s.pairs.select(F.col("id_a").alias("src"),
+                                            F.col("id_b").alias("dst")),
+                             undirected=True, iters=5),
+    "hrank": _x2_host_rank,
+    "hrankd": lambda s: _x2_host_rank(s, directed=True),
+}
+# url/hostrank/hostrankd/hquota: see the row docstring. hquotaq (r10):
+# the ORDERED hquota variant — keep each host's HIGHEST-quality docs
+# instead of a random sample, through the skew-safe bucketed path with
+# score-RANGE buckets (n_score_buckets=16 so many scores share a bucket
+# and the offset reconstruction is genuinely exercised). The quality
+# score is the deterministic (doc_id*37)%101 — derived, not a documents
+# re-scan (x2's checkpoint-only/no-FileScan plan pin), and 101 distinct
+# values over the corpus guarantee heavy ties so the md5 tiebreak is
+# genuinely value-checked; the oracle replays the identical (score
+# DESC, md5, id) window.
+_X2_ARMS = {
+    "pairs": lambda s: _x2_row("pairs", s.pairs, id_a="id_a", id_b="id_b",
+                               metric="jaccard"),
+    "label": lambda s: _x2_row("label", s.labmap, id_a="id",
+                               id_b="component_id"),
+    "star": lambda s: _x2_row("star", s.starmap, id_a="id",
+                              id_b="component_id"),
+    "pagerank": lambda s: _x2_row("pagerank", s.pr, id_a="id",
+                                  metric="rank"),
+    "csize": _x2_csize,
+    "url": lambda s: _x2_row("url", s.curl, id_a="doc_id", h="cu"),
+    "hostrank": lambda s: _x2_row("hostrank", s.hrank, metric="rank",
+                                  h="id"),
+    "hostrankd": lambda s: _x2_row("hostrankd", s.hrankd, metric="rank",
+                                   h="id"),
+    "hquota": lambda s: _x2_quota_row("hquota", s.hq),
+    "hquotaq": lambda s: _x2_quota_row("hquotaq", s.hqq),
+}
 
 
 def _q_x7_corpus_exact(spark, sf):
@@ -3025,20 +2546,12 @@ def _q_x7_corpus_exact(spark, sf):
     sequentially (10.1 s build / 104 jobs of the row's 16.3 s profile
     at sf0.1). They now build concurrently so each chain's barrier
     tails back-fill the other's idle cores. Same frames, same rows."""
-    from serverless_data_pipeline_spark.operators.util import (
-        build_concurrently,
-    )
-    full, incr = build_concurrently(
-        lambda: _x7_flavour_full(spark, sf),
-        lambda: _x7_flavour_incr(spark, sf))
-    return full.unionAll(incr)
+    return _union(_X7_ARMS, _Shared(spark, sf, {}), concurrent=True)
 
 
-def _x7_flavour_full(spark, sf):
-    """The one-shot pipeline arm of x7 (benched as x7_corpus_exact.full)."""
-    from serverless_data_pipeline_spark.operators.corpus import decontaminate
-    from serverless_data_pipeline_spark.operators.text import language_id
-    docs = _t(spark, sf, "documents")
+def _x7_full(s):
+    """The one-shot pipeline arm of x7."""
+    docs = s.t("documents")
     keep = (docs.select("doc_id", fingerprint("text").alias("__fp"))
             .groupBy("__fp").agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id"))
@@ -3051,9 +2564,6 @@ def _x7_flavour_full(spark, sf):
     # (language-id regexes, quality, repetition shingles, decontaminate
     # explode) onto one core; the scale-adaptive respread keeps the
     # leaf at session parallelism when (and only when) it is small.
-    from serverless_data_pipeline_spark.operators.util import (
-        spread_checkpoint,
-    )
     exact = spread_checkpoint(docs.join(keep, "doc_id"))
     pairs = ngram_jaccard_pairs(exact, "doc_id", "text", n=3, threshold=0.4,
                                 materialize_index=True)
@@ -3102,9 +2612,9 @@ def _x7_flavour_full(spark, sf):
                     F.lit(None).cast("string").alias("reason")))
 
 
-def _x7_flavour_incr(spark, sf):
-    """The incremental-maintenance arms of x7 (benched as
-    x7_corpus_exact.incr): the daily-operations sibling of the one-shot
+def _x7_incr(s):
+    """The incremental-maintenance arms of x7 (tags incr_b1, incr_b2,
+    incr_corpus): the daily-operations sibling of the one-shot
     pipeline. The corpus is built in TWO landings: batch 1 bootstraps —
     internal exact dedup (within_batch="exact"; the within-batch
     pair-graph+CC stage is pytest-pinned and reuses x2's
@@ -3125,16 +2635,14 @@ def _x7_flavour_incr(spark, sf):
     import tempfile
     import uuid
 
-    from serverless_data_pipeline_spark.operators.incremental import (
-        bootstrap_corpus, commit_batch, incremental_dedup,
-    )
+    spark = s.spark
     _sweep_aged_tmp("sdp_incr_")
     base = tempfile.gettempdir() + f"/sdp_incr_{uuid.uuid4().hex[:8]}"
     # The incr arms run on the doc_id % 10 < 3 subset (30 % of the
     # corpus): the staged-semantics check needs two landings and every
     # stage verdict, not corpus bulk — and the row already pays for the
     # full-corpus one-shot arm above.
-    docs = _t(spark, sf, "documents")
+    docs = s.t("documents")
     b1 = docs.filter(F.col("doc_id") % 10 < 2)
     b2 = docs.filter(F.col("doc_id") % 10 == 2)
     # within_batch="exact": the driver arm verifies the NEW machinery —
@@ -3163,6 +2671,9 @@ def _x7_flavour_incr(spark, sf):
               .select(F.lit("incr_corpus").alias("tag"), "doc_id", nq,
                       F.lit(None).cast("string").alias("reason")))
     return incr1.unionAll(incr2).unionAll(merged)
+
+
+_X7_ARMS = {"full": _x7_full, "incr": _x7_incr}
 
 
 def _q_x8_corpus_utils(spark, sf):
@@ -3212,132 +2723,90 @@ def _q_x8_corpus_utils(spark, sf):
     micro-units) and sheet2 = (n_distinct_fp, total_chars, exact-median
     token count micro-units), the mean accumulated in EXACT integer
     signal units so the value is partition-order-stable."""
-    from serverless_data_pipeline_spark.operators.corpus import (
-        chunk_documents, corpus_datasheet, corpus_mix, global_shuffle,
-        leakage_safe_split, pack_bins, pack_sequences, repeat_by_epochs,
-        temperature_mix, token_budget_mix, train_test_split, vocabulary,
-    )
-    docs = _t(spark, sf, "documents")
-    split = train_test_split(docs, "doc_id", hashed=False)
-    vocab = (vocabulary(split.filter(F.col("split") == "train"),
-                        "text", top_n=200)
-             .select(F.lit("vocab").alias("kind"),
-                     F.lit(None).cast("long").alias("doc_id"),
-                     F.col("n").cast("long").alias("a"),
-                     F.lit(None).cast("long").alias("b"),
-                     F.lit(None).cast("long").alias("c"),
-                     F.col("token").alias("h")))
-    pack = (pack_sequences(docs, "doc_id", "text", budget=512, n_shards=8)
-            .select(F.lit("pack").alias("kind"), "doc_id",
-                    F.col("n_tokens").cast("long").alias("a"),
-                    F.col("shard").cast("long").alias("b"),
-                    F.col("bin_id").cast("long").alias("c"),
-                    F.lit(None).cast("string").alias("h")))
-    # bins arm (r7): pack_bins next_fit — document-boundary-preserving
-    # (SFT-style) packing; the whole per-shard sequential bin assignment
-    # is value-checked against a DuckDB recursive-CTE replay of the same
-    # linear recursion (the FFD strategy is pytest-pinned: bin-capacity /
-    # completeness / never-more-bins-than-next-fit laws)
-    # h carries the r7 s6 bin_offset (token start inside the padded
-    # bin, id-order layout) as a string — the attention-mask boundary
-    # metadata, value-checked alongside the assignment
-    bins = (pack_bins(docs, "doc_id", "text", budget=512, n_shards=8)
-            .select(F.lit("bins").alias("kind"), "doc_id",
-                    F.col("n_tokens").cast("long").alias("a"),
-                    F.col("shard").cast("long").alias("b"),
-                    F.col("bin_id").cast("long").alias("c"),
-                    F.col("bin_offset").cast("string").alias("h")))
-    chunk = (chunk_documents(docs, "doc_id", "text",
-                             chunk_chars=512, overlap_chars=64)
-             .select(F.lit("chunk").alias("kind"), "doc_id",
-                     F.col("chunk_id").cast("long").alias("a"),
-                     F.col("chunk_start").cast("long").alias("b"),
-                     F.length("chunk_text").cast("long").alias("c"),
-                     F.md5(F.col("chunk_text").cast("binary")).alias("h")))
-    mix = (corpus_mix(docs, "lang", "doc_id",
-                      {"en": 0.25, "de": 1.0, "es": 1.0, "fr": 1.0,
-                       "zh": 0.5})
-           .select(F.lit("mix").alias("kind"), "doc_id",
-                   F.col("sample_rank").cast("long").alias("a"),
-                   F.lit(None).cast("long").alias("b"),
-                   F.lit(None).cast("long").alias("c"),
-                   F.col("lang").alias("h")))
-    gsplit = (leakage_safe_split(docs, "doc_id", text_col="text",
-                                 hashed=False)
-              .select(F.lit("gsplit").alias("kind"), "doc_id",
-                      F.col("group_key").cast("long").alias("a"),
-                      F.col("split_id").cast("long").alias("b"),
-                      F.lit(None).cast("long").alias("c"),
-                      F.col("split").alias("h")))
-    tmix = (temperature_mix(docs, "lang", "doc_id", alpha=0.3)
-            .select(F.lit("tmix").alias("kind"), "doc_id",
-                    F.col("sample_rank").cast("long").alias("a"),
-                    F.col("quota").cast("long").alias("b"),
-                    F.lit(None).cast("long").alias("c"),
-                    F.col("lang").alias("h")))
-    shuf = (global_shuffle(docs, "doc_id", seed=0, num_shards=8)
-            .select(F.lit("shuf").alias("kind"), "doc_id",
-                    F.col("shard").cast("long").alias("a"),
-                    F.col("pos").cast("long").alias("b"),
-                    F.lit(None).cast("long").alias("c"),
-                    F.col("sort_key").alias("h")))
-    wmix = (token_budget_mix(docs, "lang", "doc_id", "n_chars",
-                             alpha=0.3)
-            .select(F.lit("wmix").alias("kind"), "doc_id",
-                    F.col("sample_rank").cast("long").alias("a"),
-                    F.col("cum_weight").cast("long").alias("b"),
-                    F.col("n_chars").cast("long").alias("c"),
-                    F.col("lang").alias("h")))
-    rep = (repeat_by_epochs(docs, "lang", "doc_id",
-                            {"en": 1.5, "de": 2.0, "zh": 0.0})
-           .select(F.lit("rep").alias("kind"), "doc_id",
-                   F.col("epoch").cast("long").alias("a"),
-                   F.col("n_epochs").cast("long").alias("b"),
-                   F.col("sample_rank").cast("long").alias("c"),
-                   F.col("lang").alias("h")))
-    # sheet arms (r7): corpus_datasheet — the per-group dataset-card
-    # summary (volume, redundancy, median length, mean quality), split
-    # over two tagged rows per language to fit the union schema:
-    # sheet  -> (a=n_docs, b=total_tokens, c=mean_quality micro-units)
-    # sheet2 -> (a=n_distinct_fp, b=total_chars, c=p50_tokens micro)
-    sheet_raw = corpus_datasheet(docs, "lang")
-    nd = F.lit(None).cast("long").alias("doc_id")
-    sheet = sheet_raw.select(
-        F.lit("sheet").alias("kind"), nd,
-        F.col("n_docs").cast("long").alias("a"),
-        F.col("total_tokens").cast("long").alias("b"),
-        F.round(F.col("mean_quality") * 1e6).cast("long").alias("c"),
-        F.col("lang").alias("h"))
-    sheet2 = sheet_raw.select(
-        F.lit("sheet2").alias("kind"), nd,
-        F.col("n_distinct_fp").cast("long").alias("a"),
-        F.col("total_chars").cast("long").alias("b"),
-        F.round(F.col("p50_tokens") * 1e6).cast("long").alias("c"),
-        F.col("lang").alias("h"))
+    return _union(_X8_ARMS, _Shared(spark, sf, _X8_SHARED))
+
+
+_X8_LAYOUT = (("doc_id", "long"), ("a", "long"), ("b", "long"),
+              ("c", "long"), ("h", "string"))
+
+
+def _x8_row(kind, df, doc_id="doc_id", **cols):
+    """An x8 arm: doc-grain unless ``doc_id=None``."""
+    return _slots(df, "kind", kind, _X8_LAYOUT, doc_id=doc_id, **cols)
+
+
+def _long(c):
+    return F.col(c).cast("long")
+
+
+def _md5_ids(col):
+    """md5 of an int array's comma-joined decimal rendering."""
+    return F.md5(F.array_join(F.transform(col, lambda i: i.cast("string")),
+                              ",").cast("binary"))
+
+
+def _x8_vocab(s):
+    split = train_test_split(s.docs, "doc_id", hashed=False)
+    return _x8_row("vocab", vocabulary(split.filter(F.col("split") == "train"),
+                                       "text", top_n=200),
+                   doc_id=None, a=_long("n"), h="token")
+
+
+# bins arm (r7): pack_bins next_fit — document-boundary-preserving
+# (SFT-style) packing; the whole per-shard sequential bin assignment is
+# value-checked against a DuckDB recursive-CTE replay of the same linear
+# recursion (the FFD strategy is pytest-pinned: bin-capacity /
+# completeness / never-more-bins-than-next-fit laws). h carries the r7
+# s6 bin_offset (token start inside the padded bin, id-order layout) as
+# a string — the attention-mask boundary metadata, value-checked
+# alongside the assignment.
+def _x8_pack(kind, packed, h=None):
+    return _x8_row(kind, packed, a=_long("n_tokens"), b=_long("shard"),
+                   c=_long("bin_id"), h=h)
+
+
+def _x8_chunk(s):
+    return _x8_row("chunk", chunk_documents(s.docs, "doc_id", "text",
+                                            chunk_chars=512,
+                                            overlap_chars=64),
+                   a=_long("chunk_id"), b=_long("chunk_start"),
+                   c=F.length("chunk_text").cast("long"),
+                   h=F.md5(F.col("chunk_text").cast("binary")))
+
+
+# sheet arms (r7): corpus_datasheet — the per-group dataset-card summary
+# (volume, redundancy, median length, mean quality), split over two
+# tagged rows per language to fit the union schema:
+# sheet  -> (a=n_docs, b=total_tokens, c=mean_quality micro-units)
+# sheet2 -> (a=n_distinct_fp, b=total_chars, c=p50_tokens micro)
+def _x8_sheet(kind, sheet, a, b, c):
+    return _x8_row(kind, sheet, doc_id=None, a=_long(a), b=_long(b),
+                   c=F.round(F.col(c) * 1e6).cast("long"), h="lang")
+
+
+def _x8_jac(s):
     # jac arm (r7): corpus-level EXACT resemblance between the even-id
     # and odd-id halves (corpus_jaccard — the dataset-versioning /
     # crawl-diff statistic): (a=|A∩B|, b=|A∪B|, c=jaccard micro-units,
     # h='|A|:|B|'). The MinHash estimate sibling is pytest-pinned
     # (corpus_jaccard_minhash — scan-only, the 100 TB path).
-    from serverless_data_pipeline_spark.operators.dedup import (
-        corpus_jaccard,
-    )
-    jac = corpus_jaccard(
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1), "text").select(
-        F.lit("jac").alias("kind"), nd,
-        F.col("n_intersection").cast("long").alias("a"),
-        F.col("n_union").cast("long").alias("b"),
-        F.round(F.col("jaccard") * 1e6).cast("long").alias("c"),
-        F.concat(F.col("n_a").cast("string"), F.lit(":"),
-                 F.col("n_b").cast("string")).alias("h"))
+    docs = s.docs
+    return _x8_row("jac", corpus_jaccard(
+                       docs.filter(F.col("doc_id") % 2 == 0),
+                       docs.filter(F.col("doc_id") % 2 == 1), "text"),
+                   doc_id=None, a=_long("n_intersection"),
+                   b=_long("n_union"),
+                   c=F.round(F.col("jaccard") * 1e6).cast("long"),
+                   h=F.concat(F.col("n_a").cast("string"), F.lit(":"),
+                              F.col("n_b").cast("string")))
+
+
+def _x8_diff(s):
     # diff arm (r7 s6): snapshot_diff — dataset-versioning changelog
     # between the corpus and a DERIVED snapshot B (docs %11==0 removed,
     # %7==0 edited, ids <20 re-added at +1000000) so all four states
     # occur; h carries the status, value-checked per doc
-    from serverless_data_pipeline_spark.operators.corpus import (
-        snapshot_diff,
-    )
+    docs = s.docs
     bsnap = (docs.filter(F.col("doc_id") % 11 != 0)
              .select("doc_id",
                      F.when(F.col("doc_id") % 7 == 0,
@@ -3346,52 +2815,42 @@ def _q_x8_corpus_utils(spark, sf):
              .unionAll(docs.filter(F.col("doc_id") < 20)
                        .select((F.col("doc_id") + 1000000)
                                .alias("doc_id"), "text")))
-    nl = F.lit(None).cast("long")
-    diff = (snapshot_diff(docs, bsnap, "doc_id", "text")
-            .select(F.lit("diff").alias("kind"), "doc_id",
-                    nl.alias("a"), nl.alias("b"), nl.alias("c"),
-                    F.col("status").alias("h")))
-    # tok/ids arms (r8; r9 OOV-hardened): the tokenizer LAST MILE —
-    # the committed BPE artifact (bpe_artifact.COMMITTED_MERGES,
-    # trained once and frozen like the X14 classifier weights) applied
-    # end-to-end over text with a PLANTED messy suffix (digits, money,
-    # bracket/punctuation runs, 2/3/4-byte UTF-8 — _X8_TOK_TEXT_SQL,
-    # the same derivation in both engines), with byte_fallback on:
-    #   tok -> per doc (a = n token ids incl. byte expansions,
-    #          b = round6 unk_rate in micro-units — the curator's OOV
-    #          dashboard metric, h = md5 of the space-joined subword
-    #          string) — value-checks the whole greedy encode + the
-    #          OOV accounting;
-    #   ids -> bpe_encode_ids token-id arrays (OOV symbols expand to
-    #          UTF-8 byte tokens — id 0 never appears) packed with
-    #          pack_bins over the REAL id counts (weight_col, not the
-    #          text-proxy count): per (shard=a, bin=b) row carries
-    #          c = bin token total and h = md5 of the comma-joined id
-    #          stream laid out in doc-id order — the actual
-    #          packed-pretraining artifact, value-checked
-    #          byte-for-byte.
-    # The idstr join back onto the bin assignment is broadcast here
-    # (registry scale); at 100 TB both sides hash-partition on doc_id.
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_encode_ids,
-    )
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        COMMITTED_MERGES, build_vocab,
-    )
-    encd = (bpe_encode_ids(
-                docs.select("doc_id", "lang",
-                            F.expr(_X8_TOK_TEXT_SQL).alias("text")),
+    return _x8_row("diff", snapshot_diff(docs, bsnap, "doc_id", "text"),
+                   h="status")
+
+
+# tok/ids arms (r8; r9 OOV-hardened): the tokenizer LAST MILE — the
+# committed BPE artifact (bpe_artifact.COMMITTED_MERGES, trained once and
+# frozen like the X14 classifier weights) applied end-to-end over text
+# with a PLANTED messy suffix (digits, money, bracket/punctuation runs,
+# 2/3/4-byte UTF-8 — _X8_TOK_TEXT_SQL, the same derivation in both
+# engines), with byte_fallback on:
+#   tok -> per doc (a = n token ids incl. byte expansions,
+#          b = round6 unk_rate in micro-units — the curator's OOV
+#          dashboard metric, h = md5 of the space-joined subword
+#          string) — value-checks the whole greedy encode + the
+#          OOV accounting;
+#   ids -> bpe_encode_ids token-id arrays (OOV symbols expand to
+#          UTF-8 byte tokens — id 0 never appears) packed with
+#          pack_bins over the REAL id counts (weight_col, not the
+#          text-proxy count): per (shard=a, bin=b) row carries
+#          c = bin token total and h = md5 of the comma-joined id
+#          stream laid out in doc-id order — the actual
+#          packed-pretraining artifact, value-checked byte-for-byte.
+def _x8_encd(s):
+    return (bpe_encode_ids(
+                s.docs.select("doc_id", "lang",
+                              F.expr(_X8_TOK_TEXT_SQL).alias("text")),
                 "text", COMMITTED_MERGES, build_vocab(),
                 sym_col="bpe_sym", byte_fallback=True,
                 unk_col="unk_rate")
             .localCheckpoint(eager=False))
-    tok = encd.select(
-        F.lit("tok").alias("kind"), "doc_id",
-        F.size("token_ids").cast("long").alias("a"),
-        F.round(F.col("unk_rate") * 1000000).cast("long").alias("b"),
-        nl.alias("c"),
-        F.md5(F.array_join("bpe_sym", " ").cast("binary")).alias("h"))
-    withids = encd.select(
+
+
+def _x8_ids(s):
+    # The idstr join back onto the bin assignment is broadcast here
+    # (registry scale); at 100 TB both sides hash-partition on doc_id.
+    withids = s.encd.select(
         "doc_id",
         F.array_join(F.transform("token_ids",
                                  lambda i: i.cast("string")),
@@ -3399,58 +2858,44 @@ def _q_x8_corpus_utils(spark, sf):
         F.size("token_ids").cast("long").alias("ntok"))
     binned = pack_bins(withids, "doc_id", None, budget=1024,
                        n_shards=8, weight_col="ntok")
-    ids = (F.broadcast(binned).join(withids.select("doc_id", "idstr"),
-                                    "doc_id")
-           .groupBy("shard", "bin_id")
-           .agg(F.sum("n_tokens").alias("c"),
-                F.md5(F.array_join(
-                    F.transform(
-                        F.array_sort(F.collect_list(
-                            F.struct("doc_id", "idstr"))),
-                        lambda x: x["idstr"]), ",").cast("binary"))
-                .alias("h"))
-           .select(F.lit("ids").alias("kind"),
-                   nl.alias("doc_id"),
-                   F.col("shard").cast("long").alias("a"),
-                   F.col("bin_id").cast("long").alias("b"),
-                   F.col("c").cast("long").alias("c"), "h"))
-    # blk arm (r10): pack_token_blocks — the MATERIALIZED packed
-    # pretraining blocks over the same id streams: per-shard concat
-    # (doc-id order) with the reserved EOS id appended per doc,
-    # chunked every _X8_BLK_LEN ids, trailing partial block dropped.
-    # Per (shard=a, block=b) row: c = number of contributing doc
-    # spans, h = md5 of the comma-joined EXACT block ids — so every
-    # block boundary, every EOS position, and the whole packed stream
-    # are value-checked against a token-grain DuckDB replay. The ids
-    # arm checks the bin NUMBERS; this checks the artifact itself.
-    from serverless_data_pipeline_spark.operators.corpus import (
-        block_positions, pack_token_blocks, reshuffle_blocks,
-    )
-    blkraw = (pack_token_blocks(encd.select("doc_id", "token_ids"),
-                                "doc_id", "token_ids",
-                                block_len=_X8_BLK_LEN,
-                                eos_id=_BPE_EOS_ID, n_shards=8)
-              .localCheckpoint(eager=False))
-    blk = (blkraw
-           .select(F.lit("blk").alias("kind"), nl.alias("doc_id"),
-                   F.col("shard").cast("long").alias("a"),
-                   F.col("block_id").cast("long").alias("b"),
-                   F.size("doc_spans").cast("long").alias("c"),
-                   F.md5(F.array_join(
-                       F.transform("ids",
-                                   lambda i: i.cast("string")), ",")
-                         .cast("binary")).alias("h")))
-    # pos arm (r11): block_positions — the per-block position_ids
-    # (reset at each doc-span start) and sequence_ids (span ordinal)
-    # a block-diagonal-attention trainer consumes; pure span
-    # arithmetic, so the oracle replays BOTH arrays at token grain
-    # from its own stream positions. h = md5(positions '|' seqids).
-    pos = (block_positions(blkraw)
-           .select(F.lit("pos").alias("kind"), nl.alias("doc_id"),
-                   F.col("shard").cast("long").alias("a"),
-                   F.col("block_id").cast("long").alias("b"),
-                   nl.alias("c"),
-                   F.md5(F.concat(
+    return _x8_row(
+        "ids", (F.broadcast(binned).join(withids.select("doc_id", "idstr"),
+                                         "doc_id")
+                .groupBy("shard", "bin_id")
+                .agg(F.sum("n_tokens").alias("c"),
+                     F.md5(F.array_join(
+                         F.transform(
+                             F.array_sort(F.collect_list(
+                                 F.struct("doc_id", "idstr"))),
+                             lambda x: x["idstr"]), ",").cast("binary"))
+                     .alias("h"))),
+        doc_id=None, a=_long("shard"), b=_long("bin_id"), c=_long("c"),
+        h="h")
+
+
+# blk arm (r10): pack_token_blocks — the MATERIALIZED packed pretraining
+# blocks over the same id streams: per-shard concat (doc-id order) with
+# the reserved EOS id appended per doc, chunked every _X8_BLK_LEN ids,
+# trailing partial block dropped. Per (shard=a, block=b) row: c = number
+# of contributing doc spans, h = md5 of the comma-joined EXACT block ids
+# — so every block boundary, every EOS position, and the whole packed
+# stream are value-checked against a token-grain DuckDB replay. The ids
+# arm checks the bin NUMBERS; this checks the artifact itself.
+def _x8_blocks(kind, blocks):
+    return _x8_row(kind, blocks, doc_id=None, a=_long("shard"),
+                   b=_long("block_id"),
+                   c=F.size("doc_spans").cast("long"), h=_md5_ids("ids"))
+
+
+def _x8_pos(s):
+    # pos arm (r11): block_positions — the per-block position_ids (reset
+    # at each doc-span start) and sequence_ids (span ordinal) a
+    # block-diagonal-attention trainer consumes; pure span arithmetic,
+    # so the oracle replays BOTH arrays at token grain from its own
+    # stream positions. h = md5(positions '|' seqids).
+    return _x8_row("pos", block_positions(s.blkraw), doc_id=None,
+                   a=_long("shard"), b=_long("block_id"),
+                   h=F.md5(F.concat(
                        F.array_join(F.transform(
                            "position_ids",
                            lambda i: i.cast("string")), ","),
@@ -3458,7 +2903,10 @@ def _q_x8_corpus_utils(spark, sf):
                        F.array_join(F.transform(
                            "sequence_ids",
                            lambda i: i.cast("string")), ","))
-                       .cast("binary")).alias("h")))
+                       .cast("binary")))
+
+
+def _x8_lmask(s):
     # lmask arm (r12): block_loss_mask — the SFT label flags (prompt
     # tokens 0, completion+EOS 1, flag gated on the WITHIN-DOC offset
     # so a doc crossing a block boundary keeps counting). Prompt
@@ -3467,47 +2915,29 @@ def _q_x8_corpus_utils(spark, sf):
     # path). Pure span arithmetic, so the oracle replays every flag
     # at token grain: flag = (pos - doc_start) >= plen. c = trainable
     # tokens per block, h = md5 of the comma-joined flags.
-    from serverless_data_pipeline_spark.operators.corpus import (
-        block_loss_mask,
-    )
-    prompts = docs.select(
+    prompts = s.docs.select(
         "doc_id",
         F.when(F.pmod("doc_id", F.lit(3)) != 0,
                F.pmod("doc_id", F.lit(7))).alias("prompt_len"))
-    lmask = (block_loss_mask(blkraw, prompts, "doc_id", "prompt_len")
-             .select(F.lit("lmask").alias("kind"), nl.alias("doc_id"),
-                     F.col("shard").cast("long").alias("a"),
-                     F.col("block_id").cast("long").alias("b"),
-                     F.expr("aggregate(loss_mask, 0L, (s, x) -> s + x)")
-                      .alias("c"),
-                     F.md5(F.array_join(
-                         F.transform("loss_mask",
-                                     lambda i: i.cast("string")), ",")
-                           .cast("binary")).alias("h")))
-    # eshuf arm (r11): reshuffle_blocks — the per-epoch deterministic
-    # block reorder WITHOUT repacking (seed 1, epoch 2, 4 training
-    # shards). The oracle recomputes the md5 epoch key and the SAME
-    # hex-prefix shard expression, then replays the per-shard
-    # row_number — every (train_shard, pos) value-checked.
-    eshuf = (reshuffle_blocks(blkraw, seed=1, epoch=2, num_shards=4)
-             .select(F.lit("eshuf").alias("kind"), nl.alias("doc_id"),
-                     F.col("shard").cast("long").alias("a"),
-                     F.col("block_id").cast("long").alias("b"),
-                     F.col("train_shard").cast("long").alias("c"),
-                     F.col("pos").cast("string").alias("h")))
+    return _x8_row("lmask", block_loss_mask(s.blkraw, prompts, "doc_id",
+                                            "prompt_len"),
+                   doc_id=None, a=_long("shard"), b=_long("block_id"),
+                   c=F.expr("aggregate(loss_mask, 0L, (s, x) -> s + x)"),
+                   h=_md5_ids("loss_mask"))
+
+
+def _x8_rblk(s):
     # rblk arm (r10): the INCREMENTAL packing path, driver-oracled —
-    # pack the low-id half as the prior state, resume with the
-    # high-id half (the append-only batch contract), and emit
-    # non-tail state + resume output. By the resume==full-repack law
-    # the merged rows must equal pack(all, drop_last=False), so the
-    # oracle is the SAME token-grain blkg replay WITHOUT the
-    # drop-last filter — the whole incremental merge value-checked
-    # cross-engine, partial tails included. The id-half split is one
-    # tiny max(doc_id) aggregate (control-plane).
-    from serverless_data_pipeline_spark.operators.corpus import (
-        resume_token_blocks,
-    )
-    half = (docs.agg(F.max("doc_id")).first()[0] or 0) // 2
+    # pack the low-id half as the prior state, resume with the high-id
+    # half (the append-only batch contract), and emit non-tail state +
+    # resume output. By the resume==full-repack law the merged rows must
+    # equal pack(all, drop_last=False), so the oracle is the SAME
+    # token-grain blkg replay WITHOUT the drop-last filter — the whole
+    # incremental merge value-checked cross-engine, partial tails
+    # included. The id-half split is one tiny max(doc_id) aggregate
+    # (control-plane).
+    encd = s.encd
+    half = (s.docs.agg(F.max("doc_id")).first()[0] or 0) // 2
     rstate = pack_token_blocks(
         encd.filter(F.col("doc_id") < half)
         .select("doc_id", "token_ids"),
@@ -3522,141 +2952,148 @@ def _q_x8_corpus_utils(spark, sf):
     rtails = rstate.groupBy("shard").agg(F.max("block_id").alias("tb"))
     rkeep = (rstate.join(F.broadcast(rtails), "shard")
              .filter(F.col("block_id") < F.col("tb")).drop("tb"))
-    rblk = (rkeep.unionByName(rout)
-            .select(F.lit("rblk").alias("kind"), nl.alias("doc_id"),
-                    F.col("shard").cast("long").alias("a"),
-                    F.col("block_id").cast("long").alias("b"),
-                    F.size("doc_spans").cast("long").alias("c"),
-                    F.md5(F.array_join(
-                        F.transform("ids",
-                                    lambda i: i.cast("string")), ",")
-                          .cast("binary")).alias("h")))
-    # fert arm (r10): tokenizer_fertility — the per-language
-    # compression/fertility dashboard over the SAME encode (one more
-    # tiny aggregate off the checkpointed encd, no new scan): per lang
-    # a = total token ids, b = total UTF-8 bytes of the input text,
-    # c = round6 chars-per-token in micro-units (the "is this script
-    # degenerating to byte fallback" signal), h = lang.
-    from serverless_data_pipeline_spark.operators.bpe import (
-        tokenizer_fertility,
-    )
-    fert = (tokenizer_fertility(encd, "text", "token_ids",
-                                group_col="lang")
-            .select(F.lit("fert").alias("kind"), nl.alias("doc_id"),
-                    F.col("total_tokens").cast("long").alias("a"),
-                    F.col("total_bytes").cast("long").alias("b"),
-                    F.round(F.col("chars_per_token") * 1000000)
-                     .cast("long").alias("c"),
-                    F.col("lang").alias("h")))
-    # rtok arm (r10 — raw-text tokenizer fidelity): the LOSSLESS
-    # byte-level mode over text with planted mixed case, tabs,
-    # newlines and whitespace runs (_X8_RAW_TEXT_SQL, derived
-    # identically in both engines). Per doc:
-    #   a = n token ids (whitespace/uppercase symbols byte-expand),
-    #   b = the EXACT-RAW ROUND-TRIP LAW — 1 iff
-    #       bpe_decode_ids(raw=True) reproduces the raw input
-    #       byte-for-byte (the oracle emits constant 1, so the value
-    #       check FAILS if any doc's round trip breaks),
-    #   c = round6 byte-escape rate in micro-units,
-    #   h = md5 of the comma-joined id stream, independently replayed
-    #       by the oracle's raw merge recursion (no END marker, case
-    #       preserved, explicit whitespace byte tokens).
-    # Narrow from encode to union — no new exchange.
-    from serverless_data_pipeline_spark.operators.bpe import (
-        bpe_decode_ids,
-    )
-    rencd = bpe_encode_ids(
-        docs.select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
-        "text", COMMITTED_MERGES, build_vocab(),
-        byte_fallback=True, raw=True, unk_col="unk_rate")
-    rtok = (bpe_decode_ids(rencd, "token_ids", build_vocab(),
-                           raw=True, out_col="__rt")
-            .select(
-                F.lit("rtok").alias("kind"), "doc_id",
-                F.size("token_ids").cast("long").alias("a"),
-                F.when(F.col("text").isNull(), F.lit(1).cast("long"))
-                 .otherwise((F.col("__rt") == F.col("text"))
-                            .cast("long")).alias("b"),
-                F.round(F.col("unk_rate") * 1000000).cast("long")
-                 .alias("c"),
-                F.md5(F.array_join(
-                    F.transform("token_ids",
-                                lambda i: i.cast("string")), ",")
-                      .cast("binary")).alias("h")))
-    # atok arm (r10): the RAW-SERVICE artifact — RAW_COMMITTED_MERGES
-    # trained case-preserved with ATTACHED-whitespace pretokens (the
-    # GPT-2 vocab shape: space-prefixed merges like ' s'), over the
-    # SAME planted raw text. Same columns as rtok; the exact-raw
-    # round-trip law must hold here too, and the id streams are
-    # ~14% shorter than rtok's (space tokens fold into words) —
-    # directly visible in the two arms' a columns.
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        BPE_RAW_BASE_CHARS, RAW_COMMITTED_MERGES,
-    )
-    rvocab = build_vocab(RAW_COMMITTED_MERGES, BPE_RAW_BASE_CHARS)
-    aencd = bpe_encode_ids(
-        docs.select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
-        "text", RAW_COMMITTED_MERGES, rvocab,
-        byte_fallback=True, raw=True, attach_ws=True,
-        unk_col="unk_rate")
-    atok = (bpe_decode_ids(aencd, "token_ids", rvocab,
-                           raw=True, out_col="__rt")
-            .select(
-                F.lit("atok").alias("kind"), "doc_id",
-                F.size("token_ids").cast("long").alias("a"),
-                F.when(F.col("text").isNull(), F.lit(1).cast("long"))
-                 .otherwise((F.col("__rt") == F.col("text"))
-                            .cast("long")).alias("b"),
-                F.round(F.col("unk_rate") * 1000000).cast("long")
-                 .alias("c"),
-                F.md5(F.array_join(
-                    F.transform("token_ids",
-                                lambda i: i.cast("string")), ",")
-                      .cast("binary")).alias("h")))
-    # btok arm (r11): GPT-2-style byte-level BPE over the SAME
-    # planted raw text: attached pretokens remapped to printable BYTE
-    # symbols (bytes_to_unicode), merges over bytes from the committed
-    # byte-level artifact, 256-symbol base covering every input. No
-    # UNK and no escape inventory exist, so:
-    #   a = n token ids,
-    #   b = the exact round-trip flag (decode must equal the raw
-    #       input byte-for-byte; the oracle requires 1),
-    #   c = the unk/escape rate in micro-units — IDENTICALLY 0 by
-    #       construction (the oracle emits constant 0, so a single
-    #       escape/UNK anywhere value-fails the arm),
-    #   h = md5 of the comma-joined id stream, replayed by the
-    #       oracle's arithmetic byte-remap + rank recursion.
-    from serverless_data_pipeline_spark.operators.bpe_artifact import (
-        BYTE_LEVEL_COMMITTED_MERGES, build_byte_level_vocab,
-    )
-    bvocab = build_byte_level_vocab()
-    bencd = bpe_encode_ids(
-        docs.select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
-        "text", BYTE_LEVEL_COMMITTED_MERGES, bvocab,
-        byte_level=True, unk_col="unk_rate")
-    btok = (bpe_decode_ids(bencd, "token_ids", bvocab,
-                           byte_level=True, out_col="__rt")
-            .select(
-                F.lit("btok").alias("kind"), "doc_id",
-                F.size("token_ids").cast("long").alias("a"),
-                F.when(F.col("text").isNull(), F.lit(1).cast("long"))
-                 .otherwise((F.col("__rt") == F.col("text"))
-                            .cast("long")).alias("b"),
-                F.round(F.col("unk_rate") * 1000000).cast("long")
-                 .alias("c"),
-                F.md5(F.array_join(
-                    F.transform("token_ids",
-                                lambda i: i.cast("string")), ",")
-                      .cast("binary")).alias("h")))
-    return (vocab.unionAll(pack).unionAll(bins).unionAll(chunk)
-            .unionAll(mix)
-            .unionAll(gsplit).unionAll(tmix).unionAll(shuf)
-            .unionAll(wmix).unionAll(rep).unionAll(sheet)
-            .unionAll(sheet2).unionAll(jac).unionAll(diff)
-            .unionAll(tok).unionAll(ids).unionAll(blk)
-            .unionAll(pos).unionAll(lmask).unionAll(eshuf)
-            .unionAll(rblk).unionAll(fert).unionAll(rtok)
-            .unionAll(atok).unionAll(btok))
+    return _x8_blocks("rblk", rkeep.unionByName(rout))
+
+
+# fert arm (r10): tokenizer_fertility — the per-language
+# compression/fertility dashboard over the SAME encode (one more tiny
+# aggregate off the checkpointed encd, no new scan): per lang a = total
+# token ids, b = total UTF-8 bytes of the input text, c = round6
+# chars-per-token in micro-units (the "is this script degenerating to
+# byte fallback" signal), h = lang.
+def _x8_fert(s):
+    return _x8_row("fert", tokenizer_fertility(s.encd, "text", "token_ids",
+                                               group_col="lang"),
+                   doc_id=None, a=_long("total_tokens"),
+                   b=_long("total_bytes"),
+                   c=F.round(F.col("chars_per_token") * 1000000)
+                   .cast("long"), h="lang")
+
+
+# rtok arm (r10 — raw-text tokenizer fidelity): the LOSSLESS byte-level
+# mode over text with planted mixed case, tabs, newlines and whitespace
+# runs (_X8_RAW_TEXT_SQL, derived identically in both engines). Per doc:
+#   a = n token ids (whitespace/uppercase symbols byte-expand),
+#   b = the EXACT-RAW ROUND-TRIP LAW — 1 iff bpe_decode_ids(raw=True)
+#       reproduces the raw input byte-for-byte (the oracle emits
+#       constant 1, so the value check FAILS if any doc's round trip
+#       breaks),
+#   c = round6 byte-escape rate in micro-units,
+#   h = md5 of the comma-joined id stream, independently replayed by the
+#       oracle's raw merge recursion (no END marker, case preserved,
+#       explicit whitespace byte tokens).
+# Narrow from encode to union — no new exchange.
+# atok arm (r10): the RAW-SERVICE artifact — RAW_COMMITTED_MERGES trained
+# case-preserved with ATTACHED-whitespace pretokens (the GPT-2 vocab
+# shape: space-prefixed merges like ' s'), over the SAME planted raw
+# text. Same columns as rtok; the exact-raw round-trip law must hold
+# here too, and the id streams are ~14% shorter than rtok's (space
+# tokens fold into words) — directly visible in the two arms' a columns.
+# btok arm (r11): GPT-2-style byte-level BPE over the SAME planted raw
+# text: attached pretokens remapped to printable BYTE symbols
+# (bytes_to_unicode), merges over bytes from the committed byte-level
+# artifact, 256-symbol base covering every input. No UNK and no escape
+# inventory exist, so:
+#   a = n token ids,
+#   b = the exact round-trip flag (decode must equal the raw input
+#       byte-for-byte; the oracle requires 1),
+#   c = the unk/escape rate in micro-units — IDENTICALLY 0 by
+#       construction (the oracle emits constant 0, so a single
+#       escape/UNK anywhere value-fails the arm),
+#   h = md5 of the comma-joined id stream, replayed by the oracle's
+#       arithmetic byte-remap + rank recursion.
+def _x8_round_trip(s, kind, merges, vocab, encode, decode):
+    enc = bpe_encode_ids(
+        s.docs.select("doc_id", F.expr(_X8_RAW_TEXT_SQL).alias("text")),
+        "text", merges, vocab, unk_col="unk_rate", **encode)
+    return _x8_row(kind, bpe_decode_ids(enc, "token_ids", vocab,
+                                        out_col="__rt", **decode),
+                   a=F.size("token_ids").cast("long"),
+                   b=F.when(F.col("text").isNull(), F.lit(1).cast("long"))
+                   .otherwise((F.col("__rt") == F.col("text"))
+                              .cast("long")),
+                   c=F.round(F.col("unk_rate") * 1000000).cast("long"),
+                   h=_md5_ids("token_ids"))
+
+
+_X8_SHARED = {
+    "docs": lambda s: s.t("documents"),
+    "sheet": lambda s: corpus_datasheet(s.docs, "lang"),
+    "encd": _x8_encd,
+    "blkraw": lambda s: (pack_token_blocks(
+        s.encd.select("doc_id", "token_ids"), "doc_id", "token_ids",
+        block_len=_X8_BLK_LEN, eos_id=_BPE_EOS_ID, n_shards=8)
+        .localCheckpoint(eager=False)),
+}
+_X8_ARMS = {
+    "vocab": _x8_vocab,
+    "pack": lambda s: _x8_pack("pack", pack_sequences(
+        s.docs, "doc_id", "text", budget=512, n_shards=8)),
+    "bins": lambda s: _x8_pack(
+        "bins", pack_bins(s.docs, "doc_id", "text", budget=512, n_shards=8),
+        h=F.col("bin_offset").cast("string")),
+    "chunk": _x8_chunk,
+    "mix": lambda s: _x8_row(
+        "mix", corpus_mix(s.docs, "lang", "doc_id",
+                          {"en": 0.25, "de": 1.0, "es": 1.0, "fr": 1.0,
+                           "zh": 0.5}),
+        a=_long("sample_rank"), h="lang"),
+    "gsplit": lambda s: _x8_row(
+        "gsplit", leakage_safe_split(s.docs, "doc_id", text_col="text",
+                                     hashed=False),
+        a=_long("group_key"), b=_long("split_id"), h="split"),
+    "tmix": lambda s: _x8_row(
+        "tmix", temperature_mix(s.docs, "lang", "doc_id", alpha=0.3),
+        a=_long("sample_rank"), b=_long("quota"), h="lang"),
+    "shuf": lambda s: _x8_row(
+        "shuf", global_shuffle(s.docs, "doc_id", seed=0, num_shards=8),
+        a=_long("shard"), b=_long("pos"), h="sort_key"),
+    "wmix": lambda s: _x8_row(
+        "wmix", token_budget_mix(s.docs, "lang", "doc_id", "n_chars",
+                                 alpha=0.3),
+        a=_long("sample_rank"), b=_long("cum_weight"), c=_long("n_chars"),
+        h="lang"),
+    "rep": lambda s: _x8_row(
+        "rep", repeat_by_epochs(s.docs, "lang", "doc_id",
+                                {"en": 1.5, "de": 2.0, "zh": 0.0}),
+        a=_long("epoch"), b=_long("n_epochs"), c=_long("sample_rank"),
+        h="lang"),
+    "sheet": lambda s: _x8_sheet("sheet", s.sheet, "n_docs",
+                                 "total_tokens", "mean_quality"),
+    "sheet2": lambda s: _x8_sheet("sheet2", s.sheet, "n_distinct_fp",
+                                  "total_chars", "p50_tokens"),
+    "jac": _x8_jac,
+    "diff": _x8_diff,
+    "tok": lambda s: _x8_row(
+        "tok", s.encd, a=F.size("token_ids").cast("long"),
+        b=F.round(F.col("unk_rate") * 1000000).cast("long"),
+        h=F.md5(F.array_join("bpe_sym", " ").cast("binary"))),
+    "ids": _x8_ids,
+    "blk": lambda s: _x8_blocks("blk", s.blkraw),
+    "pos": _x8_pos,
+    "lmask": _x8_lmask,
+    # eshuf arm (r11): reshuffle_blocks — the per-epoch deterministic
+    # block reorder WITHOUT repacking (seed 1, epoch 2, 4 training
+    # shards). The oracle recomputes the md5 epoch key and the SAME
+    # hex-prefix shard expression, then replays the per-shard
+    # row_number — every (train_shard, pos) value-checked.
+    "eshuf": lambda s: _x8_row(
+        "eshuf", reshuffle_blocks(s.blkraw, seed=1, epoch=2, num_shards=4),
+        doc_id=None, a=_long("shard"), b=_long("block_id"),
+        c=_long("train_shard"), h=F.col("pos").cast("string")),
+    "rblk": _x8_rblk,
+    "fert": _x8_fert,
+    "rtok": lambda s: _x8_round_trip(
+        s, "rtok", COMMITTED_MERGES, build_vocab(),
+        dict(byte_fallback=True, raw=True), dict(raw=True)),
+    "atok": lambda s: _x8_round_trip(
+        s, "atok", RAW_COMMITTED_MERGES,
+        build_vocab(RAW_COMMITTED_MERGES, BPE_RAW_BASE_CHARS),
+        dict(byte_fallback=True, raw=True, attach_ws=True), dict(raw=True)),
+    "btok": lambda s: _x8_round_trip(
+        s, "btok", BYTE_LEVEL_COMMITTED_MERGES, build_byte_level_vocab(),
+        dict(byte_level=True), dict(byte_level=True)),
+}
 
 
 def _q_x10_decontaminate(spark, sf):
@@ -3688,34 +3125,42 @@ def _q_x10_decontaminate(spark, sf):
     sf0.1); verified zero empirically at sf0.001/0.01/0.1, and the
     fixtures plus fixed hash seeds make that exactness deterministic,
     not a per-run gamble."""
-    from serverless_data_pipeline_spark.operators.corpus import (
-        bloom_decontaminate, contamination_report, decontaminate,
-        train_test_split,
-    )
-    split = train_test_split(_t(spark, sf, "documents"), "doc_id",
-                             hashed=False)
-    train = split.filter(F.col("split") == "train")
-    ev = split.filter(F.col("split") == "eval")
-    cols = ["doc_id", F.col("n_overlap").cast("long").alias("n_overlap"),
-            "contaminated"]
+    return _union(_X10_ARMS, _Shared(spark, sf, _X10_SHARED))
+
+
+_X10_LAYOUT = (("doc_id", "long"), ("n_overlap", "long"),
+               ("contaminated", "boolean"), ("n_total", "long"),
+               ("frac_overlap", "double"), ("top_eval_id", "long"),
+               ("top_eval_overlap", "long"))
+
+
+def _x10_gate(s, tag, gate):
     # report-only columns, NULL under the gate tags
-    nul = [F.lit(None).cast("long").alias("n_total"),
-           F.lit(None).cast("double").alias("frac_overlap"),
-           F.lit(None).cast("long").alias("top_eval_id"),
-           F.lit(None).cast("long").alias("top_eval_overlap")]
-    exact = (decontaminate(train, ev, "doc_id", "text", n=5)
-             .select(F.lit("exact").alias("tag"), *cols, *nul))
-    bloom = (bloom_decontaminate(train, ev, "doc_id", "text", n=5)
-             .select(F.lit("bloom").alias("tag"), *cols, *nul))
-    report = (contamination_report(train, ev, "doc_id", "text", n=5)
-              .select(F.lit("report").alias("tag"), "doc_id",
-                      F.col("n_overlap").cast("long"),
-                      F.lit(True).alias("contaminated"),
-                      F.col("n_total").cast("long"),
-                      "frac_overlap",
-                      F.col("top_eval_id").cast("long"),
-                      F.col("top_eval_overlap").cast("long")))
-    return exact.unionAll(bloom).unionAll(report)
+    return _slots(gate(s.train, s.ev, "doc_id", "text", n=5), "tag", tag,
+                  _X10_LAYOUT, doc_id="doc_id", n_overlap=_long("n_overlap"),
+                  contaminated="contaminated")
+
+
+def _x10_report(s):
+    return _slots(contamination_report(s.train, s.ev, "doc_id", "text", n=5),
+                  "tag", "report", _X10_LAYOUT, doc_id="doc_id",
+                  n_overlap=_long("n_overlap"), contaminated=F.lit(True),
+                  n_total=_long("n_total"), frac_overlap="frac_overlap",
+                  top_eval_id=_long("top_eval_id"),
+                  top_eval_overlap=_long("top_eval_overlap"))
+
+
+_X10_SHARED = {
+    "split": lambda s: train_test_split(s.t("documents"), "doc_id",
+                                        hashed=False),
+    "train": lambda s: s.split.filter(F.col("split") == "train"),
+    "ev": lambda s: s.split.filter(F.col("split") == "eval"),
+}
+_X10_ARMS = {
+    "exact": lambda s: _x10_gate(s, "exact", decontaminate),
+    "bloom": lambda s: _x10_gate(s, "bloom", bloom_decontaminate),
+    "report": _x10_report,
+}
 
 
 def _q_x11_text_hygiene(spark, sf):
@@ -3746,29 +3191,8 @@ def _q_x11_text_hygiene(spark, sf):
     per-category hit counts, the dominant-category tag and the blocked
     flag are all value-checked (an entirely narrow projection — no
     join, no shuffle added to the row)."""
-    from serverless_data_pipeline_spark.operators.text import (
-        lexicon_tag, redact_pii, repetition_signals,
-    )
-    docs = _t(spark, sf, "documents")
-    lex = lexicon_tag(docs, "text", _X11_LEXICONS,
-                      block_categories=("banned",), min_hits=2).select(
-        "doc_id", "lex_banned", "lex_compute", "lex_storage",
-        "lex_top", "lex_blocked")
-    rep = repetition_signals(docs, "doc_id", "text", ngram_n=3)
-    pii_text = F.concat(
-        F.col("text"), F.lit(" contact user"),
-        F.col("doc_id").cast("string"), F.lit("@example.com ref "),
-        (F.col("doc_id") * 7919 + 100003).cast("string"))
-    red = redact_pii(docs.select("doc_id", pii_text.alias("text")))
-    red = red.select("doc_id",
-                     F.col("n_email").cast("long"),
-                     F.col("n_digit_run").cast("long"),
-                     F.col("n_redactions").cast("long"),
-                     F.md5(F.col("redacted_text").cast("binary"))
-                      .alias("redacted_fp"))
-    c4, gop = _x11_page_recipes(docs)
-    return (rep.join(red, "doc_id").join(c4, "doc_id")
-               .join(gop, "doc_id").join(lex, "doc_id"))
+    return reduce(lambda a, b: a.join(b, "doc_id"),
+                  _build(_X11_ARMS, _Shared(spark, sf, _X11_SHARED)))
 
 
 # The committed x11 lexicons (fixture-vocabulary topic lists + a block
@@ -3781,13 +3205,24 @@ _X11_LEXICONS = {
 }
 
 
-def _x11_page_recipes(docs):
-    """The C4 + Gopher halves of x11 over the derived deterministic
-    multi-line page (also a bench attribution flavour)."""
-    from serverless_data_pipeline_spark.operators.text import (
-        c4_clean, gopher_rules,
-    )
-    from serverless_data_pipeline_spark.functions.text import tokens
+def _x11_redact(s):
+    docs = s.docs
+    pii_text = F.concat(
+        F.col("text"), F.lit(" contact user"),
+        F.col("doc_id").cast("string"), F.lit("@example.com ref "),
+        (F.col("doc_id") * 7919 + 100003).cast("string"))
+    red = redact_pii(docs.select("doc_id", pii_text.alias("text")))
+    return red.select("doc_id",
+                      F.col("n_email").cast("long"),
+                      F.col("n_digit_run").cast("long"),
+                      F.col("n_redactions").cast("long"),
+                      F.md5(F.col("redacted_text").cast("binary"))
+                      .alias("redacted_fp"))
+
+
+def _x11_pages(s):
+    """The derived deterministic multi-line page the C4 and Gopher
+    recipes read."""
     # r14: split once into a column — the page template references the
     # token array four times (each inline reference re-ran the split).
     toks = F.col("__t")
@@ -3803,17 +3238,37 @@ def _x11_page_recipes(docs):
                F.lit("lorem ipsum dolor sit amet.")),
         F.when(F.col("doc_id") % 11 == 0,
                F.lit("var f = function() { return 1; }")))
-    pages = (docs.select("doc_id", tokens("text").alias("__t"))
-             .select("doc_id", page.alias("text")))
-    c4 = c4_clean(pages, min_words_per_line=4).select(
+    return (s.docs.select("doc_id", tokens("text").alias("__t"))
+            .select("doc_id", page.alias("text")))
+
+
+def _x11_c4(s):
+    return c4_clean(s.pages, min_words_per_line=4).select(
         "doc_id",
         F.col("n_lines").alias("c4_n_lines"),
         F.col("kept_lines").alias("c4_kept_lines"),
         F.col("dropped_lines").alias("c4_dropped_lines"),
         F.col("doc_dropped").alias("c4_doc_dropped"),
         F.md5(F.col("clean_text").cast("binary")).alias("c4_fp"))
-    gop = gopher_rules(pages, min_words=25, min_stop_hits=2)
-    return c4, gop
+
+
+def _x11_lex(s):
+    return lexicon_tag(s.docs, "text", _X11_LEXICONS,
+                       block_categories=("banned",), min_hits=2).select(
+        "doc_id", "lex_banned", "lex_compute", "lex_storage",
+        "lex_top", "lex_blocked")
+
+
+_X11_SHARED = {"docs": lambda s: s.t("documents"), "pages": _x11_pages}
+# a join row, not a union: the arms are the doc_id join inputs, in join
+# order
+_X11_ARMS = {
+    "rep": lambda s: repetition_signals(s.docs, "doc_id", "text", ngram_n=3),
+    "redact": _x11_redact,
+    "c4": _x11_c4,
+    "gopher": lambda s: gopher_rules(s.pages, min_words=25, min_stop_hits=2),
+    "lex": _x11_lex,
+}
 
 
 def _q_x13_lm_score(spark, sf):
@@ -3843,35 +3298,23 @@ def _q_x13_lm_score(spark, sf):
       percentiles per language): one threshold row per lang broadcast
       back; tag = lbucket_<lang>_<bucket>, so every doc's per-language
       classification is value-checked."""
-    from serverless_data_pipeline_spark.operators.stages import (
-        quantile_buckets,
-    )
-    from serverless_data_pipeline_spark.operators.text import (
-        classifier_quality_score, default_quality_weights, lm_score,
-    )
-    docs = _t(spark, sf, "documents")
-    # `scored` feeds FOUR arms (lm, bucket, lbucket, dsir's self-model
-    # via self_lm=). Deliberately NOT checkpointed: A/B at sf0.1
-    # (interleaved, warm) read 6.45/6.68 s without vs 7.01/6.64 s with
-    # — the LM rebuild below the union is cheap narrow work and the
-    # blocking materialization job costs what it saves (same verdict
-    # as x7's train-checkpoint note).
-    scored = lm_score(docs, "doc_id", "text")
-    lm = (scored
-          .select(F.lit("lm").alias("tag"), "doc_id",
-                  F.col("n_bigrams").cast("long").alias("n"),
-                  F.col("lm_logp").alias("score")))
-    ft = (classifier_quality_score(
-              docs, "doc_id", "text",
-              weights=default_quality_weights())
-          .select(F.lit("fasttext").alias("tag"), "doc_id",
-                  F.col("n_tokens").alias("n"),
-                  F.col("q_prob").alias("score")))
-    bk = (quantile_buckets(scored, "lm_logp", round_scale=6)
-          .select(F.concat(F.lit("bucket_"), F.col("bucket"))
-                  .alias("tag"), "doc_id",
-                  F.lit(None).cast("long").alias("n"),
-                  F.col("lm_logp").alias("score")))
+    return _union(_X13_ARMS, _Shared(spark, sf, _X13_SHARED))
+
+
+def _x13_row(df, tag, score="lm_logp", n=None):
+    return _slots(df, "tag", tag, (("doc_id", "long"), ("n", "long"),
+                                   ("score", "double")),
+                  doc_id="doc_id", n=n, score=score)
+
+
+def _x13_fasttext(s):
+    return _x13_row(classifier_quality_score(
+                        s.docs, "doc_id", "text",
+                        weights=default_quality_weights()),
+                    F.lit("fasttext"), "q_prob", F.col("n_tokens"))
+
+
+def _x13_lbucket(s):
     # lbucket arm (r7 s6): the SAME cut PER LANGUAGE via
     # quantile_buckets(by=...) — the actual CCNet discipline
     # (per-language perplexity percentiles, so a low-resource
@@ -3879,31 +3322,50 @@ def _q_x13_lm_score(spark, sf):
     # NULL-lang docs are excluded from the ARM (the oracle's inner join
     # drops them and Spark's concat would NULL the tag) — the operator
     # itself preserves NULL groups, pinned by pytest
-    lbk = (quantile_buckets(
-               scored.join(docs.select("doc_id", "lang"), "doc_id"),
-               "lm_logp", round_scale=6, by="lang")
-           .filter(F.col("lang").isNotNull())
-           .select(F.concat(F.lit("lbucket_"), F.col("lang"),
-                            F.lit("_"), F.col("bucket")).alias("tag"),
-                   "doc_id",
-                   F.lit(None).cast("long").alias("n"),
-                   F.col("lm_logp").alias("score")))
+    return _x13_row(stages.quantile_buckets(
+                        s.scored.join(s.docs.select("doc_id", "lang"),
+                                      "doc_id"),
+                        "lm_logp", round_scale=6, by="lang")
+                    .filter(F.col("lang").isNotNull()),
+                    F.concat(F.lit("lbucket_"), F.col("lang"),
+                             F.lit("_"), F.col("bucket")))
+
+
+def _x13_dsir(s):
     # dsir arm (r7 session 5): DSIR domain-targeted selection — weight =
     # log-ratio of the en-subcorpus-trained LM vs the self-trained LM,
     # keep = top keep_frac by in-plan percentile threshold; the WHOLE
     # decision (weight + kept flag, riding the tag) is value-checked
-    from serverless_data_pipeline_spark.operators.text import dsir_select
-    dsir = (dsir_select(docs, docs.filter(F.col("lang") == "en"),
-                        "doc_id", "text", keep_frac=0.25,
-                        self_lm=scored)
-            .filter(F.col("dsir_weight").isNotNull())
-            .select(F.concat(F.lit("dsir_"),
+    docs = s.docs
+    return _x13_row(dsir_select(docs, docs.filter(F.col("lang") == "en"),
+                                "doc_id", "text", keep_frac=0.25,
+                                self_lm=s.scored)
+                    .filter(F.col("dsir_weight").isNotNull()),
+                    F.concat(F.lit("dsir_"),
                              F.when(F.col("dsir_kept"), F.lit("keep"))
-                             .otherwise(F.lit("drop"))).alias("tag"),
-                    "doc_id",
-                    F.lit(None).cast("long").alias("n"),
-                    F.col("dsir_weight").alias("score")))
-    return lm.unionAll(ft).unionAll(bk).unionAll(dsir).unionAll(lbk)
+                             .otherwise(F.lit("drop"))), "dsir_weight")
+
+
+_X13_SHARED = {
+    "docs": lambda s: s.t("documents"),
+    # `scored` feeds FOUR arms (lm, bucket, lbucket, dsir's self-model
+    # via self_lm=). Deliberately NOT checkpointed: A/B at sf0.1
+    # (interleaved, warm) read 6.45/6.68 s without vs 7.01/6.64 s with
+    # — the LM rebuild below the union is cheap narrow work and the
+    # blocking materialization job costs what it saves (same verdict
+    # as x7's train-checkpoint note).
+    "scored": lambda s: lm_score(s.docs, "doc_id", "text"),
+}
+_X13_ARMS = {
+    "lm": lambda s: _x13_row(s.scored, F.lit("lm"),
+                             n=F.col("n_bigrams").cast("long")),
+    "fasttext": _x13_fasttext,
+    "bucket": lambda s: _x13_row(
+        stages.quantile_buckets(s.scored, "lm_logp", round_scale=6),
+        F.concat(F.lit("bucket_"), F.col("bucket"))),
+    "dsir": _x13_dsir,
+    "lbucket": _x13_lbucket,
+}
 
 
 def _q_x12_segment_dedup(spark, sf):
@@ -3926,42 +3388,41 @@ def _q_x12_segment_dedup(spark, sf):
     approximation, applied identically in the oracle; the fixture's
     doc-frequency tail reaches 3-4, so the exclusion path is actually
     exercised at every scale factor)."""
-    from serverless_data_pipeline_spark.operators.corpus import (
-        passage_dedup, segment_dedup,
-    )
-    from serverless_data_pipeline_spark.operators.dedup import (
-        duplicate_ngram_fraction,
-    )
-    docs = _t(spark, sf, "documents")
+    return _union(_X12_ARMS, _Shared(spark, sf, _X12_SHARED))
+
+
+def _x12_row(variant, df, n_units, n_kept, text_fp=None):
+    return _slots(df, "variant", variant,
+                  (("doc_id", "long"), ("text_fp", "string"),
+                   ("n_units", "int"), ("n_kept", "int")),
+                  doc_id="doc_id", text_fp=text_fp,
+                  n_units=n_units.cast("int"), n_kept=n_kept.cast("int"))
+
+
+def _x12_dupboth(s):
     # ONE shingle pipeline serves BOTH report variants (emit_exact):
     # the exact and capped counts are conditional counts over the same
     # joined rows, so dupfrac + dupfcap cost one pass, not two
-    dupboth = (duplicate_ngram_fraction(docs, "doc_id", "text", n=5,
-                                        max_doc_freq=2,
-                                        emit_exact=True)
-               .localCheckpoint(eager=False))
-    dup = dupboth.select(
-        F.lit("dupfrac").alias("variant"), "doc_id",
-        F.lit(None).cast("string").alias("text_fp"),
-        F.col("n_ngrams_exact").cast("int").alias("n_units"),
-        F.col("dup_ngrams_exact").cast("int").alias("n_kept"))
-    seg = (segment_dedup(docs, "doc_id", "text", segment_words=10)
-           .select(F.lit("segment").alias("variant"), "doc_id",
-                   F.md5("text").alias("text_fp"),
-                   F.col("n_segments").cast("int").alias("n_units"),
-                   F.col("n_kept").cast("int").alias("n_kept")))
-    dupc = dupboth.select(
-        F.lit("dupfcap").alias("variant"), "doc_id",
-        F.lit(None).cast("string").alias("text_fp"),
-        F.col("n_ngrams").cast("int").alias("n_units"),
-        F.col("dup_ngrams").cast("int").alias("n_kept"))
-    pas = (passage_dedup(docs, "doc_id", "text", k=8)
-           .select(F.lit("passage").alias("variant"), "doc_id",
-                   F.md5("text").alias("text_fp"),
-                   F.col("n_tokens").cast("int").alias("n_units"),
-                   (F.col("n_tokens") - F.col("n_removed")).cast("int")
-                    .alias("n_kept")))
-    return seg.unionByName(pas).unionByName(dup).unionByName(dupc)
+    return (duplicate_ngram_fraction(s.docs, "doc_id", "text", n=5,
+                                     max_doc_freq=2, emit_exact=True)
+            .localCheckpoint(eager=False))
+
+
+_X12_SHARED = {"docs": lambda s: s.t("documents"), "dupboth": _x12_dupboth}
+_X12_ARMS = {
+    "segment": lambda s: _x12_row(
+        "segment", segment_dedup(s.docs, "doc_id", "text", segment_words=10),
+        F.col("n_segments"), F.col("n_kept"), F.md5("text")),
+    "passage": lambda s: _x12_row(
+        "passage", passage_dedup(s.docs, "doc_id", "text", k=8),
+        F.col("n_tokens"), F.col("n_tokens") - F.col("n_removed"),
+        F.md5("text")),
+    "dupfrac": lambda s: _x12_row("dupfrac", s.dupboth,
+                                  F.col("n_ngrams_exact"),
+                                  F.col("dup_ngrams_exact")),
+    "dupfcap": lambda s: _x12_row("dupfcap", s.dupboth, F.col("n_ngrams"),
+                                  F.col("dup_ngrams")),
+}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -3969,6 +3430,59 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     g = globals()
     return {name[len("_q_"):]: g[name]
             for name in sorted(g) if name.startswith("_q_")}
+
+
+# row -> (shared-intermediate makers, arm table), for every row built
+# from an arm table
+ARM_TABLES = {
+    "t5_quality_score": (_T5_SHARED, _T5_ARMS),
+    "x2_dedup_clusters": (_X2_SHARED, _X2_ARMS),
+    "x3_topk_similarity": (_X3_SHARED, _X3_ARMS),
+    "x4_pq_exact": (_X4_SHARED, _X4_ARMS),
+    "x5_text_signals": (_X5_SHARED, _X5_ARMS),
+    "x6_multimodal": ({}, _X6_ARMS),
+    "x7_corpus_exact": ({}, _X7_ARMS),
+    "x8_corpus_utils": (_X8_SHARED, _X8_ARMS),
+    "x10_decontaminate": (_X10_SHARED, _X10_ARMS),
+    "x11_text_hygiene": (_X11_SHARED, _X11_ARMS),
+    "x12_segment_dedup": (_X12_SHARED, _X12_ARMS),
+    "x13_lm_score": (_X13_SHARED, _X13_ARMS),
+    "x_approx_suite": (_XA_SHARED, _XA_ARMS),
+}
+
+# The arms bench.py attributes, per row (x_approx: all of them).
+_BENCH_ARMS = {
+    "x_approx_suite": tuple(_XA_ARMS),
+    "x2_dedup_clusters": ("pairs", "label", "star", "pagerank", "url",
+                          "hostrank", "hostrankd", "hquota", "hquotaq"),
+    "x12_segment_dedup": ("segment", "passage", "dupfrac"),
+    "x7_corpus_exact": ("full", "incr"),
+    "x10_decontaminate": ("report",),
+    "x13_lm_score": ("bucket", "dsir", "lbucket"),
+    "x11_text_hygiene": ("c4", "gopher", "lex"),
+    "x8_corpus_utils": ("bins", "tok", "rtok", "atok", "blk", "fert",
+                        "pos", "eshuf", "btok", "lmask"),
+    "x3_topk_similarity": ("rp", "cbal", "hardneg"),
+    "x5_text_signals": ("entropy",),
+    "t5_quality_score": ("drift",),
+    "x6_multimodal": ("img", "vid"),
+    "x4_pq_exact": tuple(_X4_ARMS),
+}
+
+
+def arm_query(row: str, arm: str, spark: SparkSession, sf: str) -> DataFrame:
+    """One arm of ``row`` built alone, from a fresh call's intermediates."""
+    makers, arms = ARM_TABLES[row]
+    return arms[arm](_Shared(spark, sf, makers))
+
+
+def bench_subqueries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Per-arm breakdown of composite headline rows, so bench.py can
+    attribute a row's wall-clock to its arms round over round. Each entry
+    builds exactly the arm its row unions (and the oracle checks). NOT
+    part of the `queries()` registry (no leading `_q_`)."""
+    return {f"{row}.{arm}": partial(arm_query, row, arm)
+            for row, arms in _BENCH_ARMS.items() for arm in arms}
 
 
 # ======================================================== oracle SQL ====

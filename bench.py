@@ -40,7 +40,7 @@ HEADLINE = (
     "x2_dedup_clusters",
     "x3_topk_similarity",
     # consolidated r6: x2_lsh_pairs + x4_ann_suite + g_approx_sketches
-    # in one row; per-flavour attribution lives in `subqueries`.
+    # in one row; per-arm attribution lives in `subqueries`.
     "x_approx_suite",
     "x5_text_signals",
     "x7_corpus_exact",
@@ -82,7 +82,9 @@ def _calibrate_ms(reps: int = 40) -> float:
 # artifact passed the calib-only post-gate after background load
 # subsided, while two mid-run subqueries had absorbed it (loadavg
 # [1.62, 7.54, 9.05]) — and cools down in a LOOP (load decays slowly)
-# instead of a single retry.
+# instead of a single retry. SPARK_GRAFT_CALIB_REF_MS overrides the
+# reference with the running host's own measured idle calib_ms, for a
+# host whose idle speed differs from the one the default was taken on.
 CALIB_REF_MS = float(os.environ.get("SPARK_GRAFT_CALIB_REF_MS", "64.0"))
 CALIB_SLACK = 1.05
 LOADAVG_MAX = float(os.environ.get("SPARK_GRAFT_LOADAVG_MAX", "2.0"))
@@ -177,9 +179,9 @@ def main() -> None:
         times[name] = _banded("queries", name, min(run(name), run(name)),
                               lambda: run(name))
 
-    # Composite-query flavour breakdown (warm, measured once, NOT part of
-    # the headline total) — attributes e.g. x2_lsh_pairs' wall-clock to
-    # its minhash/simhash/embedding components round over round.
+    # Composite-row arm breakdown (warm, measured once, NOT part of the
+    # headline total) — each subquery builds one arm exactly as its row
+    # unions it, e.g. x_approx_suite's minhash/simhash/embedding arms.
     # r14 (verdict #7): measured and emitted only under
     # SPARK_GRAFT_BENCH_VERBOSE=1 — the ~47-entry dict grew the one-line
     # JSON past the driver's tail window and truncated the r12 artifact,

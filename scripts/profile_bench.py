@@ -25,18 +25,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from bench import HEADLINE, SF_DIR  # noqa: E402
 from serverless_data_pipeline_spark.session import get_spark  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = (
-    "x7_corpus_exact", "x2_dedup_clusters", "x_approx_suite",
-    "x12_segment_dedup", "x10_decontaminate", "x13_lm_score",
-    "x3_topk_similarity", "x5_text_signals", "st3_window_agg",
-    "x11_text_hygiene", "q18_large_orders", "w_window_suite",
-    "q3_shipping_priority", "g1_groupby_agg", "q5_local_supplier",
-    "q10_returned_items", "j7_asof_join", "x1_dedup_latest",
-)
 
 
 def main() -> None:

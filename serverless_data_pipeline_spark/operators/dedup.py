@@ -513,9 +513,9 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
 # ------------------------------------------------- dedup-cluster grouping
 
 # Label-prop rounds the "auto" mode spends before handing the unconverged
-# residual to star. From the scripts/cc_sweep.py chain sweep (table in
-# neardup_components): budget 4 covers the diameter<=4 components that
-# dominate real near-dup graphs at label-prop round cost, and caps the
+# residual to star. From the chain-depth sweep (table in the
+# neardup_components docstring): budget 4 covers the diameter<=4 components
+# that dominate real near-dup graphs at label-prop round cost, and caps the
 # adversarial deep-chain case at 4 cheap rounds + star on a 4x-contracted
 # residual. Raising it narrows the depth-8..16 hybrid valley but linearly
 # taxes every deeper graph.
@@ -562,7 +562,7 @@ def neardup_components(pairs: DataFrame, *,
       labels (each node replaced by its partial component minimum;
       internal edges become self-loops and vanish) and finish the tiny
       high-diameter residual with the star algorithm. The measured sweep
-      (scripts/cc_sweep.py) picks the crossover: label_prop wins
+      (table below) picks the crossover: label_prop wins
       whenever components converge within its round budget — including
       the 250k-edge 10x scale_check graph (5.2-11.9 s vs 10.5-13.2 s
       star, three paired runs) — because its rounds are ~2x cheaper than

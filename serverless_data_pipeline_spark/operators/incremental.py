@@ -381,12 +381,11 @@ def maintenance_stream(spark, landing_path: str, schema,
         scheduled_batch_query,
     )
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    from serverless_data_pipeline_spark.operators.util import hadoop_fs
 
     def _exists(path: str) -> bool:
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        return jpath.getFileSystem(conf).exists(jpath)
+        fs, jpath = hadoop_fs(spark, path)
+        return fs.exists(jpath)
 
     def _tick(batch_df, tick_id: int) -> None:
         if batch_df.isEmpty():

@@ -28,12 +28,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 }
 
 
-def marker_score(text_col: Column | str, lang: str) -> Column:
-    """Count of marker-word hits for one language."""
-    toks = tokens(F.lower(F.col(text_col) if isinstance(text_col, str) else text_col))
-    return F.size(F.filter(toks, lambda t: t.isin(*LANG_MARKERS[lang])))
-
-
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """n-gram/stopword-heuristic language ID: argmax marker-hit count,
     CJK codepoints short-circuit to 'zh', no hits -> 'und'. Ties break by

@@ -110,13 +110,22 @@ def swap_into_place(spark, tmp_path: str, target_path: str) -> None:
     API — path-scheme-agnostic (local, HDFS, object stores), unlike
     shutil. NOT atomic on object stores (rename = copy+delete there);
     callers own the SINGLE-WRITER discipline: no concurrent writer may
-    touch the target during the swap window."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(target_path)
-    jtmp = jvm.org.apache.hadoop.fs.Path(tmp_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(jpath, True)
-    fs.rename(jtmp, jpath)
+    touch the target during the swap window.
+
+    Both filesystem calls report failure by returning false, not by
+    raising; either one failing raises here, naming ``tmp_path``, which
+    still holds the complete new table."""
+    from serverless_data_pipeline_spark.operators.util import hadoop_fs
+    fs, jpath = hadoop_fs(spark, target_path)
+    _, jtmp = hadoop_fs(spark, tmp_path)
+    if fs.exists(jpath) and not fs.delete(jpath, True):
+        raise RuntimeError(f"swap into {target_path} failed: could not "
+                           f"delete the old table; the new data is in "
+                           f"{tmp_path}")
+    if not fs.rename(jtmp, jpath):
+        raise RuntimeError(f"swap into {target_path} failed: rename "
+                           f"returned false; the new data is in "
+                           f"{tmp_path}")
 
 
 def compact_table(spark, path: str, target_partitions: int = 32) -> int:
@@ -223,14 +232,13 @@ def delete_expired_partitions(spark, path: str, cutoff_date: str) -> int:
            .filter(F.make_date("year", "month", "day")
                    < F.lit(cutoff_date).cast("date"))
            .collect())
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    from serverless_data_pipeline_spark.operators.util import hadoop_fs
     deleted, failed = 0, []
     for r in old:
         part = (f"{path.rstrip('/')}/year={r['year']}"
                 f"/month={r['month']}/day={r['day']}")
-        jpath = jvm.org.apache.hadoop.fs.Path(part)
-        if jpath.getFileSystem(conf).delete(jpath, True):
+        fs, jpath = hadoop_fs(spark, part)
+        if fs.delete(jpath, True):
             deleted += 1
         else:
             failed.append(part)

@@ -166,6 +166,53 @@ def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
     assert spark.read.parquet(path).count() == 1000
 
 
+def test_swap_raises_and_keeps_temp_when_rename_fails(spark, tmp_path,
+                                                     monkeypatch):
+    """A rename that returns false (the Hadoop FileSystem reports
+    failure by result, not by exception) must fail the commit and leave
+    the fully written temp dir in place, named in the error — never a
+    row count for a table that is gone."""
+    import pytest
+
+    from serverless_data_pipeline_spark.operators import util
+    real = util.hadoop_fs
+
+    class NoRenameFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def rename(self, src, dst):
+            return False
+
+    def patched(s, path):
+        fs, jp = real(s, path)
+        return NoRenameFS(fs), jp
+
+    def rows(p):
+        return sorted(r.id for r in spark.read.parquet(p).collect())
+
+    path = str(tmp_path / "many")
+    spark.range(0, 50).repartition(5).write.parquet(path)
+    monkeypatch.setattr(util, "hadoop_fs", patched)
+    with pytest.raises(RuntimeError, match="many__compact"):
+        compact_table(spark, path, target_partitions=1)
+    monkeypatch.undo()
+    assert rows(path + "__compact") == list(range(50))
+
+    target = str(tmp_path / "target")
+    spark.createDataFrame([(1, 1.0)], "id long, v double") \
+        .write.parquet(target)
+    updates = spark.createDataFrame([(2, 2.0)], "id long, v double")
+    monkeypatch.setattr(util, "hadoop_fs", patched)
+    with pytest.raises(RuntimeError, match="target__merge"):
+        merge_upsert(spark, target, updates, ["id"])
+    monkeypatch.undo()
+    assert rows(target + "__merge") == [1, 2]
+
+
 def test_partitioned_stream_sink(spark, tmp_path):
     src = str(tmp_path / "src")
     _frame(spark).write.parquet(src)
