@@ -26,9 +26,12 @@ class PipelineControl:
         id. Mirrors the API body shape {source, data_type, priority,
         metadata{...}} (md:172-180); the proxy Lambda's StartExecution
         grant (py:488) maps to the caller then invoking
-        plans.pipeline.run_pipeline with this id's batch. The SUBMITTED
+        plans.pipeline.run_pipeline(batch, ..., pipeline_id=<this id>),
+        so the run's stage rows extend this id's trail. The SUBMITTED
         marker lands before any stage so the run is visible to
-        list_pipelines immediately, as the reference's state table is."""
+        list_pipelines immediately, as the reference's state table is —
+        and it is the only in-flight signal: run_pipeline commits its
+        stage rows together when the run ends."""
         pid = new_pipeline_id()
         self.state.append(pid, "control", "SUBMITTED", {
             "source": source, "data_type": data_type,
@@ -55,6 +58,9 @@ class PipelineControl:
                 self.state.history(pipeline_id).orderBy("timestamp").collect()]
 
     def cancel_pipeline(self, pipeline_id: str) -> None:
-        """DELETE /pipelines/{id} — append a CANCELLED marker (the driver
-        polls state between stages; append-only keeps the audit trail)."""
+        """DELETE /pipelines/{id} — append a CANCELLED marker. It is an
+        audit marker only: run_pipeline does not poll the state table,
+        so a run in flight still runs to its end and commits its trail
+        (a per-stage poll would cost a Spark job per stage).
+        Append-only keeps the audit trail."""
         self.state.append(pipeline_id, "control", "CANCELLED", {})

@@ -4,14 +4,17 @@ Replaces the reference's DynamoDB `data-pipeline-state` table (py:325-339):
 partition key pipeline_id (string), sort key timestamp (string), plus the
 status/stage payload the api + error-handler functions write (py:465-468,
 py:489). Implemented as an append-only parquet table — an audit trail, not
-a KV store: every stage transition is one appended row and the "current"
-state is the latest row per pipeline_id (read via keep-latest window)."""
+a KV store: every stage transition is one row and the "current" state is
+the latest row per pipeline_id (read via keep-latest window). A batch run
+commits all of its rows in one append when it ends (plans.pipeline); the
+control plane appends one row per call."""
 
 from __future__ import annotations
 
 import datetime as _dt
 import json
 import uuid
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -30,17 +33,42 @@ def new_pipeline_id() -> str:
     return f"pipeline-{uuid.uuid4()}"
 
 
+def _utcnow() -> _dt.datetime:
+    """The one clock state rows are stamped from."""
+    return _dt.datetime.now(_dt.timezone.utc)
+
+
+def state_row(pipeline_id: str, stage: str, status: str,
+              detail: dict | None = None,
+              after: tuple | None = None) -> tuple:
+    """One STATE_SCHEMA row stamped now. `after` is the row this one
+    follows in the same trail: the stamp is bumped 1 µs past it when the
+    clock has not moved on, so `current()` (latest timestamp wins) never
+    sees a tie inside a run. Stamps are fixed-width ISO strings, so their
+    string order is their time order."""
+    now = _utcnow()
+    if after is not None:
+        now = max(now, _dt.datetime.fromisoformat(after[1])
+                  + _dt.timedelta(microseconds=1))
+    return (pipeline_id, now.isoformat(timespec="microseconds"),
+            stage, status, json.dumps(detail or {}))
+
+
 class StateTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
     def append(self, pipeline_id: str, stage: str, status: str,
-               detail: dict | None = None) -> None:
-        row = [(pipeline_id,
-                _dt.datetime.now(_dt.timezone.utc).isoformat(),
-                stage, status, json.dumps(detail or {}))]
-        (self.spark.createDataFrame(row, STATE_SCHEMA)
+               detail: dict | None = None, *,
+               earlier: Sequence[tuple] = ()) -> None:
+        """Commit one row stamped now, as one parquet file. `earlier`
+        holds `state_row`s stamped before it (a run's buffered trail);
+        they land in the same file, ahead of this row."""
+        rows = list(earlier)
+        rows.append(state_row(pipeline_id, stage, status, detail,
+                              after=rows[-1] if rows else None))
+        (self.spark.createDataFrame(rows, STATE_SCHEMA)
              .coalesce(1).write.mode("append").parquet(self.path))
 
     def history(self, pipeline_id: str | None = None) -> DataFrame:
@@ -49,10 +77,11 @@ class StateTable:
 
     def compact(self) -> int:
         """Rewrite the append-only audit trail as one file per shuffle
-        partition. Each append() commits a 1-row parquet file — correct as
-        an audit trail, but a long-lived pipeline accumulates small files
-        (listing cost grows linearly). Run periodically; returns the row
-        count preserved.
+        partition. Each append() commits one small parquet file — one per
+        batch run (its whole trail, written when the run ends) and one per
+        control-plane call — correct as an audit trail, but a long-lived
+        pipeline accumulates small files (listing cost grows linearly).
+        Run periodically; returns the row count preserved.
 
         The swap goes through sources.writers.swap_into_place (Hadoop
         FileSystem API — path-scheme-agnostic). SINGLE-WRITER constraint:

@@ -4,6 +4,8 @@ quality gate, invalid-batch routing, state-table audit trail."""
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import json
 import os
 
 import pytest
@@ -188,3 +190,161 @@ def test_control_plane_start_and_update(spark, paths):
     assert cur[pid]["status"] == "UPDATED"
     hist = ctl.get_pipeline(pid)
     assert [h["status"] for h in hist] == ["SUBMITTED", "UPDATED"]
+
+
+# --- one state commit per run ------------------------------------------
+
+def _state_files(paths):
+    return glob.glob(os.path.join(paths["state"], "part-*.parquet"))
+
+
+def _trail(state, pid):
+    rows = sorted(state.history(pid).collect(), key=lambda r: r.timestamp)
+    return [(r.stage, r.status, json.loads(r.detail)) for r in rows]
+
+
+_TRAILS = {
+    "success": [("ingest", "RUNNING"), ("validate", "RUNNING"),
+                ("quality", "RUNNING"), ("sink", "SUCCEEDED")],
+    "quality_fail": [("ingest", "RUNNING"), ("validate", "RUNNING"),
+                     ("quality", "RUNNING"), ("quality", "FAILED")],
+    "validation_fail": [("ingest", "RUNNING"), ("validate", "RUNNING"),
+                        ("validate", "FAILED")],
+    "sla_fail": [("ingest", "RUNNING"), ("validate", "RUNNING"),
+                 ("validate", "FAILED")],
+}
+
+
+def _run(spark, paths, state, kind):
+    """One run that exits through `kind`'s path (columns need a live
+    session, so the per-path arguments are built here)."""
+    kwargs = {
+        "success": {},
+        "quality_fail": {"quality_rules": [F.col("id") > 99],
+                         "config": EngineConfig(quality_threshold=0.95)},
+        "validation_fail": {"checks": [F.col("id") > 99]},
+        "sla_fail": {"config": EngineConfig(sla_budget_s=0.0)},
+    }[kind]
+    return run_pipeline(_batch(spark), processed_path=paths["processed"],
+                        archive_path=paths["archive"],
+                        error_path=paths["errors"], state=state,
+                        required=REQUIRED, **kwargs)
+
+
+@pytest.mark.parametrize("kind", sorted(_TRAILS))
+def test_run_commits_its_trail_once(spark, paths, kind):
+    """Every exit path writes the run's whole trail as ONE state file, in
+    the stage order the per-stage appends used to produce, and the run
+    stays within its Spark job budget (a success run took 15 jobs on a
+    4-core host when each stage mark was its own write job and the sink
+    was recounted; 10 now)."""
+    expected = _TRAILS[kind]
+    state = StateTable(spark, paths["state"])
+    sc = spark.sparkContext
+    group = f"run-{kind}"
+    sc.setJobGroup(group, "one state commit per run")
+    try:
+        res = _run(spark, paths, state, kind)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+    assert len(_state_files(paths)) == 1
+    trail = _trail(state, res.pipeline_id)
+    assert [(s, st) for s, st, _ in trail] == expected
+    assert res.status == expected[-1][1]
+    if kind == "success":
+        written = spark.read.parquet(paths["processed"]).count()
+        assert res.counts == {"processed": written, "invalid": 0}
+        assert trail[-1][2]["rows"] == written == 2
+
+
+def test_raising_stage_ends_trail_failed(spark, paths):
+    """A stage that raises still commits the trail — with a terminal
+    FAILED row naming the error — in one file, then re-raises."""
+    with open(paths["processed"], "w") as f:      # the sink cannot write
+        f.write("not a directory")
+    state = StateTable(spark, paths["state"])
+    pid = "pipeline-sink-raises"
+    with pytest.raises(Exception) as raised:
+        run_pipeline(_batch(spark), processed_path=paths["processed"],
+                     archive_path=paths["archive"],
+                     error_path=paths["errors"], state=state,
+                     required=REQUIRED, pipeline_id=pid)
+    assert len(_state_files(paths)) == 1
+    trail = _trail(state, pid)
+    assert [(s, st) for s, st, _ in trail] == [
+        ("ingest", "RUNNING"), ("validate", "RUNNING"),
+        ("quality", "RUNNING"), ("sink", "FAILED")]
+    detail = trail[-1][2]
+    assert detail["reason"] == "exception"
+    assert detail["error"].startswith(type(raised.value).__name__ + ": ")
+    cur = state.current().filter(F.col("pipeline_id") == pid).collect()
+    assert [(r.stage, r.status) for r in cur] == [("sink", "FAILED")]
+    assert json.loads(cur[0].detail) == detail
+
+
+def test_failed_commit_keeps_the_stage_error_chained(spark, paths,
+                                                     monkeypatch):
+    """When the trail commit itself fails after a stage raised, the commit
+    error propagates with the stage error as its __context__."""
+    stage_error = RuntimeError("archive down")
+
+    def broken_archive(*a, **k):
+        raise stage_error
+
+    def broken_append(self, *a, **k):
+        raise OSError("state store down")
+
+    from serverless_data_pipeline_spark.sources import writers
+    monkeypatch.setattr(writers, "write_archive", broken_archive)
+    monkeypatch.setattr(StateTable, "append", broken_append)
+    with pytest.raises(OSError) as raised:
+        run_pipeline(_batch(spark), processed_path=paths["processed"],
+                     archive_path=paths["archive"],
+                     error_path=paths["errors"], state=StateTable(
+                         spark, paths["state"]), required=REQUIRED)
+    assert raised.value.__context__ is stage_error
+
+
+def test_trail_stamps_strictly_increase_under_a_frozen_clock(spark, paths,
+                                                             monkeypatch):
+    """Marks stamped with no write between them can share a clock reading;
+    stamps are bumped so current() still picks the terminal row."""
+    from serverless_data_pipeline_spark.plans import state as state_mod
+    frozen = dt.datetime(2024, 6, 15, 9, 0, 0, tzinfo=dt.timezone.utc)
+    monkeypatch.setattr(state_mod, "_utcnow", lambda: frozen)
+    state = StateTable(spark, paths["state"])
+    for kind in ("quality_fail", "validation_fail"):
+        expected = _TRAILS[kind]
+        res = _run(spark, paths, state, kind)
+        rows = state.history(res.pipeline_id).collect()   # file order
+        stamps = [r.timestamp for r in rows]
+        assert all(a < b for a, b in zip(stamps, stamps[1:]))
+        assert [(r.stage, r.status) for r in rows] == expected
+        cur = state.current().filter(
+            F.col("pipeline_id") == res.pipeline_id).collect()
+        assert [(r.stage, r.status) for r in cur] == [expected[-1]]
+        # test_sla_stage_timings_recorded's law under the frozen clock
+        totals = [d["total_elapsed_s"] for _, _, d in
+                  _trail(state, res.pipeline_id)]
+        assert totals == sorted(totals)
+
+
+def test_control_plane_id_meets_run_id(spark, paths):
+    """start_pipeline's id threads into run_pipeline: one trail from the
+    SUBMITTED marker to the sink."""
+    state = StateTable(spark, paths["state"])
+    ctl = PipelineControl(state)
+    pid = ctl.start_pipeline(source="api", metadata={"batch_id": "b-2"})
+    res = run_pipeline(_batch(spark), processed_path=paths["processed"],
+                       archive_path=paths["archive"],
+                       error_path=paths["errors"], state=state,
+                       required=REQUIRED, pipeline_id=pid)
+    assert res.pipeline_id == pid
+    hist = ctl.get_pipeline(pid)
+    assert (hist[0]["stage"], hist[0]["status"]) == ("control", "SUBMITTED")
+    assert (hist[-1]["stage"], hist[-1]["status"]) == ("sink", "SUCCEEDED")
+    assert [(p["pipeline_id"], p["status"])
+            for p in ctl.list_pipelines()] == [(pid, "SUCCEEDED")]
