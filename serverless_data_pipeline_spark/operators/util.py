@@ -92,18 +92,28 @@ def spread_checkpoint(df: DataFrame) -> DataFrame:
         respread = ckpt.repartition(target).localCheckpoint(eager=True)
         # r14 (ADVICE): free the abandoned first checkpoint's storage
         # blocks NOW — they otherwise stay persisted until the py4j/JVM
-        # refs are GC'd, a silent storage leak in a shared helper. The
-        # python-side `ckpt.rdd` is a fresh deserializing wrapper whose
-        # unpersist() never reaches the checkpoint blocks (verified);
-        # the block holder is the LogicalRDD leaf's internal RDD, so go
-        # through the plan (private internals, same caveat as
-        # `hadoop_fs` — best-effort, the leak is only local storage).
-        try:
-            ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
+        # refs are GC'd, a silent storage leak in a shared helper.
+        release_checkpoint(ckpt)
         return respread
     return ckpt
+
+
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the storage blocks of a ``localCheckpoint`` frame NOW instead
+    of when the py4j/JVM refs are GC'd. ``df.unpersist()`` does not reach
+    them, and neither does the python-side ``df.rdd`` (a fresh
+    deserializing wrapper, verified); the block holder is the LogicalRDD
+    leaf's internal RDD, so go through the plan (private internals, same
+    caveat as `hadoop_fs` — best-effort, a miss only leaks local
+    storage). A frame that is not a checkpoint leaf is left alone."""
+    from py4j.protocol import Py4JError
+
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except (AttributeError, Py4JError):
+        pass
 
 
 def hadoop_fs(spark, path: str):

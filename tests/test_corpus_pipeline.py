@@ -3,6 +3,8 @@ foreign-language and low-quality docs must each be removed by their stage."""
 
 from __future__ import annotations
 
+import pytest
+
 from serverless_data_pipeline_spark.plans.corpus_pipeline import (
     prepare_training_corpus,
 )
@@ -83,7 +85,6 @@ def test_corpus_pipeline_repetition_and_decontamination_stages(spark):
                                     decontam_via="bloom",
                                     collect_counts=False)
     assert sorted(r.doc_id for r in bloom.clean.collect()) == [2]
-    import pytest
     with pytest.raises(ValueError):
         prepare_training_corpus(res_docs, eval_docs=ev,
                                 decontam_via="nope",
@@ -172,14 +173,142 @@ def test_corpus_pipeline_null_text_path_parity(spark):
     assert kept.count() == 2
 
 
+def _persisted_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def test_corpus_pipeline_unpersist_releases_stage_caches(spark):
     docs = spark.createDataFrame(
         [(1, GOOD), (2, GOOD + " extra trailing words here")],
         "doc_id long, text string")
+    before = _persisted_rdds(spark)
     res = prepare_training_corpus(docs, languages=("en",), min_quality=0.0,
                                   jaccard_threshold=0.9, passage_k=8,
                                   collect_counts=True)
-    assert len(res.cached) == 1
-    assert res.cached[0].storageLevel.useMemory
+    assert _persisted_rdds(spark) - before
     res.unpersist()
-    assert res.cached == []
+    # the stage caches AND the checkpoint leaves (which df.unpersist()
+    # does not reach): nothing the call persisted outlives unpersist()
+    assert _persisted_rdds(spark) - before == set()
+    assert res.cached == [] and res.checkpoints == []
+
+
+def test_decontam_via_is_checked_before_any_work(spark):
+    docs = spark.createDataFrame([(1, GOOD)], "doc_id long, text string")
+    ev = spark.createDataFrame([(9, GOOD2)], "doc_id long, text string")
+    tracker = spark.sparkContext.statusTracker()
+    for eval_docs in (ev, None):
+        jobs = set(tracker.getJobIdsForGroup())
+        with pytest.raises(ValueError, match="decontam_via"):
+            prepare_training_corpus(docs, eval_docs=eval_docs,
+                                    decontam_via="nope")
+        assert set(tracker.getJobIdsForGroup()) == jobs
+
+
+BOILER = " ".join(f"b{i}" for i in range(8))
+# docs 10-19 = one doc per stage that must remove it, plus two survivors
+EVERY_STAGE_DOCS = [
+    (10, f"{GOOD} {BOILER}"),                       # survives
+    (11, f"{GOOD2} {BOILER}"),                      # survives, excised
+    (12, f"{GOOD} {BOILER}"),                       # exact dup of 10
+    (13, f"{NEAR} {BOILER}"),                       # near dup of 10
+    (14, BOILER),                                   # pure boilerplate
+    # semantic twin of 10
+    (15, f"{BOILER} another fine document about engines and rivers "
+         "flowing through the quiet valley during a long warm summer"),
+    (16, "el que la los es la que el los es"),      # language gate
+    (17, "x!!! ???"),                               # quality gate
+    # repetition gate: a repeated trigram, but no repeated 8-token passage
+    (18, " ".join(f"we like it {w}" for w in
+                  ("apples pears plums grapes lemons melons berries "
+                   "cherries peaches mangoes").split())),
+    # decontamination
+    (19, "the engineers measure river flow and then report the daily "
+         "numbers to the regional water office every single morning"),
+]
+EVERY_STAGE_COUNTS = {"input": 10, "after_exact_dedup": 9,
+                      "after_near_dedup": 8, "after_passage_dedup": 7,
+                      "after_semantic_dedup": 6, "clean": 2}
+
+
+def _every_stage_run(spark, collect_counts, docs=None):
+    if docs is None:
+        docs = spark.createDataFrame(EVERY_STAGE_DOCS,
+                                     "doc_id long, text string")
+    # 15 is a semantic twin of 10; 12's row is stale (it dies in exact
+    # dedup); docs without a row are kept
+    emb = spark.createDataFrame(
+        [(12, [1.0, 0.0005, 0.0, 0.1]), (10, [1.0, 0.0, 0.0, 0.1]),
+         (15, [1.0, 0.001, 0.0, 0.1]), (11, [-1.0, 0.5, 0.2, -0.8])],
+        "doc_id long, embedding array<double>")
+    # shares the 5-gram "engineers measure river flow and" with doc 19
+    ev = spark.createDataFrame(
+        [(99, "we saw that engineers measure river flow and sleep")],
+        "doc_id long, text string")
+    return prepare_training_corpus(
+        docs, languages=("en",), min_quality=0.3, jaccard_threshold=0.5,
+        exact_clusters=True, passage_k=8, embeddings=emb,
+        semantic_threshold=0.95, semantic_clusters=2,
+        max_dup_ngram_ratio=0.2, eval_docs=ev,
+        collect_counts=collect_counts)
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_prepare_training_corpus_computes_each_stage_once(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    # every row the input scan yields passes this UDF (nondeterministic:
+    # Catalyst may neither merge nor drop its evaluations)
+    reads = spark.sparkContext.accumulator(0)
+
+    def passthrough(text):
+        reads.add(1)
+        return text
+
+    read_text = F.udf(passthrough, "string").asNondeterministic()
+    docs = (spark.createDataFrame(EVERY_STAGE_DOCS, "doc_id long, text string")
+            .withColumn("text", read_text("text")))
+    clean_p, stats_p = str(tmp_path / "clean"), str(tmp_path / "stats")
+    res, prep_jobs = _jobs_in_group(
+        spark, "corpus-prepare", lambda: _every_stage_run(spark, True, docs))
+    # the counts filled the clean cache: the write reads it, not the
+    # gate chain and the eval broadcast
+    scan = res.clean._jdf.queryExecution().executedPlan()
+    if scan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        scan = scan.inputPlan()
+    assert scan.getClass().getSimpleName() == "InMemoryTableScanExec"
+    _, clean_jobs = _jobs_in_group(
+        spark, "corpus-clean", lambda: res.clean.write.parquet(clean_p))
+    _, stats_jobs = _jobs_in_group(
+        spark, "corpus-stats", lambda: res.stats.write.parquet(stats_p))
+    assert clean_jobs == 1
+    # the input is read once per side of the exact-dedup join, by the
+    # checkpoint job; every later stage, count and write reads the leaf
+    assert reads.value == 2 * len(EVERY_STAGE_DOCS)
+    # 102-104 jobs before the stage checkpoints and the clean cache, 76
+    # after (local[4])
+    assert prep_jobs + clean_jobs + stats_jobs <= 85
+    rows = {tuple(r) for r in spark.read.parquet(clean_p).collect()}
+    stats = [tuple(r) for r in spark.read.parquet(stats_p).collect()]
+    res.unpersist()
+
+    lazy = _every_stage_run(spark, False)
+    try:
+        assert {tuple(r) for r in lazy.clean.collect()} == rows
+        assert [tuple(r) for r in lazy.stats.collect()] == stats
+    finally:
+        lazy.unpersist()
+    assert {r[0] for r in rows} == {10, 11}
+    assert res.counts == EVERY_STAGE_COUNTS
+    assert res.counts["clean"] == len(rows) == stats[0][1]

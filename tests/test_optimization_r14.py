@@ -119,7 +119,7 @@ def test_spread_checkpoint_frees_abandoned_first_checkpoint(spark):
     unpersist the abandoned first checkpoint's storage blocks (r14
     ADVICE: the py4j refs otherwise hold them until GC)."""
     from serverless_data_pipeline_spark.operators.util import (
-        spread_checkpoint,
+        release_checkpoint, spread_checkpoint,
     )
 
     jsc = spark.sparkContext._jsc.sc()
@@ -131,7 +131,8 @@ def test_spread_checkpoint_frees_abandoned_first_checkpoint(spark):
     # not two (respread + abandoned first checkpoint)
     assert after - before == 1
     assert out.count() == 100
-    out._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    release_checkpoint(out)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_label_prop_converges_in_one_round_on_shallow_graph(spark):
