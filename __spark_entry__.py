@@ -2180,9 +2180,10 @@ def _xa_sketch_hll_merged(s):
 def _xa_semantic(s):
     """SemDeDup: k-means clusters + within-cluster greedy cosine dedup;
     dropped rows surface as (dropped, kept-representative) pairs."""
-    # max_iter=5: dedup only needs clusters that co-locate near-identical
-    # vectors, which k-means reaches in a few rounds — at 100 TB the
-    # codebook comes from one offline training anyway.
+    # max_iter=5 caps the driver-side Lloyd rounds: dedup only needs
+    # clusters that co-locate near-identical vectors, which k-means
+    # reaches in a few rounds — at 100 TB the codebook comes from one
+    # offline training anyway.
     out = semantic_dedup(s.t("embeddings"), "vec_id", "embedding",
                          threshold=0.3, n_clusters=16, dim=64, max_iter=5)
     return _xa(out.filter(~F.col("keep")), "semantic", F.col("dup_sim"),
@@ -2272,9 +2273,9 @@ _XA_SHARED = {
     # consumer subtree and 62-row Arrow batches pay more per-task
     # overhead than the parallelism returns on a 2000x64 table.
     "e": lambda s: s.t("embeddings"),
-    # the two offline trainings (the MLlib IVF k-means fit and the PQ
-    # codebook sample-collect + driver Lloyd) are independent; the arms
-    # that read them build concurrently, so they train concurrently
+    # the two offline trainings (IVF centroids and PQ codebooks, each one
+    # bounded-sample collect + driver-side k-means) are independent; the
+    # arms that read them build concurrently, so they train concurrently
     "cents": lambda s: train_ivf_centroids(s.e, "embedding", n_cells=8,
                                            seed=42, max_iter=5),
     "books": lambda s: train_pq_codebooks(s.e, "embedding", dim=64, m=8,

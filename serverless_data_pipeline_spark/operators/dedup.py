@@ -774,7 +774,6 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
                    threshold: float = 0.9, n_clusters: int = 16,
                    dim: int | None = None, seed: int = 42,
                    centroids: list[list[float]] | None = None,
-                   sample_fraction: float | None = None,
                    max_iter: int = 10,
                    max_cluster_size: int = 8192) -> DataFrame:
     """X2 (semantic flavour) — SemDeDup (Abbas et al. 2023,
@@ -786,25 +785,24 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
     semantic complement of the lexical sketch flavours.
 
     Scale shape: the codebook is trained once (pass `centroids` from an
-    offline `train_ivf_centroids` run, or let `sample_fraction` bound the
-    in-line training scan) and broadcasts as a plain constant; cell
+    offline `train_ivf_centroids` run, the 100 TB path; in-line training
+    fits the same bounded sample, one Spark job at construction) and
+    broadcasts as a plain constant; cell
     assignment is one narrow Arrow-batched matmul pass; the ONLY shuffle
     groups by cluster id; the quadratic verification is confined within a
     cluster, so `n_clusters` is the scale lever (the paper runs 50k
     clusters at LAION scale). A cluster larger than `max_cluster_size`
     raises instead of silently going quadratic — raise `n_clusters`, not
     the cap (which also bounds kernel memory: the within-cluster cosine
-    matrix is c^2 doubles, ~0.5 GB at the 8192 default). Given a fixed codebook the whole pass is deterministic and
-    partition-independent (the greedy scan orders by (centroid_sim, id),
-    dup_of ties break to the earliest kept item); in-line training is
-    seeded but — like any parallel k-means init — partitioning-sensitive,
-    so production reruns should pass `centroids` from one offline
-    training.
+    matrix is c^2 doubles, ~0.5 GB at the 8192 default). The whole pass
+    is deterministic and partition-independent: in-line training samples
+    by a seeded hash order of `id_col`, the greedy scan orders by
+    (centroid_sim, id), and dup_of ties break to the earliest kept item.
 
     Returns one row per input: (id, cluster_id, centroid_sim, keep,
     dup_of, dup_sim); dropped rows point at their kept representative.
-    Pass `dim` explicitly on anything big (the fallback inference runs a
-    `.first()` driver action)."""
+    `dim` defaults to the codebook's width. An empty input returns an
+    empty result; NULL vectors are not supported."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -826,22 +824,22 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
         T.StructField("dup_sim", T.DoubleType()),
     ])
 
-    if dim is None or centroids is None:
-        # Both fallbacks dereference data (a .first() probe / an in-line
-        # k-means fit) and die with an opaque TypeError on an EMPTY frame
-        # — which the corpus pipeline can legitimately produce when the
-        # embeddings-vs-live-docs semi-join comes back empty (ADVICE r5).
-        # An empty input has no duplicates: short-circuit with an empty
-        # result of the output schema.
-        probe = df.select(vec_col).first()
-        if probe is None:
-            return df.sparkSession.createDataFrame([], out_schema)
-        if dim is None:
-            dim = len(probe[0])
     if centroids is None:
-        centroids = train_ivf_centroids(df, vec_col, n_cells=n_clusters,
-                                        seed=seed, max_iter=max_iter,
-                                        sample_fraction=sample_fraction)
+        # The training sample is the only job: it also shows an EMPTY
+        # frame, which the corpus pipeline can legitimately produce when
+        # the embeddings-vs-live-docs semi-join comes back empty
+        # (ADVICE r5). An empty input has no duplicates: short-circuit
+        # with an empty result of the output schema.
+        try:
+            centroids = train_ivf_centroids(
+                df.select(id_col, vec_col), vec_col, n_cells=n_clusters,
+                seed=seed, max_iter=max_iter)
+        except ValueError:
+            if not df.isEmpty():
+                raise
+            return df.sparkSession.createDataFrame([], out_schema)
+    if dim is None:
+        dim = len(centroids[0])
     cents = np.asarray(centroids, dtype=np.float64)
     cnorm = np.linalg.norm(cents, axis=1)
     cents_n = cents / np.where(cnorm == 0.0, 1.0, cnorm)[:, None]

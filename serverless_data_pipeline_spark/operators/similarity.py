@@ -303,24 +303,96 @@ def group_centroids(df: DataFrame, group_col: str, vec_col: str,
     return df.groupBy(group_col).applyInPandas(_agg, schema)
 
 
+# FAISS's `max_points_per_centroid` default: k-means quality saturates
+# on a sample whose size grows with k, not with the corpus.
+_POINTS_PER_CENTROID = 256
+
+
+def _training_sample(corpus: DataFrame, vec_col: str, id_col: str | None,
+                     n: int, seed: int, trainer: str):
+    """The bounded training sample behind every k-means fit: the `n` rows
+    with the smallest xxhash64(id, seed), ties broken by id, NULL vectors
+    skipped. ONE Spark job (a per-task top-n heap) at any corpus size;
+    the order depends on neither partitioning nor, unlike an id prefix,
+    on how ids were assigned. `id_col` defaults to the first non-vector
+    column and should be unique for a total order. Returns an (n', dim)
+    float64 matrix; raises ValueError naming `trainer` when the frame
+    has no ordering column or no non-NULL vector."""
+    import numpy as np
+
+    if id_col is None:
+        non_vec = [c for c in corpus.columns if c != vec_col]
+        if not non_vec:
+            raise ValueError(
+                f"{trainer} needs id_col (or any non-vector column) to "
+                "define a deterministic sample order; the input frame "
+                "has only the vector column")
+        id_col = non_vec[0]
+    rows = (corpus.select(F.col(vec_col).alias("v"), F.col(id_col).alias("i"))
+            .filter(F.col("v").isNotNull())
+            .orderBy(F.xxhash64("i", F.lit(seed)), "i")
+            .limit(n).collect())
+    if not rows:
+        raise ValueError(
+            f"{trainer}: no non-NULL {vec_col!r} vector to train on (the "
+            "input is empty or every vector is NULL)")
+    return np.array([r.v for r in rows], dtype=np.float64)
+
+
+def _kmeans(x, k: int, rng, max_iter: int):
+    """Driver-side k-means on a sample matrix: greedy k-means++ seeding
+    (each new centroid is the best of 2 + ln k D^2-weighted draws, as in
+    scikit-learn), then Lloyd rounds until the assignments stop changing
+    (at most `max_iter`); an empty cell keeps its centroid. Returns
+    min(k, len(x)) centroids as a float64 matrix."""
+    import numpy as np
+
+    n, k = len(x), min(k, len(x))
+    trials = 2 + int(np.log(k))
+    cents = np.empty((k, x.shape[1]))
+    cents[0] = x[rng.integers(n)]
+    d2 = ((x - cents[0]) ** 2).sum(axis=1)
+    for c in range(1, k):
+        total = d2.sum()
+        cand = (rng.choice(n, size=trials, p=d2 / total) if total > 0
+                else rng.integers(n, size=trials))
+        cand_d2 = np.minimum(d2, ((x[None] - x[cand][:, None]) ** 2)
+                             .sum(axis=2))
+        best = int(np.argmin(cand_d2.sum(axis=1)))
+        cents[c] = x[cand[best]]
+        d2 = cand_d2[best]
+    assign = None
+    for _ in range(max_iter):
+        new = np.argmin(np.einsum("kd,kd->k", cents, cents)
+                        - 2.0 * (x @ cents.T), axis=1)
+        if assign is not None and np.array_equal(new, assign):
+            break
+        assign = new
+        counts = np.bincount(assign, minlength=k)
+        sums = np.zeros_like(cents)
+        np.add.at(sums, assign, x)
+        filled = counts > 0
+        cents[filled] = sums[filled] / counts[filled, None]
+    return cents
+
+
 def train_ivf_centroids(corpus: DataFrame, vec_col: str,
                         n_cells: int = 16, seed: int = 42,
-                        max_iter: int = 10,
-                        sample_fraction: float | None = None) -> list[list[float]]:
-    """Train a real IVF codebook with MLlib k-means (the offline
-    index-build step ivf_topk's docstring promises). At 100 TB train on a
-    sample (`sample_fraction`) — k-means quality saturates long before
-    full-data scans pay off. Returns plain Python centroids so the probe
-    stays executor-side (no MLlib at query time)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+                        max_iter: int = 10) -> list[list[float]]:
+    """Train an IVF codebook (the offline index-build step ivf_topk's
+    docstring promises): k-means on a deterministic bounded sample of
+    256 vectors per cell, ordered by the first non-vector column (see
+    `_training_sample`) — one Spark job however large the corpus, and
+    the same centroids under any partitioning. Returns plain Python
+    centroids so the probe stays executor-side (no model at query
+    time); raises ValueError on a frame with no non-NULL vector."""
+    import numpy as np
 
-    df = corpus.select(array_to_vector(
-        F.col(vec_col).cast("array<double>")).alias("features"))
-    if sample_fraction:
-        df = df.sample(fraction=sample_fraction, seed=seed)
-    model = KMeans(k=n_cells, seed=seed, maxIter=max_iter).fit(df)
-    return [list(map(float, c)) for c in model.clusterCenters()]
+    x = _training_sample(corpus, vec_col, None,
+                         _POINTS_PER_CENTROID * n_cells, seed,
+                         "train_ivf_centroids")
+    return _kmeans(x, n_cells, np.random.default_rng(seed),
+                   max_iter).tolist()
 
 
 def train_pq_codebooks(corpus: DataFrame, vec_col: str, dim: int,
@@ -328,49 +400,22 @@ def train_pq_codebooks(corpus: DataFrame, vec_col: str, dim: int,
                        sample_n: int = 4096, max_iter: int = 12,
                        id_col: str | None = None) -> list[list[list[float]]]:
     """Train product-quantization codebooks (Jégou et al. TPAMI'11): one
-    ksub-centroid k-means per contiguous dim/m subspace, driver-side
-    numpy Lloyd on a deterministic bounded sample (first `sample_n` rows
-    ordered by `id_col` — PQ codebook quality saturates on thousands of
-    samples; at 100 TB you train on a sample regardless, never the
-    corpus). `id_col` defaults to the first non-vector column and should
-    be unique for a total order (ADVICE r4: an arbitrary non-unique
-    first column made limit(sample_n) run-dependent); raises if the
-    frame has no candidate ordering column at all. Returns plain Python
-    nested lists so encode/probe stay executor-side constants, same
-    contract as train_ivf_centroids."""
+    ksub-centroid k-means per contiguous dim/m subspace, all fitted on
+    one deterministic bounded sample of `sample_n` rows ordered by
+    `id_col` (see `_training_sample`; PQ codebook quality saturates on
+    thousands of samples — at 100 TB you train on a sample regardless,
+    never the corpus). Returns plain Python nested lists so encode/probe
+    stay executor-side constants, same contract as train_ivf_centroids."""
     import numpy as np
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    if id_col is None:
-        non_vec = [c for c in corpus.columns if c != vec_col]
-        if not non_vec:
-            raise ValueError(
-                "train_pq_codebooks needs id_col (or any non-vector "
-                "column) to define a deterministic sample order; the "
-                "input frame has only the vector column")
-        id_col = non_vec[0]
-    rows = (corpus.select(F.col(vec_col).alias("v"), F.col(id_col))
-            .orderBy(F.col(id_col)))
-    sample = np.array([r.v for r in rows.limit(sample_n).collect()],
-                      dtype=np.float64)
+    x = _training_sample(corpus, vec_col, id_col, sample_n, seed,
+                         "train_pq_codebooks")
     dsub = dim // m
     rng = np.random.default_rng(seed)
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        x = sample[:, j * dsub:(j + 1) * dsub]
-        k = min(ksub, len(x))
-        cents = x[rng.choice(len(x), size=k, replace=False)].copy()
-        for _ in range(max_iter):
-            d = (np.einsum("kd,kd->k", cents, cents)
-                 - 2.0 * (x @ cents.T))
-            assign = np.argmin(d, axis=1)
-            for c in range(k):
-                mask = assign == c
-                if mask.any():
-                    cents[c] = x[mask].mean(axis=0)
-        books.append(cents.tolist())
-    return books
+    return [_kmeans(x[:, j * dsub:(j + 1) * dsub], ksub, rng,
+                    max_iter).tolist() for j in range(m)]
 
 
 def pq_encode(corpus: DataFrame, vec_col: str,

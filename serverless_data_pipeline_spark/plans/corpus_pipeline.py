@@ -108,9 +108,12 @@ def prepare_training_corpus(docs: DataFrame, *,
     are removed (docs without an embedding row are kept). The embeddings
     are semi-joined against the docs STILL ALIVE at that stage first —
     running SemDeDup over stale rows would let an already-removed doc
-    win a semantic family and delete every surviving copy. At scale pass
-    `semantic_dim` and `semantic_centroids` (one offline training) so
-    pipeline construction triggers no driver action or in-line k-means.
+    win a semantic family and delete every surviving copy. Without
+    `semantic_centroids` the codebook is trained in-line: one Spark job
+    at construction (a bounded sample of the live embeddings, fitted on
+    the driver; deterministic under any partitioning). At scale pass
+    `semantic_centroids` from one offline training, so pipeline
+    construction triggers no driver action.
 
     `max_dup_ngram_ratio` (X11) adds the repetition gate: drop docs whose
     duplicate-trigram ratio exceeds the bound (narrow pass, no shuffle).

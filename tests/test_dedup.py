@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from serverless_data_pipeline_spark.operators.dedup import (
@@ -297,23 +298,56 @@ def test_semantic_dedup_keeps_one_per_family(spark):
 
 
 def test_semantic_dedup_deterministic_across_partitionings(spark):
-    # Given a fixed codebook the whole pass is partition-independent
-    # (training itself is seeded but, like any parallel k-means init,
-    # partitioning-sensitive — hence the offline-codebook contract).
+    # The whole pass is partition-independent, with an offline codebook
+    # and with in-line training alike (the training sample is a seeded
+    # hash order of the id column, not a partition-dependent draw).
     from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
     from serverless_data_pipeline_spark.operators.similarity import (
         train_ivf_centroids,
     )
 
     df, *_ , dim = _sem_frame(spark)
-    cents = train_ivf_centroids(df, "embedding", n_cells=4, seed=1)
-    a = sorted(map(tuple, semantic_dedup(
-        df.repartition(1), "vec_id", "embedding", threshold=0.95,
-        dim=dim, centroids=cents).collect()))
-    b = sorted(map(tuple, semantic_dedup(
-        df.repartition(13), "vec_id", "embedding", threshold=0.95,
-        dim=dim, centroids=cents).collect()))
-    assert a == b
+    for cents in (train_ivf_centroids(df, "embedding", n_cells=4, seed=1),
+                  None):
+        a = sorted(map(tuple, semantic_dedup(
+            df.repartition(1), "vec_id", "embedding", threshold=0.95,
+            n_clusters=4, dim=dim, centroids=cents).collect()))
+        b = sorted(map(tuple, semantic_dedup(
+            df.repartition(13), "vec_id", "embedding", threshold=0.95,
+            n_clusters=4, dim=dim, centroids=cents).collect()))
+        assert a == b
+
+
+def test_inline_kmeans_training_is_one_spark_job(spark):
+    """Training an IVF codebook, and building a SemDeDup plan that
+    trains in-line, each run exactly ONE Spark job — the bounded-sample
+    collect, whatever the number of Lloyd rounds (an MLlib k-means fit
+    and a separate emptiness/dim probe took 13 and 14 on this frame).
+    The codebook's width stands in for `dim`."""
+    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
+    from serverless_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+
+    df = _sem_frame(spark)[0].localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    jobs = {}
+    for name, build in (
+            ("ivf", lambda: train_ivf_centroids(df, "embedding",
+                                                n_cells=4, seed=1)),
+            ("semantic", lambda: semantic_dedup(df, "vec_id", "embedding",
+                                                threshold=0.95,
+                                                n_clusters=4))):
+        group = f"kmeans-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {"ivf": 1, "semantic": 1}
 
 
 def test_semantic_dedup_oversize_cluster_raises(spark):

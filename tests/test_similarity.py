@@ -5,6 +5,8 @@ from __future__ import annotations
 import math
 import random
 
+import pytest
+
 from serverless_data_pipeline_spark.operators.similarity import (
     add_sign_lsh_buckets, ann_topk, ann_topk_indexed, ann_topk_join,
     brute_force_topk, brute_force_topk_join, ivf_topk,
@@ -265,15 +267,13 @@ def test_pq_codes_only_probe_without_vectors(spark):
 
 
 def test_pq_codebook_sample_is_deterministic(spark):
-    """The training sample must be a total-order prefix: shuffling the
-    input partitioning must not change the trained codebooks (ADVICE r4:
-    the old first-column fallback made limit() run-dependent). A frame
-    with ONLY the vector column must raise."""
-    import pytest
-
+    """The training sample must be a total order: shuffling the input
+    partitioning must not change the trained PQ codebooks or IVF
+    centroids (ADVICE r4: the old first-column fallback made limit()
+    run-dependent). A frame with ONLY the vector column must raise."""
     import __spark_entry__ as entry_mod
     from serverless_data_pipeline_spark.operators.similarity import (
-        train_pq_codebooks,
+        train_ivf_centroids, train_pq_codebooks,
     )
     emb = entry_mod._t(spark, "/root/testdata/sf0.001", "embeddings")
     a = train_pq_codebooks(emb, "embedding", dim=64, m=4, ksub=8,
@@ -282,9 +282,36 @@ def test_pq_codebook_sample_is_deterministic(spark):
                            m=4, ksub=8, seed=7, sample_n=256,
                            id_col="vec_id")
     assert a == b
+    assert (train_ivf_centroids(emb, "embedding", n_cells=4, seed=7)
+            == train_ivf_centroids(emb.repartition(13), "embedding",
+                                   n_cells=4, seed=7))
     with pytest.raises(ValueError, match="id_col"):
         train_pq_codebooks(emb.select("embedding"), "embedding",
                            dim=64, m=4, ksub=8)
+
+
+@pytest.mark.parametrize("trainer", ["train_ivf_centroids",
+                                     "train_pq_codebooks"])
+def test_kmeans_trainers_reject_frames_without_vectors(spark, trainer):
+    """An empty frame, or one whose vectors are all NULL, fails loudly
+    with a ValueError naming the trainer (not a numpy IndexError or an
+    inhomogeneous-shape error); NULL vectors mixed with good ones are
+    skipped — the codebook equals the one trained without them."""
+    from serverless_data_pipeline_spark.operators import similarity
+
+    def train(df):
+        kw = {"dim": 4, "m": 2, "ksub": 2} if trainer.endswith("books") \
+            else {"n_cells": 2}
+        return getattr(similarity, trainer)(df, "embedding", seed=3, **kw)
+
+    schema = "vec_id long, embedding array<double>"
+    good = [(i, [float(i % 3), 1.0, -float(i), 0.5]) for i in range(6)]
+    nulls = [(i, None) for i in range(6, 9)]
+    for rows in ([], nulls):
+        with pytest.raises(ValueError, match=trainer):
+            train(spark.createDataFrame(rows, schema))
+    assert (train(spark.createDataFrame(good + nulls, schema))
+            == train(spark.createDataFrame(good, schema)))
 
 
 def test_multiprobe_lifts_random_fixture_recall(spark):
@@ -765,23 +792,34 @@ def test_pq_topk_committed_books_match_numpy_replay(spark):
 
 def test_committed_pq_codebooks_match_documented_provenance(spark):
     """The artifact IS its provenance (the bpe_artifact discipline):
-    re-running the exact documented training call over the sf0.01
-    fixture and rounding to 6 decimals reproduces
-    PQ_COMMITTED_CODEBOOKS bit-for-bit — the committed literal cannot
-    silently drift from the code that claims to have produced it.
-    (Pure numpy Lloyd over a deterministic ORDER BY vec_id sample —
-    no partitioning sensitivity.)"""
-    from serverless_data_pipeline_spark.operators.similarity import (
-        train_pq_codebooks,
-    )
+    replaying the documented recipe over the sf0.01 fixture and rounding
+    to 6 decimals reproduces PQ_COMMITTED_CODEBOOKS bit-for-bit — the
+    committed literal cannot silently drift from the recipe that claims
+    to have produced it. The literal is frozen: train_pq_codebooks now
+    samples and seeds differently, so the recipe (the first 2048 rows by
+    vec_id, 16 random rows per subspace as the initial centroids, 12
+    Lloyd rounds, numpy default_rng(42)) is replayed here."""
+    import numpy as np
+
     from serverless_data_pipeline_spark.operators.similarity_artifact import (
         PQ_COMMITTED_CODEBOOKS,
     )
     e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    books = train_pq_codebooks(e, "embedding", dim=64, m=8, ksub=16,
-                               seed=42, sample_n=2048, id_col="vec_id")
-    got = [[[round(float(v), 6) for v in c] for c in cb]
-           for cb in books]
+    sample = np.array([r.embedding for r in
+                       e.orderBy("vec_id").limit(2048).collect()],
+                      dtype=np.float64)
+    rng = np.random.default_rng(42)
+    got = []
+    for j in range(8):
+        x = sample[:, j * 8:(j + 1) * 8]
+        cents = x[rng.choice(len(x), size=16, replace=False)].copy()
+        for _ in range(12):
+            assign = np.argmin(np.einsum("kd,kd->k", cents, cents)
+                               - 2.0 * (x @ cents.T), axis=1)
+            for c in range(16):
+                if (assign == c).any():
+                    cents[c] = x[assign == c].mean(axis=0)
+        got.append([[round(float(v), 6) for v in c] for c in cents])
     assert got == PQ_COMMITTED_CODEBOOKS
 
 
