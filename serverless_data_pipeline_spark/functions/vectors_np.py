@@ -29,9 +29,12 @@ __all__ = ["query_cosine_udf", "pair_cosine_udf", "sign_buckets_udf",
 
 def _mat(vs: pd.Series, dim: int) -> np.ndarray:
     """Stack an Arrow batch of array<float> values into an (n, dim)
-    float64 matrix."""
+    float64 matrix. A NULL vector raises: it has no place in the
+    matrix, and numpy would only fail later on a shape mismatch."""
     if len(vs) == 0:
         return np.empty((0, dim), dtype=np.float64)
+    if vs.isna().any():
+        raise ValueError(f"a NULL vector reached a {dim}-dim kernel")
     return np.array(vs.tolist(), dtype=np.float64)
 
 

@@ -802,7 +802,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
     Returns one row per input: (id, cluster_id, centroid_sim, keep,
     dup_of, dup_sim); dropped rows point at their kept representative.
     `dim` defaults to the codebook's width. An empty input returns an
-    empty result; NULL vectors are not supported."""
+    empty result; a NULL vector raises a ValueError that names it."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T

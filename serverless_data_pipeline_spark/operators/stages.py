@@ -51,6 +51,37 @@ class ValidationResult:
         return self.invalid.isEmpty()
 
 
+OK_COL = "__ok"
+
+
+def validity(df: DataFrame, required: dict[str, T.DataType],
+             checks: list[Column] | None = None) -> Column | None:
+    """T2's row predicate: every `required` column non-null and every
+    check true. A row is valid only where it is TRUE (a NULL check result
+    is invalid). None when the batch fails structurally — a required
+    column is missing or has another type — so the whole batch is
+    invalid."""
+    if any(c not in df.columns or df.schema[c].dataType != t
+           for c, t in required.items()):
+        return None
+    pred = F.lit(True)
+    for c in required:
+        pred = pred & F.col(c).isNotNull()
+    for extra in checks or []:
+        pred = pred & extra
+    return pred
+
+
+def split_flagged(flagged: DataFrame) -> ValidationResult:
+    """Split a frame carrying the `OK_COL` validity flag into its valid
+    and invalid rows (NULL flag -> invalid), dropping the flag."""
+    ok = F.col(OK_COL)
+    return ValidationResult(
+        valid=flagged.filter(ok).drop(OK_COL),
+        invalid=flagged.filter(~ok | ok.isNull()).drop(OK_COL),
+    )
+
+
 def validate(df: DataFrame, required: dict[str, T.DataType],
              checks: list[Column] | None = None) -> ValidationResult:
     """T2 — schema validation (validation fn, py:243-255; md:300,316).
@@ -60,23 +91,10 @@ def validate(df: DataFrame, required: dict[str, T.DataType],
     fail the whole batch (structural); present rows are split row-wise on
     null-checks + optional quality predicates. Invalid rows route to the
     error sink (SNS error topic py:153-156 / errors/ prefix py:198)."""
-    missing = [c for c in required if c not in df.columns]
-    if missing:
-        # Structural failure: the entire batch is invalid.
+    ok = validity(df, required, checks)
+    if ok is None:
         return ValidationResult(valid=df.limit(0), invalid=df)
-    mismatched = [c for c, t in required.items() if df.schema[c].dataType != t]
-    if mismatched:
-        return ValidationResult(valid=df.limit(0), invalid=df)
-    pred = F.lit(True)
-    for c in required:
-        pred = pred & F.col(c).isNotNull()
-    for extra in checks or []:
-        pred = pred & extra
-    flagged = df.withColumn("__ok", pred)
-    return ValidationResult(
-        valid=flagged.filter("__ok").drop("__ok"),
-        invalid=flagged.filter(~F.col("__ok") | F.col("__ok").isNull()).drop("__ok"),
-    )
+    return split_flagged(df.withColumn(OK_COL, ok))
 
 
 def transform(df: DataFrame, ts_col: str = "ts",

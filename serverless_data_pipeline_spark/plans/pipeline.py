@@ -4,8 +4,8 @@ Re-expresses the reference's Step Functions state machine
 (DataPipelineStateMachine, py:424-436) as one driver function. The managed
 control flow collapses to plain Python:
 
-    ValidateData (py:342-350)    -> stages.validate
-    ValidationChoice (py:404-408)-> if result.is_valid()
+    ValidateData (py:342-350)    -> stages.validity (one flag per row)
+    ValidationChoice (py:404-408)-> if n_invalid / if not n_valid
     TransformData (py:352-360)   -> stages.transform
     QualityCheck (py:362-370)    -> stages.quality_score
     QualityChoice (py:411-418)   -> if score > threshold
@@ -14,7 +14,10 @@ control flow collapses to plain Python:
 
 Every arrow in the reference crosses a Lambda/process boundary; here the
 only real boundaries are shuffles (none in the stage chain — it is
-narrow-only) and the final partitioned sink commit.
+narrow-only) and the final partitioned sink commit. n_invalid, n_valid
+and the score all come from ONE Spark job: the quality_score aggregation
+over the cached, flagged batch, which carries the counts as an
+Observation.
 """
 
 from __future__ import annotations
@@ -74,6 +77,14 @@ def run_pipeline(df: DataFrame, *, processed_path: str, archive_path: str,
     is the SUBMITTED marker `PipelineControl.start_pipeline` appends up
     front.
 
+    Jobs: the flagged batch is the run's one cache, and one aggregation
+    over it (`stages.quality_score` of the transformed valid rows, which
+    also counts valid and invalid rows) decides every branch before any
+    write. So the validate row's `stage_elapsed_s` includes the scoring,
+    and the quality row's covers the archive write. A batch that fails
+    structurally (a required column missing or mistyped) is counted
+    instead and never transformed.
+
     SLA: every state row records `stage_elapsed_s` / `total_elapsed_s`
     wall-clock, and each stage boundary checks the cumulative elapsed
     against `config.sla_budget_s` (the analogue of the reference state
@@ -116,23 +127,43 @@ def run_pipeline(df: DataFrame, *, processed_path: str, archive_path: str,
 
     _mark("ingest", "RUNNING", {"source": source})
     stage = "ingest"
-    valid = invalid = transformed = None
+    batch = None
     try:
         ingested = stages.ingest(df, source=source)
         stage = "validate"
 
-        # ValidateData -> ValidationChoice (py:404-408). Both split frames
-        # are consumed more than once (count + write) — cache so the input
-        # is scanned once, not re-executed per action (at 100 TB each
-        # re-execution re-reads the source).
-        vres = stages.validate(ingested, required, checks)
-        valid = vres.valid.cache()
-        invalid = vres.invalid.cache()
-        n_invalid = invalid.count()
+        # ValidateData -> ValidationChoice (py:404-408). The flagged batch
+        # is the run's one cache: the decision job, the quarantine, the
+        # archive and the sink all read it, so the input is scanned once.
+        ok = stages.validity(ingested, required, checks)
+        if ok is None:
+            # structural failure: the whole batch is invalid and never
+            # reaches transform (its `dims` may join on the missing column)
+            batch = ingested.cache()
+            valid, invalid = None, batch
+            n_invalid, n_valid, score = batch.count(), 0, None
+        else:
+            batch = ingested.withColumn(stages.OK_COL, ok).cache()
+            split = stages.split_flagged(batch)
+            valid, invalid = split.valid, split.invalid
+            # QualityCheck (py:362-370) is the decision job: one
+            # aggregation scores the transformed valid rows (every column
+            # + soft rules) and counts valid/invalid rows as it reads the
+            # cache. The counts are read only after that job has run.
+            counted = Observation()
+            observed = batch.observe(
+                counted, F.count(F.lit(1)).alias("rows"),
+                F.count_if(F.col(stages.OK_COL)).alias("valid"))
+            score = stages.quality_score(
+                stages.transform(stages.split_flagged(observed).valid,
+                                 ts_col=ts_col, dims=dims),
+                rules=quality_rules)
+            seen = counted.get
+            n_valid, n_invalid = seen["valid"], seen["rows"] - seen["valid"]
         _mark("validate", "RUNNING", {"invalid_rows": n_invalid})
         if n_invalid:
             writers.write_quarantine(invalid, error_path, "validation_failed")
-        if valid.isEmpty():
+        if not n_valid:
             # whole batch invalid -> ErrorHandler path (py:393-401)
             return _finish("validate", "FAILED", {"invalid_rows": n_invalid},
                            failure_reason="validation_failed",
@@ -140,14 +171,9 @@ def run_pipeline(df: DataFrame, *, processed_path: str, archive_path: str,
         if _sla_breached():
             return _sla_fail("validate")
 
-        # TransformData (py:352-360): clean/enrich/convert + archive branch
+        # TransformData (py:352-360): archive branch, then QualityChoice
         stage = "quality"
-        transformed = stages.transform(valid, ts_col=ts_col, dims=dims).cache()
         writers.write_archive(valid, archive_path)
-
-        # QualityCheck -> QualityChoice (py:411-418): per-batch scalar over
-        # the full transformed batch + soft rules.
-        score = stages.quality_score(transformed, rules=quality_rules)
         _mark("quality", "RUNNING", {"score": score})
         if not stages.quality_gate(score, config):
             return _finish("quality", "FAILED", {"score": score},
@@ -161,7 +187,8 @@ def run_pipeline(df: DataFrame, *, processed_path: str, archive_path: str,
         stage = "sink"
         sunk = Observation()
         writers.write_partitioned_parquet(
-            transformed.observe(sunk, F.count(F.lit(1)).alias("rows")),
+            stages.transform(valid, ts_col=ts_col, dims=dims)
+            .observe(sunk, F.count(F.lit(1)).alias("rows")),
             processed_path, ts_col=ts_col, config=config)
         n_out = sunk.get["rows"]
         return _finish("sink", "SUCCEEDED", {"rows": n_out, "score": score},
@@ -177,6 +204,5 @@ def run_pipeline(df: DataFrame, *, processed_path: str, archive_path: str,
             earlier=trail)
         raise
     finally:
-        for frame in (valid, invalid, transformed):
-            if frame is not None:
-                frame.unpersist()
+        if batch is not None:
+            batch.unpersist()

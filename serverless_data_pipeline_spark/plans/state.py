@@ -54,6 +54,17 @@ def state_row(pipeline_id: str, stage: str, status: str,
             stage, status, json.dumps(detail or {}))
 
 
+def _literal_rows(spark: SparkSession, rows: Sequence[tuple]) -> DataFrame:
+    """STATE_SCHEMA `rows` as a one-partition literal relation built in
+    the JVM (`inline` over an array of struct literals). Unlike
+    `createDataFrame` on a Python list, its write job starts no Python
+    worker. The cast gives the columns STATE_SCHEMA's names and
+    nullability, so the file schema matches the table's."""
+    array = F.array(*[F.struct(*map(F.lit, row)) for row in rows])
+    return spark.range(1, numPartitions=1).select(
+        F.inline(array.cast(T.ArrayType(STATE_SCHEMA, False))))
+
+
 class StateTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -68,8 +79,8 @@ class StateTable:
         rows = list(earlier)
         rows.append(state_row(pipeline_id, stage, status, detail,
                               after=rows[-1] if rows else None))
-        (self.spark.createDataFrame(rows, STATE_SCHEMA)
-             .coalesce(1).write.mode("append").parquet(self.path))
+        _literal_rows(self.spark, rows).write.mode("append").parquet(
+            self.path)
 
     def history(self, pipeline_id: str | None = None) -> DataFrame:
         df = self.spark.read.schema(STATE_SCHEMA).parquet(self.path)

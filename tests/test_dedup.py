@@ -374,6 +374,23 @@ def test_semantic_dedup_precomputed_centroids_skip_training(spark):
         assert sum(1 for r in out if r.vec_id in fam and r.keep) == 1
 
 
+def test_semantic_dedup_null_vector_names_the_cause(spark):
+    """A NULL vector fails the cell-assignment kernel with a message that
+    says so, not numpy's core-dimension mismatch."""
+    import pytest as _pytest
+
+    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
+
+    df, *_, dim = _sem_frame(spark)
+    nulls = spark.createDataFrame([(999, None)], df.schema)
+    cents = [[1.0 if i == j else 0.0 for i in range(dim)] for j in range(2)]
+    for frame in (df.unionByName(nulls), nulls):
+        with _pytest.raises(Exception,
+                            match=f"a NULL vector reached a {dim}-dim kernel"):
+            semantic_dedup(frame, "vec_id", "embedding", n_clusters=2,
+                           dim=dim, centroids=cents).collect()
+
+
 def test_simhash_lane_overflow_fails_fast(spark):
     """A doc at the 2^21-token lane capacity must raise (a silent lane
     carry would flip arbitrary fingerprint bits), and normal docs are

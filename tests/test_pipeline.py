@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 from serverless_data_pipeline_spark.config import EngineConfig
 from serverless_data_pipeline_spark.plans.control import PipelineControl
 from serverless_data_pipeline_spark.plans.pipeline import run_pipeline
-from serverless_data_pipeline_spark.plans.state import StateTable
+from serverless_data_pipeline_spark.plans.state import STATE_SCHEMA, StateTable
 
 TS = dt.datetime(2024, 6, 15, 9, 0, 0)
 REQUIRED = {"id": T.LongType(), "ts": T.TimestampType()}
@@ -215,6 +215,13 @@ _TRAILS = {
 }
 
 
+# Spark jobs per exit path as measured on a 4-core host: the scoring
+# aggregation (3 under AQE, filling the cache), the quarantine, archive
+# and sink writes the path reaches, and the one state commit
+_JOBS = {"success": 6, "quality_fail": 5, "validation_fail": 5,
+         "sla_fail": 4}
+
+
 def _run(spark, paths, state, kind):
     """One run that exits through `kind`'s path (columns need a live
     session, so the per-path arguments are built here)."""
@@ -235,9 +242,11 @@ def _run(spark, paths, state, kind):
 def test_run_commits_its_trail_once(spark, paths, kind):
     """Every exit path writes the run's whole trail as ONE state file, in
     the stage order the per-stage appends used to produce, and the run
-    stays within its Spark job budget (a success run took 15 jobs on a
+    stays within its Spark job budget. A success run took 15 jobs on a
     4-core host when each stage mark was its own write job and the sink
-    was recounted; 10 now)."""
+    was recounted, and 10 with three caches and separate count, emptiness
+    and scoring jobs; one scoring job that also counts the split leaves
+    6."""
     expected = _TRAILS[kind]
     state = StateTable(spark, paths["state"])
     sc = spark.sparkContext
@@ -249,7 +258,7 @@ def test_run_commits_its_trail_once(spark, paths, kind):
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 11
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= _JOBS[kind]
     assert len(_state_files(paths)) == 1
     trail = _trail(state, res.pipeline_id)
     assert [(s, st) for s, st, _ in trail] == expected
@@ -348,3 +357,152 @@ def test_control_plane_id_meets_run_id(spark, paths):
     assert (hist[-1]["stage"], hist[-1]["status"]) == ("sink", "SUCCEEDED")
     assert [(p["pipeline_id"], p["status"])
             for p in ctl.list_pipelines()] == [(pid, "SUCCEEDED")]
+
+
+# --- one decision job: exits, counts and the score ----------------------
+
+def _quarantined(paths):
+    """(note, reason) of every quarantined row."""
+    rows = []
+    for name in glob.glob(os.path.join(paths["errors"], "*.json")):
+        with open(name) as f:
+            rows += [json.loads(line) for line in f]
+    return sorted((r["note"], r["_error_reason"]) for r in rows)
+
+
+@pytest.mark.parametrize("case", ["missing", "missing_dims", "mistyped",
+                                  "mistyped_dims"])
+def test_structural_failure_quarantines_the_whole_batch(spark, paths, case):
+    """A missing or mistyped required column fails the batch before any
+    transform — also when a `dims` join is keyed on that column."""
+    schema = ("note string, ts timestamp" if case.startswith("missing")
+              else "id int, ts timestamp, note string")
+    rows = ([("A", TS), ("B", TS)] if case.startswith("missing")
+            else [(1, TS, "A"), (2, TS, "B")])
+    dim = spark.createDataFrame([(1, "one")], "id long, label string")
+    dims = {"d": (dim, ["id"])} if case.endswith("_dims") else None
+    res = run_pipeline(spark.createDataFrame(rows, schema),
+                       processed_path=paths["processed"],
+                       archive_path=paths["archive"],
+                       error_path=paths["errors"],
+                       state=StateTable(spark, paths["state"]),
+                       required=REQUIRED, dims=dims)
+    assert (res.status, res.failure_reason) == ("FAILED", "validation_failed")
+    assert res.counts == {"invalid": 2}
+    assert res.quality_score is None
+    assert _quarantined(paths) == [("A", "validation_failed"),
+                                   ("B", "validation_failed")]
+    assert not os.path.exists(paths["archive"])
+    assert not os.path.exists(paths["processed"])
+
+
+@pytest.mark.parametrize("structural", [False, True])
+def test_empty_batch_fails_validation_without_quarantine(spark, paths,
+                                                         structural):
+    schema = ("note string" if structural
+              else "id long, ts timestamp, note string")
+    state = StateTable(spark, paths["state"])
+    res = run_pipeline(spark.createDataFrame([], schema),
+                       processed_path=paths["processed"],
+                       archive_path=paths["archive"],
+                       error_path=paths["errors"], state=state,
+                       required=REQUIRED)
+    assert (res.status, res.failure_reason) == ("FAILED", "validation_failed")
+    assert res.counts == {"invalid": 0}
+    assert not os.path.exists(paths["errors"])
+    assert [(s, st) for s, st, _ in _trail(state, res.pipeline_id)] == \
+        _TRAILS["validation_fail"]
+
+
+def test_null_check_result_counts_as_invalid(spark, paths):
+    """A row whose `checks` predicate is NULL is invalid: counted,
+    quarantined and kept out of the sink."""
+    res = run_pipeline(
+        _batch(spark, [(1, TS, "a"), (2, TS, "b"), (3, TS, "c")]),
+        processed_path=paths["processed"], archive_path=paths["archive"],
+        error_path=paths["errors"], state=StateTable(spark, paths["state"]),
+        required=REQUIRED,
+        checks=[F.when(F.col("id") == 2, F.lit(None).cast("boolean"))
+                .otherwise(F.lit(True))])
+    assert res.status == "SUCCEEDED"
+    assert res.counts == {"processed": 2, "invalid": 1}
+    assert _quarantined(paths) == [("b", "validation_failed")]
+    out = spark.read.parquet(paths["processed"])
+    assert sorted(r.id for r in out.collect()) == [1, 3]
+
+
+def test_score_is_the_quality_score_of_the_transformed_valid_rows(spark,
+                                                                   paths):
+    """The decision job's score equals `quality_score(transform(valid))`
+    exactly, on a batch with NULL optional fields, invalid rows and soft
+    rules; the gate is decided from it on both sides."""
+    from serverless_data_pipeline_spark.operators import stages
+
+    df = _batch(spark, [(1, TS, "a"), (2, TS, None), (3, TS, None),
+                        (None, TS, "x"), (5, TS, "e"), (6, None, "f"),
+                        (7, TS, "g")])
+    checks = [F.col("id") != 7]
+    rules = [F.col("note").isNotNull(), F.col("id") < 3]
+    valid = stages.validate(stages.ingest(df), REQUIRED, checks).valid
+    expected = stages.quality_score(stages.transform(valid), rules=rules)
+    assert 0.0 < expected < 1.0
+    for threshold, status in ((expected - 1e-9, "SUCCEEDED"),
+                              (expected, "FAILED")):
+        run_paths = {k: v + status for k, v in paths.items()}
+        res = run_pipeline(df, processed_path=run_paths["processed"],
+                           archive_path=run_paths["archive"],
+                           error_path=run_paths["errors"],
+                           state=StateTable(spark, run_paths["state"]),
+                           required=REQUIRED, checks=checks,
+                           quality_rules=rules,
+                           config=EngineConfig(quality_threshold=threshold))
+        assert res.quality_score == expected
+        assert res.status == status
+        assert os.path.exists(run_paths["processed"]) == (
+            status == "SUCCEEDED")
+        if status == "SUCCEEDED":
+            assert res.counts == {"processed": 4, "invalid": 3}
+
+
+# --- the state commit runs in the JVM -----------------------------------
+
+def _new_executions(spark, action):
+    """Physical plan descriptions of the SQL executions `action` runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def ids():
+        execs = store.executionsList()
+        return {execs.apply(i).executionId(): execs.apply(i)
+                for i in range(execs.size())}
+
+    before = set(ids())
+    action()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return [e.physicalPlanDescription() for i, e in ids().items()
+            if i not in before]
+
+
+def test_state_commit_starts_no_python_worker(spark, paths):
+    """The append's write scans no Python-built RDD, and a detail with
+    quotes, non-ASCII text and a 500-character error comes back
+    byte-identical."""
+    state = StateTable(spark, paths["state"])
+    detail = {"reason": "exception",
+              "error": ('ValueError: "bad" \'row\' — naïve café 日本 '
+                        + "e" * 500)[:500]}
+    earlier = [("p-lit", "2024-06-15T09:00:00.000000+00:00", "ingest",
+                "RUNNING", json.dumps({"source": "s3"}))]
+    plans = _new_executions(spark, lambda: state.append(
+        "p-lit", "sink", "FAILED", detail, earlier=earlier))
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1
+    assert "ExistingRDD" not in writes[0]
+    assert "PythonRDD" not in writes[0]
+    assert len(_state_files(paths)) == 1
+    rows = sorted(state.history("p-lit").collect(), key=lambda r: r.timestamp)
+    assert [tuple(r) for r in rows[:1]] == earlier
+    assert (rows[1].stage, rows[1].status) == ("sink", "FAILED")
+    assert rows[1].detail == json.dumps(detail)
+    assert json.loads(rows[1].detail) == detail
+    assert spark.read.parquet(paths["state"]).schema == \
+        spark.read.schema(STATE_SCHEMA).parquet(paths["state"]).schema
