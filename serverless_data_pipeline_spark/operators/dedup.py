@@ -32,7 +32,7 @@ __all__ = [
 
 
 from serverless_data_pipeline_spark.operators.util import (
-    spread_small_input as _spread,
+    release_checkpoint, spread_small_input as _spread,
 )
 
 
@@ -115,9 +115,17 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     per seed — the per-seed hash cost is width-bound."""
     shingled = (_shingled(df, id_col, text_col, shingle_n)
                 .select(F.col(id_col), F.xxhash64("__sh").alias("__h0")))
-    mins = [F.min(F.xxhash64(F.col("__h0"), F.lit(i))).alias(f"mh_{i}")
+    return shingled.groupBy(id_col).agg(
+        *[m.alias(f"mh_{i}")
+          for i, m in enumerate(_minhash_mins("__h0", num_hashes))])
+
+
+def _minhash_mins(h0_col: str, num_hashes: int) -> list:
+    """The ``num_hashes`` MinHash aggregates over a column of base
+    shingle hashes: seed i re-hashes the 8-byte base hash, the group min
+    is signature element i."""
+    return [F.min(F.xxhash64(F.col(h0_col), F.lit(i)))
             for i in range(num_hashes)]
-    return shingled.groupBy(id_col).agg(*mins)
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -132,7 +140,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     Returns (id_a, id_b, jaccard_est) with id_a < id_b. Cost: shingling
     scan + one self-join restricted to identical band buckets — the
     textbook sub-quadratic dedup used on web-scale corpora."""
-    rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     sig_arr = sig.select(
         F.col(id_col).alias("__id"),
@@ -145,42 +152,60 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
         # read 2.5x SLOWER materialized the BANDED frame (x bands rows,
         # sig array carried per row), paying the width it saved.
         sig_arr = sig_arr.localCheckpoint(eager=True)
-
-    banded = sig_arr.select(
-        "__id", "sig",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.element_at("sig", b * rows_per_band + i + 1)
-                             for i in range(rows_per_band)]).alias("bsig"))
-            for b in range(bands)])).alias("bk"))
-
     # Self-join note: without materialize_signatures the signature
     # pipeline is computed once per join side (Catalyst does not
     # canonicalize the two aliased sides into a ReusedExchange). The
     # materialization LEVEL decides the winner: checkpointing the wide
-    # BANDED frame here measured 2.5x SLOWER than recompute (86s vs 33s
-    # at sf0.1 — sig array carried on x bands rows), while checkpointing
-    # the compact signature frame above measured ~2x FASTER cold. At
-    # cluster scale, signatures reused across many queries belong in a
-    # persisted parquet index (minhash_signatures output) instead.
-    bk = banded.select("__id", "sig",
-                       F.col("bk.band").alias("band"),
-                       F.col("bk.bsig").alias("bsig"))
-    cand = (bk.alias("a").join(bk.alias("b"), ["band", "bsig"])
-              .select(F.col("a.__id").alias("id_a"),
-                      F.col("a.sig").alias("sig_a"),
-                      F.col("b.__id").alias("id_b"),
-                      F.col("b.sig").alias("sig_b"))
-              .filter(F.col("id_a") < F.col("id_b"))
-              .dropDuplicates(["id_a", "id_b"]))
+    # BANDED frame measured 2.5x SLOWER than recompute (86s vs 33s at
+    # sf0.1 — sig array carried on x bands rows), while checkpointing the
+    # compact signature frame above measured ~2x FASTER cold. At cluster
+    # scale, signatures reused across many queries belong in a persisted
+    # parquet index (operators/incremental.corpus_index) instead.
+    return _banded_pairs(sig_arr, None, num_hashes, bands, jaccard_threshold)
 
+
+def _banded_pairs(a: DataFrame, b: DataFrame | None, num_hashes: int,
+                  bands: int, threshold: float) -> DataFrame:
+    """The banded-LSH join over STORED signatures: ``a`` and ``b`` are
+    (id, sig array<long> of ``num_hashes``) frames, id first. Each
+    signature is cut into ``bands`` bands of num_hashes // bands rows;
+    docs sharing a (band, xxhash64 of the band) bucket are candidates,
+    verified by the estimated Jaccard (matching-minhash fraction).
+
+    Returns (id_a, id_b, jaccard_est >= ``threshold``), id_a from ``a``
+    and id_b from ``b``; ``b=None`` pairs ``a`` with itself, id_a < id_b.
+    A NULL sig (a doc with no shingles) is never banded. The one banding
+    scheme of ``minhash_lsh_pairs`` and the incremental index probe."""
+    rows_per_band = num_hashes // bands
+
+    def banded(sigs: DataFrame) -> DataFrame:
+        bks = [F.struct(
+            F.lit(band).alias("band"),
+            F.xxhash64(*[F.element_at("sig", band * rows_per_band + i + 1)
+                         for i in range(rows_per_band)]).alias("bsig"))
+            for band in range(bands)]
+        return (sigs.filter(F.col("sig").isNotNull())
+                .select(F.col(sigs.columns[0]).alias("__id"), "sig",
+                        F.explode(F.array(*bks)).alias("bk"))
+                .select("__id", "sig", F.col("bk.band").alias("band"),
+                        F.col("bk.bsig").alias("bsig")))
+
+    left = banded(a)
+    right = left if b is None else banded(b)
+    cand = (left.alias("a").join(right.alias("b"), ["band", "bsig"])
+            .select(F.col("a.__id").alias("id_a"),
+                    F.col("a.sig").alias("sig_a"),
+                    F.col("b.__id").alias("id_b"),
+                    F.col("b.sig").alias("sig_b")))
+    if b is None:
+        cand = cand.filter(F.col("id_a") < F.col("id_b"))
     est = F.size(F.filter(
         F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
         lambda v: v == 1)).cast("double") / F.lit(float(num_hashes))
-    return (cand.withColumn("jaccard_est", est)
-                .filter(F.col("jaccard_est") >= jaccard_threshold)
-                .select("id_a", "id_b", "jaccard_est"))
+    return (cand.dropDuplicates(["id_a", "id_b"])
+            .withColumn("jaccard_est", est)
+            .filter(F.col("jaccard_est") >= threshold)
+            .select("id_a", "id_b", "jaccard_est"))
 
 
 # ---------------------------------------------------------------- SimHash
@@ -634,7 +659,11 @@ def neardup_components(pairs: DataFrame, *,
     # graphs — the common case — stop one to two full rounds earlier.
     # Values unchanged: converged labels are a fixpoint, so the rounds
     # the old schedule over-ran never changed anything.
+    # Each round's leaf replaces the last, and once a round has run the
+    # labels no longer read the edge leaf: both are released here, so a
+    # caller holding the returned frame holds only the last round's leaf.
     changed: int | None = None
+    done: DataFrame | None = None
     for it in range(lp_budget):
         nbr = (edges.join(labels, edges["dst"] == labels["id"])
                .groupBy("src").agg(F.min("comp").alias("__nbr")))
@@ -646,6 +675,9 @@ def neardup_components(pairs: DataFrame, *,
                .localCheckpoint(eager=False))
         changed = (new.agg(F.sum(F.col("__chg").cast("int")))
                    .first()[0] or 0)
+        if done is not None:
+            release_checkpoint(done)
+        done = new
         labels = new.select("id", "comp")
         if changed == 0:
             break
@@ -670,6 +702,8 @@ def neardup_components(pairs: DataFrame, *,
                              F.col("__cd").alias("dst"))
                      .filter(F.col("src") != F.col("dst"))
                      .distinct().localCheckpoint(eager=True))
+            if done is not None:
+                release_checkpoint(edges)
             fin = _components_star(resid, max_iter=max_iter)
             return (labels.join(
                         fin.select(F.col("id").alias("comp"),
@@ -684,6 +718,8 @@ def neardup_components(pairs: DataFrame, *,
             "iterations — a component's diameter exceeds max_iter and the "
             "returned component_ids are NOT fully propagated; raise "
             "max_iter.", RuntimeWarning, stacklevel=2)
+    if done is not None:
+        release_checkpoint(edges)
     return labels.select(F.col("id"), F.col("comp").alias("component_id"))
 
 

@@ -28,22 +28,43 @@ the documented, deliberate divergence every incremental dedup shares
 Scale shape per stage (batch B << corpus C):
 - exact probe: equi-join on the 32-byte fingerprint — only the index's
   fp COLUMN moves, never corpus text; with a small batch, broadcastable.
-- near-dup probe: banded MinHash bucket join (signatures read from the
-  index, num_hashes longs/doc) or shingle-hash inverted join (exact
-  Jaccard, index stores the distinct shingle-hash set) — both
-  candidate-generation, never all-pairs.
-- within-batch dedup: the existing X1/X2 operators over B alone.
+- features: ONE pass over the exact survivors' text (shingle explode +
+  groupBy(id, fp)) computes the signal the probe reads (``sig``:
+  num_hashes longs/doc; or ``shset``/``sz``) into a compact (id, fp,
+  signal) checkpoint. Every later stage — the index probe, the
+  within-batch pairs and the commit's index rows — reads that leaf; no
+  stage re-shingles the batch (the within-batch exact-Jaccard pairs of
+  ``probe="exact"`` excepted, which shingle the survivors once more).
+- near-dup probe: banded MinHash bucket join of the batch signatures
+  against the signatures read from the index (the same banding helper
+  as the within-batch pairs), or an inverted join on stored shingle
+  hashes (exact Jaccard) — both candidate-generation, never all-pairs.
+  The hits are materialized once.
+- within-batch dedup: the X2 pair graph (banded pairs over the leaf's
+  signatures, or exact-Jaccard pairs) + connected components over B.
 - commit: one broadcast anti-join merge (merge_upsert) + an APPEND of
-  |survivors| index rows.
+  |survivors| index rows holding exactly the signals the index stores
+  (by default the one its probe reads: an index is |C| x (16 + 8 x
+  num_hashes) bytes plus parquet overhead for ``probe="minhash"``).
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, functions as F
 
-from serverless_data_pipeline_spark.functions.text import fingerprint
-from serverless_data_pipeline_spark.operators.dedup import (
-    _shingled, minhash_lsh_pairs, neardup_components, ngram_jaccard_pairs,
+from serverless_data_pipeline_spark.functions.text import (
+    fingerprint, shingles_from_tokens,
+)
+# minhash_lsh_pairs is re-exported: perfbench/layers.py times it under
+# this module's name.
+from serverless_data_pipeline_spark.operators.dedup import (  # noqa: F401
+    _banded_pairs, _minhash_mins, _tokens_of, minhash_lsh_pairs,
+    neardup_components, ngram_jaccard_pairs,
+)
+from serverless_data_pipeline_spark.operators.util import (
+    hadoop_fs, release_checkpoint, spread_small_input as _spread,
 )
 
 __all__ = ["corpus_index", "build_corpus_index", "incremental_dedup",
@@ -52,6 +73,62 @@ __all__ = ["corpus_index", "build_corpus_index", "incremental_dedup",
 
 DROP_REASONS = ("exact_index", "exact_batch", "neardup_index",
                 "neardup_batch")
+
+# the columns each index signal adds after (id, fp)
+_SIGNAL_COLS = {"minhash": ("sig",), "shingles": ("shset", "sz")}
+
+
+def _checked_store(store: tuple[str, ...]) -> tuple[str, ...]:
+    if not store:
+        raise ValueError("store must request at least one probe signal")
+    unknown = set(store) - set(_SIGNAL_COLS)
+    if unknown:
+        raise ValueError(f"unknown store signals: {sorted(unknown)}")
+    return tuple(store)
+
+
+def _probe_signal(probe: str) -> tuple[str, ...]:
+    """The index signal ``probe`` reads: the default ``store`` of a new
+    index."""
+    return ("minhash",) if probe == "minhash" else ("shingles",)
+
+
+def _signal_cols(store: tuple[str, ...]) -> list[str]:
+    return [c for s, cols in _SIGNAL_COLS.items() if s in store
+            for c in cols]
+
+
+def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
+              store: tuple[str, ...], shingle_n: int,
+              num_hashes: int) -> DataFrame:
+    """(``id_col``, ``fp``, the ``store`` signal columns): one row per
+    (id, fingerprint) of ``df``, from ONE read of it — tokens, distinct
+    shingles, one explode and one groupBy(id, fp) feed every signal; the
+    fingerprint rides along as a group key, so nothing is joined back
+    and ``df`` (a batch's exact survivors, a corpus) is read once. A doc
+    with no shingles (empty text) keeps its row through explode_outer,
+    with a NULL ``sig`` and an empty ``shset``.
+
+    The string key costs aggregation CPU: on the 10x scale_check corpus
+    (50k docs, read from an in-memory checkpoint, local[4]) a minhash
+    index builds in 9.7-10.2 s vs 8.1-9.5 s for joining the (id, fp)
+    projection back onto a groupBy(id), which reads ``df`` twice.
+    Carrying fp as a first() buffer instead measured 12.4-13.1 s (a
+    string buffer defeats the fixed-width hash aggregate)."""
+    toks = _spread(df.select(F.col(id_col), F.col(fp_col).alias("fp"),
+                             _tokens_of(df, text_col).alias("__toks")))
+    sh = toks.select(id_col, "fp", F.explode_outer(F.array_distinct(
+        shingles_from_tokens("__toks", shingle_n))).alias("__sh"))
+    sh = sh.select(id_col, "fp", F.when(F.col("__sh").isNotNull(),
+                                        F.xxhash64("__sh")).alias("__h0"))
+    aggs = []
+    if "minhash" in store:
+        aggs.append(F.when(F.count("__h0") > 0, F.array(
+            *_minhash_mins("__h0", num_hashes))).alias("sig"))
+    if "shingles" in store:
+        shset = F.sort_array(F.collect_set("__h0"))
+        aggs += [shset.alias("shset"), F.size(shset).alias("sz")]
+    return sh.groupBy(id_col, "fp").agg(*aggs)
 
 
 def corpus_index(df: DataFrame, id_col: str = "doc_id",
@@ -74,32 +151,15 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
       when exactness matters more than index size (it is also the
       oracle-checkable mode); at raw 100 TB scale prefer minhash-only.
 
-    One shingle explode feeds BOTH signals (two groupBys on the same
-    key); ``fp`` is a narrow projection joined on id. Append-only by
-    design: committing a new batch appends its survivors' rows
-    (``commit_batch``), never rewrites existing ones."""
-    if not store:
-        raise ValueError("store must request at least one probe signal")
-    unknown = set(store) - {"minhash", "shingles"}
-    if unknown:
-        raise ValueError(f"unknown store signals: {sorted(unknown)}")
-    out = df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    sh = (_shingled(df, id_col, text_col, shingle_n)
-          .select(F.col(id_col), F.xxhash64("__sh").alias("__h0")))
-    if "minhash" in store:
-        mins = [F.min(F.xxhash64(F.col("__h0"), F.lit(i)))
-                for i in range(num_hashes)]
-        sig = sh.groupBy(id_col).agg(F.array(*mins).alias("sig"))
-        out = out.join(sig, id_col, "left")
-    if "shingles" in store:
-        shset = (sh.groupBy(id_col)
-                 .agg(F.sort_array(F.collect_set("__h0")).alias("shset")))
-        out = (out.join(shset, id_col, "left")
-               .withColumn("shset",
-                           F.coalesce("shset", F.array().cast(
-                               "array<long>")))
-               .withColumn("sz", F.size("shset")))
-    return out
+    One read: a shingle explode and one groupBy(id, fp) feed every
+    stored signal, with no join. Append-only by design: committing a
+    new batch appends its survivors' rows (``commit_batch``), never
+    rewrites existing ones."""
+    store = _checked_store(store)
+    return (_features(df.withColumn("__fp", fingerprint(text_col)),
+                      id_col, "__fp", text_col, store, shingle_n,
+                      num_hashes)
+            .select(id_col, "fp", *_signal_cols(store)))
 
 
 def build_corpus_index(df: DataFrame, index_path: str,
@@ -110,77 +170,165 @@ def build_corpus_index(df: DataFrame, index_path: str,
         .parquet(index_path)
 
 
-def _banded(sig_frame: DataFrame, id_alias: str, bands: int,
-            rows_per_band: int) -> DataFrame:
-    """(id, band, bsig) bucket keys from a (id, sig array<long>) frame —
-    the same banding scheme as minhash_lsh_pairs, applied to a STORED
-    signature array (no text, no shingling)."""
-    bks = [F.struct(
-        F.lit(b).alias("band"),
-        F.xxhash64(*[F.element_at("sig", b * rows_per_band + i + 1)
-                     for i in range(rows_per_band)]).alias("bsig"))
-        for b in range(bands)]
-    return (sig_frame.select(F.col(sig_frame.columns[0]).alias(id_alias),
-                             "sig", F.explode(F.array(*bks)).alias("bk"))
-            .select(id_alias, "sig",
-                    F.col("bk.band").alias("band"),
-                    F.col("bk.bsig").alias("bsig")))
-
-
-def _probe_minhash(batch: DataFrame, index: DataFrame, id_col: str,
-                   text_col: str, shingle_n: int, num_hashes: int,
-                   bands: int, threshold: float) -> DataFrame:
-    """Batch ids whose estimated Jaccard vs ANY index doc >= threshold,
-    via banded LSH over the STORED index signatures (index text never
-    read — it does not even exist in the index). Candidate generation is
-    the (band, bsig) bucket equi-join; verification is the matching-
-    minhash fraction over the two signature arrays."""
-    from serverless_data_pipeline_spark.operators.dedup import (
-        minhash_signatures,
-    )
-    rows_per_band = num_hashes // bands
-    bsig = minhash_signatures(batch, id_col, text_col, num_hashes,
-                              shingle_n)
-    barr = bsig.select(F.col(id_col).alias("__bid"),
-                       F.array(*[F.col(f"mh_{i}")
-                                 for i in range(num_hashes)]).alias("sig"))
-    bb = _banded(barr, "__bid", bands, rows_per_band)
-    ib = _banded(index.select(F.col(id_col).alias("__iid"), "sig"),
-                 "__iid", bands, rows_per_band)
-    cand = (bb.alias("a").join(ib.alias("b"), ["band", "bsig"])
-            .select(F.col("a.__bid").alias("__bid"),
-                    F.col("a.sig").alias("sig_a"),
-                    F.col("b.__iid").alias("__iid"),
-                    F.col("b.sig").alias("sig_b"))
-            .dropDuplicates(["__bid", "__iid"]))
-    est = F.size(F.filter(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        lambda v: v == 1)).cast("double") / F.lit(float(num_hashes))
-    return (cand.filter(est >= threshold)
-            .select(F.col("__bid").alias(id_col)).distinct())
-
-
-def _probe_jaccard(batch: DataFrame, index: DataFrame, id_col: str,
-                   text_col: str, shingle_n: int,
+def _probe_jaccard(cur: DataFrame, index: DataFrame, id_col: str,
                    threshold: float) -> DataFrame:
     """Batch ids whose EXACT Jaccard (over distinct word shingle-hash
-    sets) vs ANY index doc >= threshold. The batch side shingles from
-    text; the index side explodes its STORED ``shset`` — an inverted
-    shingle join (candidates share >= 1 shingle), never all-pairs."""
-    bsh = (_shingled(batch, id_col, text_col, shingle_n)
-           .select(F.col(id_col).alias("__bid"),
-                   F.xxhash64("__sh").alias("__h")))
-    bsz = bsh.groupBy("__bid").agg(F.count(F.lit(1)).alias("__bsz"))
+    sets) vs ANY index doc >= threshold. Both sides explode a STORED
+    ``shset`` — the batch's from the feature leaf, the index's from the
+    index — an inverted shingle join (candidates share >= 1 shingle),
+    never all-pairs."""
+    bsh = cur.select(F.col(id_col).alias("__bid"),
+                     F.col("sz").alias("__bsz"),
+                     F.explode("shset").alias("__h"))
     ish = index.select(F.col(id_col).alias("__iid"), F.col("sz"),
                        F.explode("shset").alias("__h"))
     common = (bsh.join(ish, "__h")
-              .groupBy("__bid", "__iid", "sz")
+              .groupBy("__bid", "__bsz", "__iid", "sz")
               .agg(F.count(F.lit(1)).alias("__c")))
     jacc = (F.col("__c").cast("double")
             / (F.col("__bsz") + F.col("sz") - F.col("__c")))
-    return (common.join(bsz, "__bid")
-            .filter(jacc >= threshold)
+    return (common.filter(jacc >= threshold)
             .select(F.col("__bid").alias(id_col)).distinct())
+
+
+@dataclass
+class _Run:
+    """One dedup run: the lazy verdicts, the exact survivors' features —
+    a checkpoint of (id, fp, the ``store`` signals computed with
+    ``shingle_n``/``num_hashes``), None when no near-dup stage ran — and
+    the checkpoint leaves the verdicts read (release them once the
+    verdicts are materialized)."""
+
+    verdicts: DataFrame
+    features: DataFrame | None
+    store: tuple[str, ...]
+    shingle_n: int
+    num_hashes: int
+    leaves: list
+
+
+# the attribute of a verdict frame that carries its _Run, so commit_batch
+# can append the survivors' index rows from the run's feature leaf
+_RUN = "_incremental_run"
+
+
+def _run_of(verdicts: DataFrame) -> _Run | None:
+    return vars(verdicts).get(_RUN)
+
+
+def _carrying(verdicts: DataFrame, run: _Run | None) -> DataFrame:
+    setattr(verdicts, _RUN, run)
+    return verdicts
+
+
+def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
+           text_col: str, probe: str, threshold: float | None,
+           shingle_n: int, num_hashes: int, bands: int,
+           within_batch: bool | str) -> _Run:
+    """``incremental_dedup``'s stages; see there."""
+    if probe not in ("exact", "minhash"):
+        raise ValueError(f"probe must be 'exact' or 'minhash', got "
+                         f"{probe!r}")
+    if isinstance(within_batch, bool):
+        within_batch = "full" if within_batch else "none"
+    if within_batch not in ("full", "exact", "none"):
+        raise ValueError(f"within_batch must be 'full', 'exact' or "
+                         f"'none', got {within_batch!r}")
+    wb_exact = within_batch in ("full", "exact")
+    wb_neardup = within_batch == "full"
+    signal = _probe_signal(probe)
+    if index is not None:
+        missing = {"fp"} - set(index.columns)
+        if threshold is not None:
+            missing |= set(_signal_cols(signal)) - set(index.columns)
+        if missing:
+            raise ValueError(
+                f"index lacks columns {sorted(missing)} for probe="
+                f"{probe!r} — rebuild with corpus_index(store=...)")
+    cur = batch.withColumn("__fp", fingerprint(text_col))
+    dropped: list[DataFrame] = []
+    features = None
+    leaves: list[DataFrame] = []
+
+    def _drop(ids: DataFrame, reason: str) -> None:
+        dropped.append(ids.select(F.col(id_col),
+                                  F.lit(reason).alias("drop_reason")))
+
+    if index is not None:
+        idx_fp = index.select(F.col("fp").alias("__fp"))
+        _drop(cur.join(idx_fp, "__fp", "left_semi"), "exact_index")
+        cur = cur.join(idx_fp, "__fp", "left_anti")
+    if wb_exact:
+        keep = cur.groupBy("__fp").agg(F.min(id_col).alias(id_col))
+        _drop(cur.join(keep.select(id_col), id_col, "left_anti"),
+              "exact_batch")
+        cur = cur.join(keep.select(id_col), id_col, "left_semi")
+    if threshold is not None and (index is not None or wb_neardup):
+        if probe == "exact" and wb_neardup:
+            # the within-batch exact-Jaccard pairs read the survivors'
+            # text: checkpoint it so they do not re-run the fp joins
+            cur = cur.localCheckpoint(eager=True)
+            leaves.append(cur)
+        # One pass over the exact survivors' text computes their probe
+        # signal into a compact (id, fp, signal) checkpoint: the index
+        # probe, the within-batch signature pairs and the commit's index
+        # rows all read it, and the batch is read no more often than
+        # the fp joins already read it.
+        features = _features(cur, id_col, "__fp", text_col, signal,
+                             shingle_n, num_hashes)
+        features = features.localCheckpoint(eager=True)
+        leaves.append(features)
+        live = features
+    if index is not None and threshold is not None:
+        hits = (_probe_jaccard(features, index, id_col, threshold)
+                if probe == "exact" else
+                _banded_pairs(features.select(id_col, "sig"),
+                              index.select(id_col, "sig"), num_hashes,
+                              bands, threshold)
+                .select(F.col("id_a").alias(id_col)).distinct())
+        # materialized once: the pairs below and every execution of the
+        # verdicts read the hits instead of re-running the probe
+        hits = hits.localCheckpoint(eager=True)
+        leaves.append(hits)
+        _drop(hits, "neardup_index")
+        cur = cur.join(hits, id_col, "left_anti")
+        live = live.join(hits, id_col, "left_anti")
+    if wb_neardup and threshold is not None:
+        pairs = (ngram_jaccard_pairs(cur, id_col, text_col, n=shingle_n,
+                                     threshold=threshold)
+                 if probe == "exact" else
+                 _banded_pairs(live.select(id_col, "sig"), None,
+                               num_hashes, bands, threshold))
+        comp = neardup_components(pairs)
+        leaves.append(comp)
+        _drop(comp.filter(F.col("id") != F.col("component_id"))
+              .select(F.col("id").alias(id_col)), "neardup_batch")
+    if not dropped:
+        verdicts = batch.withColumn("drop_reason",
+                                    F.lit(None).cast("string"))
+    else:
+        reasons = dropped[0]
+        for d in dropped[1:]:
+            reasons = reasons.unionAll(d)
+        verdicts = batch.join(reasons, id_col, "left")
+    return _Run(verdicts, features, signal, shingle_n, num_hashes, leaves)
+
+
+def _index_rows(survivors: DataFrame, run: _Run | None, id_col: str,
+                text_col: str, store: tuple[str, ...], shingle_n: int,
+                num_hashes: int) -> DataFrame:
+    """The index rows of ``survivors``: their rows of the run's feature
+    leaf when it holds the ``store`` signals computed with the same
+    parameters (no text is read), else ``corpus_index`` over their
+    text."""
+    if (run is not None and run.features is not None
+            and set(store) <= set(run.store)
+            and (run.shingle_n, run.num_hashes) == (shingle_n, num_hashes)):
+        return (run.features.join(survivors.select(id_col), id_col,
+                                  "left_semi")
+                .select(id_col, "fp", *_signal_cols(store)))
+    return corpus_index(survivors, id_col, text_col, shingle_n=shingle_n,
+                        num_hashes=num_hashes, store=store)
 
 
 def incremental_dedup(batch: DataFrame, index: DataFrame | None,
@@ -212,78 +360,18 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
     ``"none"`` (probe-only, for a batch already deduped upstream).
     Booleans alias "full"/"none" for compatibility.
 
-    The survivors are exactly the docs ``commit_batch`` should merge.
-    Idempotent re-delivery: re-probing an already-committed batch drops
-    EVERY row as ``exact_index`` (property-tested) — the storage-layer
-    analogue of the reference's redelivery discipline (py:133-137)."""
-    if probe not in ("exact", "minhash"):
-        raise ValueError(f"probe must be 'exact' or 'minhash', got "
-                         f"{probe!r}")
-    if isinstance(within_batch, bool):
-        within_batch = "full" if within_batch else "none"
-    if within_batch not in ("full", "exact", "none"):
-        raise ValueError(f"within_batch must be 'full', 'exact' or "
-                         f"'none', got {within_batch!r}")
-    wb_exact = within_batch in ("full", "exact")
-    wb_neardup = within_batch == "full"
-    if index is not None:
-        missing = {"fp"} - set(index.columns)
-        if probe == "exact" and threshold is not None:
-            missing |= {"shset", "sz"} - set(index.columns)
-        if probe == "minhash" and threshold is not None:
-            missing |= {"sig"} - set(index.columns)
-        if missing:
-            raise ValueError(
-                f"index lacks columns {sorted(missing)} for probe="
-                f"{probe!r} — rebuild with corpus_index(store=...)")
-    cur = batch.withColumn("__fp", fingerprint(text_col))
-    dropped: list[DataFrame] = []
-
-    def _drop(ids: DataFrame, reason: str) -> None:
-        dropped.append(ids.select(F.col(id_col),
-                                  F.lit(reason).alias("drop_reason")))
-
-    if index is not None:
-        idx_fp = index.select(F.col("fp").alias("__fp"))
-        _drop(cur.join(idx_fp, "__fp", "left_semi"), "exact_index")
-        cur = cur.join(idx_fp, "__fp", "left_anti")
-    if wb_exact:
-        keep = cur.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-        _drop(cur.join(keep.select(id_col), id_col, "left_anti"),
-              "exact_batch")
-        cur = cur.join(keep.select(id_col), id_col, "left_semi")
-    if threshold is not None and (index is not None or wb_neardup):
-        # The exact-survivor frame feeds every remaining consumer (the
-        # index probe, the pair generator's index/verify sides, and two
-        # anti-joins); checkpoint once so they all read a compact leaf
-        # instead of re-running the fp joins.
-        cur = cur.localCheckpoint(eager=True)
-    if index is not None and threshold is not None:
-        hits = (_probe_jaccard(cur, index, id_col, text_col, shingle_n,
-                               threshold)
-                if probe == "exact" else
-                _probe_minhash(cur, index, id_col, text_col, shingle_n,
-                               num_hashes, bands, threshold))
-        _drop(hits, "neardup_index")
-        cur = cur.join(hits, id_col, "left_anti")
-    if wb_neardup and threshold is not None:
-        pairs = (ngram_jaccard_pairs(cur, id_col, text_col, n=shingle_n,
-                                     threshold=threshold)
-                 if probe == "exact" else
-                 minhash_lsh_pairs(cur, id_col, text_col,
-                                   num_hashes=num_hashes, bands=bands,
-                                   shingle_n=shingle_n,
-                                   jaccard_threshold=threshold))
-        comp = neardup_components(pairs)
-        _drop(comp.filter(F.col("id") != F.col("component_id"))
-              .select(F.col("id").alias(id_col)), "neardup_batch")
-    if not dropped:
-        return batch.withColumn("drop_reason",
-                                F.lit(None).cast("string"))
-    reasons = dropped[0]
-    for d in dropped[1:]:
-        reasons = reasons.unionAll(d)
-    return batch.join(reasons, id_col, "left")
+    When a near-dup stage runs, the exact survivors and their probe
+    signal are computed once into a checkpoint that stages 3-4 read, and
+    the stage-3 hits are checkpointed too. The survivors are exactly the
+    docs ``commit_batch`` should merge; passed the returned frame, it
+    appends their index rows from that checkpoint instead of shingling
+    their text again. Idempotent re-delivery: re-probing an
+    already-committed batch drops EVERY row as ``exact_index``
+    (property-tested) — the storage-layer analogue of the reference's
+    redelivery discipline (py:133-137)."""
+    run = _dedup(batch, index, id_col, text_col, probe, threshold,
+                 shingle_n, num_hashes, bands, within_batch)
+    return _carrying(run.verdicts, run)
 
 
 def bootstrap_corpus(spark, batch: DataFrame, corpus_path: str,
@@ -292,47 +380,76 @@ def bootstrap_corpus(spark, batch: DataFrame, corpus_path: str,
                      threshold: float | None = 0.5, shingle_n: int = 3,
                      num_hashes: int = 32, bands: int = 8,
                      within_batch: bool | str = "full",
-                     store: tuple[str, ...] = ("minhash", "shingles"),
+                     store: tuple[str, ...] | None = None,
                      ) -> DataFrame:
     """Day-1: dedup the first batch internally, write it as the corpus,
-    build its index. Returns the verdict frame (batch + drop_reason)."""
-    verdicts = incremental_dedup(batch, None, id_col, text_col,
-                                 probe=probe, threshold=threshold,
-                                 shingle_n=shingle_n,
-                                 num_hashes=num_hashes, bands=bands,
-                                 within_batch=within_batch)
+    build its index. Returns the verdict frame (batch + drop_reason), a
+    checkpoint the caller owns (``operators.util.release_checkpoint``).
+
+    ``store`` (the index signals, see ``corpus_index``) defaults to the
+    one ``probe`` reads: ``sig`` for ``"minhash"``, ``shset``/``sz`` for
+    ``"exact"``. Probing the index later with the other ``probe`` needs
+    an index rebuilt with an explicit ``store`` holding its signal."""
+    store = _probe_signal(probe) if store is None else _checked_store(store)
+    run = _dedup(batch, None, id_col, text_col, probe, threshold,
+                 shingle_n, num_hashes, bands, within_batch)
     # compute ONCE: the survivors write below and whatever the caller
     # does with the returned frame (maintenance_stream writes the
     # verdict audit log) must share one execution of the within-batch
     # dedup — un-checkpointed, the pair graph + CC would re-run per
     # consumer (the non-bootstrap tick checkpoints for the same reason)
-    verdicts = verdicts.localCheckpoint(eager=True)
+    verdicts = run.verdicts.localCheckpoint(eager=True)
     survivors = verdicts.filter(F.col("drop_reason").isNull()) \
         .drop("drop_reason")
     survivors.write.mode("overwrite").parquet(corpus_path)
-    build_corpus_index(spark.read.parquet(corpus_path), index_path,
-                       id_col, text_col, mode="overwrite",
-                       shingle_n=shingle_n, num_hashes=num_hashes,
-                       store=store)
+    _index_rows(survivors, run, id_col, text_col, store, shingle_n,
+                num_hashes).write.mode("overwrite").parquet(index_path)
+    for leaf in run.leaves:
+        release_checkpoint(leaf)
     return verdicts
+
+
+def _stored_signals(spark, index_path: str) -> tuple[str, ...] | None:
+    """The signals the index at ``index_path`` holds (None: no index)."""
+    fs, jpath = hadoop_fs(spark, index_path)
+    if not fs.exists(jpath):
+        return None
+    cols = set(spark.read.parquet(index_path).columns)
+    return tuple(s for s, c in _SIGNAL_COLS.items() if c[0] in cols)
 
 
 def commit_batch(spark, verdicts: DataFrame, corpus_path: str,
                  index_path: str, id_col: str = "doc_id",
                  text_col: str = "text", *, shingle_n: int = 3,
                  num_hashes: int = 32,
-                 store: tuple[str, ...] = ("minhash", "shingles")) -> int:
+                 store: tuple[str, ...] | None = None) -> int:
     """Day-N commit: merge the batch's survivors into the corpus
     (merge_upsert — idempotent under re-delivery) and APPEND their index
     rows. Returns the merged corpus row count. The index append writes
-    |survivors| rows; nothing existing is rewritten."""
+    |survivors| rows; nothing existing is rewritten.
+
+    The appended rows hold exactly the signals the persisted index
+    holds: ``store=None`` reads them from the index's columns (an index
+    built with the old two-signal default keeps getting both), and an
+    explicit ``store`` that disagrees raises ``ValueError`` before
+    anything is written — one index directory never mixes two schemas.
+    With no index at ``index_path`` yet, ``store=None`` stores both
+    signals. Given ``incremental_dedup``'s own frame, the rows come from
+    its feature checkpoint; any other frame is shingled from its text."""
     from serverless_data_pipeline_spark.sources.writers import merge_upsert
+    held = _stored_signals(spark, index_path)
+    if store is None:
+        store = held or ("minhash", "shingles")
+    store = _checked_store(store)
+    if held is not None and set(store) != set(held):
+        raise ValueError(
+            f"store {sorted(store)} disagrees with the index at "
+            f"{index_path}, which holds {sorted(held)}")
     survivors = verdicts.filter(F.col("drop_reason").isNull()) \
         .drop("drop_reason")
     n = merge_upsert(spark, corpus_path, survivors, keys=[id_col])
-    corpus_index(survivors, id_col, text_col, shingle_n=shingle_n,
-                 num_hashes=num_hashes, store=store) \
-        .write.mode("append").parquet(index_path)
+    _index_rows(survivors, _run_of(verdicts), id_col, text_col, store,
+                shingle_n, num_hashes).write.mode("append").parquet(index_path)
     return n
 
 
@@ -345,7 +462,7 @@ def maintenance_stream(spark, landing_path: str, schema,
                        shingle_n: int = 3, num_hashes: int = 32,
                        bands: int = 8,
                        within_batch: bool | str = "full",
-                       store: tuple[str, ...] = ("minhash", "shingles"),
+                       store: tuple[str, ...] | None = None,
                        verdict_path: str | None = None,
                        available_now: bool = True,
                        interval_s: float = 3600.0,
@@ -366,6 +483,19 @@ def maintenance_stream(spark, landing_path: str, schema,
     ``verdict_path`` — the ops trail of WHY each landed doc was kept or
     dropped.
 
+    ``store=None`` builds the index with the signal ``probe`` reads
+    (``sig`` for ``"minhash"``, ``shset``/``sz`` for ``"exact"``) and
+    then appends whatever the existing index holds, so an index built
+    with the old two-signal default keeps working unchanged. Switching
+    ``probe`` later needs an index rebuilt with an explicit ``store``
+    that holds the new probe's signal (``build_corpus_index``).
+
+    A tick shingles each landed doc that survives the exact stages once:
+    the index probe, the within-batch pairs and the index append all
+    read one feature checkpoint, and the tick releases every checkpoint
+    it took before it returns, so a long-running stream holds no storage
+    between ticks.
+
     `available_now=True` drains the current backlog in bounded ticks
     and stops (backfill / test mode); `False` keeps firing on the
     EventBridge-style fixed-rate grid (`interval_s`) until `.stop()` —
@@ -381,8 +511,6 @@ def maintenance_stream(spark, landing_path: str, schema,
         scheduled_batch_query,
     )
 
-    from serverless_data_pipeline_spark.operators.util import hadoop_fs
-
     def _exists(path: str) -> bool:
         fs, jpath = hadoop_fs(spark, path)
         return fs.exists(jpath)
@@ -396,16 +524,19 @@ def maintenance_stream(spark, landing_path: str, schema,
                 text_col, probe=probe, threshold=threshold,
                 shingle_n=shingle_n, num_hashes=num_hashes,
                 bands=bands, within_batch=within_batch, store=store)
+            leaves = []
         else:
             idx = spark.read.parquet(index_path)
-            verdicts = incremental_dedup(
+            found = incremental_dedup(
                 batch_df, idx, id_col, text_col, probe=probe,
                 threshold=threshold, shingle_n=shingle_n,
                 num_hashes=num_hashes, bands=bands,
                 within_batch=within_batch)
+            run = _run_of(found)
+            leaves = run.leaves if run is not None else []
             # audit log must see the same verdicts commit acts on, not
             # recompute them against a by-then-mutated index
-            verdicts = verdicts.localCheckpoint(eager=True)
+            verdicts = _carrying(found.localCheckpoint(eager=True), run)
             commit_batch(spark, verdicts, corpus_path, index_path,
                          id_col, text_col, shingle_n=shingle_n,
                          num_hashes=num_hashes, store=store)
@@ -413,6 +544,8 @@ def maintenance_stream(spark, landing_path: str, schema,
             (verdicts.select(F.col(id_col), F.col("drop_reason"),
                              F.lit(tick_id).alias("tick_id"))
              .write.mode("append").parquet(verdict_path))
+        for leaf in [verdicts, *leaves]:
+            release_checkpoint(leaf)
 
     return scheduled_batch_query(
         spark, landing_path, schema, _tick, checkpoint,

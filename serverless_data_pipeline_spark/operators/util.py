@@ -99,19 +99,22 @@ def spread_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def release_checkpoint(df: DataFrame) -> None:
-    """Free the storage blocks of a ``localCheckpoint`` frame NOW instead
-    of when the py4j/JVM refs are GC'd. ``df.unpersist()`` does not reach
-    them, and neither does the python-side ``df.rdd`` (a fresh
-    deserializing wrapper, verified); the block holder is the LogicalRDD
-    leaf's internal RDD, so go through the plan (private internals, same
-    caveat as `hadoop_fs` — best-effort, a miss only leaks local
-    storage). A frame that is not a checkpoint leaf is left alone."""
+    """Free the storage blocks of the ``localCheckpoint`` leaves ``df``
+    reads (``df`` itself when it is one) NOW instead of when the
+    py4j/JVM refs are GC'd. ``df.unpersist()`` does not reach them, and
+    neither does the python-side ``df.rdd`` (a fresh deserializing
+    wrapper, verified); the block holder is each LogicalRDD leaf's
+    internal RDD, so go through the plan (private internals, same caveat
+    as `hadoop_fs` — best-effort, a miss only leaks local storage).
+    Leaves that are not checkpoints (file scans) are left alone."""
     from py4j.protocol import Py4JError
 
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                leaf.rdd().unpersist(False)
     except (AttributeError, Py4JError):
         pass
 

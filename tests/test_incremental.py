@@ -268,3 +268,203 @@ def test_incremental_semantic_dedup_probes_persisted_cells(spark):
     with pytest.raises(ValueError, match="index lacks"):
         incremental_semantic_dedup(batch, corpus, "vec_id", "embedding",
                                    centroids, dim)
+
+
+# A minhash fixture that reaches every drop reason: 10 repeats an index
+# doc (exact_index), 12 repeats 11 (exact_batch), 13 is the index doc 1
+# plus a tail (neardup_index), 14 is a near-dup of 13 but not of doc 1
+# (a pair whose other end is an index hit: it survives, because hits
+# leave before the pair graph), 18 is a near-dup of 17 (neardup_batch)
+# and 19 has no shingles (no signature).
+_SEA = [f"sea{i}" for i in range(26)]
+_XEN = [f"xen{i}" for i in range(6)]
+_CEDAR = " ".join(f"cedar{i}" for i in range(20))
+MH_INDEX = [(1, " ".join(_SEA)), (2, "alpha one two three four"),
+            (3, "cooking pasta with garlic and fresh basil leaves tonight")]
+MH_BATCH = [(10, "ALPHA one  two three four"),
+            (11, "delta eleven twelve thirteen"),
+            (12, "delta eleven twelve thirteen"),
+            (13, " ".join(_SEA + _XEN)),
+            (14, " ".join(_SEA[8:] + _XEN)),
+            (17, f"{_CEDAR} tail"), (18, f"{_CEDAR} other"),
+            (19, ""),
+            (20, "a wholly unrelated document about weather patterns")]
+# the verdicts of the code that MinHashed the batch once per stage
+MH_VERDICTS = {
+    "index": {10: "exact_index", 11: None, 12: "exact_batch",
+              13: "neardup_index", 14: None, 17: None,
+              18: "neardup_batch", 19: None, 20: None},
+    "none": {10: None, 11: None, 12: "exact_batch", 13: None,
+             14: "neardup_batch", 17: None, 18: "neardup_batch", 19: None,
+             20: None},
+}
+
+
+@pytest.mark.parametrize("store", [("minhash",), ("minhash", "shingles")])
+@pytest.mark.parametrize("against", ["index", "none"])
+def test_minhash_verdicts_on_every_drop_reason(spark, against, store):
+    idx = (corpus_index(_docs(spark, MH_INDEX), store=store)
+           if against == "index" else None)
+    v = incremental_dedup(_docs(spark, MH_BATCH), idx, probe="minhash")
+    assert _verdicts(v) == MH_VERDICTS[against]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _count_text_passes(spark, monkeypatch):
+    """Route every tokenization in the dedup operators through a
+    nondeterministic pass-through UDF (Catalyst may neither merge nor drop
+    its evaluations); returns the accumulator it adds to per row."""
+    from serverless_data_pipeline_spark.functions.text import tokens
+    from serverless_data_pipeline_spark.operators import dedup, incremental
+
+    texts = spark.sparkContext.accumulator(0)
+
+    def text_pass(t):
+        texts.add(1)
+        return t
+
+    read_text = F.udf(text_pass, "string").asNondeterministic()
+    for mod in (dedup, incremental):
+        monkeypatch.setattr(mod, "_tokens_of", lambda df, text_col: tokens(
+            read_text(F.col(text_col))))
+    return texts
+
+
+def test_tick_shingles_each_survivor_once_and_probes_once(
+        spark, tmp_path, monkeypatch):
+    """incremental_dedup + commit_batch on its frame: each exact survivor's
+    text is tokenized once (the feature pass; the commit appends the
+    survivors' rows of that checkpoint) and the index signatures are read
+    by one probe execution, however often the verdicts are read."""
+    corpus_dir, index_dir = str(tmp_path / "c"), str(tmp_path / "i")
+    bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir, index_dir,
+                     probe="minhash")
+    texts = _count_text_passes(spark, monkeypatch)
+    sigs = spark.sparkContext.accumulator(0)
+
+    def sig_pass(s):
+        sigs.add(1)
+        return s
+
+    read_sig = F.udf(sig_pass, "array<bigint>").asNondeterministic()
+    idx = spark.read.parquet(index_dir)
+    idx = idx.withColumn("sig", read_sig("sig"))
+
+    def tick():
+        v = incremental_dedup(_docs(spark, MH_BATCH), idx, probe="minhash")
+        commit_batch(spark, v, corpus_dir, index_dir)
+        return v
+
+    v, jobs = _jobs_in_group(spark, "incr-tick", tick)
+    assert _verdicts(v) == MH_VERDICTS["index"]
+    # 11, 13, 14, 17, 18, 19, 20 pass the exact stages
+    assert texts.value == 7
+    assert sigs.value == len(MH_INDEX)
+    # 62 jobs when every stage re-ran the MinHash and the probe, 49 after
+    # (local[4])
+    assert jobs <= 52
+    survivors = {i for i, r in MH_VERDICTS["index"].items() if r is None}
+    assert ({r.doc_id for r in spark.read.parquet(index_dir).collect()}
+            == {1, 2, 3} | survivors)
+
+
+def test_commit_appends_the_signals_the_index_holds(spark, tmp_path):
+    """The default store follows the probe at bootstrap and the persisted
+    index at commit, so every index file has one schema; an explicit
+    store that disagrees with the index raises before anything is
+    written."""
+    import glob
+
+    b2 = _docs(spark, MH_BATCH)
+    for probe, cols in (("minhash", {"doc_id", "fp", "sig"}),
+                        ("exact", {"doc_id", "fp", "shset", "sz"})):
+        corpus_dir = str(tmp_path / probe / "c")
+        index_dir = str(tmp_path / probe / "i")
+        bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir,
+                         index_dir, probe=probe)
+        v = incremental_dedup(b2, spark.read.parquet(index_dir),
+                              probe=probe)
+        with pytest.raises(ValueError, match="disagrees with the index"):
+            commit_batch(spark, v, corpus_dir, index_dir,
+                         store=("minhash", "shingles"))
+        assert spark.read.parquet(corpus_dir).count() == len(MH_INDEX)
+        commit_batch(spark, v, corpus_dir, index_dir)
+        files = glob.glob(index_dir + "/*.parquet")
+        assert len(files) > 1
+        assert all(set(spark.read.parquet(f).columns) == cols
+                   for f in files)
+    # an index built with both signals keeps getting both
+    corpus_dir, index_dir = str(tmp_path / "both" / "c"), \
+        str(tmp_path / "both" / "i")
+    bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir, index_dir,
+                     probe="minhash", store=("minhash", "shingles"))
+    v = incremental_dedup(b2, spark.read.parquet(index_dir),
+                          probe="minhash")
+    commit_batch(spark, v, corpus_dir, index_dir)
+    assert all(set(spark.read.parquet(f).columns)
+               == {"doc_id", "fp", "sig", "shset", "sz"}
+               for f in glob.glob(index_dir + "/*.parquet"))
+    again = _verdicts(incremental_dedup(
+        b2, spark.read.parquet(index_dir), probe="exact"))
+    assert all(again[i] == "exact_index" for i, r in _verdicts(v).items()
+               if r is None)
+
+
+def test_minhash_stream_stores_signatures_and_releases_its_checkpoints(
+        spark, tmp_path, monkeypatch):
+    """maintenance_stream(probe="minhash"): each tick tokenizes each exact
+    survivor once (the commit appends index rows from the feature pass),
+    the index holds exactly {doc_id, fp, sig} in every file, and neither
+    the bootstrap tick nor a probe tick leaves a persisted RDD behind."""
+    import glob
+    import json
+
+    from pyspark.sql import types as T
+
+    from serverless_data_pipeline_spark.operators.incremental import (
+        maintenance_stream,
+    )
+
+    texts = _count_text_passes(spark, monkeypatch)
+
+    land = tmp_path / "landing"
+    land.mkdir()
+    schema = T.StructType([T.StructField("doc_id", T.LongType()),
+                           T.StructField("text", T.StringType())])
+    index_dir = str(tmp_path / "index")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+
+    def _tick(name, rows):
+        (land / name).write_text(
+            "\n".join(json.dumps({"doc_id": i, "text": t}) for i, t in rows))
+        before = set(persisted().keys())
+        q = maintenance_stream(
+            spark, str(land), schema, str(tmp_path / "corpus"), index_dir,
+            str(tmp_path / "chk"), probe="minhash",
+            verdict_path=str(tmp_path / "verdicts"))
+        q.awaitTermination(120)
+        assert q.exception() is None
+        assert set(persisted().keys()) <= before
+
+    _tick("b1.json", MH_INDEX)
+    assert texts.value == len(MH_INDEX)
+    _tick("b2.json", MH_BATCH)
+    # 11, 13, 14, 17, 18, 19, 20 pass the exact stages
+    assert texts.value == len(MH_INDEX) + 7
+    files = glob.glob(index_dir + "/*.parquet")
+    assert all(set(spark.read.parquet(f).columns) == {"doc_id", "fp", "sig"}
+               for f in files)
+    v = {r.doc_id: r.drop_reason for r in
+         spark.read.parquet(str(tmp_path / "verdicts")).collect()}
+    assert {i: v[i] for i, _ in MH_BATCH} == MH_VERDICTS["index"]
