@@ -10,13 +10,13 @@ from serverless_data_pipeline_spark.functions.vectors import (
     dot_product_fixed, l2_norm, l2_norm_fixed,
 )
 from serverless_data_pipeline_spark.functions.text import (
-    char_shingles, fingerprint, punct_ratio, quality_score_expr,
-    stopword_ratio, token_count, tokens, word_shingles,
+    fingerprint, punct_ratio, quality_score_expr, token_count, tokens,
+    word_shingles,
 )
 
 __all__ = [
     "cosine_similarity", "cosine_similarity_fixed", "dot_product",
     "dot_product_fixed", "l2_norm", "l2_norm_fixed",
-    "tokens", "token_count", "char_shingles", "word_shingles",
-    "fingerprint", "punct_ratio", "stopword_ratio", "quality_score_expr",
+    "tokens", "token_count", "word_shingles",
+    "fingerprint", "punct_ratio", "quality_score_expr",
 ]

@@ -73,15 +73,6 @@ def shingles_from_tokens(tok_col: Column | str, n: int = 3) -> Column:
         lambda s: s != "")
 
 
-def char_shingles(col: Column | str, n: int = 5) -> Column:
-    """Character n-grams (for MinHash over short/no-whitespace text)."""
-    c = _c(col)
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(c) - n + 1, F.lit(1))),
-        lambda i: c.substr(i, F.lit(n)),
-    )
-
-
 def fingerprint(col: Column | str) -> Column:
     """Canonical document fingerprint: md5 of case/whitespace-normalized
     text. md5 hex is identical across Spark and DuckDB, so exact-dup
@@ -96,14 +87,6 @@ def punct_ratio(col: Column | str) -> Column:
     nonspace = F.length(F.regexp_replace(c, r"\s", ""))
     punct = F.length(F.regexp_replace(c, r"[a-zA-Z0-9\s]", ""))
     return F.when(nonspace > 0, punct.cast("double") / nonspace.cast("double")).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(col: Column | str) -> Column:
-    """Fraction of tokens that are (English) stopwords."""
-    toks = tokens(F.lower(_c(col)))
-    n = F.size(toks)
-    sw = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))
-    return F.when(n > 0, sw.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
 def quality_signal_count(col: Column | str,

@@ -997,11 +997,6 @@ def _packed_dirs(spark, state_path: str) -> list[tuple[int, bool, bool]]:
     return sorted(out)
 
 
-def _packed_versions(spark, state_path: str) -> list[int]:
-    """Committed version numbers, ascending."""
-    return [v for v, ok, _f in _packed_dirs(spark, state_path) if ok]
-
-
 def _merged_packed_state(spark, state_path: str,
                          versions: list[tuple[int, bool]]) -> DataFrame:
     """Merge-on-read over a committed (version, full) chain: read the

@@ -1,7 +1,8 @@
-"""Deduplication operators (charter extension X1/X2).
+"""Near-duplicate operators (charter extension X2).
 
-Exact, MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup
-— the dedup toolbox of a large-scale training-data pipeline.
+MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup —
+the dedup toolbox of a large-scale training-data pipeline. X1 exact
+keep-latest dedup is ``operators.relational.dedupe_latest``.
 
 Scale design (the part that matters at 100 TB):
 - NOTHING here compares all pairs. Every near-dup variant is
@@ -20,10 +21,9 @@ from pyspark.sql import DataFrame, functions as F
 from serverless_data_pipeline_spark.functions.text import (
     shingles_from_tokens, tokens,
 )
-from serverless_data_pipeline_spark.operators.relational import dedupe_latest
 
 __all__ = [
-    "exact_dedup", "minhash_signatures", "minhash_lsh_pairs",
+    "minhash_signatures", "minhash_lsh_pairs",
     "simhash", "simhash_pairs", "ngram_jaccard_pairs",
     "embedding_neardup_pairs", "semantic_dedup", "neardup_components",
     "dedupe_by_components", "lsh_plan", "corpus_jaccard",
@@ -88,16 +88,6 @@ def _ceil_mul(col, num: int, den: int):
     negative, which would quietly disable all pruning)."""
     x = col.cast("long") * F.lit(num) + F.lit(den - 1)
     return ((x - F.pmod(x, F.lit(den))) / F.lit(den)).cast("long")
-
-
-def exact_dedup(df: DataFrame, keys: list[str],
-                order_by: list | None = None) -> DataFrame:
-    """X1 — exact dedup. With `order_by`, keep-first deterministic variant
-    (row_number()==1); otherwise plain dropDuplicates (hash shuffle on the
-    keys, partial dedup map-side)."""
-    if order_by:
-        return dedupe_latest(df, keys, order_by)
-    return df.dropDuplicates(keys)
 
 
 # ---------------------------------------------------------------- MinHash

@@ -67,9 +67,8 @@ from serverless_data_pipeline_spark.operators.util import (
     hadoop_fs, release_checkpoint, spread_small_input as _spread,
 )
 
-__all__ = ["corpus_index", "build_corpus_index", "incremental_dedup",
-           "bootstrap_corpus", "commit_batch", "maintenance_stream",
-           "incremental_semantic_dedup"]
+__all__ = ["corpus_index", "incremental_dedup", "bootstrap_corpus",
+           "commit_batch", "maintenance_stream"]
 
 DROP_REASONS = ("exact_index", "exact_batch", "neardup_index",
                 "neardup_batch")
@@ -160,14 +159,6 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
                       id_col, "__fp", text_col, store, shingle_n,
                       num_hashes)
             .select(id_col, "fp", *_signal_cols(store)))
-
-
-def build_corpus_index(df: DataFrame, index_path: str,
-                       id_col: str = "doc_id", text_col: str = "text", *,
-                       mode: str = "overwrite", **kwargs) -> None:
-    """Materialize ``corpus_index`` to parquet at ``index_path``."""
-    corpus_index(df, id_col, text_col, **kwargs).write.mode(mode) \
-        .parquet(index_path)
 
 
 def _probe_jaccard(cur: DataFrame, index: DataFrame, id_col: str,
@@ -488,7 +479,7 @@ def maintenance_stream(spark, landing_path: str, schema,
     then appends whatever the existing index holds, so an index built
     with the old two-signal default keeps working unchanged. Switching
     ``probe`` later needs an index rebuilt with an explicit ``store``
-    that holds the new probe's signal (``build_corpus_index``).
+    that holds the new probe's signal (``corpus_index``).
 
     A tick shingles each landed doc that survives the exact stages once:
     the index probe, the within-batch pairs and the index append all
@@ -552,59 +543,3 @@ def maintenance_stream(spark, landing_path: str, schema,
         interval_s=interval_s, fmt=fmt, available_now=available_now,
         max_files_per_tick=max_files_per_tick)
 
-
-def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
-                               id_col: str, vec_col: str,
-                               centroids: list[list[float]], dim: int,
-                               *, threshold: float = 0.9,
-                               cell_col: str = "ivf_cell") -> DataFrame:
-    """The embedding-side sibling of ``incremental_dedup``: drop new
-    vectors that SEMANTICALLY duplicate the existing corpus (cosine vs
-    any indexed vector >= ``threshold``) by probing a PERSISTED IVF
-    cell index — the daily-landing form of SemDeDup, where the
-    expensive k-means codebook is trained once offline and each
-    arriving batch only pays one cell assignment + one cell-equality
-    join.
-
-    ``index`` is the materialized ``assign_ivf_cells`` output
-    (``id_col``, ``vec_col``, ``cell_col``) — written
-    ``partitionBy(cell_col)``, the join's cell filter partition-prunes
-    exactly like ``ivf_topk_indexed``. Candidate generation is top-1
-    cell equality: a true near-duplicate (cosine ~1) shares its
-    nearest centroid except on cell boundaries, the same probe/recall
-    trade every IVF deployment makes — raise the codebook's
-    ``n_cells`` training sample or run a second pass with perturbed
-    centroids if boundary misses matter. Verification is the exact
-    pairwise cosine (Arrow-batched BLAS, no per-row Python).
-
-    Returns ``batch`` + ``drop_reason`` (``semdup_index`` or NULL),
-    matching ``incremental_dedup``'s verdict shape; compose with
-    ``semantic_dedup`` on the survivors for within-batch semantic
-    dedup, and append survivors' (id, vec, cell) rows to the index to
-    commit. Scale: batch-sized cell assignment (narrow), one
-    equi-join keyed on the cell id whose index side reads n_cells'
-    worth of candidate CELLS, not the whole corpus."""
-    from serverless_data_pipeline_spark.functions.vectors_np import (
-        pair_cosine_udf,
-    )
-    from serverless_data_pipeline_spark.operators.similarity import (
-        assign_ivf_cells,
-    )
-    missing = {cell_col, vec_col} - set(index.columns)
-    if missing:
-        raise ValueError(f"index lacks columns {sorted(missing)} — "
-                         "materialize assign_ivf_cells output")
-    b = assign_ivf_cells(batch.select(F.col(id_col), F.col(vec_col)),
-                         vec_col, centroids, dim, out_col="__bc")
-    cand = (b.select(F.col(id_col).alias("__bid"),
-                     F.col(vec_col).alias("__bv"), "__bc")
-            .join(index.select(F.col(cell_col).alias("__bc"),
-                               F.col(vec_col).alias("__iv")), "__bc"))
-    hits = (cand
-            .withColumn("__s", pair_cosine_udf(dim)(F.col("__bv"),
-                                                    F.col("__iv")))
-            .filter(F.col("__s") >= threshold)
-            .select(F.col("__bid").alias(id_col)).distinct())
-    return batch.join(
-        hits.withColumn("drop_reason", F.lit("semdup_index")),
-        id_col, "left")

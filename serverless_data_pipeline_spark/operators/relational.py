@@ -133,59 +133,6 @@ def bucketed_range_join(left: DataFrame, right: DataFrame,
         & (F.col(left_point) <= F.col(right_hi))).drop("__bucket")
 
 
-def salted_agg(df: DataFrame, keys: Sequence[str],
-               sum_cols: Sequence[str] = (), count: bool = True,
-               salt_buckets: int = 16) -> DataFrame:
-    """Skew-safe aggregation: pre-aggregate on (keys, salt) so a hot key's
-    rows split across `salt_buckets` reducers, then combine partials on
-    the keys alone. Two shuffles, but the first is skew-free and the
-    second moves only `buckets × |distinct keys|` rows. Use when one key
-    holds a large share of the data and AQE skew handling isn't enough
-    (AQE only splits skewed JOIN partitions, not aggregations).
-    Sums transit DECIMAL(20,4) (exact, order-insensitive).
-
-    The salt hashes the full row content (xxhash64 over every column) —
-    NOT monotonically_increasing_id(), which is nondeterministic across
-    stage retries: a shuffle-fetch failure would re-salt surviving rows
-    into different buckets than already-committed map outputs, dropping
-    or duplicating rows exactly in the failure regime this helper
-    targets. Trade-off: fully identical rows share a salt bucket; for a
-    hot key made of *distinct* rows (the common skew case) the spread is
-    uniform."""
-    keys = list(keys)
-    salted = df.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]),
-                         F.lit(salt_buckets)))
-    partial_aggs = [F.sum(F.col(c).cast("decimal(20,4)")).alias(f"__s_{c}")
-                    for c in sum_cols]
-    if count:
-        partial_aggs.append(F.count("*").alias("__n"))
-    partial = salted.groupBy(*keys, "__salt").agg(*partial_aggs)
-    final_aggs = [F.sum(f"__s_{c}").cast("double").alias(f"sum_{c}")
-                  for c in sum_cols]
-    if count:
-        final_aggs.append(F.sum("__n").alias("n_rows"))
-    return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_join(left: DataFrame, right: DataFrame, on: Sequence[str],
-                salt_buckets: int = 16) -> DataFrame:
-    """Skew-safe inner equi-join: salt the (large, skewed) left side with
-    a random bucket and EXPLODE the right side across all buckets, then
-    join on (keys, salt). The hot key's rows spread over `salt_buckets`
-    tasks at the cost of replicating the right side ×buckets — use when
-    the right side is small-ish but above the broadcast threshold and AQE
-    skew-join still leaves a straggler. Salt is content-derived (see
-    salted_agg) so stage retries re-salt rows identically."""
-    on = list(on)
-    l_salted = left.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]),
-                         F.lit(salt_buckets)))
-    r_exploded = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)])))
-    return l_salted.join(r_exploded, on + ["__salt"]).drop("__salt")
-
-
 def sessionize(df: DataFrame, key: str, ts: str,
                gap_minutes: int = 30) -> DataFrame:
     """Batch sessionization (gaps-and-islands): new session when the gap

@@ -1,9 +1,9 @@
 """Text-analysis operators (charter extension X5).
 
-Language-ID, quality scoring, token statistics, and document
-fingerprinting over a `documents(doc_id, text, lang, source, n_chars)`
-table. Each operator is a single narrow pass of built-in functions
-(+ one groupBy where an aggregate is the point) — linear at 100 TB.
+Language-ID, quality scoring, token statistics and corpus hygiene over
+a `documents(doc_id, text, lang, source, n_chars)` table. Each operator
+is a single narrow pass of built-in functions (+ one groupBy where an
+aggregate is the point) — linear at 100 TB.
 """
 
 from __future__ import annotations
@@ -13,9 +13,7 @@ from pyspark.sql import functions as F
 
 from serverless_data_pipeline_spark.operators.util import spread_small_input
 from serverless_data_pipeline_spark.functions.text import (
-    STOPWORDS, bpe_ish_tokens, fingerprint, punct_ratio,
-    quality_score_expr, shingles_from_tokens, stopword_ratio,
-    token_count, tokens,
+    STOPWORDS, bpe_ish_tokens, shingles_from_tokens, tokens,
 )
 
 # Marker function words per language (public, standard vocabulary lists).
@@ -156,16 +154,6 @@ def token_stats(df: DataFrame, text_col: str = "text",
                 group_col)
             .select(group_col, "n_docs", "total_tokens", "total_bpe_tokens",
                     "avg_tokens", "vocab"))
-
-
-def fingerprint_documents(df: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
-    """Document fingerprints (md5 of normalized text) + duplicate-group
-    size per fingerprint — the exact-dup detection primitive."""
-    df = spread_small_input(df)
-    fp = df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    counts = fp.groupBy("fp").agg(F.count("*").alias("dup_count"))
-    return fp.join(counts, "fp").select(id_col, "fp", "dup_count")
 
 
 # PII-ish patterns, deliberately dialect-portable (same regex text works in
@@ -742,65 +730,6 @@ def gopher_rules(df: DataFrame, id_col: str = "doc_id",
         F.round(alpha_frac, 6).alias("g_alpha_frac"),
         stop_hits.cast("long").alias("g_stop_hits"),
         keep.cast("int").alias("g_keep"))
-
-
-def train_quality_classifier(df: DataFrame, text_col: str,
-                             label_col: str, *,
-                             n_buckets: int = 512,
-                             max_iter: int = 50,
-                             reg_param: float = 0.0,
-                             ) -> tuple[list[float], float]:
-    """Train the X14 quality classifier IN-ENGINE: logistic regression
-    (MLlib LBFGS) over exactly the hashed mean bag-of-token features
-    `classifier_quality_score` evaluates — same md5-hex bucket hash,
-    same mean normalization — so the returned ``(weights, bias)`` drop
-    straight into the scorer and the deployed model is bit-reproducible
-    at scan speed while training stays an offline job (the fastText
-    recipe: train once on labels, ship frozen weights).
-
-    ``df`` needs ``text_col`` and a 0/1 ``label_col`` (curated
-    good/bad examples — e.g. reference pages vs crawl noise, the CCNet
-    construction). Returns (weights[n_buckets], bias).
-
-    Scale shape: one explode + (doc, bucket) count aggregation builds
-    sparse mean-frequency vectors (one shuffle, bounded by n_buckets
-    features per doc); LBFGS then runs MLlib's treeAggregate passes
-    over the |labeled| training set — which is curated-small by
-    construction, orders of magnitude below corpus scale."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.linalg import Vectors, VectorUDT
-
-    if n_buckets < 1:
-        raise ValueError("n_buckets must be >= 1")
-    toks = tokens(text_col)
-    per = (df.select(F.monotonically_increasing_id().alias("__rid"),
-                     F.col(label_col).cast("double").alias("label"),
-                     toks.alias("__toks"))
-           .where(F.size("__toks") > 0))
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("__t")), 1, 8), 16, 10)
-         .cast("long"), F.lit(n_buckets)).cast("int")
-    counts = (per.select("__rid", "label",
-                         F.size("__toks").alias("__n"),
-                         F.explode("__toks").alias("__t"))
-              .groupBy("__rid", "label", "__n", bucket.alias("__b"))
-              .agg(F.count("*").alias("__c"))
-              .groupBy("__rid", "label", "__n")
-              .agg(F.collect_list(F.struct("__b", "__c")).alias("__bc")))
-
-    @F.udf(VectorUDT())
-    def _vec(n, bc):
-        pairs = sorted((r["__b"], r["__c"] / n) for r in bc)
-        return Vectors.sparse(n_buckets, [p[0] for p in pairs],
-                              [p[1] for p in pairs])
-
-    train = counts.select(
-        F.col("label"), _vec("__n", "__bc").alias("features"))
-    lr = LogisticRegression(maxIter=max_iter, regParam=reg_param,
-                            standardization=False)
-    model = lr.fit(train)
-    return ([float(x) for x in model.coefficients.toArray()],
-            float(model.intercept))
 
 
 def lexicon_tag(df: DataFrame, text_col: str = "text",

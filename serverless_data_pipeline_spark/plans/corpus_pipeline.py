@@ -46,11 +46,12 @@ class CorpusResult:
     """`cached` lists the frames `prepare_training_corpus` cached (the
     passage/semantic stages and `clean` itself, when counts are
     collected); `checkpoints` lists the stage boundaries it materialized
-    with `spread_checkpoint` (the exact- and near-dup survivors). Their
-    lifetime is CALLER-owned: `clean`/`stats` read through them, so they
-    stay persisted until the caller is done — call `unpersist()` then
-    (ADVICE r5: repeated pipeline runs in one session otherwise
-    accumulate storage memory)."""
+    with `spread_checkpoint` (the exact- and near-dup survivors) and the
+    near-dup plan, whose leaves include the `exact_clusters` component
+    map. Their lifetime is CALLER-owned: `clean`/`stats` read through
+    them, so they stay persisted until the caller is done — call
+    `unpersist()` then (ADVICE r5: repeated pipeline runs in one session
+    otherwise accumulate storage memory)."""
 
     clean: DataFrame
     stats: DataFrame
@@ -173,9 +174,13 @@ def prepare_training_corpus(docs: DataFrame, *,
     # perfbench corpus day (local[2], medians of 3): greedy edge-drop
     # 12.3 -> 9.1 s and 89 -> 78 jobs with the writes (pair generation
     # no longer reruns per reader); neutral with exact_clusters, whose
-    # component map is already a leaf.
+    # component map is already a leaf. That map's last label round is a
+    # checkpoint leaf of the plan below, which no returned frame reads:
+    # listing the plan lets `unpersist()` free it (`exact`, its other
+    # leaf, is listed already).
+    neardup_plan = neardeduped
     neardeduped = spread_checkpoint(neardeduped)
-    checkpoints.append(neardeduped)
+    checkpoints += [neardeduped, neardup_plan]
 
     stage = neardeduped
     if passage_k is not None:

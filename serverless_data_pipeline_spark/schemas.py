@@ -91,18 +91,6 @@ SCHEMAS: dict[str, T.StructType] = {
     ]),
 }
 
-# The ingest record contract of the control-plane API (md:172-180): the POST
-# /pipelines body the reference accepts. Used by the T1 ingest stage.
-INGEST_RECORD_SCHEMA = T.StructType([
-    T.StructField("source", T.StringType()),
-    T.StructField("data_type", T.StringType()),
-    T.StructField("priority", T.StringType()),
-    T.StructField("metadata", T.StructType([
-        T.StructField("source_system", T.StringType()),
-        T.StructField("batch_id", T.StringType()),
-    ])),
-])
-
 
 def _parquet_timestamp_unit(path: str, column: str) -> str | None:
     """Probe a parquet file/dir footer for a timestamp column's time unit.

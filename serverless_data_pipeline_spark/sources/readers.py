@@ -1,4 +1,4 @@
-"""Readers (S1, S2, S5, S7).
+"""Readers (S1, S5, S7; the S2 parquet scan is ``schemas.load_table``).
 
 The reference's ingest surfaces: S3 object-created events on `incoming/`
 (py:634-638), SQS work batches of 10 (py:641-646), Kinesis micro-batches of
@@ -68,13 +68,6 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     good = cached.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = cached.filter(F.col(CORRUPT_COL).isNotNull())
     return good, bad
-
-
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S2 — columnar scan of the processed tier (Athena's target,
-    md:161-163). Vectorized reader; filters and column pruning push down
-    to the parquet footer/row-group level automatically."""
-    return spark.read.parquet(path)
 
 
 def read_stream_files(spark: SparkSession, path: str, schema: T.StructType,

@@ -57,21 +57,6 @@ def write_quarantine(df: DataFrame, path: str, reason: str,
        .write.mode(mode).json(path))
 
 
-def write_bucketed_table(df: DataFrame, table: str, bucket_cols: list[str],
-                         n_buckets: int = 32, sort_cols: list[str] | None = None,
-                         mode: str = "overwrite") -> None:
-    """Bucketed managed table for co-located joins: two tables bucketed on
-    the same keys with the same bucket count join WITHOUT a shuffle —
-    Spark elides both exchanges. At 100 TB this is the difference between
-    re-shuffling every fact-fact join and reading pre-hashed files; pay
-    the shuffle once at write time, never again."""
-    w = df.write.mode(mode).format("parquet") \
-        .bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def write_clustered(df: DataFrame, path: str, cluster_cols: list[str],
                     n_files: int = 32, mode: str = "overwrite",
                     bloom_filter_cols: list[str] | None = None,
@@ -134,7 +119,8 @@ def compact_table(spark, path: str, target_partitions: int = 32) -> int:
     accumulate tiny files whose listing + open cost eventually dominates
     scan time (the classic lake small-files problem; the reference's
     Firehose buffers exist for exactly this reason, py:199-202). Run
-    periodically from the same scheduler slot as apply_retention.
+    periodically from the same scheduler slot as
+    delete_expired_partitions.
     Returns the row count preserved. Coalesce, not repartition: a
     file-count reduction needs no shuffle."""
     snapshot = spark.read.parquet(path).cache()
@@ -173,40 +159,8 @@ def merge_upsert(spark, target_path: str, updates: DataFrame,
     return spark.read.parquet(target_path).count()
 
 
-def overwrite_partitions(df: DataFrame, path: str, ts_col: str = "ts",
-                         config: EngineConfig = DEFAULT_CONFIG) -> None:
-    """Idempotent partition reprocessing: rewrite ONLY the partitions
-    present in `df`, leaving every other partition untouched (dynamic
-    partition-overwrite). This is how a 100 TB lake replays one bad
-    hour/day — `mode("overwrite")` without it would truncate the whole
-    table, and `append` would duplicate the replayed rows. The reference's
-    retry path (md:200, SQS redrive py:133-137) re-delivers batches;
-    this writer makes the re-delivery idempotent at the storage layer."""
-    out = df if set(config.partition_columns) <= set(df.columns) \
-        else with_partition_columns(df, ts_col)
-    (out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .option("compression", config.sink_compression)
-        .option("maxRecordsPerFile", config.max_records_per_file)
-        .partitionBy(*config.partition_columns)
-        .parquet(path))
-
-
-def apply_retention(spark, path: str, max_age_days: int,
-                    ts_col: str = "ts") -> int:
-    """S8 — lifecycle policy (30 d → IA, 90 d → Glacier, py:77-92) reduced
-    to engine scope: report (and let an external mover act on) partitions
-    older than the cutoff. Pure partition-column metadata scan — prunes to
-    directory listings, reads no data files."""
-    df = spark.read.parquet(path)
-    cutoff = F.date_sub(F.current_date(), max_age_days)
-    old = (df.select("year", "month", "day").distinct()
-             .filter(F.make_date("year", "month", "day") < cutoff))
-    return old.count()
-
-
 def delete_expired_partitions(spark, path: str, cutoff_date: str) -> int:
-    """S8, enforcement half — DELETE day-grain partitions strictly older
+    """S8 retention — DELETE day-grain partitions strictly older
     than ``cutoff_date`` ('yyyy-mm-dd'): the expiry action of the
     reference's lifecycle rules (py:77-92), applied at the partition
     directory level so it is a metadata listing + directory deletes —

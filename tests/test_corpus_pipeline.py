@@ -177,14 +177,17 @@ def _persisted_rdds(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def test_corpus_pipeline_unpersist_releases_stage_caches(spark):
+@pytest.mark.parametrize("exact_clusters", [False, True])
+def test_corpus_pipeline_unpersist_releases_stage_caches(spark,
+                                                        exact_clusters):
     docs = spark.createDataFrame(
-        [(1, GOOD), (2, GOOD + " extra trailing words here")],
-        "doc_id long, text string")
+        [(1, GOOD), (2, NEAR), (3, GOOD2)], "doc_id long, text string")
     before = _persisted_rdds(spark)
     res = prepare_training_corpus(docs, languages=("en",), min_quality=0.0,
-                                  jaccard_threshold=0.9, passage_k=8,
+                                  jaccard_threshold=0.5, passage_k=8,
+                                  exact_clusters=exact_clusters,
                                   collect_counts=True)
+    assert res.counts["after_near_dedup"] == 2      # 1 and 2 are a pair
     assert _persisted_rdds(spark) - before
     res.unpersist()
     # the stage caches AND the checkpoint leaves (which df.unpersist()

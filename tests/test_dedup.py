@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from serverless_data_pipeline_spark.operators.dedup import (
-    embedding_neardup_pairs, exact_dedup, minhash_lsh_pairs,
+    embedding_neardup_pairs, minhash_lsh_pairs,
     ngram_jaccard_pairs, simhash_pairs,
 )
 
@@ -22,12 +22,6 @@ def _docs(spark):
         [(1, BASE), (2, NEAR), (3, OTHER),
          (4, "tiny"), (5, "spark sql engine")],
         "doc_id long, text string")
-
-
-def test_exact_dedup(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "a"), (2, "b")],
-                               "k long, v string")
-    assert exact_dedup(df, ["k"]).count() == 2
 
 
 def test_minhash_finds_planted_pair(spark):

@@ -9,8 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from serverless_data_pipeline_spark.operators.incremental import (
-    bootstrap_corpus, build_corpus_index, commit_batch, corpus_index,
-    incremental_dedup,
+    bootstrap_corpus, commit_batch, corpus_index, incremental_dedup,
 )
 
 
@@ -80,7 +79,7 @@ def test_probe_reads_index_only_never_corpus_text(spark, tmp_path):
     index_dir = str(tmp_path / "index")
     b1 = _docs(spark, [(i, f"{BASE} tail {i}") for i in range(5)])
     b1.write.parquet(corpus_dir)
-    build_corpus_index(spark.read.parquet(corpus_dir), index_dir)
+    corpus_index(spark.read.parquet(corpus_dir)).write.parquet(index_dir)
     b2 = _docs(spark, [(10, BASE + " tail 99"), (11, "other text here")])
     out = incremental_dedup(b2, spark.read.parquet(index_dir))
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -217,57 +216,6 @@ def test_maintenance_stream_bootstrap_probe_and_audit(spark, tmp_path):
         == {1, 2, 11}
     # batch-2 verdicts all carry a LATER tick than batch-1's
     assert {v[d][1] for d in (10, 11, 12)} != {v[d][1] for d in (1, 2, 3)}
-
-
-def test_incremental_semantic_dedup_probes_persisted_cells(spark):
-    """Vector-side incremental dedup: a new batch vector near-identical
-    to an INDEXED vector is dropped as semdup_index; novel directions
-    survive; re-probing committed survivors drops them (idempotent)."""
-    import numpy as np
-
-    from serverless_data_pipeline_spark.operators.incremental import (
-        incremental_semantic_dedup,
-    )
-    from serverless_data_pipeline_spark.operators.similarity import (
-        assign_ivf_cells,
-    )
-    dim = 8
-    rng = np.random.default_rng(7)
-    base = rng.normal(size=(4, dim))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
-    centroids = [list(map(float, v)) for v in base]
-    corpus = spark.createDataFrame(
-        [(i, [float(x) for x in base[i % 4] * (1.0 + 0.01 * i)])
-         for i in range(8)], "vec_id long, embedding array<float>")
-    index = assign_ivf_cells(corpus, "embedding", centroids, dim)
-    # batch: near-copy of vec 0 (same direction), one orthogonal-ish
-    # novel vector, and one mild rotation below the threshold
-    novel = rng.normal(size=dim)
-    for v in base:
-        novel -= np.dot(novel, v) * v / np.dot(v, v)
-    novel /= np.linalg.norm(novel)
-    batch = spark.createDataFrame(
-        [(100, [float(x) for x in base[0] * 2.0]),
-         (101, [float(x) for x in novel])],
-        "vec_id long, embedding array<float>")
-    v = {r.vec_id: r.drop_reason for r in incremental_semantic_dedup(
-        batch, index, "vec_id", "embedding", centroids, dim,
-        threshold=0.95).collect()}
-    assert v[100] == "semdup_index"
-    assert v[101] is None
-    # commit the survivor and re-probe the same batch: BOTH now drop
-    surv = batch.filter(F.col("vec_id") == 101)
-    index2 = index.unionByName(
-        assign_ivf_cells(surv, "embedding", centroids, dim))
-    v2 = {r.vec_id: r.drop_reason for r in incremental_semantic_dedup(
-        batch, index2, "vec_id", "embedding", centroids, dim,
-        threshold=0.95).collect()}
-    assert v2 == {100: "semdup_index", 101: "semdup_index"}
-    # index missing the cell column is rejected
-    import pytest
-    with pytest.raises(ValueError, match="index lacks"):
-        incremental_semantic_dedup(batch, corpus, "vec_id", "embedding",
-                                   centroids, dim)
 
 
 # A minhash fixture that reaches every drop reason: 10 repeats an index

@@ -10,7 +10,7 @@ from serverless_data_pipeline_spark.functions.text import (
     fingerprint, token_count, tokens, word_shingles,
 )
 from serverless_data_pipeline_spark.operators.text import (
-    fingerprint_documents, language_id, quality_features, token_stats,
+    language_id, quality_features, token_stats,
 )
 
 
@@ -65,15 +65,6 @@ def test_token_stats_counts(spark):
     assert got["en"].total_tokens == 5
     assert got["en"].vocab == 3
     assert got["fr"].total_tokens == 2
-
-
-def test_fingerprint_documents_dup_groups(spark):
-    df = spark.createDataFrame(
-        [(1, "same text"), (2, "Same   TEXT"), (3, "different")],
-        "doc_id long, text string")
-    got = {r.doc_id: r.dup_count for r in
-           fingerprint_documents(df).collect()}
-    assert got == {1: 2, 2: 2, 3: 1}
 
 
 def test_repetition_signals_known_ratios(spark):
@@ -369,41 +360,6 @@ def test_gopher_rules_mean_word_len_and_empty(spark):
     assert out[1].g_mean_word_len == 1.0 and out[1].g_keep == 0
     assert out[2].g_n_words == 0 and out[2].g_keep == 0
     assert out[3].g_mean_word_len == 20.0 and out[3].g_keep == 0
-
-
-def test_train_quality_classifier_end_to_end(spark):
-    """Trained weights must drop into classifier_quality_score and
-    separate held-out good/bad docs — the train -> freeze -> score
-    loop."""
-    from serverless_data_pipeline_spark.operators.text import (
-        classifier_quality_score, train_quality_classifier,
-    )
-    good_vocab = ("the quick brown fox jumps over lazy dog sunny "
-                  "morning garden fresh coffee").split()
-    bad_vocab = ("zxq qqzz xjv vvx zzk kqx jxx qvq zqz xkx "
-                 "kkj jzx").split()
-
-    def doc(vocab, seed, n=12):
-        return " ".join(vocab[(seed * 7 + i * 3) % len(vocab)]
-                        for i in range(n))
-
-    rows = ([(doc(good_vocab, s), 1) for s in range(30)]
-            + [(doc(bad_vocab, s), 0) for s in range(30)])
-    train = spark.createDataFrame(rows, "text string, label int")
-    w, b = train_quality_classifier(train, "text", "label",
-                                    n_buckets=128, max_iter=40)
-    assert len(w) == 128 and any(x != 0 for x in w)
-
-    held = spark.createDataFrame(
-        [(i, doc(good_vocab, 100 + i)) for i in range(8)]
-        + [(100 + i, doc(bad_vocab, 100 + i)) for i in range(8)],
-        "doc_id long, text string")
-    scored = {r.doc_id: r.q_prob for r in classifier_quality_score(
-        held, "doc_id", "text", weights=w, bias=b).collect()}
-    good_scores = [scored[i] for i in range(8)]
-    bad_scores = [scored[100 + i] for i in range(8)]
-    assert min(good_scores) > max(bad_scores)
-    assert min(good_scores) > 0.7 and max(bad_scores) < 0.3
 
 
 def test_dsir_select_prefers_target_like_docs(spark):

@@ -11,8 +11,7 @@ from serverless_data_pipeline_spark.config import EngineConfig
 from serverless_data_pipeline_spark.operators.stages import chunked_transform
 from serverless_data_pipeline_spark.sources.readers import read_stream_files
 from serverless_data_pipeline_spark.sources.writers import (
-    apply_retention, compact_table, merge_upsert, overwrite_partitions,
-    with_partition_columns, write_clustered, write_partitioned_parquet,
+    compact_table, merge_upsert, write_clustered, write_partitioned_parquet,
 )
 from serverless_data_pipeline_spark.streaming.sinks import (
     start_partitioned_stream,
@@ -42,30 +41,6 @@ def test_partitioned_sink_layout_and_compression(spark, tmp_path):
     assert pruned.count() == 1
 
 
-def test_overwrite_partitions_is_idempotent_replay(spark, tmp_path):
-    path = str(tmp_path / "out")
-    write_partitioned_parquet(_frame(spark), path)
-    # Replay ONLY the 2026 hour with corrected values, twice (re-delivery).
-    fixed = spark.createDataFrame([(2, TS_NEW, 99.0), (3, TS_NEW, 98.0)],
-                                  "id long, ts timestamp, v double")
-    overwrite_partitions(fixed, path)
-    overwrite_partitions(fixed, path)  # idempotent: no duplicates
-    back = spark.read.parquet(path)
-    # untouched 2023 partition survives; replayed hour fully replaced
-    assert back.filter("year = 2023").count() == 1
-    got = {r.id: r.v for r in back.filter("year = 2026").collect()}
-    assert got == {2: 99.0, 3: 98.0}
-    assert back.count() == 3
-
-
-def test_retention_reports_old_partitions(spark, tmp_path):
-    path = str(tmp_path / "out")
-    write_partitioned_parquet(_frame(spark), path)
-    # TS_OLD (2023) is > 365 days old relative to today; TS_NEW is not
-    assert apply_retention(spark, path, max_age_days=365) == 1
-    assert apply_retention(spark, path, max_age_days=100_000) == 0
-
-
 def test_chunked_transform_tags_and_applies(spark):
     df = spark.createDataFrame([(i,) for i in range(12)], "id long")
     out = chunked_transform(df, lambda d: d.withColumn("twice", F.col("id") * 2),
@@ -73,28 +48,6 @@ def test_chunked_transform_tags_and_applies(spark):
     rows = out.collect()
     assert all(0 <= r.chunk_id < 3 for r in rows)
     assert all(r.twice == r.id * 2 for r in rows)
-
-
-def test_bucketed_join_elides_shuffle(spark, tmp_path):
-    """Two tables bucketed on the join key with equal bucket counts must
-    join with ZERO exchanges — the co-located-join contract."""
-    from serverless_data_pipeline_spark.sources.writers import (
-        write_bucketed_table,
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        facts = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-        dims = spark.range(0, 100).withColumn("label", F.concat(F.lit("d"), "id"))
-        write_bucketed_table(facts, "b_facts", ["id"], n_buckets=8)
-        write_bucketed_table(dims, "b_dims", ["id"], n_buckets=8)
-        joined = spark.table("b_facts").join(spark.table("b_dims"), "id")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 100
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS b_facts")
-        spark.sql("DROP TABLE IF EXISTS b_dims")
 
 
 def test_clustered_write_files_cover_disjoint_ranges(spark, tmp_path):
