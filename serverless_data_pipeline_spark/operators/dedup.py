@@ -92,11 +92,22 @@ def _ceil_mul(col, num: int, den: int):
 
 # ---------------------------------------------------------------- MinHash
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """LSH cuts a signature into ``bands`` equal bands: ``bands`` must
+    divide ``num_hashes`` (a remainder would go unbanded, and more bands
+    than hashes would give empty bands every doc shares)."""
+    if num_hashes < 1 or bands < 1 or num_hashes % bands:
+        raise ValueError(f"bands={bands} must divide num_hashes="
+                         f"{num_hashes} into equal, non-empty bands")
+
+
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 32, shingle_n: int = 3) -> DataFrame:
-    """Per-document MinHash signature: shingle -> num_hashes seeded
-    xxhash64 values -> column-wise min. One explode + one groupBy(id):
-    linear in total shingle count, never pairwise.
+    """Per-document MinHash signature (``id_col``, ``sig``): shingle ->
+    num_hashes seeded xxhash64 values -> column-wise min, packed into
+    one ``binary`` of 2 x num_hashes bytes (see ``_minhash_sig``). One
+    explode + one groupBy(id): linear in total shingle count, never
+    pairwise.
 
     The variable-length shingle string is hashed ONCE to a long; the
     num_hashes family then re-hashes that fixed 8-byte value with the
@@ -106,16 +117,23 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     shingled = (_shingled(df, id_col, text_col, shingle_n)
                 .select(F.col(id_col), F.xxhash64("__sh").alias("__h0")))
     return shingled.groupBy(id_col).agg(
-        *[m.alias(f"mh_{i}")
-          for i, m in enumerate(_minhash_mins("__h0", num_hashes))])
+        _minhash_sig("__h0", num_hashes).alias("sig"))
 
 
-def _minhash_mins(h0_col: str, num_hashes: int) -> list:
-    """The ``num_hashes`` MinHash aggregates over a column of base
-    shingle hashes: seed i re-hashes the 8-byte base hash, the group min
-    is signature element i."""
-    return [F.min(F.xxhash64(F.col(h0_col), F.lit(i)))
-            for i in range(num_hashes)]
+def _minhash_sig(h0_col: str, num_hashes: int):
+    """The packed MinHash signature aggregate over a column of base
+    shingle hashes: seed i re-hashes the 8-byte base hash, and bytes
+    2i..2i+1 of the ``binary`` result hold the LOW 16 bits of the group
+    min, big-endian (b-bit minwise hashing, Li & Koenig, WWW 2010). The
+    low bits, because the high bits of a signed 64-bit minimum are
+    biased toward Long.MIN_VALUE. Two unequal minima agree by accident
+    with probability 2^-16 per position; equal minima always agree, so
+    a pair's matching-position count (its Jaccard estimate) never falls
+    below the 64-bit signatures' count."""
+    return F.unhex(F.concat(*[
+        F.lpad(F.hex(F.min(F.xxhash64(F.col(h0_col), F.lit(i)))
+                     .bitwiseAND(F.lit(0xFFFF))), 4, "0")
+        for i in range(num_hashes)]))
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
@@ -124,56 +142,65 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                       jaccard_threshold: float = 0.5,
                       materialize_signatures: bool = False) -> DataFrame:
     """X2 — MinHash+LSH near-dup pairs. Band the signature (bands ×
-    rows_per_band), bucket-join on (band_id, band_signature), then verify
+    rows_per_band), bucket-join on (band_id, band bytes), then verify
     candidates with the estimated Jaccard (matching minhash fraction).
+    ``bands`` must divide ``num_hashes`` (``ValueError`` otherwise).
+
+    Signatures are 16-bit b-bit MinHash (``_minhash_sig``): 2 x
+    num_hashes bytes per doc (64 B at the default 32 hashes) instead of
+    num_hashes longs, so every banded row carries a 4x narrower ``sig``
+    through the candidate shuffle. The change is one-sided: every pair
+    the 64-bit minima would find is still found, with a ``jaccard_est``
+    that is never lower; a pair gains at most an accidental 2^-16 match
+    per position.
 
     Returns (id_a, id_b, jaccard_est) with id_a < id_b. Cost: shingling
     scan + one self-join restricted to identical band buckets — the
     textbook sub-quadratic dedup used on web-scale corpora."""
+    _check_bands(num_hashes, bands)
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    sig_arr = sig.select(
-        F.col(id_col).alias("__id"),
-        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"))
     if materialize_signatures:
-        # Checkpoint the COMPACT per-doc signature (num_hashes longs/doc)
-        # so both join sides read it instead of re-running the shingle
-        # scan. Measured sf0.1 plain-docs scan: cold 5.7s -> 2.7s, warm
-        # 2.0 -> 1.7. This is the right level — the r2 measurement that
-        # read 2.5x SLOWER materialized the BANDED frame (x bands rows,
-        # sig array carried per row), paying the width it saved.
-        sig_arr = sig_arr.localCheckpoint(eager=True)
+        # Checkpoint the COMPACT per-doc signature (2 x num_hashes
+        # bytes/doc) so both join sides read it instead of re-running
+        # the shingle scan. Measured sf0.1 plain-docs scan: cold 5.7s ->
+        # 2.7s, warm 2.0 -> 1.7. This is the right level — the r2
+        # measurement that read 2.5x SLOWER materialized the BANDED
+        # frame (x bands rows, sig carried per row), paying the width it
+        # saved.
+        sig = sig.localCheckpoint(eager=True)
     # Self-join note: without materialize_signatures the signature
     # pipeline is computed once per join side (Catalyst does not
     # canonicalize the two aliased sides into a ReusedExchange). The
     # materialization LEVEL decides the winner: checkpointing the wide
     # BANDED frame measured 2.5x SLOWER than recompute (86s vs 33s at
-    # sf0.1 — sig array carried on x bands rows), while checkpointing the
+    # sf0.1 — sig carried on x bands rows), while checkpointing the
     # compact signature frame above measured ~2x FASTER cold. At cluster
     # scale, signatures reused across many queries belong in a persisted
     # parquet index (operators/incremental.corpus_index) instead.
-    return _banded_pairs(sig_arr, None, num_hashes, bands, jaccard_threshold)
+    return _banded_pairs(sig, None, num_hashes, bands, jaccard_threshold)
 
 
 def _banded_pairs(a: DataFrame, b: DataFrame | None, num_hashes: int,
                   bands: int, threshold: float) -> DataFrame:
     """The banded-LSH join over STORED signatures: ``a`` and ``b`` are
-    (id, sig array<long> of ``num_hashes``) frames, id first. Each
-    signature is cut into ``bands`` bands of num_hashes // bands rows;
-    docs sharing a (band, xxhash64 of the band) bucket are candidates,
-    verified by the estimated Jaccard (matching-minhash fraction).
+    (id, sig) frames, id first, ``sig`` a packed ``_minhash_sig`` of
+    ``num_hashes`` 16-bit values. Each signature is cut into ``bands``
+    byte slices of num_hashes // bands values; docs sharing a (band,
+    slice) bucket are candidates — the slice is the key, nothing is
+    re-hashed — verified by the estimated Jaccard (the fraction of equal
+    2-byte values).
 
     Returns (id_a, id_b, jaccard_est >= ``threshold``), id_a from ``a``
     and id_b from ``b``; ``b=None`` pairs ``a`` with itself, id_a < id_b.
     A NULL sig (a doc with no shingles) is never banded. The one banding
     scheme of ``minhash_lsh_pairs`` and the incremental index probe."""
-    rows_per_band = num_hashes // bands
+    width = 2 * (num_hashes // bands)
 
     def banded(sigs: DataFrame) -> DataFrame:
-        bks = [F.struct(
-            F.lit(band).alias("band"),
-            F.xxhash64(*[F.element_at("sig", band * rows_per_band + i + 1)
-                         for i in range(rows_per_band)]).alias("bsig"))
-            for band in range(bands)]
+        bks = [F.struct(F.lit(band).alias("band"),
+                        F.substring("sig", band * width + 1, width)
+                        .alias("bsig"))
+               for band in range(bands)]
         return (sigs.filter(F.col("sig").isNotNull())
                 .select(F.col(sigs.columns[0]).alias("__id"), "sig",
                         F.explode(F.array(*bks)).alias("bk"))
@@ -189,9 +216,10 @@ def _banded_pairs(a: DataFrame, b: DataFrame | None, num_hashes: int,
                     F.col("b.sig").alias("sig_b")))
     if b is None:
         cand = cand.filter(F.col("id_a") < F.col("id_b"))
-    est = F.size(F.filter(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        lambda v: v == 1)).cast("double") / F.lit(float(num_hashes))
+    est = F.expr(
+        f"size(filter(sequence(1, {2 * num_hashes - 1}, 2), "
+        f"i -> substring(sig_a, i, 2) = substring(sig_b, i, 2)))"
+    ).cast("double") / F.lit(float(num_hashes))
     return (cand.dropDuplicates(["id_a", "id_b"])
             .withColumn("jaccard_est", est)
             .filter(F.col("jaccard_est") >= threshold)
@@ -743,6 +771,10 @@ def _components_star(p: DataFrame, *, max_iter: int = 15) -> DataFrame:
     # fixed-point count gate; the previous round's count is remembered
     # instead of re-counted. 4 driver jobs per round -> 2 (+ the exact
     # set-diff probe only when the counts agree, as before).
+    # Each round's leaves are released once its successor is
+    # materialized (as label propagation does): the returned frame reads
+    # only the input leaf ``p`` (the nodes) and the last round's edges.
+    start = edges
     n_edges = edges.count()
     converged = n_edges == 0
     for _ in range(max_iter):
@@ -767,6 +799,9 @@ def _components_star(p: DataFrame, *, max_iter: int = 15) -> DataFrame:
         n_new = new.count()  # materialize + fixed-point count gate
         if n_new == n_edges:
             converged = (new.exceptAll(edges).limit(1).count() == 0)
+        release_checkpoint(large)
+        if edges is not start:
+            release_checkpoint(edges)
         edges, n_edges = new, n_new
     if not converged:
         import warnings

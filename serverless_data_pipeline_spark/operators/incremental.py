@@ -26,15 +26,17 @@ the documented, deliberate divergence every incremental dedup shares
 (the alternative IS the full rescan this operator exists to avoid).
 
 Scale shape per stage (batch B << corpus C):
-- exact probe: equi-join on the 32-byte fingerprint — only the index's
-  fp COLUMN moves, never corpus text; with a small batch, broadcastable.
+- exact probe: equi-join on the 16-byte binary fingerprint (the md5's
+  raw bytes) — only the index's fp COLUMN moves, never corpus text; with
+  a small batch, broadcastable.
 - features: ONE pass over the exact survivors' text (shingle explode +
-  groupBy(id, fp)) computes the signal the probe reads (``sig``:
-  num_hashes longs/doc; or ``shset``/``sz``) into a compact (id, fp,
-  signal) checkpoint. Every later stage — the index probe, the
-  within-batch pairs and the commit's index rows — reads that leaf; no
-  stage re-shingles the batch (the within-batch exact-Jaccard pairs of
-  ``probe="exact"`` excepted, which shingle the survivors once more).
+  groupBy(id, fp)) computes the signal the probe reads (``sig``: a
+  packed 16-bit MinHash, 2 x num_hashes bytes/doc; or ``shset``/``sz``)
+  into a compact (id, fp, signal) checkpoint. Every later stage — the
+  index probe, the within-batch pairs and the commit's index rows —
+  reads that leaf; no stage re-shingles the batch (the within-batch
+  exact-Jaccard pairs of ``probe="exact"`` excepted, which shingle the
+  survivors once more).
 - near-dup probe: banded MinHash bucket join of the batch signatures
   against the signatures read from the index (the same banding helper
   as the within-batch pairs), or an inverted join on stored shingle
@@ -44,8 +46,14 @@ Scale shape per stage (batch B << corpus C):
   signatures, or exact-Jaccard pairs) + connected components over B.
 - commit: one broadcast anti-join merge (merge_upsert) + an APPEND of
   |survivors| index rows holding exactly the signals the index stores
-  (by default the one its probe reads: an index is |C| x (16 + 8 x
-  num_hashes) bytes plus parquet overhead for ``probe="minhash"``).
+  (by default the one its probe reads: for ``probe="minhash"`` an index
+  row is an 8-byte id, a 16-byte fp and a 2 x num_hashes-byte sig —
+  |C| x 88 bytes at 32 hashes, ~95 B/doc as snappy parquet).
+
+An index written before fp and sig were packed (a string ``fp``, an
+``array<long>`` ``sig``) is refused with a ``ValueError`` by
+``incremental_dedup`` and ``commit_batch``: rebuild it with
+``corpus_index``.
 """
 
 from __future__ import annotations
@@ -53,6 +61,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BinaryType, StructType
 
 from serverless_data_pipeline_spark.functions.text import (
     fingerprint, shingles_from_tokens,
@@ -60,8 +69,8 @@ from serverless_data_pipeline_spark.functions.text import (
 # minhash_lsh_pairs is re-exported: perfbench/layers.py times it under
 # this module's name.
 from serverless_data_pipeline_spark.operators.dedup import (  # noqa: F401
-    _banded_pairs, _minhash_mins, _tokens_of, minhash_lsh_pairs,
-    neardup_components, ngram_jaccard_pairs,
+    _banded_pairs, _check_bands, _minhash_sig, _tokens_of,
+    minhash_lsh_pairs, neardup_components, ngram_jaccard_pairs,
 )
 from serverless_data_pipeline_spark.operators.util import (
     hadoop_fs, release_checkpoint, spread_small_input as _spread,
@@ -97,6 +106,26 @@ def _signal_cols(store: tuple[str, ...]) -> list[str]:
             for c in cols]
 
 
+def _fp(text_col: str):
+    """The index fingerprint: the 16 raw bytes of ``fingerprint``'s md5."""
+    return F.unhex(fingerprint(text_col))
+
+
+def _check_packed(schema: StructType) -> None:
+    """Refuse an index whose ``fp`` or ``sig`` is not ``binary``: one
+    written before they were packed. Its string ``fp`` would silently
+    match no batch fingerprint (the join casts the string side to
+    binary), so every ``exact_index`` duplicate would slip through."""
+    for col in ("fp", "sig"):
+        if (col in schema.fieldNames()
+                and not isinstance(schema[col].dataType, BinaryType)):
+            raise ValueError(
+                f"index column {col!r} is "
+                f"{schema[col].dataType.simpleString()}, not binary: the "
+                f"index predates packed signatures; rebuild with "
+                f"corpus_index")
+
+
 def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
               store: tuple[str, ...], shingle_n: int,
               num_hashes: int) -> DataFrame:
@@ -122,8 +151,8 @@ def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
                                         F.xxhash64("__sh")).alias("__h0"))
     aggs = []
     if "minhash" in store:
-        aggs.append(F.when(F.count("__h0") > 0, F.array(
-            *_minhash_mins("__h0", num_hashes))).alias("sig"))
+        aggs.append(F.when(F.count("__h0") > 0,
+                           _minhash_sig("__h0", num_hashes)).alias("sig"))
     if "shingles" in store:
         shset = F.sort_array(F.collect_set("__h0"))
         aggs += [shset.alias("shset"), F.size(shset).alias("sz")]
@@ -139,11 +168,16 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
     document with every signal the incremental probe needs, so the probe
     NEVER touches corpus text again.
 
-    Columns: ``id_col``, ``fp`` (md5 of case/whitespace-normalized text —
-    the X1 exact-dup fingerprint), and per ``store`` member:
-    - ``"minhash"``: ``sig`` array<long> of ``num_hashes`` MinHash values
-      over word ``shingle_n``-grams — the 100 TB probe signal
-      (``num_hashes * 8`` bytes/doc regardless of document size).
+    Columns: ``id_col``, ``fp`` (the 16-byte binary md5 of
+    case/whitespace-normalized text — the X1 exact-dup fingerprint), and
+    per ``store`` member:
+    - ``"minhash"``: ``sig``, ``num_hashes`` 16-bit MinHash values over
+      word ``shingle_n``-grams packed into one ``binary`` (see
+      ``operators.dedup._minhash_sig``) — the 100 TB probe signal,
+      ``2 * num_hashes`` bytes/doc regardless of document size. With
+      the 8-byte id that is 88 B/doc at 32 hashes (~95 B/doc written as
+      snappy parquet; a hex ``fp`` and ``array<long>`` ``sig`` measured
+      297 B/doc).
     - ``"shingles"``: ``shset`` (sorted distinct xxhash64 shingle hashes)
       + ``sz`` — supports EXACT-Jaccard probing; ~8 bytes per distinct
       shingle, i.e. comparable to the compressed text itself. Store it
@@ -155,7 +189,9 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
     new batch appends its survivors' rows (``commit_batch``), never
     rewrites existing ones."""
     store = _checked_store(store)
-    return (_features(df.withColumn("__fp", fingerprint(text_col)),
+    if "minhash" in store and num_hashes < 1:
+        raise ValueError(f"num_hashes={num_hashes} must be >= 1")
+    return (_features(df.withColumn("__fp", _fp(text_col)),
                       id_col, "__fp", text_col, store, shingle_n,
                       num_hashes)
             .select(id_col, "fp", *_signal_cols(store)))
@@ -228,7 +264,10 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
     wb_exact = within_batch in ("full", "exact")
     wb_neardup = within_batch == "full"
     signal = _probe_signal(probe)
+    if probe == "minhash":
+        _check_bands(num_hashes, bands)
     if index is not None:
+        _check_packed(index.schema)
         missing = {"fp"} - set(index.columns)
         if threshold is not None:
             missing |= set(_signal_cols(signal)) - set(index.columns)
@@ -236,7 +275,7 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
             raise ValueError(
                 f"index lacks columns {sorted(missing)} for probe="
                 f"{probe!r} — rebuild with corpus_index(store=...)")
-    cur = batch.withColumn("__fp", fingerprint(text_col))
+    cur = batch.withColumn("__fp", _fp(text_col))
     dropped: list[DataFrame] = []
     features = None
     leaves: list[DataFrame] = []
@@ -351,6 +390,11 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
     ``"none"`` (probe-only, for a batch already deduped upstream).
     Booleans alias "full"/"none" for compatibility.
 
+    ``probe="minhash"`` needs ``bands`` to divide ``num_hashes``, and an
+    index that predates packed signatures (a string ``fp``, an
+    ``array<long>`` ``sig``) is refused: both raise ``ValueError`` at
+    the call, before any job runs.
+
     When a near-dup stage runs, the exact survivors and their probe
     signal are computed once into a checkpoint that stages 3-4 read, and
     the stage-3 hits are checkpointed too. The survivors are exactly the
@@ -401,12 +445,15 @@ def bootstrap_corpus(spark, batch: DataFrame, corpus_path: str,
 
 
 def _stored_signals(spark, index_path: str) -> tuple[str, ...] | None:
-    """The signals the index at ``index_path`` holds (None: no index)."""
+    """The signals the index at ``index_path`` holds (None: no index);
+    raises on an index that predates packed signatures."""
     fs, jpath = hadoop_fs(spark, index_path)
     if not fs.exists(jpath):
         return None
-    cols = set(spark.read.parquet(index_path).columns)
-    return tuple(s for s, c in _SIGNAL_COLS.items() if c[0] in cols)
+    schema = spark.read.parquet(index_path).schema
+    _check_packed(schema)
+    return tuple(s for s, c in _SIGNAL_COLS.items()
+                 if c[0] in schema.fieldNames())
 
 
 def commit_batch(spark, verdicts: DataFrame, corpus_path: str,
@@ -423,7 +470,9 @@ def commit_batch(spark, verdicts: DataFrame, corpus_path: str,
     holds: ``store=None`` reads them from the index's columns (an index
     built with the old two-signal default keeps getting both), and an
     explicit ``store`` that disagrees raises ``ValueError`` before
-    anything is written — one index directory never mixes two schemas.
+    anything is written — one index directory never mixes two schemas;
+    so does an index that predates packed signatures (a string ``fp``
+    or ``array<long>`` ``sig``; rebuild it with ``corpus_index``).
     With no index at ``index_path`` yet, ``store=None`` stores both
     signals. Given ``incremental_dedup``'s own frame, the rows come from
     its feature checkpoint; any other frame is shingled from its text."""

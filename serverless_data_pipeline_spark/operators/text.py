@@ -31,21 +31,17 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     CJK codepoints short-circuit to 'zh', no hits -> 'und'. Ties break by
     language code order (deterministic). Adds `predicted_lang`.
 
-    r14 (optimization round, guide §2.3/§4.2): tokenize ONCE. The
-    single-expression form inlined `tokens(lower(text))` into every
-    marker score, and the argmax when-chain fold doubles each score
-    subtree per language — the planned projection carried ~46
-    structurally-distinct copies of the split+filter (each `tokens()`
-    call mints fresh lambda-variable ids, so not even runtime
-    common-subexpression elimination can merge them). Materializing the
-    token array and then the four scores in nested Projects leaves ONE
-    split per row; the when-chain then folds over cheap attribute
-    references. Same scores, same tie-break, same output column."""
+    Tokenize ONCE, in ONE expression: the token array is bound through
+    a one-element ``transform`` (a lambda variable, not a column), and
+    the argmax is ``array_max`` over (score, -rank, lang) structs — the
+    highest score, then the first language in sorted order. Inlined
+    where a ``predicted_lang`` filter is pushed down, the expression
+    carries one split; the former nested Projects with a when-chain
+    argmax doubled the score references per language, and filter
+    pushdown inlined every copy (41 ``split(`` in
+    ``language_id(df).filter(predicted_lang.isin("en"))``'s optimized
+    plan, 2 now). Same scores, same tie-break, same NULL handling."""
     df = spread_small_input(df)
-    langs = sorted(LANG_MARKERS)
-    score_of = {lang: f"__lid_{lang}" for lang in langs}
-    toked = df.select(
-        "*", tokens(F.lower(F.col(text_col))).alias("__lid_toks"))
 
     # arity-1 closure per language: a 2-arg lambda (`lambda t, _l=lang`)
     # would make F.filter pass the ELEMENT INDEX as the second argument
@@ -53,24 +49,22 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     def _is_marker(lang: str):
         return lambda t: t.isin(*LANG_MARKERS[lang])
 
-    scored = toked.select("*", *[
-        F.size(F.filter(F.col("__lid_toks"), _is_marker(lang)))
-        .alias(score_of[lang]) for lang in langs])
-    best = None
-    best_score = None
-    for lang in langs:
-        s = F.col(score_of[lang])
-        if best is None:
-            best, best_score = F.lit(lang), s
-        else:
-            cond = s > best_score
-            best = F.when(cond, F.lit(lang)).otherwise(best)
-            best_score = F.when(cond, s).otherwise(best_score)
+    def _best(toks: Column) -> Column:
+        return F.array_max(F.array(*[
+            F.struct(F.size(F.filter(toks, _is_marker(lang))).alias("s"),
+                     F.lit(-rank).alias("r"), F.lit(lang).alias("lang"))
+            for rank, lang in enumerate(sorted(LANG_MARKERS))]))
+
+    def _one(arr: Column, fn) -> Column:
+        return F.element_at(F.transform(arr, fn), 1)
+
+    lang = _one(F.array(tokens(F.lower(F.col(text_col)))),
+                lambda t: _one(F.array(_best(t)),
+                               lambda b: F.when(b["s"] > 0, b["lang"])
+                               .otherwise(F.lit("und"))))
     pred = (F.when(F.col(text_col).rlike(r"[一-鿿]"), F.lit("zh"))
-             .when(best_score > 0, best)
-             .otherwise(F.lit("und")))
-    return (scored.withColumn("predicted_lang", pred)
-            .drop("__lid_toks", *score_of.values()))
+            .otherwise(lang))
+    return df.withColumn("predicted_lang", pred)
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:

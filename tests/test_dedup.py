@@ -32,6 +32,66 @@ def test_minhash_finds_planted_pair(spark):
     assert (1, 3) not in got and (2, 3) not in got
 
 
+def _sig64(df, num_hashes=32):
+    """doc_id -> the 64-bit MinHash minima the packed signature keeps the
+    low 16 bits of (same shingles, same seeded re-hash)."""
+    from serverless_data_pipeline_spark.operators.dedup import _shingled
+
+    h0 = (_shingled(df, "doc_id", "text", 3)
+          .select("doc_id", F.xxhash64("__sh").alias("h0")))
+    rows = h0.groupBy("doc_id").agg(*[
+        F.min(F.xxhash64("h0", F.lit(i))).alias(f"m{i}")
+        for i in range(num_hashes)]).collect()
+    return {r.doc_id: [r[f"m{i}"] for i in range(num_hashes)] for r in rows}
+
+
+def _pairs64(sigs, bands, threshold):
+    """The banded pairs of 64-bit signatures: a shared band of equal
+    minima makes a candidate, verified by the fraction of equal minima."""
+    out = {}
+    for a in sigs:
+        for b in sigs:
+            x, y = sigs[a], sigs[b]
+            r = len(x) // bands
+            if a < b and any(x[k * r:(k + 1) * r] == y[k * r:(k + 1) * r]
+                             for k in range(bands)):
+                est = sum(u == v for u, v in zip(x, y)) / len(x)
+                if est >= threshold:
+                    out[(a, b)] = est
+    return out
+
+
+def test_packed_minhash_is_one_sided(spark):
+    """The signature packs the low 16 bits of each 64-bit minimum, and
+    every pair the 64-bit signatures find is found from the packed ones
+    with a jaccard_est that is never lower."""
+    from serverless_data_pipeline_spark.operators.dedup import (
+        minhash_signatures,
+    )
+
+    df = spark.createDataFrame(
+        [(1, BASE), (2, NEAR), (3, OTHER), (4, "tiny"),
+         (5, "spark sql engine"),
+         (6, BASE.replace("green", "brown").replace("sun", "moon")),
+         (7, OTHER.replace("engines", "systems")),
+         (8, OTHER + " and more shuffle partitions"),
+         (9, " ".join(BASE.split()[:12]))],
+        "doc_id long, text string")
+    sigs = _sig64(df)
+    packed = {r.doc_id: bytes(r.sig) for r in
+              minhash_signatures(df, "doc_id", "text").collect()}
+    assert packed == {d: b"".join((m & 0xFFFF).to_bytes(2, "big")
+                                  for m in mins)
+                      for d, mins in sigs.items()}
+    for threshold in (0.3, 0.5):
+        want = _pairs64(sigs, 8, threshold)
+        got = {(r.id_a, r.id_b): r.jaccard_est for r in minhash_lsh_pairs(
+            df, "doc_id", "text", jaccard_threshold=threshold).collect()}
+        assert len(want) >= 3
+        assert set(want) <= set(got)
+        assert all(got[p] >= est for p, est in want.items())
+
+
 def test_ngram_jaccard_large_doc_high_precision_threshold(spark):
     """Regression: sz*num in the pruning bounds was computed in the
     size() column's 32-bit int — a threshold with a large rational
@@ -206,6 +266,30 @@ def test_star_components_high_diameter_chain(spark):
     out = neardup_components(pairs, algorithm="star", max_iter=10).collect()
     assert {r.component_id for r in out} == {1}
     assert len(out) == 40
+
+
+def test_star_components_release_superseded_rounds(spark):
+    """Star contraction frees each round's checkpoints once the next
+    round is materialized: everything it leaves persisted is a leaf of
+    the returned frame (released with it)."""
+    from serverless_data_pipeline_spark.operators.dedup import (
+        neardup_components,
+    )
+    from serverless_data_pipeline_spark.operators.util import (
+        release_checkpoint,
+    )
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 40)], "id_a long, id_b long")
+    before = persisted()
+    out = neardup_components(pairs, algorithm="star", max_iter=10)
+    assert {r.component_id for r in out.collect()} == {1}
+    assert len(persisted() - before) == 2     # the edge leaf, last round
+    release_checkpoint(out)
+    assert persisted() - before == set()
 
 
 def test_auto_components_high_diameter_chain(spark):

@@ -305,7 +305,7 @@ def test_tick_shingles_each_survivor_once_and_probes_once(
         sigs.add(1)
         return s
 
-    read_sig = F.udf(sig_pass, "array<bigint>").asNondeterministic()
+    read_sig = F.udf(sig_pass, "binary").asNondeterministic()
     idx = spark.read.parquet(index_dir)
     idx = idx.withColumn("sig", read_sig("sig"))
 
@@ -416,3 +416,74 @@ def test_minhash_stream_stores_signatures_and_releases_its_checkpoints(
     v = {r.doc_id: r.drop_reason for r in
          spark.read.parquet(str(tmp_path / "verdicts")).collect()}
     assert {i: v[i] for i, _ in MH_BATCH} == MH_VERDICTS["index"]
+
+
+def test_index_stores_packed_fp_and_signature(spark):
+    """fp is the md5's 16 raw bytes and sig packs num_hashes 16-bit
+    values into 2 x num_hashes bytes; a doc with no shingles has a NULL
+    sig."""
+    from pyspark.sql.types import BinaryType
+
+    for num_hashes in (32, 16):
+        idx = corpus_index(_docs(spark, MH_INDEX + [(9, "")]),
+                           num_hashes=num_hashes, store=("minhash",))
+        assert isinstance(idx.schema["fp"].dataType, BinaryType)
+        assert isinstance(idx.schema["sig"].dataType, BinaryType)
+        got = {r.doc_id: (r.fp_len, r.sig_len) for r in idx.select(
+            "doc_id", F.length("fp").alias("fp_len"),
+            F.length("sig").alias("sig_len")).collect()}
+        assert got == {**{i: (16, 2 * num_hashes) for i, _ in MH_INDEX},
+                       9: (16, None)}
+
+
+@pytest.mark.parametrize("old", ["fp", "sig"])
+def test_old_format_index_raises_before_any_write(spark, tmp_path, old):
+    """An index written before fp and sig were packed (hex string fp,
+    array<long> sig) is refused by incremental_dedup and commit_batch
+    with a ValueError naming the column. Unchecked, the string fp would
+    join against the binary batch fingerprint and match nothing, so
+    every exact_index duplicate would survive."""
+    import glob
+
+    corpus_dir, index_dir = str(tmp_path / "c"), str(tmp_path / "i")
+    bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir, index_dir,
+                     probe="minhash")
+    b2 = _docs(spark, MH_BATCH)
+    verdicts = incremental_dedup(b2, spark.read.parquet(index_dir),
+                                 probe="minhash")
+    legacy = (F.hex("fp") if old == "fp"
+              else F.array(F.lit(0).cast("long")))
+    old_dir = str(tmp_path / "old")
+    (spark.read.parquet(index_dir).withColumn(old, legacy)
+     .write.parquet(old_dir))
+    msg = f"'{old}'.*rebuild with corpus_index"
+    with pytest.raises(ValueError, match=msg):
+        incremental_dedup(b2, spark.read.parquet(old_dir), probe="minhash")
+    files = sorted(glob.glob(str(tmp_path / "*" / "*")))
+    with pytest.raises(ValueError, match=msg):
+        commit_batch(spark, verdicts, corpus_dir, old_dir)
+    assert sorted(glob.glob(str(tmp_path / "*" / "*"))) == files
+
+
+def test_bands_must_divide_num_hashes(spark):
+    """A band count that does not split the signature evenly raises,
+    naming both numbers, before any job runs: 30 hashes in 8 bands would
+    leave 6 unbanded, and 8 bands of 4 hashes would be empty."""
+    from serverless_data_pipeline_spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    df = _docs(spark, MH_BATCH)
+    for num_hashes, bands in ((30, 8), (4, 8), (32, 0)):
+        msg = f"bands={bands}.*num_hashes={num_hashes}"
+        with pytest.raises(ValueError, match=msg):
+            minhash_lsh_pairs(df, "doc_id", "text", num_hashes=num_hashes,
+                              bands=bands)
+        with pytest.raises(ValueError, match=msg):
+            incremental_dedup(df, None, probe="minhash",
+                              num_hashes=num_hashes, bands=bands)
+    with pytest.raises(ValueError, match="num_hashes=0"):
+        corpus_index(df, num_hashes=0)
+    # 30 hashes split evenly into 5 bands of 6
+    assert incremental_dedup(df, None, probe="minhash", num_hashes=30,
+                             bands=5).count() == len(MH_BATCH)

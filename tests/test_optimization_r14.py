@@ -45,6 +45,18 @@ def test_language_id_single_split(spark):
     assert _count_splits(plan) == 1
 
 
+def test_language_id_filter_pushdown_single_split(spark):
+    """A pushed-down predicted_lang filter inlines the whole language-id
+    expression into the Filter: it must carry one tokenization, so the
+    optimized plan holds two splits (the Filter's and the Project's),
+    not one per copy of a per-language score."""
+    from serverless_data_pipeline_spark.operators.text import language_id
+
+    q = language_id(_docs(spark)).filter(F.col("predicted_lang").isin("en"))
+    assert _count_splits(_optimized(q)) == 2
+    assert [r.doc_id for r in q.collect()] == [1]
+
+
 def test_quality_features_two_splits(spark):
     from serverless_data_pipeline_spark.operators.text import (
         quality_features,
