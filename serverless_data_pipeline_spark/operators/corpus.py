@@ -29,7 +29,7 @@ __all__ = ["train_test_split", "leakage_safe_split", "vocabulary",
            "corpus_mix", "temperature_mix",
            "chunk_documents", "decontaminate", "contamination_report",
            "shingle_bloom", "bloom_decontaminate", "segment_dedup",
-           "passage_dedup", "passage_rank_choice", "global_shuffle",
+           "passage_dedup", "global_shuffle",
            "hex_prefix_long_sql", "token_budget_mix",
            "repeat_by_epochs"]
 
@@ -1621,60 +1621,10 @@ def segment_dedup(df: DataFrame, id_col: str, text_col: str,
                     F.size("__ks").alias("n_kept")))
 
 
-def _passage_windows(df: DataFrame, id_col: str, text_col: str,
-                     k: int, fingerprint: str):
-    """(toks, wins) for passage_dedup: the tokenized corpus and the
-    stride-1 k-token window fingerprint stream (fp, id, pos)."""
-    fp_templates = {
-        "md5": "md5(array_join(slice(__t, i, {k}), ' '))",
-        "xxhash64": "xxhash64(array_join(slice(__t, i, {k}), ' '))",
-    }
-    if fingerprint not in fp_templates:
-        raise ValueError(f"fingerprint must be one of "
-                         f"{sorted(fp_templates)}, got {fingerprint!r}")
-    fp_sql = fp_templates[fingerprint].format(k=k)
-    from serverless_data_pipeline_spark.operators.util import (
-        spread_small_input,
-    )
-    # r13: spread before the stride-1 window fingerprint stream — one
-    # md5 PER TOKEN is the row's heaviest map stage and a single-file
-    # corpus would otherwise compute it on one core.
-    toks = (spread_small_input(df)
-            .select(F.col(id_col), tokens(text_col).alias("__t"))
-            .filter(F.size("__t") > 0))
-    wins = (toks.filter(F.size("__t") >= k)
-            .select(F.col(id_col),
-                    F.posexplode(F.expr(
-                        f"transform(sequence(1, size(__t) - {k} + 1), "
-                        f"i -> {fp_sql})")).alias("__p0", "__fp")))
-    return toks, wins
-
-
-def passage_rank_choice(wins: DataFrame, hot_fp_threshold: int = 100_000,
-                        probe_fraction: float = 0.05) -> str:
-    """The rank_via="auto" decision, factored so tests can assert the
-    choice directly: estimate the max fingerprint multiplicity from a
-    `probe_fraction` row sample of the window stream and return
-    "minjoin" above `hot_fp_threshold`, else "window". The sample's
-    shuffle is `probe_fraction` of the stream and partial-aggregates
-    map-side, so the probe itself never concentrates a hot key; the
-    estimate max(sampled count)/fraction is upward-biased by design —
-    uncertainty resolves toward the skew-safe path. Correctness never
-    depends on the choice (all rank_via modes are equivalence-tested);
-    only task skew does."""
-    row = (wins.sample(fraction=probe_fraction, seed=42)
-           .groupBy("__fp").agg(F.count(F.lit(1)).alias("__c"))
-           .agg(F.max("__c").alias("m")).first())
-    est = (row["m"] or 0) / probe_fraction
-    return "minjoin" if est > hot_fp_threshold else "window"
-
-
 def passage_dedup(df: DataFrame, id_col: str, text_col: str,
                   k: int = 8,
                   fingerprint: str = "md5",
-                  rank_via: str = "auto",
-                  hot_fp_threshold: int = 100_000,
-                  probe_fraction: float = 0.05) -> DataFrame:
+                  rank_via: str = "window") -> DataFrame:
     """Exact repeated-passage removal at sliding-window grain — the
     ExactSubstr dedup of "Deduplicating Training Data Makes Language
     Models Better" (Lee et al., 2022) re-expressed as DataFrame ops.
@@ -1714,28 +1664,12 @@ def passage_dedup(df: DataFrame, id_col: str, text_col: str,
     chains — worst case an extra span removal, never corrupted text).
 
     `rank_via` picks the first-occurrence ranking (equivalence-tested;
-    all three produce identical output):
-    * "auto" (default, r6 — skew-safe by default, verdict #2): NOTE
-      this mode is EAGER — it runs a real Spark sampling job (and a
-      tokenize recompute) at CALL time to estimate skew, unlike
-      "window"/"minjoin" which only build a lazy plan; plan-composition
-      callers that must stay lazy should pass an explicit mode. The
-      probe estimates the max fingerprint multiplicity on a
-      `probe_fraction` sample of the window stream (one partial-agg job
-      whose SHUFFLE carries only the sample; the narrow tokenize
-      recompute is the probe's local cost)
-      and pick "minjoin" when the estimate (max sampled count /
-      probe_fraction) exceeds `hot_fp_threshold`, else "window". A
-      missed modest key only costs sort time, never correctness; a hot
-      key at the threshold (100k occurrences x 5% = 5k expected sample
-      hits) is detected with near-certainty. The estimator is
-      intentionally upward-biased (max of a sample scaled up) — on
-      uncertainty it prefers the skew-safe path.
-    * "window" — one row_number window over the fingerprint; single
-      pass over the window stream (A/B at sf0.1: 1.5-1.7 s vs 2.3-2.4 s
-      for minjoin, whose join-back recomputes the stream). The fast path
-      WHEN no fingerprint is pathologically hot: a window sort cannot
-      split one key across tasks.
+    both produce identical output, and the plan stays lazy either way):
+    * "window" (default) — one row_number window over the fingerprint;
+      single pass over the window stream (A/B at sf0.1: 1.5-1.7 s vs
+      2.3-2.4 s for minjoin, whose join-back recomputes the stream).
+      The fast path WHEN no fingerprint is pathologically hot: a window
+      sort cannot split one key across tasks.
     * "minjoin" — min-struct aggregation (map-side combinable) + an
       AQE-skew-splittable join-back. Use when one fingerprint is
       pathologically hot (boilerplate pasted into millions of docs):
@@ -1744,14 +1678,35 @@ def passage_dedup(df: DataFrame, id_col: str, text_col: str,
       (min-of-3: 14.3 s window vs 13.9 s minjoin at 2M docs) because 32
       local threads hide the straggler behind the rest of the stream —
       the lever is cluster wall-clock, where the one unsplittable sort
-      task defines the stage. segment_dedup needs no such switch — its
-      kept set IS the aggregation result, no join-back, so min-struct is
-      both the fast and the skew-safe path there.
+      task defines the stage. There is no sampled "auto" choice: its
+      probe cost a 3-job sampling execution per call (0.4-0.6 s of a
+      corpus day) to pick between arms that measure the same locally.
+      segment_dedup needs no such switch — its kept set IS the
+      aggregation result, no join-back, so min-struct is both the fast
+      and the skew-safe path there.
     """
-    toks, wins = _passage_windows(df, id_col, text_col, k, fingerprint)
-    if rank_via == "auto":
-        rank_via = passage_rank_choice(wins, hot_fp_threshold,
-                                       probe_fraction)
+    fp_templates = {
+        "md5": "md5(array_join(slice(__t, i, {k}), ' '))",
+        "xxhash64": "xxhash64(array_join(slice(__t, i, {k}), ' '))",
+    }
+    if fingerprint not in fp_templates:
+        raise ValueError(f"fingerprint must be one of "
+                         f"{sorted(fp_templates)}, got {fingerprint!r}")
+    fp_sql = fp_templates[fingerprint].format(k=k)
+    from serverless_data_pipeline_spark.operators.util import (
+        spread_small_input,
+    )
+    # r13: spread before the stride-1 window fingerprint stream — one
+    # md5 PER TOKEN is the row's heaviest map stage and a single-file
+    # corpus would otherwise compute it on one core.
+    toks = (spread_small_input(df)
+            .select(F.col(id_col), tokens(text_col).alias("__t"))
+            .filter(F.size("__t") > 0))
+    wins = (toks.filter(F.size("__t") >= k)
+            .select(F.col(id_col),
+                    F.posexplode(F.expr(
+                        f"transform(sequence(1, size(__t) - {k} + 1), "
+                        f"i -> {fp_sql})")).alias("__p0", "__fp")))
     if rank_via == "window":
         # rn >= 2 implies the fingerprint group has >= 2 members.
         w = Window.partitionBy("__fp").orderBy(id_col, "__p0")
@@ -1772,8 +1727,8 @@ def passage_dedup(df: DataFrame, id_col: str, text_col: str,
                    .filter(~((F.col(id_col) == F.col(f"__f.{id_col}"))
                              & (F.col("__p0") == F.col("__f.__p0")))))
     else:
-        raise ValueError(f"rank_via must be 'auto', 'window' or "
-                         f"'minjoin', got {rank_via!r}")
+        raise ValueError(f"rank_via must be 'window' or 'minjoin', "
+                         f"got {rank_via!r}")
     # Per-doc set of covered token positions (1-based start = __p0+1
     # covers start .. start+k-1); collect_set dedups overlapping windows.
     removed = (flagged.select(F.col(id_col),

@@ -186,13 +186,12 @@ def host_rank_choice(docs: DataFrame, host_col: str = "host", *,
                      hot_host_threshold: int = 1_000_000,
                      probe_fraction: float = 0.05) -> str:
     """The ``rank_via="auto"`` decision for ``host_quota_sample``,
-    factored so tests can assert the choice directly (the
-    ``passage_rank_choice`` discipline): estimate the max per-host row
-    count from a ``probe_fraction`` sample of the HOST COLUMN ONLY
-    (column-pruned before sampling, so a docs frame with a wide or
-    expensive lineage never re-materializes its other columns for the
-    probe) and return "bucketed" above ``hot_host_threshold``, else
-    "window". The probe's shuffle is ``probe_fraction`` of one column
+    factored so tests can assert the choice directly: estimate the max
+    per-host row count from a ``probe_fraction`` sample of the HOST
+    COLUMN ONLY (column-pruned before sampling, so a docs frame with a
+    wide or expensive lineage never re-materializes its other columns
+    for the probe) and return "bucketed" above ``hot_host_threshold``,
+    else "window". The probe's shuffle is ``probe_fraction`` of one column
     and partial-aggregates map-side; the estimate max(sampled
     count)/fraction is upward-biased by design — uncertainty resolves
     toward the skew-safe path. The default threshold sits at the

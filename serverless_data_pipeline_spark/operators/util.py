@@ -23,8 +23,14 @@ def build_concurrently(*thunks: Callable[[], object]) -> list:
     cluster every barrier has a straggler tail). Submitting the
     independent chains from a thread pool lets the next chain's tasks
     back-fill those idle cores. FIFO scheduling (the default) gives
-    exactly the desired back-fill behaviour; job descriptions stay
-    correct because they are thread-local.
+    exactly the desired back-fill behaviour.
+
+    Spark's local properties (job group, job description, scheduler
+    pool, any caller tag) are per JVM thread and a pool thread starts
+    with none, so each thunk first takes a copy of the caller's: its
+    jobs land in the caller's job group, as when run inline (what
+    ``pyspark.InheritableThread`` does for one thread). Each thunk gets
+    its own copy, so a property one sets does not leak into another.
 
     Results are UNCHANGED: each thunk builds the same DataFrame it
     would have built inline — only the wall-clock schedule of the
@@ -36,8 +42,22 @@ def build_concurrently(*thunks: Callable[[], object]) -> list:
         return [thunks[0]()]
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+
+    def inheriting(thunk):
+        if sc is None:
+            return thunk
+        props = sc._jsc.sc().getLocalProperties().clone()
+
+        def run():
+            sc._jsc.sc().setLocalProperties(props)
+            return thunk()
+        return run
+
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inheriting(t)) for t in thunks]
         return [f.result() for f in futures]
 
 

@@ -5,10 +5,11 @@ what a 100 TB pretraining-corpus pipeline actually runs:
 
     exact dedup (fingerprint)            X5/X1
     → near-dup removal (MinHash LSH)     X2
-    → language filter                    X5
-    → quality filter                     X5
-    → repetition gate (optional)         X11
-    → decontamination (optional)         X10
+    → passage dedup (optional)           X12
+    → language filter                    X5      ┐ beside SemDeDup
+    → quality filter                     X5      │ (optional, X2),
+    → repetition gate (optional)         X11     │ whose dropped ids
+    → decontamination (optional)         X10     ┘ are anti-joined after
     → corpus stats                       X5
 
 Every stage is a DataFrame→DataFrame transform; dedup stages are
@@ -37,21 +38,24 @@ from serverless_data_pipeline_spark.operators.text import (
     language_id, token_stats,
 )
 from serverless_data_pipeline_spark.operators.util import (
-    release_checkpoint, spread_checkpoint,
+    build_concurrently, release_checkpoint, spread_checkpoint,
 )
 
 
 @dataclass
 class CorpusResult:
-    """`cached` lists the frames `prepare_training_corpus` cached (the
-    passage/semantic stages and `clean` itself, when counts are
-    collected); `checkpoints` lists the stage boundaries it materialized
-    with `spread_checkpoint` (the exact- and near-dup survivors) and the
+    """`cached` lists the frames `prepare_training_corpus` cached: the
+    passage output (with `passage_k`, when counts are collected or
+    embeddings given) and `clean` itself (when counts are collected).
+    `checkpoints` lists the stage boundaries it materialized as
+    local-checkpoint leaves (the exact- and near-dup survivors; with
+    embeddings, the gated rows and SemDeDup's dropped ids) and the
     near-dup plan, whose leaves include the `exact_clusters` component
     map. Their lifetime is CALLER-owned: `clean`/`stats` read through
     them, so they stay persisted until the caller is done — call
-    `unpersist()` then (ADVICE r5: repeated pipeline runs in one session
-    otherwise accumulate storage memory)."""
+    `unpersist()` then, which frees all of them (ADVICE r5: repeated
+    pipeline runs in one session otherwise accumulate storage
+    memory)."""
 
     clean: DataFrame
     stats: DataFrame
@@ -106,15 +110,14 @@ def prepare_training_corpus(docs: DataFrame, *,
     to the passage_k=None path). `embeddings` (X2 semantic) — a frame
     keyed by the same `id_col` with an `embedding` column — adds
     SemDeDup: docs whose embedding is dropped within its k-means cluster
-    are removed (docs without an embedding row are kept). The embeddings
-    are semi-joined against the docs STILL ALIVE at that stage first —
-    running SemDeDup over stale rows would let an already-removed doc
-    win a semantic family and delete every surviving copy. Without
+    are removed (docs without an embedding row are kept). SemDeDup reads
+    only the embeddings of docs STILL ALIVE after the passage stage —
+    running it over stale rows would let an already-removed doc win a
+    semantic family and delete every surviving copy. Without
     `semantic_centroids` the codebook is trained in-line: one Spark job
-    at construction (a bounded sample of the live embeddings, fitted on
-    the driver; deterministic under any partitioning). At scale pass
-    `semantic_centroids` from one offline training, so pipeline
-    construction triggers no driver action.
+    (a bounded sample of the live embeddings, fitted on the driver;
+    deterministic under any partitioning). At scale pass
+    `semantic_centroids` from one offline training.
 
     `max_dup_ngram_ratio` (X11) adds the repetition gate: drop docs whose
     duplicate-trigram ratio exceeds the bound (narrow pass, no shuffle).
@@ -128,37 +131,57 @@ def prepare_training_corpus(docs: DataFrame, *,
     Both stages mirror __spark_entry__.py's oracle-checked x7 pipeline.
 
     Each stage boundary is computed once. The exact- and near-dup
-    survivors are materialized with `spread_checkpoint` (the exact one
-    as x7 does), so pair generation, the near-dup anti-join, the
-    passage probe and rebuild and the counts read a leaf instead of
-    re-running the scan, the fingerprint join and pair generation. A
-    local checkpoint truncates lineage: `clean`/`stats` stay readable
-    only until `CorpusResult.unpersist()` releases the leaves (or an
-    executor holding their blocks is lost). With `collect_counts=True`
-    the passage/semantic stages and `clean` are cached as well:
-    `counts["clean"]` fills the `clean` cache, and the caller's `clean`
-    write and `stats` read it instead of re-running the gates and
-    decontamination. `counts["input"]` rides the exact-dedup checkpoint
-    job and every other count reads a materialized frame — no stage
-    runs just to be counted. All of these are CALLER-owned (see
-    `CorpusResult`)."""
+    survivors are `spread_checkpoint` leaves (the exact one as x7
+    does), so pair generation, the near-dup anti-join and the passage
+    probe and rebuild read a leaf instead of re-running the scan, the
+    fingerprint join and pair generation; the passage output is cached
+    and filled by its count before anything else reads it. With
+    `embeddings` the later work runs as two concurrent branches over
+    that output (`build_concurrently`): SemDeDup (sample, Python cell
+    assignment, within-cluster scan) ends in a checkpoint leaf of
+    dropped ids, the gates in a checkpoint leaf of gated rows, and
+    `clean` is the gated rows anti-joined with the dropped ids. That
+    equals the semantic anti-join followed by the gates: each gate
+    judges a row alone (decontamination only against the fixed eval
+    set), and SemDeDup still reads the same live embeddings. A local
+    checkpoint truncates lineage: `clean`/`stats` stay readable only
+    until `CorpusResult.unpersist()` releases the leaves (or an
+    executor holding their blocks is lost).
+
+    With `collect_counts=True`, `clean` is cached too: `counts["clean"]`
+    fills the cache, and the caller's `clean` write and `stats` read it
+    instead of re-running the anti-join. Every other count rides a job
+    that runs anyway: the input, exact and near counts are
+    `Observation`s on their checkpoint jobs, the passage count is its
+    cache fill, and the semantic count is the passage count less the
+    size of the dropped-id leaf (an `Observation` on its checkpoint;
+    ids key docs). No stage runs just to be counted. All of these are
+    CALLER-owned (see `CorpusResult`)."""
     if decontam_via not in ("broadcast", "bloom"):
         raise ValueError(f"decontam_via must be 'broadcast' or "
                          f"'bloom', got {decontam_via!r}")
+    # Each count rides a job that runs anyway: an Observation on the
+    # frame a checkpoint job materializes sees each of its rows once.
+    seen: dict[str, Observation] = {}
+
+    def counted(df: DataFrame, name: str) -> DataFrame:
+        if not collect_counts:
+            return df
+        seen[name] = Observation()
+        return df.observe(seen[name], F.count(F.lit(1)).alias("n"))
+
     # exact dedup: keep the lowest id of each fingerprint group (a NULL
     # text has no fingerprint and no group). Every later stage (pair
     # generation on both sides, the near-dup anti-join, the passage
-    # probe and rebuild) and the counts read this frame. The input count
-    # rides the checkpoint job: each doc passes the fingerprint select
-    # exactly once.
-    fps = docs.select(id_col, fingerprint(text_col).alias("__fp"))
-    if collect_counts:
-        seen = Observation()
-        fps = fps.observe(seen, F.count(F.lit(1)).alias("n"))
+    # probe and rebuild) reads this frame. The input count rides its
+    # checkpoint job: each doc passes the fingerprint select once.
+    fps = counted(docs.select(id_col, fingerprint(text_col).alias("__fp")),
+                  "input")
     keep_exact = (fps.filter(F.col("__fp").isNotNull())
                   .groupBy("__fp").agg(F.min(id_col).alias(id_col))
                   .select(id_col))
-    exact = spread_checkpoint(docs.join(keep_exact, id_col))
+    exact = spread_checkpoint(counted(docs.join(keep_exact, id_col),
+                                      "after_exact_dedup"))
     checkpoints = [exact]
 
     # near-dup removal: drop the higher id of every surviving LSH pair
@@ -169,20 +192,21 @@ def prepare_training_corpus(docs: DataFrame, *,
     else:
         drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
         neardeduped = exact.join(drop, id_col, "left_anti")
-    # The passage probe, its window and rebuild passes, the semantic
-    # semi-join and the count read this frame. Measured on a warm
-    # perfbench corpus day (local[2], medians of 3): greedy edge-drop
-    # 12.3 -> 9.1 s and 89 -> 78 jobs with the writes (pair generation
-    # no longer reruns per reader); neutral with exact_clusters, whose
-    # component map is already a leaf. That map's last label round is a
-    # checkpoint leaf of the plan below, which no returned frame reads:
-    # listing the plan lets `unpersist()` free it (`exact`, its other
-    # leaf, is listed already).
-    neardup_plan = neardeduped
-    neardeduped = spread_checkpoint(neardeduped)
+    # The passage probe, its window and rebuild passes and the semantic
+    # semi-join read this frame. Measured on a warm perfbench corpus
+    # day (local[2], medians of 3): greedy edge-drop 12.3 -> 9.1 s and
+    # 89 -> 78 jobs with the writes (pair generation no longer reruns
+    # per reader); neutral with exact_clusters, whose component map is
+    # already a leaf. That map's last label round is a checkpoint leaf
+    # of the plan below, which no returned frame reads: listing the plan
+    # lets `unpersist()` free it (`exact`, its other leaf, is listed
+    # already).
+    neardup_plan = counted(neardeduped, "after_near_dedup")
+    neardeduped = spread_checkpoint(neardup_plan)
     checkpoints += [neardeduped, neardup_plan]
 
     stage = neardeduped
+    cached: list[DataFrame] = []
     if passage_k is not None:
         from serverless_data_pipeline_spark.operators.corpus import (
             passage_dedup,
@@ -206,38 +230,16 @@ def prepare_training_corpus(docs: DataFrame, *,
                  .withColumn(text_col,
                              F.coalesce("__ptext", F.col(text_col)))
                  .drop("__ptext"))
-    cached: list[DataFrame] = []
-    after_passage = stage
-    if passage_k is not None and collect_counts:
-        # counted below AND consumed by every later stage — without the
-        # cache the passage plan (the pipeline's most expensive stage)
-        # re-executes for each downstream count + the stats pass.
-        # Lifetime is caller-owned via CorpusResult.unpersist().
-        after_passage = stage = stage.cache()
-        cached.append(stage)
-
-    if embeddings is not None:
-        from serverless_data_pipeline_spark.operators.dedup import (
-            semantic_dedup,
-        )
-        # Only embeddings of docs still alive: a stale row could win a
-        # semantic family and delete every surviving copy of it.
-        live_emb = embeddings.join(stage.select(id_col), id_col,
-                                   "left_semi")
-        dropped = (semantic_dedup(live_emb, id_col, "embedding",
-                                  threshold=semantic_threshold,
-                                  n_clusters=semantic_clusters,
-                                  dim=semantic_dim,
-                                  centroids=semantic_centroids)
-                   .filter(~F.col("keep")).select(id_col))
-        # anti-join the DROPPED set so docs without an embedding survive
-        stage = stage.join(dropped, id_col, "left_anti")
-    after_semantic = stage
-    if embeddings is not None and collect_counts:
-        # same re-execution argument as the passage cache: counted below
-        # and consumed by the gates + stats.
-        after_semantic = stage = stage.cache()
-        cached.append(stage)
+        if collect_counts or embeddings is not None:
+            # The pipeline's most expensive stage, read by the count, the
+            # gates and the semantic semi-join: cached, and filled by the
+            # count before the branches below start, so neither of them
+            # runs it. A cache, not a checkpoint: AQE may not coalesce a
+            # cached plan's join, so the gates keep its id-hash
+            # partitions.
+            stage = stage.cache()
+            cached.append(stage)
+            n_passage = stage.count()
 
     # language + quality gates (single narrow pass each)
     lang_ok = (language_id(stage, text_col)
@@ -274,9 +276,43 @@ def prepare_training_corpus(docs: DataFrame, *,
         clean = (flagged.filter(~F.col("contaminated"))
                  .drop("n_overlap", "contaminated"))
 
+    if embeddings is not None:
+        from serverless_data_pipeline_spark.operators.dedup import (
+            semantic_dedup,
+        )
+        # Only embeddings of docs still alive: a stale row could win a
+        # semantic family and delete every surviving copy of it.
+        live_emb = embeddings.join(stage.select(id_col), id_col,
+                                   "left_semi")
+
+        def semantic_drops() -> DataFrame:
+            dropped = (semantic_dedup(live_emb, id_col, "embedding",
+                                      threshold=semantic_threshold,
+                                      n_clusters=semantic_clusters,
+                                      dim=semantic_dim,
+                                      centroids=semantic_centroids)
+                       .filter(~F.col("keep")).select(id_col).distinct())
+            return counted(dropped, "semantic_drops").localCheckpoint(
+                eager=True)
+
+        # SemDeDup (a k-means sample and driver fit, then a Python cell
+        # assignment and within-cluster scan) and the gates (JVM-only)
+        # run concurrently over the same stage, so the gates fill the
+        # cores SemDeDup leaves idle. Each gate judges a row alone and
+        # SemDeDup reads only live ids, so anti-joining the dropped set
+        # after the gates keeps exactly the rows of the semantic
+        # anti-join followed by the gates. The gated leaf is a plain
+        # checkpoint: it keeps the stage's partitions, as the gates do.
+        gated, dropped = build_concurrently(
+            lambda: clean.localCheckpoint(eager=True), semantic_drops)
+        checkpoints += [gated, dropped]
+        # anti-join the DROPPED set so docs without an embedding survive
+        clean = gated.join(dropped, id_col, "left_anti")
+
     if collect_counts:
         # read three times (the count below, the caller's write, the
-        # stats pass): the gates and the eval broadcast run once.
+        # stats pass): the gates (or the anti-join of the two leaves)
+        # run once.
         clean = clean.cache()
         cached.append(clean)
 
@@ -286,13 +322,15 @@ def prepare_training_corpus(docs: DataFrame, *,
 
     counts = {}
     if collect_counts:
-        counts = {"input": seen.get["n"],
-                  "after_exact_dedup": exact.count(),
-                  "after_near_dedup": neardeduped.count()}
+        counts = {name: obs.get["n"] for name, obs in seen.items()}
+        n_dropped = counts.pop("semantic_drops", 0)
         if passage_k is not None:
-            counts["after_passage_dedup"] = after_passage.count()
+            counts["after_passage_dedup"] = n_passage
         if embeddings is not None:
-            counts["after_semantic_dedup"] = after_semantic.count()
+            # the dropped ids are distinct live ids, and ids key docs
+            counts["after_semantic_dedup"] = (
+                counts.get("after_passage_dedup",
+                           counts["after_near_dedup"]) - n_dropped)
         counts["clean"] = clean.count()
     return CorpusResult(clean=clean, stats=stats, counts=counts,
                         cached=cached, checkpoints=checkpoints)

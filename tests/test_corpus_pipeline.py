@@ -234,26 +234,83 @@ EVERY_STAGE_COUNTS = {"input": 10, "after_exact_dedup": 9,
                       "after_semantic_dedup": 6, "clean": 2}
 
 
-def _every_stage_run(spark, collect_counts, docs=None):
+# 15 is a semantic twin of 10; 12's row is stale (it dies in exact
+# dedup); docs without a row are kept
+EVERY_STAGE_EMB = [(12, [1.0, 0.0005, 0.0, 0.1]), (10, [1.0, 0.0, 0.0, 0.1]),
+                   (15, [1.0, 0.001, 0.0, 0.1]), (11, [-1.0, 0.5, 0.2, -0.8])]
+# shares the 5-gram "engineers measure river flow and" with doc 19
+EVAL_DOCS = [(99, "we saw that engineers measure river flow and sleep")]
+SEMANTIC = {"semantic_threshold": 0.95, "semantic_clusters": 2}
+GATES = {"languages": ("en",), "min_quality": 0.3,
+         "max_dup_ngram_ratio": 0.2}
+
+
+def _every_stage_run(spark, collect_counts, docs=None,
+                     emb_rows=EVERY_STAGE_EMB):
     if docs is None:
         docs = spark.createDataFrame(EVERY_STAGE_DOCS,
                                      "doc_id long, text string")
-    # 15 is a semantic twin of 10; 12's row is stale (it dies in exact
-    # dedup); docs without a row are kept
-    emb = spark.createDataFrame(
-        [(12, [1.0, 0.0005, 0.0, 0.1]), (10, [1.0, 0.0, 0.0, 0.1]),
-         (15, [1.0, 0.001, 0.0, 0.1]), (11, [-1.0, 0.5, 0.2, -0.8])],
-        "doc_id long, embedding array<double>")
-    # shares the 5-gram "engineers measure river flow and" with doc 19
-    ev = spark.createDataFrame(
-        [(99, "we saw that engineers measure river flow and sleep")],
-        "doc_id long, text string")
+    emb = spark.createDataFrame(emb_rows,
+                                "doc_id long, embedding array<double>")
+    ev = spark.createDataFrame(EVAL_DOCS, "doc_id long, text string")
     return prepare_training_corpus(
-        docs, languages=("en",), min_quality=0.3, jaccard_threshold=0.5,
-        exact_clusters=True, passage_k=8, embeddings=emb,
-        semantic_threshold=0.95, semantic_clusters=2,
-        max_dup_ngram_ratio=0.2, eval_docs=ev,
-        collect_counts=collect_counts)
+        docs, jaccard_threshold=0.5, exact_clusters=True, passage_k=8,
+        embeddings=emb, eval_docs=ev, collect_counts=collect_counts,
+        **SEMANTIC, **GATES)
+
+
+def test_semantic_branch_beside_gates_equals_sequential_order(spark):
+    """SemDeDup runs beside the gates and its dropped ids are anti-joined
+    after them. The rows, stats and every count must equal the order
+    it replaces: the semantic anti-join on the passage output, then the
+    gates. Doc 16 is a semantic twin of 10 that the language gate also
+    drops; doc 15 has two embedding rows, both twins of 10."""
+    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
+    from serverless_data_pipeline_spark.operators.text import LANG_MARKERS
+
+    emb_rows = EVERY_STAGE_EMB + [(15, [1.0, 0.0012, 0.0, 0.1]),
+                                  (16, [1.0, 0.0008, 0.0, 0.1])]
+    res = _every_stage_run(spark, True, emb_rows=emb_rows)
+    got = ({tuple(r) for r in res.clean.collect()},
+           [tuple(r) for r in res.stats.collect()])
+
+    # the sequential order, built from the same operators: the dedup
+    # stages with every gate open ...
+    docs = spark.createDataFrame(EVERY_STAGE_DOCS, "doc_id long, text string")
+    up = prepare_training_corpus(
+        docs, languages=(*LANG_MARKERS, "zh", "und"),
+        min_quality=float("-inf"), jaccard_threshold=0.5,
+        exact_clusters=True, passage_k=8)
+    assert up.counts["clean"] == up.counts["after_passage_dedup"]
+    # ... then SemDeDup over the live embeddings and its anti-join ...
+    emb = spark.createDataFrame(emb_rows,
+                                "doc_id long, embedding array<double>")
+    live = emb.join(up.clean.select("doc_id"), "doc_id", "left_semi")
+    dropped = (semantic_dedup(live, "doc_id", "embedding",
+                              threshold=SEMANTIC["semantic_threshold"],
+                              n_clusters=SEMANTIC["semantic_clusters"])
+               .filter("NOT keep").select("doc_id"))
+    after_semantic = up.clean.join(dropped, "doc_id", "left_anti")
+    # ... then the gates (the dedup stages rerun on deduped rows: no-ops)
+    ev = spark.createDataFrame(EVAL_DOCS, "doc_id long, text string")
+    gated = prepare_training_corpus(
+        after_semantic, jaccard_threshold=0.5, exact_clusters=True,
+        eval_docs=ev, **GATES)
+    n_semantic = after_semantic.count()
+    assert gated.counts["after_near_dedup"] == n_semantic
+    want = ({tuple(r) for r in gated.clean.collect()},
+            [tuple(r) for r in gated.stats.collect()])
+    want_counts = {k: up.counts[k] for k in (
+        "input", "after_exact_dedup", "after_near_dedup",
+        "after_passage_dedup")}
+    want_counts.update(after_semantic_dedup=n_semantic,
+                       clean=gated.counts["clean"])
+    for r in (res, up, gated):
+        r.unpersist()
+    assert got == want
+    assert res.counts == want_counts
+    assert {r[0] for r in got[0]} == {10, 11}
+    assert res.counts["after_semantic_dedup"] == 5  # 15 and 16 gone
 
 
 def _jobs_in_group(spark, group, fn):
@@ -300,8 +357,9 @@ def test_prepare_training_corpus_computes_each_stage_once(spark, tmp_path):
     # checkpoint job; every later stage, count and write reads the leaf
     assert reads.value == 2 * len(EVERY_STAGE_DOCS)
     # 102-104 jobs before the stage checkpoints and the clean cache, 76
-    # after (local[4])
-    assert prep_jobs + clean_jobs + stats_jobs <= 85
+    # after, 61 before the counts rode jobs that run anyway and the
+    # passage rank probe went, 53 after (local[4])
+    assert prep_jobs + clean_jobs + stats_jobs <= 53
     rows = {tuple(r) for r in spark.read.parquet(clean_p).collect()}
     stats = [tuple(r) for r in spark.read.parquet(stats_p).collect()]
     res.unpersist()

@@ -279,37 +279,10 @@ def test_passage_dedup_minjoin_rank_path_equivalent(spark):
                                         rank_via="window").collect()))
     b = sorted(map(tuple, passage_dedup(df, "doc_id", "text", k=8,
                                         rank_via="minjoin").collect()))
-    c = sorted(map(tuple, passage_dedup(df, "doc_id", "text", k=8,
-                                        rank_via="auto").collect()))
-    assert a == b == c
+    assert a == b
     # the hot passage survives only in doc 0
     kept_with_boiler = [r for r in a if "h0 h1" in r[1]]
     assert len(kept_with_boiler) == 1 and kept_with_boiler[0][0] == 0
-
-
-def test_passage_rank_auto_picks_minjoin_on_planted_hot_key(spark):
-    """The auto probe must route a pathologically hot fingerprint to the
-    skew-safe minjoin path and an ordinary corpus to the window path
-    (threshold scaled down so the planted key trips it at test size)."""
-    from serverless_data_pipeline_spark.operators.corpus import (
-        _passage_windows, passage_rank_choice,
-    )
-
-    boiler = " ".join(f"h{i}" for i in range(8))
-    hot = spark.createDataFrame(
-        [(i, f"u{i}x {boiler} u{i}y") for i in range(400)],
-        "doc_id long, text string")
-    _, wins_hot = _passage_windows(hot, "doc_id", "text", 8, "md5")
-    assert passage_rank_choice(wins_hot, hot_fp_threshold=100,
-                               probe_fraction=0.5) == "minjoin"
-
-    cold = spark.createDataFrame(
-        [(i, " ".join(f"w{i}_{j}" for j in range(12)))
-         for i in range(400)],
-        "doc_id long, text string")
-    _, wins_cold = _passage_windows(cold, "doc_id", "text", 8, "md5")
-    assert passage_rank_choice(wins_cold, hot_fp_threshold=100,
-                               probe_fraction=0.5) == "window"
 
 
 def test_leakage_safe_split_exact_dup_groups_never_straddle(spark):

@@ -92,6 +92,25 @@ def test_packed_minhash_is_one_sided(spark):
         assert all(got[p] >= est for p, est in want.items())
 
 
+def test_minhash_sig_sql_string_equals_column_form(spark):
+    """The one-string signature aggregate yields the same bytes as the
+    same tree composed from Column calls."""
+    from serverless_data_pipeline_spark.operators.dedup import _minhash_sig
+
+    h0 = spark.createDataFrame(
+        [(g, (g * 7919 + j * 104729) * (-1) ** j)
+         for g in range(4) for j in range(1, 6)]
+        + [(4, -(1 << 63)), (4, (1 << 63) - 1)], "g long, h0 long")
+    column_form = F.unhex(F.concat(*[
+        F.lpad(F.hex(F.min(F.xxhash64(F.col("h0"), F.lit(i)))
+                     .bitwiseAND(F.lit(0xFFFF))), 4, "0")
+        for i in range(32)]))
+    got = h0.groupBy("g").agg(_minhash_sig("h0", 32).alias("a"),
+                              column_form.alias("b")).collect()
+    assert len(got) == 5
+    assert all(len(r.a) == 64 and bytes(r.a) == bytes(r.b) for r in got)
+
+
 def test_ngram_jaccard_large_doc_high_precision_threshold(spark):
     """Regression: sz*num in the pruning bounds was computed in the
     size() column's 32-bit int — a threshold with a large rational

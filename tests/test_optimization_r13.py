@@ -31,6 +31,22 @@ def test_build_concurrently_single_thunk_runs_inline(spark):
     assert build_concurrently(lambda: 42) == [42]
 
 
+def test_build_concurrently_jobs_keep_callers_job_group(spark):
+    # local properties are per thread: without the copy, pool-thread
+    # jobs carry no job group and the group below stays empty
+    sc = spark.sparkContext
+    sc.setJobGroup("concurrent-build", "concurrent-build")
+    try:
+        out = build_concurrently(lambda: spark.range(10).count(),
+                                 lambda: spark.range(20).count())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert out == [10, 20]
+    assert len(sc.statusTracker().getJobIdsForGroup("concurrent-build")) >= 2
+
+
 def test_build_concurrently_propagates_exceptions(spark):
     def boom():
         raise ValueError("arm failed")
