@@ -43,7 +43,7 @@ from serverless_data_pipeline_spark.operators.dedup import (  # noqa: E402
     semantic_dedup,
 )
 from serverless_data_pipeline_spark.operators.similarity import (  # noqa: E402
-    ann_topk_join,
+    ann_topk_join, train_ivf_centroids,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -267,11 +267,25 @@ def main() -> None:
         r["bloom_decontam"] = timed(
             lambda: bloom_decontaminate(d, ev, "doc_id", "text",
                                         n=5).count())
+        # k-means at 10x: a FIXED 16-cell codebook fits a bounded sample
+        # (256 vectors per cell, one top-n collect), so the fit should
+        # not grow with the corpus; only the sample's scan does.
+        r["train_ivf_centroids"] = timed(
+            lambda: train_ivf_centroids(e, "embedding", n_cells=16))
         # n_clusters scales with the corpus (the SemDeDup contract) so
-        # the within-cluster quadratic term stays bounded.
+        # the within-cluster quadratic term stays bounded. At sf0.1 both
+        # sizes fit the in-line k-means sample (2,000 <= 4,096 and
+        # 20,000 <= 40,960 vectors), so this row takes the driver path;
+        # the fixed-codebook row times the distributed path (Arrow cell
+        # assignment, one shuffle, grouped scan) over the same vectors.
         r["semantic_dedup"] = timed(
             lambda: semantic_dedup(e, "vec_id", "embedding", threshold=0.3,
                                    n_clusters=16 * factor, dim=64).count())
+        codebook = train_ivf_centroids(e, "embedding", n_cells=16 * factor)
+        r["semantic_dedup_fixed_codebook"] = timed(
+            lambda: semantic_dedup(e, "vec_id", "embedding", threshold=0.3,
+                                   n_clusters=16 * factor, dim=64,
+                                   centroids=codebook).count())
         # Incremental maintenance (r7): the daily-ops claim is that
         # probing a FIXED new batch costs ~O(batch + compact index
         # read), NOT O(corpus text) — so the probe wall must stay

@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 __all__ = ["query_cosine_udf", "pair_cosine_udf", "sign_buckets_udf",
-           "argmax_cell_udf", "sign_bits", "pq_encode_udf",
+           "argmax_cells", "argmax_cell_udf", "sign_bits", "pq_encode_udf",
            "pq_adc_cosine_udf"]
 
 
@@ -169,21 +169,32 @@ def pq_adc_cosine_udf(codebooks: list[list[list[float]]],
     return _score
 
 
-def argmax_cell_udf(centroids: list[list[float]], dim: int):
-    """IVF cell assignment: argmax_c cosine(v, c) with |v| cancelled
-    (same argmax) and 1/|c| precomputed. np.argmax keeps the LOWEST
-    index on ties — the classic tie-break (the round-2 SQL struct trick
-    broke ties high; this restores low). All-zero vectors score 0.0
-    against every cell and land in cell 0 deterministically."""
+def argmax_cells(centroids: list[list[float]]):
+    """IVF cell assignment as a plain numpy function of an (n, dim)
+    float64 matrix: argmax_c cosine(v, c) with |v| cancelled (same
+    argmax) and 1/|c| precomputed. np.argmax keeps the LOWEST index on
+    ties — the classic tie-break (the round-2 SQL struct trick broke ties
+    high; this restores low). All-zero vectors score 0.0 against every
+    cell and land in cell 0 deterministically. The Arrow kernel below
+    and `semantic_dedup`'s driver path both call it, so the two assign
+    every vector the same cell."""
     c = np.asarray(centroids, dtype=np.float64)
     norms = np.linalg.norm(c, axis=1)
     inv = 1.0 / np.where(norms == 0.0, 1.0, norms)
+
+    def assign(m: np.ndarray) -> np.ndarray:
+        return np.argmax((m @ c.T) * inv, axis=1).astype(np.int32)
+
+    return assign
+
+
+def argmax_cell_udf(centroids: list[list[float]], dim: int):
+    """`argmax_cells` over each Arrow batch of a vector column."""
+    assign = argmax_cells(centroids)
     dim = int(dim)
 
     @pandas_udf("int")
     def _cell(vs: pd.Series) -> pd.Series:
-        m = _mat(vs, dim)
-        scores = (m @ c.T) * inv
-        return pd.Series(np.argmax(scores, axis=1).astype(np.int32))
+        return pd.Series(assign(_mat(vs, dim)))
 
     return _cell

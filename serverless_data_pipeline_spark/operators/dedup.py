@@ -16,7 +16,7 @@ Scale design (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from serverless_data_pipeline_spark.functions.text import (
     shingles_from_tokens, tokens,
@@ -849,19 +849,43 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
     semantic complement of the lexical sketch flavours.
 
     Scale shape: the codebook is trained once (pass `centroids` from an
-    offline `train_ivf_centroids` run, the 100 TB path; in-line training
-    fits the same bounded sample, one Spark job at construction) and
-    broadcasts as a plain constant; cell
-    assignment is one narrow Arrow-batched matmul pass; the ONLY shuffle
-    groups by cluster id; the quadratic verification is confined within a
-    cluster, so `n_clusters` is the scale lever (the paper runs 50k
-    clusters at LAION scale). A cluster larger than `max_cluster_size`
-    raises instead of silently going quadratic — raise `n_clusters`, not
-    the cap (which also bounds kernel memory: the within-cluster cosine
-    matrix is c^2 doubles, ~0.5 GB at the 8192 default). The whole pass
-    is deterministic and partition-independent: in-line training samples
-    by a seeded hash order of `id_col`, the greedy scan orders by
-    (centroid_sim, id), and dup_of ties break to the earliest kept item.
+    offline `train_ivf_centroids` run, the 100 TB path) and broadcasts as
+    a plain constant; cell assignment is one narrow Arrow-batched matmul
+    pass; the ONLY shuffle groups by cluster id; the quadratic
+    verification is confined within a cluster, so `n_clusters` is the
+    scale lever (the paper runs 50k clusters at LAION scale). A cluster
+    larger than `max_cluster_size` raises instead of silently going
+    quadratic — raise `n_clusters`, not the cap (which also bounds kernel
+    memory: the within-cluster cosine matrix is c^2 doubles, ~0.5 GB at
+    the 8192 default). The whole pass is deterministic and
+    partition-independent: in-line training samples by a seeded hash
+    order of `id_col`, the greedy scan orders by (centroid_sim, id), and
+    dup_of ties break to the earliest kept item.
+
+    In-line training (no `centroids`) is ONE Spark job at construction:
+    the bounded k-means sample of at most 256 x `n_clusters` vectors
+    (`similarity._training_sample`, fitted by `_kmeans` on the driver),
+    with an `Observation` on the same job that counts the input rows and
+    NULL vectors. A size rule with no setting follows from that count:
+    when the input has at most 256 x `n_clusters` rows, the sample IS the
+    input, so cell assignment and the within-cluster scan run on the
+    driver over the collected vectors and the result is a local frame
+    built from an Arrow table — no shuffle and no Python worker (a cold
+    one costs seconds). The driver path runs the same arithmetic: the
+    same numpy cell assignment as the Arrow kernel (`argmax_cells`) and
+    the same `_cluster_dedup` on the same float64 values, so its rows
+    equal the distributed path's under the same codebook. They are
+    equal bit for bit while numpy's BLAS runs one thread, as in Spark's
+    Python workers (a default local session starts them with
+    OMP_NUM_THREADS=1); a multi-threaded driver BLAS splits a large
+    cluster's products differently and may move a float in its last
+    place (sf0.1 x10 on a 4-core host, 160 clusters: 79 of 20,000
+    `centroid_sim` values, with every cell, keep and dup_of equal). The path does not depend on
+    the session's Arrow setting: an Arrow table becomes a frame without
+    `spark.sql.execution.arrow.pyspark.enabled` (a pandas frame with
+    Arrow off would fall back to a Python worker, still correct). Above
+    the bound, and whenever `centroids` are passed, the distributed path
+    runs.
 
     Returns one row per input: (id, cluster_id, centroid_sim, keep,
     dup_of, dup_sim); dropped rows point at their kept representative.
@@ -872,10 +896,10 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
     from pyspark.sql import types as T
 
     from serverless_data_pipeline_spark.functions.vectors_np import (
-        argmax_cell_udf,
+        argmax_cell_udf, argmax_cells,
     )
     from serverless_data_pipeline_spark.operators.similarity import (
-        train_ivf_centroids,
+        _POINTS_PER_CENTROID, _kmeans, _training_sample,
     )
 
     id_type = df.schema[id_col].dataType
@@ -888,20 +912,39 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
         T.StructField("dup_sim", T.DoubleType()),
     ])
 
+    sample = None  # (ids, vectors) when the sample holds the whole input
     if centroids is None:
-        # The training sample is the only job: it also shows an EMPTY
-        # frame, which the corpus pipeline can legitimately produce when
-        # the embeddings-vs-live-docs semi-join comes back empty
-        # (ADVICE r5). An empty input has no duplicates: short-circuit
-        # with an empty result of the output schema.
+        # The training sample is the only job. Its Observation sees every
+        # input row (it sits above any join in `df`, so an empty side
+        # pruned below it still reports 0): an EMPTY frame, which the
+        # corpus pipeline produces when the embeddings-vs-live-docs
+        # semi-join comes back empty, returns an empty result.
+        bound = _POINTS_PER_CENTROID * n_clusters
+        seen = Observation()
+        rows = df.select(id_col, vec_col).observe(
+            seen, F.count(F.lit(1)).alias("n"),
+            F.count_if(F.col(vec_col).isNull()).alias("nulls"))
         try:
-            centroids = train_ivf_centroids(
-                df.select(id_col, vec_col), vec_col, n_cells=n_clusters,
-                seed=seed, max_iter=max_iter)
+            x, ids = _training_sample(rows, vec_col, id_col, bound, seed,
+                                      "semantic_dedup")
         except ValueError:
-            if not df.isEmpty():
+            # no non-NULL vector; with every vector NULL and no `dim`,
+            # the sampler's message is the one that can name the cause
+            if seen.get["n"] and dim is None:
                 raise
-            return df.sparkSession.createDataFrame([], out_schema)
+            x, ids = np.empty((0, dim or 0)), []
+        n_rows, n_null = seen.get["n"], seen.get["nulls"]
+        if dim is None:
+            dim = x.shape[1]
+        if n_null:
+            raise ValueError(f"a NULL vector reached a {dim}-dim kernel")
+        if n_rows == 0:
+            return _arrow_frame(df.sparkSession, pd.DataFrame(
+                {f.name: [] for f in out_schema.fields}), out_schema)
+        centroids = _kmeans(x, n_clusters, np.random.default_rng(seed),
+                            max_iter).tolist()
+        if n_rows <= bound:
+            sample = (ids, x)
     if dim is None:
         dim = len(centroids[0])
     cents = np.asarray(centroids, dtype=np.float64)
@@ -951,12 +994,31 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str, *,
                  for k, s in zip(keep, dup_sim)], dtype=object),
         })
 
+    if sample is not None:
+        ids, x = sample
+        pdf = pd.DataFrame({"__id": ids, "__v": list(x),
+                            "__cell": argmax_cells(centroids)(x)})
+        return _arrow_frame(df.sparkSession, pd.concat(
+            [_cluster_dedup((cell,), part)
+             for cell, part in pdf.groupby("__cell")],
+            ignore_index=True), out_schema)
     assigned = df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
         argmax_cell_udf([list(map(float, c)) for c in centroids], dim)(
             F.col(vec_col)).alias("__cell"))
     return (assigned.groupBy("__cell")
             .applyInPandas(_cluster_dedup, out_schema))
+
+
+def _arrow_frame(spark, pdf, schema) -> DataFrame:
+    """A local frame of `pdf`'s rows, built from an Arrow table: a
+    JVM-side local relation, so reading it starts no Python worker
+    whatever the session's Arrow setting (`createDataFrame` over rows,
+    or over pandas with Arrow off, goes through a Python RDD)."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, preserve_index=False), schema)
 
 
 def lsh_plan(threshold: float, max_hashes: int = 256,

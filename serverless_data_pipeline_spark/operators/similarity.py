@@ -316,8 +316,9 @@ def _training_sample(corpus: DataFrame, vec_col: str, id_col: str | None,
     the order depends on neither partitioning nor, unlike an id prefix,
     on how ids were assigned. `id_col` defaults to the first non-vector
     column and should be unique for a total order. Returns an (n', dim)
-    float64 matrix; raises ValueError naming `trainer` when the frame
-    has no ordering column or no non-NULL vector."""
+    float64 matrix and the list of its rows' ids; raises ValueError
+    naming `trainer` when the frame has no ordering column or no
+    non-NULL vector."""
     import numpy as np
 
     if id_col is None:
@@ -336,7 +337,8 @@ def _training_sample(corpus: DataFrame, vec_col: str, id_col: str | None,
         raise ValueError(
             f"{trainer}: no non-NULL {vec_col!r} vector to train on (the "
             "input is empty or every vector is NULL)")
-    return np.array([r.v for r in rows], dtype=np.float64)
+    return (np.array([r.v for r in rows], dtype=np.float64),
+            [r.i for r in rows])
 
 
 def _kmeans(x, k: int, rng, max_iter: int):
@@ -388,9 +390,9 @@ def train_ivf_centroids(corpus: DataFrame, vec_col: str,
     time); raises ValueError on a frame with no non-NULL vector."""
     import numpy as np
 
-    x = _training_sample(corpus, vec_col, None,
-                         _POINTS_PER_CENTROID * n_cells, seed,
-                         "train_ivf_centroids")
+    x, _ = _training_sample(corpus, vec_col, None,
+                            _POINTS_PER_CENTROID * n_cells, seed,
+                            "train_ivf_centroids")
     return _kmeans(x, n_cells, np.random.default_rng(seed),
                    max_iter).tolist()
 
@@ -410,8 +412,8 @@ def train_pq_codebooks(corpus: DataFrame, vec_col: str, dim: int,
 
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
-    x = _training_sample(corpus, vec_col, id_col, sample_n, seed,
-                         "train_pq_codebooks")
+    x, _ = _training_sample(corpus, vec_col, id_col, sample_n, seed,
+                            "train_pq_codebooks")
     dsub = dim // m
     rng = np.random.default_rng(seed)
     return [_kmeans(x[:, j * dsub:(j + 1) * dsub], ksub, rng,

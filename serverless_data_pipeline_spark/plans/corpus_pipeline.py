@@ -12,6 +12,10 @@ what a 100 TB pretraining-corpus pipeline actually runs:
     → decontamination (optional)         X10     ┘ are anti-joined after
     → corpus stats                       X5
 
+SemDeDup trains its codebook in-line on a bounded k-means sample; when
+that sample holds every live embedding (at most 256 per cluster), it
+finishes on the driver, and the day starts no Python worker.
+
 Every stage is a DataFrame→DataFrame transform; dedup stages are
 candidate-generation joins (never all-pairs); stats are one aggregation
 pass. The near-dup removal keeps the LOWEST doc id of each connected
@@ -115,9 +119,12 @@ def prepare_training_corpus(docs: DataFrame, *,
     running it over stale rows would let an already-removed doc win a
     semantic family and delete every surviving copy. Without
     `semantic_centroids` the codebook is trained in-line: one Spark job
-    (a bounded sample of the live embeddings, fitted on the driver;
-    deterministic under any partitioning). At scale pass
-    `semantic_centroids` from one offline training.
+    (a bounded sample of at most 256 x `semantic_clusters` live
+    embeddings, fitted on the driver; deterministic under any
+    partitioning). When the live embeddings fit in that sample, the
+    cell assignment and within-cluster scan run on the driver over it
+    too: no shuffle and no Python worker (see `semantic_dedup`). At
+    scale pass `semantic_centroids` from one offline training.
 
     `max_dup_ngram_ratio` (X11) adds the repetition gate: drop docs whose
     duplicate-trigram ratio exceeds the bound (narrow pass, no shuffle).
@@ -137,8 +144,9 @@ def prepare_training_corpus(docs: DataFrame, *,
     fingerprint join and pair generation; the passage output is cached
     and filled by its count before anything else reads it. With
     `embeddings` the later work runs as two concurrent branches over
-    that output (`build_concurrently`): SemDeDup (sample, Python cell
-    assignment, within-cluster scan) ends in a checkpoint leaf of
+    that output (`build_concurrently`): SemDeDup (the sample job, then
+    cell assignment and the within-cluster scan, on the driver when the
+    sample holds every live embedding) ends in a checkpoint leaf of
     dropped ids, the gates in a checkpoint leaf of gated rows, and
     `clean` is the gated rows anti-joined with the dropped ids. That
     equals the semantic anti-join followed by the gates: each gate
@@ -152,7 +160,9 @@ def prepare_training_corpus(docs: DataFrame, *,
     fills the cache, and the caller's `clean` write and `stats` read it
     instead of re-running the anti-join. Every other count rides a job
     that runs anyway: the input, exact and near counts are
-    `Observation`s on their checkpoint jobs, the passage count is its
+    `Observation`s on their checkpoint jobs, each at or above the root
+    of its join so that AQE's pruning of an empty join side cannot drop
+    it (an empty day counts zeros), the passage count is its
     cache fill, and the semantic count is the passage count less the
     size of the dropped-id leaf (an `Observation` on its checkpoint;
     ids key docs). No stage runs just to be counted. All of these are
@@ -174,14 +184,17 @@ def prepare_training_corpus(docs: DataFrame, *,
     # text has no fingerprint and no group). Every later stage (pair
     # generation on both sides, the near-dup anti-join, the passage
     # probe and rebuild) reads this frame. The input count rides its
-    # checkpoint job: each doc passes the fingerprint select once.
-    fps = counted(docs.select(id_col, fingerprint(text_col).alias("__fp")),
-                  "input")
-    keep_exact = (fps.filter(F.col("__fp").isNotNull())
+    # checkpoint job at the root of a left join that carries every doc
+    # (ids key docs): AQE prunes an inner join with an empty side, and
+    # with it any Observation below, whose count then never arrives.
+    # Uncounted, the filter turns the left join back into the inner one.
+    keep_exact = (docs.select(id_col, fingerprint(text_col).alias("__fp"))
+                  .filter(F.col("__fp").isNotNull())
                   .groupBy("__fp").agg(F.min(id_col).alias(id_col))
-                  .select(id_col))
-    exact = spread_checkpoint(counted(docs.join(keep_exact, id_col),
-                                      "after_exact_dedup"))
+                  .select(id_col, F.lit(True).alias("__keep")))
+    flagged = counted(docs.join(keep_exact, id_col, "left"), "input")
+    exact = spread_checkpoint(counted(
+        flagged.filter(F.col("__keep")).drop("__keep"), "after_exact_dedup"))
     checkpoints = [exact]
 
     # near-dup removal: drop the higher id of every surviving LSH pair
@@ -295,10 +308,11 @@ def prepare_training_corpus(docs: DataFrame, *,
             return counted(dropped, "semantic_drops").localCheckpoint(
                 eager=True)
 
-        # SemDeDup (a k-means sample and driver fit, then a Python cell
-        # assignment and within-cluster scan) and the gates (JVM-only)
-        # run concurrently over the same stage, so the gates fill the
-        # cores SemDeDup leaves idle. Each gate judges a row alone and
+        # SemDeDup (a k-means sample and driver fit, then cell
+        # assignment and the within-cluster scan, on the driver when the
+        # sample holds every live embedding) and the gates run
+        # concurrently over the same stage, so each fills the cores the
+        # other leaves idle. Each gate judges a row alone and
         # SemDeDup reads only live ids, so anti-joining the dropped set
         # after the gates keeps exactly the rows of the semantic
         # anti-join followed by the gates. The gated leaf is a plain

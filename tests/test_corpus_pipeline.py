@@ -196,6 +196,46 @@ def test_corpus_pipeline_unpersist_releases_stage_caches(spark,
     assert res.cached == [] and res.checkpoints == []
 
 
+@pytest.mark.parametrize("rows", [[], [(1, None)]])
+def test_empty_day_counts_zero(spark, rows):
+    """An empty day, or one whose every text is NULL, returns its counts
+    and an empty `clean`: AQE prunes a join with an empty side together
+    with any Observation below it, so each count sits where no pruned
+    branch can lose it. With embeddings the live set is empty too, and
+    SemDeDup's sample count must still arrive."""
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    emb = spark.createDataFrame([(1, [1.0, 0.0])],
+                                "doc_id long, embedding array<double>")
+    for embeddings in (None, emb):
+        res = prepare_training_corpus(docs, passage_k=8,
+                                      embeddings=embeddings)
+        try:
+            assert res.clean.count() == 0
+            want = {"input": len(rows), "after_exact_dedup": 0,
+                    "after_near_dedup": 0, "after_passage_dedup": 0,
+                    "clean": 0}
+            if embeddings is not None:
+                want["after_semantic_dedup"] = 0
+            assert res.counts == want
+        finally:
+            res.unpersist()
+
+
+def test_live_docs_without_embeddings_keep_their_counts(spark):
+    """Docs survive but none has a live embedding: SemDeDup sees an
+    empty frame and drops nothing."""
+    docs = spark.createDataFrame([(1, GOOD), (4, GOOD2)],
+                                 "doc_id long, text string")
+    emb = spark.createDataFrame([(7, [1.0, 0.0])],
+                                "doc_id long, embedding array<double>")
+    res = prepare_training_corpus(docs, embeddings=emb)
+    try:
+        assert res.counts["after_semantic_dedup"] == 2
+        assert sorted(r.doc_id for r in res.clean.collect()) == [1, 4]
+    finally:
+        res.unpersist()
+
+
 def test_decontam_via_is_checked_before_any_work(spark):
     docs = spark.createDataFrame([(1, GOOD)], "doc_id long, text string")
     ev = spark.createDataFrame([(9, GOOD2)], "doc_id long, text string")
@@ -358,8 +398,10 @@ def test_prepare_training_corpus_computes_each_stage_once(spark, tmp_path):
     assert reads.value == 2 * len(EVERY_STAGE_DOCS)
     # 102-104 jobs before the stage checkpoints and the clean cache, 76
     # after, 61 before the counts rode jobs that run anyway and the
-    # passage rank probe went, 53 after (local[4])
-    assert prep_jobs + clean_jobs + stats_jobs <= 53
+    # passage rank probe went, 53 before SemDeDup finished on the driver
+    # when its k-means sample holds every live embedding, 48 after
+    # (local[4])
+    assert prep_jobs + clean_jobs + stats_jobs <= 48
     rows = {tuple(r) for r in spark.read.parquet(clean_p).collect()}
     stats = [tuple(r) for r in spark.read.parquet(stats_p).collect()]
     res.unpersist()

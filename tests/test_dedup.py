@@ -415,6 +415,19 @@ def test_semantic_dedup_deterministic_across_partitionings(spark):
         assert a == b
 
 
+def _jobs_in_group(spark, group, fn):
+    """fn()'s result and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_inline_kmeans_training_is_one_spark_job(spark):
     """Training an IVF codebook, and building a SemDeDup plan that
     trains in-line, each run exactly ONE Spark job — the bounded-sample
@@ -427,7 +440,6 @@ def test_inline_kmeans_training_is_one_spark_job(spark):
     )
 
     df = _sem_frame(spark)[0].localCheckpoint(eager=True)
-    sc = spark.sparkContext
     jobs = {}
     for name, build in (
             ("ivf", lambda: train_ivf_centroids(df, "embedding",
@@ -435,15 +447,7 @@ def test_inline_kmeans_training_is_one_spark_job(spark):
             ("semantic", lambda: semantic_dedup(df, "vec_id", "embedding",
                                                 threshold=0.95,
                                                 n_clusters=4))):
-        group = f"kmeans-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            build()
-        finally:
-            for key in ("spark.jobGroup.id", "spark.job.description",
-                        "spark.job.interruptOnCancel"):
-                sc.setLocalProperty(key, None)
-        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+        jobs[name] = _jobs_in_group(spark, f"kmeans-{name}", build)[1]
     assert jobs == {"ivf": 1, "semantic": 1}
 
 
@@ -480,12 +484,16 @@ def test_semantic_dedup_null_vector_names_the_cause(spark):
 
     df, *_, dim = _sem_frame(spark)
     nulls = spark.createDataFrame([(999, None)], df.schema)
-    cents = [[1.0 if i == j else 0.0 for i in range(dim)] for j in range(2)]
-    for frame in (df.unionByName(nulls), nulls):
-        with _pytest.raises(Exception,
-                            match=f"a NULL vector reached a {dim}-dim kernel"):
-            semantic_dedup(frame, "vec_id", "embedding", n_clusters=2,
-                           dim=dim, centroids=cents).collect()
+    fixed = [[1.0 if i == j else 0.0 for i in range(dim)] for j in range(2)]
+    # with a fixed codebook the Arrow kernel raises; trained in-line, the
+    # sample job's NULL count does, before any kernel runs
+    for cents in (fixed, None):
+        for frame in (df.unionByName(nulls), nulls):
+            with _pytest.raises(
+                    Exception,
+                    match=f"a NULL vector reached a {dim}-dim kernel"):
+                semantic_dedup(frame, "vec_id", "embedding", n_clusters=2,
+                               dim=dim, centroids=cents).collect()
 
 
 def test_simhash_lane_overflow_fails_fast(spark):
@@ -513,10 +521,79 @@ def test_semantic_dedup_empty_input_short_circuits(spark):
     from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
 
     empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
-    out = semantic_dedup(empty, "vec_id", "embedding", n_clusters=4)
+    # ONE job: the sample's Observation counts 0 rows, so no emptiness
+    # probe runs after it
+    out, jobs = _jobs_in_group(
+        spark, "semantic-empty",
+        lambda: semantic_dedup(empty, "vec_id", "embedding", n_clusters=4))
+    assert jobs == 1
     assert out.count() == 0
     assert [f.name for f in out.schema.fields] == [
         "vec_id", "cluster_id", "centroid_sim", "keep", "dup_of", "dup_sim"]
+
+
+_PYTHON_PLAN = ("ArrowEvalPython", "FlatMapGroupsInPandas", "PythonRDD")
+
+
+def _plan_text(df) -> str:
+    """The frame's executed plan and the RDD lineage it runs as."""
+    qe = df._jdf.queryExecution()
+    return qe.executedPlan().toString() + qe.toRdd().toDebugString()
+
+
+def _sem_rows(df, **kw):
+    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
+
+    return sorted(map(tuple, semantic_dedup(
+        df, "vec_id", "embedding", **kw).collect()))
+
+
+def test_semantic_dedup_driver_path_equals_distributed(spark):
+    """In-line training on an input no larger than its k-means sample
+    finishes on the driver; its rows (floats included) equal the
+    distributed path's under the same codebook, also when an id
+    repeats, and its frame runs no Python whatever the Arrow setting."""
+    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
+    from serverless_data_pipeline_spark.operators.similarity import (
+        train_ivf_centroids,
+    )
+
+    df, families, _, dim = _sem_frame(spark)
+    # a second row for id 0, near its family: a repeated id
+    twin = df.filter("vec_id = 1").withColumn("vec_id", F.lit(0).cast("long"))
+    for frame in (df, df.unionByName(twin)):
+        for seed in (1, 42):
+            kw = {"threshold": 0.95, "n_clusters": 4, "dim": dim,
+                  "seed": seed, "max_iter": 7}
+            cents = train_ivf_centroids(frame, "embedding", n_cells=4,
+                                        seed=seed, max_iter=7)
+            assert _sem_rows(frame, **kw) == _sem_rows(
+                frame, centroids=cents, **kw)
+    # no Python in the frame, also with the session's Arrow switch off
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    arrow = spark.conf.get(key)
+    try:
+        for on in ("true", "false"):
+            spark.conf.set(key, on)
+            out = semantic_dedup(df, "vec_id", "embedding", threshold=0.95,
+                                 n_clusters=4, dim=dim)
+            plan = _plan_text(out)
+            assert not [n for n in _PYTHON_PLAN if n in plan], plan
+    finally:
+        spark.conf.set(key, arrow)
+
+
+def test_semantic_dedup_above_sample_bound_runs_distributed(spark):
+    """An input larger than the 256-per-cluster k-means sample takes the
+    distributed path: the grouped-map scan is in its plan."""
+    from serverless_data_pipeline_spark.operators.dedup import semantic_dedup
+
+    df = spark.range(257).select(
+        F.col("id").alias("vec_id"),
+        F.array(F.sin("id"), F.cos("id")).alias("embedding"))
+    out = semantic_dedup(df, "vec_id", "embedding", n_clusters=1)
+    assert "FlatMapGroupsInPandas" in _plan_text(out)
+    assert out.count() == 257
 
 
 def test_lsh_plan_scurve_properties():
