@@ -44,7 +44,7 @@ from serverless_data_pipeline_spark.operators.corpus import (
 )
 from serverless_data_pipeline_spark.operators.graph import pagerank
 from serverless_data_pipeline_spark.operators.incremental import (
-    bootstrap_corpus, commit_batch, incremental_dedup,
+    commit_batch, incremental_dedup,
 )
 from serverless_data_pipeline_spark.operators.relational import (
     asof_join, dedupe_latest, range_join, top_k, top_k_per_group,
@@ -2528,10 +2528,11 @@ def _q_x7_corpus_exact(spark, sf):
       (duplicate-trigram ratio, X11) → train-split restriction +
       benchmark decontamination vs the eval split (X10).
     - `incr_b1`/`incr_b2`/`incr_corpus`: the daily-operations path —
-      batch 1 bootstraps a deduped corpus + persisted per-doc index,
-      batch 2 is deduped AGAINST THAT INDEX (never rescanning batch-1
-      text; plan-asserted in tests/test_incremental.py), survivors are
-      merge_upserted and their index rows appended; every doc's staged
+      batch 1 is deduped and committed as the corpus + its persisted
+      per-doc index, batch 2 is deduped AGAINST THAT INDEX (never
+      rescanning batch-1 text; plan-asserted in
+      tests/test_incremental.py), survivors are merge_upserted and
+      their index rows appended; every doc's staged
       verdict plus the merged corpus membership (read back from disk)
       is value-checked.
 
@@ -2542,8 +2543,8 @@ def _q_x7_corpus_exact(spark, sf):
 
     r13 (optimization round, guide §2.6): the two arms are fully
     independent chains of eager construction work — full: exact-dedup
-    checkpoint → shingle-index checkpoint → CC rounds; incr: bootstrap
-    parquet write → index probe → commit write — that used to run
+    checkpoint → shingle-index checkpoint → CC rounds; incr: first
+    commit write → index probe → commit write — that used to run
     sequentially (10.1 s build / 104 jobs of the row's 16.3 s profile
     at sf0.1). They now build concurrently so each chain's barrier
     tails back-fill the other's idle cores. Same frames, same rows."""
@@ -2616,12 +2617,14 @@ def _x7_full(s):
 def _x7_incr(s):
     """The incremental-maintenance arms of x7 (tags incr_b1, incr_b2,
     incr_corpus): the daily-operations sibling of the one-shot
-    pipeline. The corpus is built in TWO landings: batch 1 bootstraps —
-    internal exact dedup (within_batch="exact"; the within-batch
-    pair-graph+CC stage is pytest-pinned and reuses x2's
-    driver-verified machinery) — and is written with its persisted
-    index (fp + shingle-hash sets; the MinHash signal is pytest-pinned,
-    tests/test_incremental.py); batch 2 probes THAT index (exact
+    pipeline. The corpus is built in TWO landings, each committed the
+    same way: batch 1 is probed against no index — internal exact dedup
+    only (within_batch="exact"; the within-batch pair-graph+CC stage is
+    pytest-pinned and reuses x2's driver-verified machinery) — and its
+    commit writes the corpus and creates the persisted index (fp +
+    shingle-hash sets, the signal probe="exact" reads; the MinHash
+    signal is pytest-pinned, tests/test_incremental.py); batch 2 probes
+    THAT index (exact
     fingerprint hits, then exact-Jaccard near-dup hits vs indexed docs
     — corpus text never rescanned, plan-asserted in pytest), dedups
     internally at exact grain, and commit_batch merge_upserts the
@@ -2653,14 +2656,16 @@ def _x7_incr(s):
     # and is pytest-pinned here (tests/test_incremental.py) — running it
     # per-arm would double the row's cost re-verifying what x2/x7-full
     # already verify on this same corpus every round.
-    v1 = bootstrap_corpus(spark, b1, base + "/corpus", base + "/index",
-                          probe="exact", threshold=0.5,
-                          within_batch="exact", store=("shingles",))
+    v1 = incremental_dedup(b1, None, probe="exact", threshold=0.5,
+                           within_batch="exact")
+    # cached, so the commit's two reads and the incr_b1 rows share one
+    # execution of the batch-1 dedup
+    v1.cache()
+    commit_batch(spark, v1, base + "/corpus", base + "/index")
     idx = spark.read.parquet(base + "/index")
     v2 = incremental_dedup(b2, idx, probe="exact", threshold=0.5,
                            within_batch="exact")
-    commit_batch(spark, v2, base + "/corpus", base + "/index",
-                 store=("shingles",))
+    commit_batch(spark, v2, base + "/corpus", base + "/index")
     nq = F.lit(None).cast("double").alias("q_score")
     incr1 = v1.select(F.lit("incr_b1").alias("tag"), "doc_id", nq,
                       F.coalesce("drop_reason", F.lit("kept"))

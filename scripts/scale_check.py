@@ -297,7 +297,7 @@ def main() -> None:
         def _ibuild():
             nonlocal idx
             idx = corpus_index(d, "doc_id", "text",
-                               store=("minhash",)).localCheckpoint(
+                               probe="minhash").localCheckpoint(
                                    eager=True)
         r["incr_index_build"] = timed(_ibuild)
         batch = (docs.limit(2000)

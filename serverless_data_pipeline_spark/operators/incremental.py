@@ -46,9 +46,15 @@ Scale shape per stage (batch B << corpus C):
   signatures, or exact-Jaccard pairs) + connected components over B.
 - commit: one broadcast anti-join merge (merge_upsert) + an APPEND of
   |survivors| index rows holding exactly the signals the index stores
-  (by default the one its probe reads: for ``probe="minhash"`` an index
-  row is an 8-byte id, a 16-byte fp and a 2 x num_hashes-byte sig —
-  |C| x 88 bytes at 32 hashes, ~95 B/doc as snappy parquet).
+  (a new index stores the one its probe reads: for ``probe="minhash"``
+  an index row is an 8-byte id, a 16-byte fp and a 2 x num_hashes-byte
+  sig — |C| x 88 bytes at 32 hashes, ~95 B/doc as snappy parquet).
+
+Day 1 is no special case: with no index yet, a batch is probed against
+nothing (``index=None``: the within-batch stages only) and committed
+like any other; ``merge_upsert`` treats the missing corpus as an empty
+table (but raises if a failed swap left the corpus in its temp dir),
+and the append creates the index.
 
 An index written before fp and sig were packed (a string ``fp``, an
 ``array<long>`` ``sig``) is refused with a ``ValueError`` by
@@ -76,8 +82,8 @@ from serverless_data_pipeline_spark.operators.util import (
     hadoop_fs, release_checkpoint, spread_small_input as _spread,
 )
 
-__all__ = ["corpus_index", "incremental_dedup", "bootstrap_corpus",
-           "commit_batch", "maintenance_stream"]
+__all__ = ["corpus_index", "incremental_dedup", "commit_batch",
+           "maintenance_stream"]
 
 DROP_REASONS = ("exact_index", "exact_batch", "neardup_index",
                 "neardup_batch")
@@ -86,18 +92,11 @@ DROP_REASONS = ("exact_index", "exact_batch", "neardup_index",
 _SIGNAL_COLS = {"minhash": ("sig",), "shingles": ("shset", "sz")}
 
 
-def _checked_store(store: tuple[str, ...]) -> tuple[str, ...]:
-    if not store:
-        raise ValueError("store must request at least one probe signal")
-    unknown = set(store) - set(_SIGNAL_COLS)
-    if unknown:
-        raise ValueError(f"unknown store signals: {sorted(unknown)}")
-    return tuple(store)
-
-
 def _probe_signal(probe: str) -> tuple[str, ...]:
-    """The index signal ``probe`` reads: the default ``store`` of a new
-    index."""
+    """The index signal ``probe`` reads: what a new index stores."""
+    if probe not in ("exact", "minhash"):
+        raise ValueError(f"probe must be 'exact' or 'minhash', got "
+                         f"{probe!r}")
     return ("minhash",) if probe == "minhash" else ("shingles",)
 
 
@@ -162,15 +161,14 @@ def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
 def corpus_index(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", *,
                  num_hashes: int = 32, shingle_n: int = 3,
-                 store: tuple[str, ...] = ("minhash", "shingles"),
-                 ) -> DataFrame:
+                 probe: str = "exact") -> DataFrame:
     """The persisted per-document dedup index frame: one row per corpus
-    document with every signal the incremental probe needs, so the probe
-    NEVER touches corpus text again.
+    document with the signal ``incremental_dedup(probe=...)`` reads, so
+    the probe NEVER touches corpus text again.
 
     Columns: ``id_col``, ``fp`` (the 16-byte binary md5 of
     case/whitespace-normalized text — the X1 exact-dup fingerprint), and
-    per ``store`` member:
+    the ``probe`` signal:
     - ``"minhash"``: ``sig``, ``num_hashes`` 16-bit MinHash values over
       word ``shingle_n``-grams packed into one ``binary`` (see
       ``operators.dedup._minhash_sig``) — the 100 TB probe signal,
@@ -178,23 +176,20 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
       the 8-byte id that is 88 B/doc at 32 hashes (~95 B/doc written as
       snappy parquet; a hex ``fp`` and ``array<long>`` ``sig`` measured
       297 B/doc).
-    - ``"shingles"``: ``shset`` (sorted distinct xxhash64 shingle hashes)
+    - ``"exact"``: ``shset`` (sorted distinct xxhash64 shingle hashes)
       + ``sz`` — supports EXACT-Jaccard probing; ~8 bytes per distinct
-      shingle, i.e. comparable to the compressed text itself. Store it
+      shingle, i.e. comparable to the compressed text itself. Use it
       when exactness matters more than index size (it is also the
-      oracle-checkable mode); at raw 100 TB scale prefer minhash-only.
+      oracle-checkable mode); at raw 100 TB scale prefer minhash.
 
-    One read: a shingle explode and one groupBy(id, fp) feed every
-    stored signal, with no join. Append-only by design: committing a
-    new batch appends its survivors' rows (``commit_batch``), never
-    rewrites existing ones."""
-    store = _checked_store(store)
-    if "minhash" in store and num_hashes < 1:
+    One read: a shingle explode and one groupBy(id, fp), with no join.
+    Append-only by design: committing a new batch appends its
+    survivors' rows (``commit_batch``), never rewrites existing ones."""
+    store = _probe_signal(probe)
+    if probe == "minhash" and num_hashes < 1:
         raise ValueError(f"num_hashes={num_hashes} must be >= 1")
-    return (_features(df.withColumn("__fp", _fp(text_col)),
-                      id_col, "__fp", text_col, store, shingle_n,
-                      num_hashes)
-            .select(id_col, "fp", *_signal_cols(store)))
+    return _index_rows(df, None, id_col, text_col, store, shingle_n,
+                       num_hashes)
 
 
 def _probe_jaccard(cur: DataFrame, index: DataFrame, id_col: str,
@@ -251,19 +246,14 @@ def _carrying(verdicts: DataFrame, run: _Run | None) -> DataFrame:
 def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
            text_col: str, probe: str, threshold: float | None,
            shingle_n: int, num_hashes: int, bands: int,
-           within_batch: bool | str) -> _Run:
+           within_batch: str) -> _Run:
     """``incremental_dedup``'s stages; see there."""
-    if probe not in ("exact", "minhash"):
-        raise ValueError(f"probe must be 'exact' or 'minhash', got "
-                         f"{probe!r}")
-    if isinstance(within_batch, bool):
-        within_batch = "full" if within_batch else "none"
+    signal = _probe_signal(probe)
     if within_batch not in ("full", "exact", "none"):
         raise ValueError(f"within_batch must be 'full', 'exact' or "
                          f"'none', got {within_batch!r}")
     wb_exact = within_batch in ("full", "exact")
     wb_neardup = within_batch == "full"
-    signal = _probe_signal(probe)
     if probe == "minhash":
         _check_bands(num_hashes, bands)
     if index is not None:
@@ -274,7 +264,7 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
         if missing:
             raise ValueError(
                 f"index lacks columns {sorted(missing)} for probe="
-                f"{probe!r} — rebuild with corpus_index(store=...)")
+                f"{probe!r} — rebuild with corpus_index(probe={probe!r})")
     cur = batch.withColumn("__fp", _fp(text_col))
     dropped: list[DataFrame] = []
     features = None
@@ -347,18 +337,20 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
 def _index_rows(survivors: DataFrame, run: _Run | None, id_col: str,
                 text_col: str, store: tuple[str, ...], shingle_n: int,
                 num_hashes: int) -> DataFrame:
-    """The index rows of ``survivors``: their rows of the run's feature
-    leaf when it holds the ``store`` signals computed with the same
-    parameters (no text is read), else ``corpus_index`` over their
-    text."""
+    """The index rows of ``survivors`` holding the ``store`` signals:
+    their rows of the run's feature leaf when it holds those signals
+    computed with the same parameters (no text is read), else one
+    feature pass over their text."""
     if (run is not None and run.features is not None
             and set(store) <= set(run.store)
             and (run.shingle_n, run.num_hashes) == (shingle_n, num_hashes)):
-        return (run.features.join(survivors.select(id_col), id_col,
-                                  "left_semi")
-                .select(id_col, "fp", *_signal_cols(store)))
-    return corpus_index(survivors, id_col, text_col, shingle_n=shingle_n,
-                        num_hashes=num_hashes, store=store)
+        rows = run.features.join(survivors.select(id_col), id_col,
+                                 "left_semi")
+    else:
+        rows = _features(survivors.withColumn("__fp", _fp(text_col)),
+                         id_col, "__fp", text_col, store, shingle_n,
+                         num_hashes)
+    return rows.select(id_col, "fp", *_signal_cols(store))
 
 
 def incremental_dedup(batch: DataFrame, index: DataFrame | None,
@@ -366,7 +358,7 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
                       probe: str = "exact", threshold: float | None = 0.5,
                       shingle_n: int = 3, num_hashes: int = 32,
                       bands: int = 8,
-                      within_batch: bool | str = "full") -> DataFrame:
+                      within_batch: str = "full") -> DataFrame:
     """Dedup a NEW batch against a PERSISTED corpus index without
     rescanning the corpus. Returns ``batch`` + ``drop_reason`` (NULL for
     survivors), with stages applied in this fixed order — each stage only
@@ -381,14 +373,14 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
     4. ``neardup_batch``— non-canonical member of a within-batch near-dup
        component (the X2 pair graph + connected components, min id kept)
 
-    ``index=None`` bootstraps (stages 2 and 4 only — day-1 of a corpus).
+    ``index=None`` probes against nothing (stages 2 and 4 only — day 1
+    of a corpus, committed by ``commit_batch`` like any other day).
     ``threshold=None`` disables both near-dup stages (exact-only mode).
     ``within_batch`` selects the internal-dedup depth: ``"full"`` (both
     stages 2 and 4), ``"exact"`` (stage 2 only — skip the within-batch
     pair graph + CC when the batch's internal near-dups are handled by
     a separate X2 pass, or when probe-vs-index latency matters more),
     ``"none"`` (probe-only, for a batch already deduped upstream).
-    Booleans alias "full"/"none" for compatibility.
 
     ``probe="minhash"`` needs ``bands`` to divide ``num_hashes``, and an
     index that predates packed signatures (a string ``fp``, an
@@ -409,41 +401,6 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
     return _carrying(run.verdicts, run)
 
 
-def bootstrap_corpus(spark, batch: DataFrame, corpus_path: str,
-                     index_path: str, id_col: str = "doc_id",
-                     text_col: str = "text", *, probe: str = "exact",
-                     threshold: float | None = 0.5, shingle_n: int = 3,
-                     num_hashes: int = 32, bands: int = 8,
-                     within_batch: bool | str = "full",
-                     store: tuple[str, ...] | None = None,
-                     ) -> DataFrame:
-    """Day-1: dedup the first batch internally, write it as the corpus,
-    build its index. Returns the verdict frame (batch + drop_reason), a
-    checkpoint the caller owns (``operators.util.release_checkpoint``).
-
-    ``store`` (the index signals, see ``corpus_index``) defaults to the
-    one ``probe`` reads: ``sig`` for ``"minhash"``, ``shset``/``sz`` for
-    ``"exact"``. Probing the index later with the other ``probe`` needs
-    an index rebuilt with an explicit ``store`` holding its signal."""
-    store = _probe_signal(probe) if store is None else _checked_store(store)
-    run = _dedup(batch, None, id_col, text_col, probe, threshold,
-                 shingle_n, num_hashes, bands, within_batch)
-    # compute ONCE: the survivors write below and whatever the caller
-    # does with the returned frame (maintenance_stream writes the
-    # verdict audit log) must share one execution of the within-batch
-    # dedup — un-checkpointed, the pair graph + CC would re-run per
-    # consumer (the non-bootstrap tick checkpoints for the same reason)
-    verdicts = run.verdicts.localCheckpoint(eager=True)
-    survivors = verdicts.filter(F.col("drop_reason").isNull()) \
-        .drop("drop_reason")
-    survivors.write.mode("overwrite").parquet(corpus_path)
-    _index_rows(survivors, run, id_col, text_col, store, shingle_n,
-                num_hashes).write.mode("overwrite").parquet(index_path)
-    for leaf in run.leaves:
-        release_checkpoint(leaf)
-    return verdicts
-
-
 def _stored_signals(spark, index_path: str) -> tuple[str, ...] | None:
     """The signals the index at ``index_path`` holds (None: no index);
     raises on an index that predates packed signatures."""
@@ -459,37 +416,39 @@ def _stored_signals(spark, index_path: str) -> tuple[str, ...] | None:
 def commit_batch(spark, verdicts: DataFrame, corpus_path: str,
                  index_path: str, id_col: str = "doc_id",
                  text_col: str = "text", *, shingle_n: int = 3,
-                 num_hashes: int = 32,
-                 store: tuple[str, ...] | None = None) -> int:
-    """Day-N commit: merge the batch's survivors into the corpus
-    (merge_upsert — idempotent under re-delivery) and APPEND their index
-    rows. Returns the merged corpus row count. The index append writes
-    |survivors| rows; nothing existing is rewritten.
+                 num_hashes: int = 32) -> int:
+    """Commit a batch: merge its survivors into the corpus (merge_upsert
+    — idempotent under re-delivery) and APPEND their index rows. Returns
+    the merged corpus row count. The index append writes |survivors|
+    rows; nothing existing is rewritten. Every batch commits this way,
+    the first one included: with no corpus yet, the merge writes the
+    survivors, and the append creates the index.
 
-    The appended rows hold exactly the signals the persisted index
-    holds: ``store=None`` reads them from the index's columns (an index
-    built with the old two-signal default keeps getting both), and an
-    explicit ``store`` that disagrees raises ``ValueError`` before
-    anything is written — one index directory never mixes two schemas;
-    so does an index that predates packed signatures (a string ``fp``
-    or ``array<long>`` ``sig``; rebuild it with ``corpus_index``).
-    With no index at ``index_path`` yet, ``store=None`` stores both
-    signals. Given ``incremental_dedup``'s own frame, the rows come from
-    its feature checkpoint; any other frame is shingled from its text."""
+    The appended rows hold exactly the signals the persisted index holds
+    (an index written with both signals keeps getting both), so one
+    index directory never mixes two schemas. With no index at
+    ``index_path`` yet, they hold the signal the run's probe reads, so
+    ``verdicts`` must then be ``incremental_dedup``'s own frame: any
+    other frame raises ``ValueError`` before anything is written, as
+    does an index that predates packed signatures (a string ``fp`` or
+    ``array<long>`` ``sig``; rebuild it with ``corpus_index``). Given
+    ``incremental_dedup``'s own frame, the rows come from its feature
+    checkpoint; any other frame is shingled from its text."""
     from serverless_data_pipeline_spark.sources.writers import merge_upsert
-    held = _stored_signals(spark, index_path)
+    run = _run_of(verdicts)
+    store = _stored_signals(spark, index_path)
     if store is None:
-        store = held or ("minhash", "shingles")
-    store = _checked_store(store)
-    if held is not None and set(store) != set(held):
-        raise ValueError(
-            f"store {sorted(store)} disagrees with the index at "
-            f"{index_path}, which holds {sorted(held)}")
+        if run is None:
+            raise ValueError(
+                f"no index at {index_path}, and the verdicts are not "
+                f"incremental_dedup's own frame, so the probe signal a "
+                f"new index should store is unknown")
+        store = run.store
     survivors = verdicts.filter(F.col("drop_reason").isNull()) \
         .drop("drop_reason")
     n = merge_upsert(spark, corpus_path, survivors, keys=[id_col])
-    _index_rows(survivors, _run_of(verdicts), id_col, text_col, store,
-                shingle_n, num_hashes).write.mode("append").parquet(index_path)
+    _index_rows(survivors, run, id_col, text_col, store, shingle_n,
+                num_hashes).write.mode("append").parquet(index_path)
     return n
 
 
@@ -501,8 +460,7 @@ def maintenance_stream(spark, landing_path: str, schema,
                        threshold: float | None = 0.5,
                        shingle_n: int = 3, num_hashes: int = 32,
                        bands: int = 8,
-                       within_batch: bool | str = "full",
-                       store: tuple[str, ...] | None = None,
+                       within_batch: str = "full",
                        verdict_path: str | None = None,
                        available_now: bool = True,
                        interval_s: float = 3600.0,
@@ -512,23 +470,23 @@ def maintenance_stream(spark, landing_path: str, schema,
 
     Each tick's micro-batch is exactly the files landed since the last
     tick (checkpointed file source — restart-safe, never re-reads old
-    landings). The first-ever tick bootstraps the corpus + index
-    (`bootstrap_corpus`); every later tick probes the PERSISTED index
-    (corpus text is never rescanned), drops duplicates, merges the
-    survivors (`commit_batch` — merge_upsert keyed on ``id_col``, so
-    the at-least-once foreachBatch contract is safe: a re-delivered
-    tick re-drops everything as `exact_index` and merges nothing new),
-    and appends the survivors' index rows. Optionally appends a
-    per-tick verdict audit log (id, drop_reason, tick_id) to
-    ``verdict_path`` — the ops trail of WHY each landed doc was kept or
-    dropped.
+    landings). Every tick runs the same two steps: it probes the
+    PERSISTED index (`incremental_dedup`; corpus text is never
+    rescanned, and before the first commit there is no index, so the
+    batch is only deduped internally), then merges the survivors and
+    appends their index rows (`commit_batch` — merge_upsert keyed on
+    ``id_col``, so the at-least-once foreachBatch contract is safe: a
+    re-delivered tick re-drops everything as `exact_index` and merges
+    nothing new). Optionally appends a per-tick verdict audit log (id,
+    drop_reason, tick_id) to ``verdict_path`` — the ops trail of WHY
+    each landed doc was kept or dropped.
 
-    ``store=None`` builds the index with the signal ``probe`` reads
-    (``sig`` for ``"minhash"``, ``shset``/``sz`` for ``"exact"``) and
-    then appends whatever the existing index holds, so an index built
-    with the old two-signal default keeps working unchanged. Switching
-    ``probe`` later needs an index rebuilt with an explicit ``store``
-    that holds the new probe's signal (``corpus_index``).
+    The first commit builds the index with the signal ``probe`` reads
+    (``sig`` for ``"minhash"``, ``shset``/``sz`` for ``"exact"``); later
+    ticks append whatever the existing index holds, so an index written
+    with both signals keeps working unchanged. Switching ``probe`` later
+    needs an index that holds the new probe's signal (rebuild it with
+    ``corpus_index``).
 
     A tick shingles each landed doc that survives the exact stages once:
     the index probe, the within-batch pairs and the index append all
@@ -551,44 +509,29 @@ def maintenance_stream(spark, landing_path: str, schema,
         scheduled_batch_query,
     )
 
-    def _exists(path: str) -> bool:
-        fs, jpath = hadoop_fs(spark, path)
-        return fs.exists(jpath)
-
     def _tick(batch_df, tick_id: int) -> None:
         if batch_df.isEmpty():
             return
-        if not _exists(index_path):
-            verdicts = bootstrap_corpus(
-                spark, batch_df, corpus_path, index_path, id_col,
-                text_col, probe=probe, threshold=threshold,
-                shingle_n=shingle_n, num_hashes=num_hashes,
-                bands=bands, within_batch=within_batch, store=store)
-            leaves = []
-        else:
-            idx = spark.read.parquet(index_path)
-            found = incremental_dedup(
-                batch_df, idx, id_col, text_col, probe=probe,
-                threshold=threshold, shingle_n=shingle_n,
-                num_hashes=num_hashes, bands=bands,
-                within_batch=within_batch)
-            run = _run_of(found)
-            leaves = run.leaves if run is not None else []
-            # audit log must see the same verdicts commit acts on, not
-            # recompute them against a by-then-mutated index
-            verdicts = _carrying(found.localCheckpoint(eager=True), run)
-            commit_batch(spark, verdicts, corpus_path, index_path,
-                         id_col, text_col, shingle_n=shingle_n,
-                         num_hashes=num_hashes, store=store)
+        fs, jpath = hadoop_fs(spark, index_path)
+        idx = spark.read.parquet(index_path) if fs.exists(jpath) else None
+        found = incremental_dedup(
+            batch_df, idx, id_col, text_col, probe=probe,
+            threshold=threshold, shingle_n=shingle_n,
+            num_hashes=num_hashes, bands=bands, within_batch=within_batch)
+        run = _run_of(found)
+        # audit log must see the same verdicts commit acts on, not
+        # recompute them against a by-then-mutated index
+        verdicts = _carrying(found.localCheckpoint(eager=True), run)
+        commit_batch(spark, verdicts, corpus_path, index_path, id_col,
+                     text_col, shingle_n=shingle_n, num_hashes=num_hashes)
         if verdict_path is not None:
             (verdicts.select(F.col(id_col), F.col("drop_reason"),
                              F.lit(tick_id).alias("tick_id"))
              .write.mode("append").parquet(verdict_path))
-        for leaf in [verdicts, *leaves]:
+        for leaf in [verdicts, *run.leaves]:
             release_checkpoint(leaf)
 
     return scheduled_batch_query(
         spark, landing_path, schema, _tick, checkpoint,
         interval_s=interval_s, fmt=fmt, available_now=available_now,
         max_files_per_tick=max_files_per_tick)
-

@@ -92,12 +92,9 @@ def prepare_training_corpus(docs: DataFrame, *,
                             semantic_threshold: float = 0.9,
                             semantic_clusters: int = 16,
                             semantic_dim: int | None = None,
-                            semantic_centroids: list | None = None,
                             max_dup_ngram_ratio: float | None = None,
                             eval_docs: DataFrame | None = None,
                             decontam_ngram: int = 5,
-                            decontam_via: str = "broadcast",
-                            decontam_bloom_bits: int = 1 << 28,
                             collect_counts: bool = True) -> CorpusResult:
     """docs(doc_id, text, ...) -> deduped, language- and quality-filtered
     corpus + per-language token statistics.
@@ -117,24 +114,22 @@ def prepare_training_corpus(docs: DataFrame, *,
     are removed (docs without an embedding row are kept). SemDeDup reads
     only the embeddings of docs STILL ALIVE after the passage stage —
     running it over stale rows would let an already-removed doc win a
-    semantic family and delete every surviving copy. Without
-    `semantic_centroids` the codebook is trained in-line: one Spark job
-    (a bounded sample of at most 256 x `semantic_clusters` live
-    embeddings, fitted on the driver; deterministic under any
-    partitioning). When the live embeddings fit in that sample, the
-    cell assignment and within-cluster scan run on the driver over it
-    too: no shuffle and no Python worker (see `semantic_dedup`). At
-    scale pass `semantic_centroids` from one offline training.
+    semantic family and delete every surviving copy. The codebook is
+    trained in-line: one Spark job (a bounded sample of at most 256 x
+    `semantic_clusters` live embeddings, fitted on the driver;
+    deterministic under any partitioning). When the live embeddings fit
+    in that sample, the cell assignment and within-cluster scan run on
+    the driver over it too: no shuffle and no Python worker (see
+    `semantic_dedup`). A codebook trained offline goes to
+    `semantic_dedup(centroids=...)` directly.
 
     `max_dup_ngram_ratio` (X11) adds the repetition gate: drop docs whose
     duplicate-trigram ratio exceeds the bound (narrow pass, no shuffle).
     `eval_docs` (X10) adds benchmark decontamination as the final stage:
     drop any surviving doc sharing a distinct `decontam_ngram`-gram with
     the eval set (eval shingles broadcast; the corpus never shuffles).
-    `decontam_via="bloom"` swaps in `bloom_decontaminate` with a
-    `decontam_bloom_bits`-bit bitmap — the shape for an eval set whose
-    raw shingle frame outgrows a broadcast; error is one-sided (may
-    over-drop at the Bloom FP rate, never leaks eval data into train).
+    An eval set whose raw shingle frame outgrows a broadcast goes
+    through `operators.corpus.bloom_decontaminate` on `clean` instead.
     Both stages mirror __spark_entry__.py's oracle-checked x7 pipeline.
 
     Each stage boundary is computed once. The exact- and near-dup
@@ -167,9 +162,6 @@ def prepare_training_corpus(docs: DataFrame, *,
     size of the dropped-id leaf (an `Observation` on its checkpoint;
     ids key docs). No stage runs just to be counted. All of these are
     CALLER-owned (see `CorpusResult`)."""
-    if decontam_via not in ("broadcast", "bloom"):
-        raise ValueError(f"decontam_via must be 'broadcast' or "
-                         f"'bloom', got {decontam_via!r}")
     # Each count rides a job that runs anyway: an Observation on the
     # frame a checkpoint job materializes sees each of its rows once.
     seen: dict[str, Observation] = {}
@@ -277,15 +269,10 @@ def prepare_training_corpus(docs: DataFrame, *,
 
     if eval_docs is not None:
         from serverless_data_pipeline_spark.operators.corpus import (
-            bloom_decontaminate, decontaminate,
+            decontaminate,
         )
-        if decontam_via == "bloom":
-            flagged = bloom_decontaminate(clean, eval_docs, id_col,
-                                          text_col, n=decontam_ngram,
-                                          m_bits=decontam_bloom_bits)
-        else:
-            flagged = decontaminate(clean, eval_docs, id_col, text_col,
-                                    n=decontam_ngram)
+        flagged = decontaminate(clean, eval_docs, id_col, text_col,
+                                n=decontam_ngram)
         clean = (flagged.filter(~F.col("contaminated"))
                  .drop("n_overlap", "contaminated"))
 
@@ -302,8 +289,7 @@ def prepare_training_corpus(docs: DataFrame, *,
             dropped = (semantic_dedup(live_emb, id_col, "embedding",
                                       threshold=semantic_threshold,
                                       n_clusters=semantic_clusters,
-                                      dim=semantic_dim,
-                                      centroids=semantic_centroids)
+                                      dim=semantic_dim)
                        .filter(~F.col("keep")).select(id_col).distinct())
             return counted(dropped, "semantic_drops").localCheckpoint(
                 eager=True)

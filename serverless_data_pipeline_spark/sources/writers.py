@@ -9,7 +9,7 @@ second output (py:105-110, py:268).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from serverless_data_pipeline_spark.config import DEFAULT_CONFIG, EngineConfig
@@ -148,15 +148,32 @@ def merge_upsert(spark, target_path: str, updates: DataFrame,
     discipline as StateTable.compact). At real lake scale prefer a
     table format (Delta/Iceberg) whose MERGE rewrites only matching files;
     this is the format-free equivalent with whole-table rewrite cost.
-    Returns the merged row count."""
-    target = spark.read.parquet(target_path)
-    merged = (target.join(F.broadcast(updates.select(*keys)), keys,
-                          "left_anti")
-                    .unionByName(updates))
+    Returns the merged row count, counted by an ``Observation`` on the
+    write (so the swapped-in table is not read back).
+
+    A missing target counts as an empty table, and the merge writes
+    ``updates`` -- unless ``<target>__merge`` is there: a failed swap
+    leaves the whole table only in that dir (``swap_into_place``), so
+    then this raises, naming it, rather than overwrite it with
+    ``updates`` alone."""
+    from serverless_data_pipeline_spark.operators.util import hadoop_fs
+    fs, jpath = hadoop_fs(spark, target_path)
     tmp = target_path.rstrip("/") + "__merge"
-    merged.write.mode("overwrite").parquet(tmp)
+    if fs.exists(jpath):
+        merged = (spark.read.parquet(target_path)
+                  .join(F.broadcast(updates.select(*keys)), keys, "left_anti")
+                  .unionByName(updates))
+    elif fs.exists(hadoop_fs(spark, tmp)[1]):
+        raise RuntimeError(f"no table at {target_path}, but {tmp} is left "
+                           f"from a failed swap and may hold it; move it "
+                           f"into place before merging")
+    else:
+        merged = updates
+    written = Observation()
+    merged.observe(written, F.count(F.lit(1)).alias("n")) \
+        .write.mode("overwrite").parquet(tmp)
     swap_into_place(spark, tmp, target_path)
-    return spark.read.parquet(target_path).count()
+    return written.get["n"]
 
 
 def delete_expired_partitions(spark, path: str, cutoff_date: str) -> int:

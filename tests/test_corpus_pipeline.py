@@ -77,19 +77,6 @@ def test_corpus_pipeline_repetition_and_decontamination_stages(spark):
                                    collect_counts=False)
     assert sorted(r.doc_id for r in full.clean.collect()) == [2]
 
-    # the Bloom scale path must drop the same contaminated doc (and at a
-    # sane bitmap size, ONLY that doc — zero false positives here)
-    bloom = prepare_training_corpus(res_docs, languages=("en",),
-                                    min_quality=0.5, jaccard_threshold=0.5,
-                                    max_dup_ngram_ratio=0.5, eval_docs=ev,
-                                    decontam_via="bloom",
-                                    collect_counts=False)
-    assert sorted(r.doc_id for r in bloom.clean.collect()) == [2]
-    with pytest.raises(ValueError):
-        prepare_training_corpus(res_docs, eval_docs=ev,
-                                decontam_via="nope",
-                                collect_counts=False)
-
 
 def test_corpus_pipeline_passage_and_semantic_stages(spark):
     boiler = " ".join(f"b{i}" for i in range(8))
@@ -234,18 +221,6 @@ def test_live_docs_without_embeddings_keep_their_counts(spark):
         assert sorted(r.doc_id for r in res.clean.collect()) == [1, 4]
     finally:
         res.unpersist()
-
-
-def test_decontam_via_is_checked_before_any_work(spark):
-    docs = spark.createDataFrame([(1, GOOD)], "doc_id long, text string")
-    ev = spark.createDataFrame([(9, GOOD2)], "doc_id long, text string")
-    tracker = spark.sparkContext.statusTracker()
-    for eval_docs in (ev, None):
-        jobs = set(tracker.getJobIdsForGroup())
-        with pytest.raises(ValueError, match="decontam_via"):
-            prepare_training_corpus(docs, eval_docs=eval_docs,
-                                    decontam_via="nope")
-        assert set(tracker.getJobIdsForGroup()) == jobs
 
 
 BOILER = " ".join(f"b{i}" for i in range(8))

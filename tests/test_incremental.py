@@ -5,11 +5,14 @@ re-delivery."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from serverless_data_pipeline_spark.operators.incremental import (
-    bootstrap_corpus, commit_batch, corpus_index, incremental_dedup,
+    commit_batch, corpus_index, incremental_dedup,
 )
 
 
@@ -19,6 +22,19 @@ def _docs(spark, rows):
 
 def _verdicts(df):
     return {r.doc_id: r.drop_reason for r in df.collect()}
+
+
+def _first_commit(spark, rows, corpus_dir, index_dir, **kw):
+    """Day 1: dedup ``rows`` against no index and commit them."""
+    commit_batch(spark, incremental_dedup(_docs(spark, rows), None, **kw),
+                 corpus_dir, index_dir)
+
+
+def _two_signal_index(df):
+    """An index holding both signals, as every index held them before a
+    new index stored only the signal its probe reads."""
+    return corpus_index(df, probe="minhash").join(
+        corpus_index(df, probe="exact").drop("fp"), "doc_id")
 
 
 BASE = ("spark engines shuffle data across partitions during wide "
@@ -64,7 +80,7 @@ def test_neardup_probe_drops_cross_batch_copies(spark, probe):
                        (12, "brand new content on mountain weather "
                             "patterns and alpine climbing routes "
                             "yesterday")])             # near-dup of 11
-    idx = corpus_index(b1)
+    idx = corpus_index(b1, probe=probe)
     v = _verdicts(incremental_dedup(b2, idx, probe=probe, threshold=0.5))
     assert v[10] == "neardup_index"
     assert v[11] is None
@@ -93,12 +109,13 @@ def test_probe_reads_index_only_never_corpus_text(spark, tmp_path):
 def test_commit_then_redeliver_is_idempotent(spark, tmp_path):
     """After commit_batch, the index contains the survivors — re-probing
     the SAME batch drops every row as exact_index (redelivery safety,
-    py:133-137), and the merged corpus equals bootstrap + survivors."""
+    py:133-137), and the merged corpus equals the first commit +
+    survivors."""
     corpus_dir = str(tmp_path / "c")
     index_dir = str(tmp_path / "i")
-    b1 = _docs(spark, [(1, "alpha one two three"),
-                       (2, "beta four five six")])
-    bootstrap_corpus(spark, b1, corpus_dir, index_dir, threshold=None)
+    _first_commit(spark, [(1, "alpha one two three"),
+                          (2, "beta four five six")],
+                  corpus_dir, index_dir, threshold=None)
     n_idx_before = spark.read.parquet(index_dir).count()
     b2 = _docs(spark, [(10, "gamma seven eight nine"),
                        (11, "alpha one two three")])   # dup of corpus 1
@@ -118,16 +135,14 @@ def test_commit_then_redeliver_is_idempotent(spark, tmp_path):
 
 def test_index_validation_and_store_options(spark):
     df = _docs(spark, [(1, "a b c d e f g h")])
-    with pytest.raises(ValueError):
-        corpus_index(df, store=())
-    with pytest.raises(ValueError):
-        corpus_index(df, store=("bogus",))
-    mh_only = corpus_index(df, store=("minhash",))
+    with pytest.raises(ValueError, match="probe must be"):
+        corpus_index(df, probe="bogus")
+    mh_only = corpus_index(df, probe="minhash")
     assert set(mh_only.columns) == {"doc_id", "fp", "sig"}
     with pytest.raises(ValueError):
         # exact probe needs shset/sz
         incremental_dedup(df, mh_only, probe="exact").collect()
-    sh_only = corpus_index(df, store=("shingles",))
+    sh_only = corpus_index(df, probe="exact")
     assert set(sh_only.columns) == {"doc_id", "fp", "shset", "sz"}
     with pytest.raises(ValueError):
         incremental_dedup(df, sh_only, probe="minhash").collect()
@@ -140,24 +155,26 @@ def test_minhash_and_exact_probe_agree_on_planted_fixture(spark):
     cheap signature probe and the exact-Jaccard probe reach identical
     verdicts."""
     b1 = _docs(spark, [(i, f"{BASE} variant {i}") for i in range(4)])
-    idx = corpus_index(b1)
     b2 = _docs(spark, [(10, BASE + " variant 99")] +
                [(20 + i, f"doc {i} " +
                  " ".join(f"tok{i}_{j}" for j in range(15)))
                 for i in range(4)])
-    ve = _verdicts(incremental_dedup(b2, idx, probe="exact"))
-    vm = _verdicts(incremental_dedup(b2, idx, probe="minhash"))
+    ve = _verdicts(incremental_dedup(b2, corpus_index(b1, probe="exact"),
+                                     probe="exact"))
+    vm = _verdicts(incremental_dedup(b2, corpus_index(b1, probe="minhash"),
+                                     probe="minhash"))
     assert ve == vm
     assert ve[10] == "neardup_index"
     assert all(ve[20 + i] is None for i in range(4))
 
 
 def test_maintenance_stream_bootstrap_probe_and_audit(spark, tmp_path):
-    """The composed daily-ops loop: tick 1 bootstraps the corpus+index
-    from landing batch 1; tick 2 sees ONLY batch 2 (checkpointed file
-    source), probes the persisted index, merges survivors, and appends
-    the audit trail. End state equals the staged-semantics expectation
-    of the batch-side operators it composes."""
+    """The composed daily-ops loop: tick 1 commits landing batch 1 as
+    the corpus + index, like any tick but against no index; tick 2 sees
+    ONLY batch 2 (checkpointed file source), probes the persisted index,
+    merges survivors, and appends the audit trail. End state equals the
+    staged-semantics expectation of the batch-side operators it
+    composes."""
     import json
 
     from pyspark.sql import types as T
@@ -251,8 +268,13 @@ MH_VERDICTS = {
 @pytest.mark.parametrize("store", [("minhash",), ("minhash", "shingles")])
 @pytest.mark.parametrize("against", ["index", "none"])
 def test_minhash_verdicts_on_every_drop_reason(spark, against, store):
-    idx = (corpus_index(_docs(spark, MH_INDEX), store=store)
-           if against == "index" else None)
+    """The minhash probe reaches the same verdicts against an index that
+    holds only signatures and one that also holds shingle sets."""
+    index = _docs(spark, MH_INDEX)
+    idx = None
+    if against == "index":
+        idx = (corpus_index(index, probe="minhash") if len(store) == 1
+               else _two_signal_index(index))
     v = incremental_dedup(_docs(spark, MH_BATCH), idx, probe="minhash")
     assert _verdicts(v) == MH_VERDICTS[against]
 
@@ -296,8 +318,7 @@ def test_tick_shingles_each_survivor_once_and_probes_once(
     survivors' rows of that checkpoint) and the index signatures are read
     by one probe execution, however often the verdicts are read."""
     corpus_dir, index_dir = str(tmp_path / "c"), str(tmp_path / "i")
-    bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir, index_dir,
-                     probe="minhash")
+    _first_commit(spark, MH_INDEX, corpus_dir, index_dir, probe="minhash")
     texts = _count_text_passes(spark, monkeypatch)
     sigs = spark.sparkContext.accumulator(0)
 
@@ -328,10 +349,11 @@ def test_tick_shingles_each_survivor_once_and_probes_once(
 
 
 def test_commit_appends_the_signals_the_index_holds(spark, tmp_path):
-    """The default store follows the probe at bootstrap and the persisted
-    index at commit, so every index file has one schema; an explicit
-    store that disagrees with the index raises before anything is
-    written."""
+    """A new index stores the signal its probe reads and every commit
+    appends what the persisted index holds, so every index file has one
+    schema. With no index yet, a frame that is not incremental_dedup's
+    raises before anything is written: nothing says which signal the
+    new index should store."""
     import glob
 
     b2 = _docs(spark, MH_BATCH)
@@ -339,24 +361,19 @@ def test_commit_appends_the_signals_the_index_holds(spark, tmp_path):
                         ("exact", {"doc_id", "fp", "shset", "sz"})):
         corpus_dir = str(tmp_path / probe / "c")
         index_dir = str(tmp_path / probe / "i")
-        bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir,
-                         index_dir, probe=probe)
+        _first_commit(spark, MH_INDEX, corpus_dir, index_dir, probe=probe)
         v = incremental_dedup(b2, spark.read.parquet(index_dir),
                               probe=probe)
-        with pytest.raises(ValueError, match="disagrees with the index"):
-            commit_batch(spark, v, corpus_dir, index_dir,
-                         store=("minhash", "shingles"))
-        assert spark.read.parquet(corpus_dir).count() == len(MH_INDEX)
         commit_batch(spark, v, corpus_dir, index_dir)
         files = glob.glob(index_dir + "/*.parquet")
         assert len(files) > 1
         assert all(set(spark.read.parquet(f).columns) == cols
                    for f in files)
-    # an index built with both signals keeps getting both
+    # an index written with both signals keeps getting both
     corpus_dir, index_dir = str(tmp_path / "both" / "c"), \
         str(tmp_path / "both" / "i")
-    bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir, index_dir,
-                     probe="minhash", store=("minhash", "shingles"))
+    _docs(spark, MH_INDEX).write.parquet(corpus_dir)
+    _two_signal_index(_docs(spark, MH_INDEX)).write.parquet(index_dir)
     v = incremental_dedup(b2, spark.read.parquet(index_dir),
                           probe="minhash")
     commit_batch(spark, v, corpus_dir, index_dir)
@@ -367,6 +384,65 @@ def test_commit_appends_the_signals_the_index_holds(spark, tmp_path):
         b2, spark.read.parquet(index_dir), probe="exact"))
     assert all(again[i] == "exact_index" for i, r in _verdicts(v).items()
                if r is None)
+    # no index, and a frame that does not carry incremental_dedup's run
+    plain = b2.withColumn("drop_reason", F.lit(None).cast("string"))
+    for verdicts in (plain, incremental_dedup(b2, None).localCheckpoint()):
+        with pytest.raises(ValueError,
+                           match="not incremental_dedup's own frame"):
+            commit_batch(spark, verdicts, str(tmp_path / "new" / "c"),
+                         str(tmp_path / "new" / "i"))
+    assert not (tmp_path / "new").exists()
+
+
+@pytest.mark.parametrize("crash_at", [0, 1])
+def test_tick_crashed_after_the_corpus_commit_redelivers_cleanly(
+        spark, tmp_path, monkeypatch, crash_at):
+    """A tick whose index append fails after its corpus merge landed
+    (on the first tick, and on a later one), then re-delivered: the
+    corpus ids stay unique and equal an uninterrupted run's, the index
+    holds exactly the corpus ids, and the retried tick reaches the
+    uninterrupted run's verdicts."""
+    batches = [MH_INDEX, MH_BATCH]
+
+    def tick(corpus_dir, index_dir, rows):
+        idx = (spark.read.parquet(index_dir) if os.path.exists(index_dir)
+               else None)
+        v = incremental_dedup(_docs(spark, rows), idx, probe="minhash")
+        got = _verdicts(v)
+        commit_batch(spark, v, corpus_dir, index_dir)
+        return got
+
+    def ids(path):
+        return sorted(r.doc_id for r in spark.read.parquet(path).collect())
+
+    def run(name, crash):
+        corpus_dir = str(tmp_path / name / "c")
+        index_dir = str(tmp_path / name / "i")
+        verdicts = []
+        for i, rows in enumerate(batches):
+            if i == crash:
+                real = DataFrameWriter.parquet
+
+                def failing(self, path, *args, **kwargs):
+                    if path == index_dir:
+                        raise OSError("index append lost")
+                    return real(self, path, *args, **kwargs)
+
+                with monkeypatch.context() as m:
+                    m.setattr(DataFrameWriter, "parquet", failing)
+                    with pytest.raises(OSError, match="index append lost"):
+                        tick(corpus_dir, index_dir, rows)
+                assert os.path.exists(corpus_dir)
+            verdicts.append(tick(corpus_dir, index_dir, rows))
+        return verdicts, ids(corpus_dir), ids(index_dir)
+
+    want_verdicts, want_corpus, want_index = run("clean", None)
+    assert want_verdicts[1] == MH_VERDICTS["index"]
+    verdicts, corpus, index = run("crashed", crash_at)
+    assert len(set(corpus)) == len(corpus)
+    assert corpus == want_corpus
+    assert index == corpus == want_index
+    assert verdicts == want_verdicts
 
 
 def test_minhash_stream_stores_signatures_and_releases_its_checkpoints(
@@ -374,7 +450,7 @@ def test_minhash_stream_stores_signatures_and_releases_its_checkpoints(
     """maintenance_stream(probe="minhash"): each tick tokenizes each exact
     survivor once (the commit appends index rows from the feature pass),
     the index holds exactly {doc_id, fp, sig} in every file, and neither
-    the bootstrap tick nor a probe tick leaves a persisted RDD behind."""
+    the first tick nor a later tick leaves a persisted RDD behind."""
     import glob
     import json
 
@@ -426,7 +502,7 @@ def test_index_stores_packed_fp_and_signature(spark):
 
     for num_hashes in (32, 16):
         idx = corpus_index(_docs(spark, MH_INDEX + [(9, "")]),
-                           num_hashes=num_hashes, store=("minhash",))
+                           num_hashes=num_hashes, probe="minhash")
         assert isinstance(idx.schema["fp"].dataType, BinaryType)
         assert isinstance(idx.schema["sig"].dataType, BinaryType)
         got = {r.doc_id: (r.fp_len, r.sig_len) for r in idx.select(
@@ -446,8 +522,7 @@ def test_old_format_index_raises_before_any_write(spark, tmp_path, old):
     import glob
 
     corpus_dir, index_dir = str(tmp_path / "c"), str(tmp_path / "i")
-    bootstrap_corpus(spark, _docs(spark, MH_INDEX), corpus_dir, index_dir,
-                     probe="minhash")
+    _first_commit(spark, MH_INDEX, corpus_dir, index_dir, probe="minhash")
     b2 = _docs(spark, MH_BATCH)
     verdicts = incremental_dedup(b2, spark.read.parquet(index_dir),
                                  probe="minhash")
@@ -483,7 +558,7 @@ def test_bands_must_divide_num_hashes(spark):
             incremental_dedup(df, None, probe="minhash",
                               num_hashes=num_hashes, bands=bands)
     with pytest.raises(ValueError, match="num_hashes=0"):
-        corpus_index(df, num_hashes=0)
+        corpus_index(df, num_hashes=0, probe="minhash")
     # 30 hashes split evenly into 5 bands of 6
     assert incremental_dedup(df, None, probe="minhash", num_hashes=30,
                              bands=5).count() == len(MH_BATCH)

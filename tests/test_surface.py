@@ -1,5 +1,7 @@
 """Every public top-level name in the package is reached from a user path,
-or is listed in ``UNREACHED`` with the reason it stays.
+or is listed in ``UNREACHED`` with the reason it stays; and every optional
+parameter of the corpus drivers is set by a user path, or is listed in
+``UNSET_OPTIONS`` with the reason it stays.
 
 Roots are what users run: ``__spark_entry__.py``, ``bench.py``,
 ``scripts/`` and ``perfbench/`` (its self-tests excluded). Tests are not
@@ -47,6 +49,47 @@ UNREACHED = {
     "streaming.monitor.liveness_alarm": "stream liveness alarm",
 }
 
+# the corpus drivers whose optional parameters are guarded, by module
+DRIVERS = {
+    "operators.incremental": ("corpus_index", "incremental_dedup",
+                              "commit_batch", "maintenance_stream"),
+    "plans.corpus_pipeline": ("prepare_training_corpus",),
+}
+
+_COLUMN = "names an input column"
+_MINHASH = "the MinHash shape; must match the index it probes or extends"
+UNSET_OPTIONS = {
+    "corpus_index.num_hashes": _MINHASH,
+    "corpus_index.shingle_n": _MINHASH,
+    "incremental_dedup.id_col": _COLUMN,
+    "incremental_dedup.text_col": _COLUMN,
+    "incremental_dedup.shingle_n": _MINHASH,
+    "incremental_dedup.num_hashes": _MINHASH,
+    "incremental_dedup.bands": "the LSH banding; maintenance_stream forwards",
+    "commit_batch.id_col": _COLUMN,
+    "commit_batch.text_col": _COLUMN,
+    "commit_batch.shingle_n": _MINHASH,
+    "commit_batch.num_hashes": _MINHASH,
+    "maintenance_stream.id_col": _COLUMN,
+    "maintenance_stream.text_col": _COLUMN,
+    "maintenance_stream.threshold": "None: exact-only ticks",
+    "maintenance_stream.shingle_n": _MINHASH,
+    "maintenance_stream.num_hashes": _MINHASH,
+    "maintenance_stream.bands": "the LSH banding of the minhash probe",
+    "maintenance_stream.within_batch": "'exact'/'none' skip within-batch work",
+    "maintenance_stream.interval_s": "the trigger grid of a live stream",
+    "maintenance_stream.max_files_per_tick": "bounds a backlogged tick",
+    "prepare_training_corpus.id_col": _COLUMN,
+    "prepare_training_corpus.text_col": _COLUMN,
+    "prepare_training_corpus.languages": "the language gate's keep set",
+    "prepare_training_corpus.min_quality": "the quality gate's bound",
+    "prepare_training_corpus.jaccard_threshold": "the near-dup bound",
+    "prepare_training_corpus.semantic_threshold": "the SemDeDup bound",
+    "prepare_training_corpus.semantic_clusters": "the SemDeDup codebook size",
+    "prepare_training_corpus.decontam_ngram": "the eval-overlap n-gram",
+    "prepare_training_corpus.collect_counts": "False skips the counts' cache",
+}
+
 
 def _mentions(node: ast.AST) -> set[str]:
     out = set()
@@ -87,10 +130,14 @@ def _package() -> tuple[dict[str, list[tuple[str, ast.AST]]], set[str]]:
     return defs, live
 
 
+def _roots() -> list[ast.AST]:
+    return [ast.parse(root.read_text()) for root in ROOTS]
+
+
 def test_every_public_name_is_reached_or_listed():
     defs, live = _package()
-    for root in ROOTS:
-        live |= _mentions(ast.parse(root.read_text()))
+    for tree in _roots():
+        live |= _mentions(tree)
     todo, reached = list(live & defs.keys()), set()
     while todo:
         name = todo.pop()
@@ -107,3 +154,39 @@ def test_every_public_name_is_reached_or_listed():
     assert not UNREACHED.keys() - unreached, (
         "reached or gone now; drop them from UNREACHED: "
         f"{sorted(UNREACHED.keys() - unreached)}")
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return (f.id if isinstance(f, ast.Name)
+            else f.attr if isinstance(f, ast.Attribute) else None)
+
+
+def test_every_driver_option_is_set_by_a_root_or_listed():
+    """An optional parameter stays only when a user path passes it (by
+    keyword, or by position) or ``UNSET_OPTIONS`` says why it stays."""
+    calls = [n for tree in _roots() for n in ast.walk(tree)
+             if isinstance(n, ast.Call)]
+    unset = set()
+    for mod, names in DRIVERS.items():
+        path = PKG.joinpath(*mod.split(".")).with_suffix(".py")
+        for fn in ast.parse(path.read_text()).body:
+            if not (isinstance(fn, ast.FunctionDef) and fn.name in names):
+                continue
+            a = fn.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            optional = positional[len(positional) - len(a.defaults):]
+            optional += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                         if d is not None]
+            passed = set()
+            for call in calls:
+                if _callee(call) == fn.name:
+                    passed |= {k.arg for k in call.keywords}
+                    passed |= set(positional[:len(call.args)])
+            unset |= {f"{fn.name}.{p}" for p in optional if p not in passed}
+    assert not unset - UNSET_OPTIONS.keys(), (
+        "no user path sets these options; delete them or say in "
+        f"UNSET_OPTIONS why they stay: {sorted(unset - UNSET_OPTIONS.keys())}")
+    assert not UNSET_OPTIONS.keys() - unset, (
+        "set by a user path or gone now; drop them from UNSET_OPTIONS: "
+        f"{sorted(UNSET_OPTIONS.keys() - unset)}")

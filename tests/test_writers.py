@@ -107,6 +107,22 @@ def test_merge_upsert_idempotent_replay(spark, tmp_path):
     assert got == {1: 9.0, 2: 2.0}
 
 
+def test_merge_upsert_into_missing_target_writes_the_updates(spark,
+                                                            tmp_path):
+    """A missing target counts as an empty table: the first merge writes
+    the updates (an empty batch writes an empty table), and replaying
+    them changes nothing."""
+    path = str(tmp_path / "target")
+    updates = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double")
+    assert merge_upsert(spark, path, updates, ["id"]) == 2
+    assert merge_upsert(spark, path, updates, ["id"]) == 2
+    got = {r.id: r.v for r in spark.read.parquet(path).collect()}
+    assert got == {1: 1.0, 2: 2.0}
+    empty = str(tmp_path / "empty")
+    assert merge_upsert(spark, empty, updates.limit(0), ["id"]) == 0
+    assert spark.read.parquet(empty).count() == 0
+
+
 def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
     import glob
 
@@ -124,7 +140,8 @@ def test_swap_raises_and_keeps_temp_when_rename_fails(spark, tmp_path,
     """A rename that returns false (the Hadoop FileSystem reports
     failure by result, not by exception) must fail the commit and leave
     the fully written temp dir in place, named in the error — never a
-    row count for a table that is gone."""
+    row count for a table that is gone. A merge into the missing target
+    then raises too, and leaves the leftover whole."""
     import pytest
 
     from serverless_data_pipeline_spark.operators import util
@@ -163,6 +180,11 @@ def test_swap_raises_and_keeps_temp_when_rename_fails(spark, tmp_path,
     with pytest.raises(RuntimeError, match="target__merge"):
         merge_upsert(spark, target, updates, ["id"])
     monkeypatch.undo()
+    assert rows(target + "__merge") == [1, 2]
+    # The target is gone and the leftover holds the whole table: the
+    # next merge must not take the target for new and overwrite it.
+    with pytest.raises(RuntimeError, match="target__merge"):
+        merge_upsert(spark, target, updates, ["id"])
     assert rows(target + "__merge") == [1, 2]
 
 
