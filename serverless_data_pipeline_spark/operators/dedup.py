@@ -26,7 +26,7 @@ __all__ = [
     "minhash_signatures", "minhash_lsh_pairs",
     "simhash", "simhash_pairs", "ngram_jaccard_pairs",
     "embedding_neardup_pairs", "semantic_dedup", "neardup_components",
-    "dedupe_by_components", "lsh_plan", "corpus_jaccard",
+    "dedupe_by_components", "corpus_jaccard",
     "corpus_jaccard_minhash", "duplicate_ngram_fraction",
 ]
 
@@ -92,35 +92,38 @@ def _ceil_mul(col, num: int, den: int):
 
 # ---------------------------------------------------------------- MinHash
 
-def _check_bands(num_hashes: int, bands: int) -> None:
-    """LSH cuts a signature into ``bands`` equal bands: ``bands`` must
-    divide ``num_hashes`` (a remainder would go unbanded, and more bands
-    than hashes would give empty bands every doc shares)."""
-    if num_hashes < 1 or bands < 1 or num_hashes % bands:
-        raise ValueError(f"bands={bands} must divide num_hashes="
-                         f"{num_hashes} into equal, non-empty bands")
+# The one MinHash/LSH shape: word 3-gram shingles, 8 bands of 4 hashes.
+# It is the persisted index's format, not a per-call choice: a probe
+# reads signatures the index stored, so both must share it. A pair of
+# Jaccard s becomes an LSH candidate with P = 1 - (1 - s^4)^8: 0.19 /
+# 0.40 / 0.67 / 0.985 at s = 0.4 / 0.5 / 0.6 / 0.8 (the S-curve of
+# Leskovec et al., "Mining of Massive Datasets" 3.4.3), so the default
+# 0.5-0.6 thresholds sit on its steep part.
+_SHINGLE_N = 3
+_BANDS = 8
+_ROWS_PER_BAND = 4
+_NUM_HASHES = _BANDS * _ROWS_PER_BAND
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       num_hashes: int = 32, shingle_n: int = 3) -> DataFrame:
-    """Per-document MinHash signature (``id_col``, ``sig``): shingle ->
-    num_hashes seeded xxhash64 values -> column-wise min, packed into
-    one ``binary`` of 2 x num_hashes bytes (see ``_minhash_sig``). One
-    explode + one groupBy(id): linear in total shingle count, never
-    pairwise.
+def minhash_signatures(df: DataFrame, id_col: str,
+                       text_col: str) -> DataFrame:
+    """Per-document MinHash signature (``id_col``, ``sig``): word
+    3-gram shingles -> 32 seeded xxhash64 values -> column-wise min,
+    packed into one 64-byte ``binary`` (see ``_minhash_sig``; the shape
+    is the module's ``_SHINGLE_N``/``_NUM_HASHES``). One explode + one
+    groupBy(id): linear in total shingle count, never pairwise.
 
     The variable-length shingle string is hashed ONCE to a long; the
-    num_hashes family then re-hashes that fixed 8-byte value with the
+    hash family then re-hashes that fixed 8-byte value with the
     seed (collision only on a 2^-64 base-hash collision). Measured at the
     10x scale_check corpus: 5.0 s -> 4.1 s warm vs hashing the string
     per seed — the per-seed hash cost is width-bound."""
-    shingled = (_shingled(df, id_col, text_col, shingle_n)
+    shingled = (_shingled(df, id_col, text_col, _SHINGLE_N)
                 .select(F.col(id_col), F.xxhash64("__sh").alias("__h0")))
-    return shingled.groupBy(id_col).agg(
-        _minhash_sig("__h0", num_hashes).alias("sig"))
+    return shingled.groupBy(id_col).agg(_minhash_sig("__h0").alias("sig"))
 
 
-def _minhash_sig(h0_col: str, num_hashes: int):
+def _minhash_sig(h0_col: str):
     """The packed MinHash signature aggregate over a column of base
     shingle hashes: seed i re-hashes the 8-byte base hash, and bytes
     2i..2i+1 of the ``binary`` result hold the LOW 16 bits of the group
@@ -136,22 +139,19 @@ def _minhash_sig(h0_col: str, num_hashes: int):
     build at 32 hashes), the string one parse."""
     return F.expr("unhex(concat(" + ", ".join(
         f"lpad(hex(min(xxhash64(`{h0_col}`, {i})) & 65535), 4, '0')"
-        for i in range(num_hashes)) + "))")
+        for i in range(_NUM_HASHES)) + "))")
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
-                      num_hashes: int = 32, bands: int = 8,
-                      shingle_n: int = 3,
                       jaccard_threshold: float = 0.5,
                       materialize_signatures: bool = False) -> DataFrame:
-    """X2 — MinHash+LSH near-dup pairs. Band the signature (bands ×
-    rows_per_band), bucket-join on (band_id, band bytes), then verify
-    candidates with the estimated Jaccard (matching minhash fraction).
-    ``bands`` must divide ``num_hashes`` (``ValueError`` otherwise).
+    """X2 — MinHash+LSH near-dup pairs. Band the signature (8 bands of 4
+    hashes: the module's fixed shape), bucket-join on (band_id, band
+    bytes), then verify candidates with the estimated Jaccard (matching
+    minhash fraction).
 
-    Signatures are 16-bit b-bit MinHash (``_minhash_sig``): 2 x
-    num_hashes bytes per doc (64 B at the default 32 hashes) instead of
-    num_hashes longs, so every banded row carries a 4x narrower ``sig``
+    Signatures are 16-bit b-bit MinHash (``_minhash_sig``): 64 bytes per
+    doc instead of 32 longs, so every banded row carries a 4x narrower ``sig``
     through the candidate shuffle. The change is one-sided: every pair
     the 64-bit minima would find is still found, with a ``jaccard_est``
     that is never lower; a pair gains at most an accidental 2^-16 match
@@ -160,12 +160,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     Returns (id_a, id_b, jaccard_est) with id_a < id_b. Cost: shingling
     scan + one self-join restricted to identical band buckets — the
     textbook sub-quadratic dedup used on web-scale corpora."""
-    _check_bands(num_hashes, bands)
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    sig = minhash_signatures(df, id_col, text_col)
     if materialize_signatures:
-        # Checkpoint the COMPACT per-doc signature (2 x num_hashes
-        # bytes/doc) so both join sides read it instead of re-running
-        # the shingle scan. Measured sf0.1 plain-docs scan: cold 5.7s ->
+        # Checkpoint the COMPACT per-doc signature (64 bytes/doc) so
+        # both join sides read it instead of re-running the shingle
+        # scan. Measured sf0.1 plain-docs scan: cold 5.7s ->
         # 2.7s, warm 2.0 -> 1.7. This is the right level — the r2
         # measurement that read 2.5x SLOWER materialized the BANDED
         # frame (x bands rows, sig carried per row), paying the width it
@@ -180,15 +179,15 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     # compact signature frame above measured ~2x FASTER cold. At cluster
     # scale, signatures reused across many queries belong in a persisted
     # parquet index (operators/incremental.corpus_index) instead.
-    return _banded_pairs(sig, None, num_hashes, bands, jaccard_threshold)
+    return _banded_pairs(sig, None, jaccard_threshold)
 
 
-def _banded_pairs(a: DataFrame, b: DataFrame | None, num_hashes: int,
-                  bands: int, threshold: float) -> DataFrame:
+def _banded_pairs(a: DataFrame, b: DataFrame | None,
+                  threshold: float) -> DataFrame:
     """The banded-LSH join over STORED signatures: ``a`` and ``b`` are
     (id, sig) frames, id first, ``sig`` a packed ``_minhash_sig`` of
-    ``num_hashes`` 16-bit values. Each signature is cut into ``bands``
-    byte slices of num_hashes // bands values; docs sharing a (band,
+    ``_NUM_HASHES`` 16-bit values. Each signature is cut into ``_BANDS``
+    byte slices of ``_ROWS_PER_BAND`` values; docs sharing a (band,
     slice) bucket are candidates — the slice is the key, nothing is
     re-hashed — verified by the estimated Jaccard (the fraction of equal
     2-byte values).
@@ -197,13 +196,13 @@ def _banded_pairs(a: DataFrame, b: DataFrame | None, num_hashes: int,
     and id_b from ``b``; ``b=None`` pairs ``a`` with itself, id_a < id_b.
     A NULL sig (a doc with no shingles) is never banded. The one banding
     scheme of ``minhash_lsh_pairs`` and the incremental index probe."""
-    width = 2 * (num_hashes // bands)
+    width = 2 * _ROWS_PER_BAND
 
     def banded(sigs: DataFrame) -> DataFrame:
         bks = [F.struct(F.lit(band).alias("band"),
                         F.substring("sig", band * width + 1, width)
                         .alias("bsig"))
-               for band in range(bands)]
+               for band in range(_BANDS)]
         return (sigs.filter(F.col("sig").isNotNull())
                 .select(F.col(sigs.columns[0]).alias("__id"), "sig",
                         F.explode(F.array(*bks)).alias("bk"))
@@ -220,9 +219,9 @@ def _banded_pairs(a: DataFrame, b: DataFrame | None, num_hashes: int,
     if b is None:
         cand = cand.filter(F.col("id_a") < F.col("id_b"))
     est = F.expr(
-        f"size(filter(sequence(1, {2 * num_hashes - 1}, 2), "
+        f"size(filter(sequence(1, {2 * _NUM_HASHES - 1}, 2), "
         f"i -> substring(sig_a, i, 2) = substring(sig_b, i, 2)))"
-    ).cast("double") / F.lit(float(num_hashes))
+    ).cast("double") / F.lit(float(_NUM_HASHES))
     return (cand.dropDuplicates(["id_a", "id_b"])
             .withColumn("jaccard_est", est)
             .filter(F.col("jaccard_est") >= threshold)
@@ -1019,51 +1018,6 @@ def _arrow_frame(spark, pdf, schema) -> DataFrame:
 
     return spark.createDataFrame(
         pa.Table.from_pandas(pdf, preserve_index=False), schema)
-
-
-def lsh_plan(threshold: float, max_hashes: int = 256,
-             fn_weight: float = 1.0) -> dict:
-    """Choose MinHash-LSH parameters (bands b, rows-per-band r) for a
-    target Jaccard ``threshold`` — the standard S-curve planner (Leskovec
-    et al., "Mining of Massive Datasets" §3.4.3): a pair with similarity
-    s collides with probability ``1 - (1 - s^r)^b``, and the curve's
-    steepest point sits near ``(1/b)^(1/r)``.
-
-    Searches every (b, r) with ``b*r <= max_hashes`` and minimizes
-    ``fn_weight * P(miss at s=threshold) + P(hit at s=threshold/2)`` —
-    false negatives at the threshold traded against false positives at
-    half the threshold (candidate pairs cost one verification join each;
-    misses are silent, hence ``fn_weight`` defaults them equal). Returns
-    ``{bands, rows_per_band, num_hashes, s_half_power, p_collision_at_t,
-    p_collision_at_half}`` ready to pass to ``minhash_lsh_pairs``.
-
-    Driver-side pure arithmetic over at most ``max_hashes * sqrt(max_
-    hashes)`` candidates — nothing touches the cluster; call once when
-    configuring a 100 TB dedup run."""
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    if max_hashes < 2:
-        raise ValueError("max_hashes must be >= 2")
-    best = None
-    for r in range(1, max_hashes + 1):
-        for b in range(1, max_hashes // r + 1):
-            if b * r < 2:
-                continue
-            p_t = 1.0 - (1.0 - threshold ** r) ** b
-            p_half = 1.0 - (1.0 - (threshold / 2.0) ** r) ** b
-            cost = fn_weight * (1.0 - p_t) + p_half
-            key = (cost, b * r)      # fewer hashes tie-breaks cheaper
-            if best is None or key < best[0]:
-                best = (key, b, r, p_t, p_half)
-    _, b, r, p_t, p_half = best
-    return {
-        "bands": b,
-        "rows_per_band": r,
-        "num_hashes": b * r,
-        "s_half_power": (1.0 / b) ** (1.0 / r),
-        "p_collision_at_t": p_t,
-        "p_collision_at_half": p_half,
-    }
 
 
 def corpus_jaccard(a: DataFrame, b: DataFrame, text_col: str = "text",

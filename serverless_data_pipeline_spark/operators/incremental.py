@@ -31,7 +31,7 @@ Scale shape per stage (batch B << corpus C):
   a small batch, broadcastable.
 - features: ONE pass over the exact survivors' text (shingle explode +
   groupBy(id, fp)) computes the signal the probe reads (``sig``: a
-  packed 16-bit MinHash, 2 x num_hashes bytes/doc; or ``shset``/``sz``)
+  packed 16-bit MinHash, 64 bytes/doc; or ``shset``/``sz``)
   into a compact (id, fp, signal) checkpoint. Every later stage — the
   index probe, the within-batch pairs and the commit's index rows —
   reads that leaf; no stage re-shingles the batch (the within-batch
@@ -47,8 +47,16 @@ Scale shape per stage (batch B << corpus C):
 - commit: one broadcast anti-join merge (merge_upsert) + an APPEND of
   |survivors| index rows holding exactly the signals the index stores
   (a new index stores the one its probe reads: for ``probe="minhash"``
-  an index row is an 8-byte id, a 16-byte fp and a 2 x num_hashes-byte
-  sig — |C| x 88 bytes at 32 hashes, ~95 B/doc as snappy parquet).
+  an index row is an 8-byte id, a 16-byte fp and a 64-byte sig —
+  |C| x 88 bytes, ~95 B/doc as snappy parquet).
+
+The shingle n and the MinHash/LSH shape are the constants of
+``operators.dedup`` (word 3-grams, 8 bands of 4 hashes), shared by the
+corpus day's ``minhash_lsh_pairs``, the probe and every index row, so a
+tick can never write or read an index at another shape. The index does
+not record its shape, and a ``sig`` width cannot be checked without a
+job: an index written at another shape must be rebuilt with
+``corpus_index``.
 
 Day 1 is no special case: with no index yet, a batch is probed against
 nothing (``index=None``: the within-batch stages only) and committed
@@ -75,7 +83,7 @@ from serverless_data_pipeline_spark.functions.text import (
 # minhash_lsh_pairs is re-exported: perfbench/layers.py times it under
 # this module's name.
 from serverless_data_pipeline_spark.operators.dedup import (  # noqa: F401
-    _banded_pairs, _check_bands, _minhash_sig, _tokens_of,
+    _SHINGLE_N, _banded_pairs, _minhash_sig, _tokens_of,
     minhash_lsh_pairs, neardup_components, ngram_jaccard_pairs,
 )
 from serverless_data_pipeline_spark.operators.util import (
@@ -126,8 +134,7 @@ def _check_packed(schema: StructType) -> None:
 
 
 def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
-              store: tuple[str, ...], shingle_n: int,
-              num_hashes: int) -> DataFrame:
+              store: tuple[str, ...]) -> DataFrame:
     """(``id_col``, ``fp``, the ``store`` signal columns): one row per
     (id, fingerprint) of ``df``, from ONE read of it — tokens, distinct
     shingles, one explode and one groupBy(id, fp) feed every signal; the
@@ -145,13 +152,13 @@ def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
     toks = _spread(df.select(F.col(id_col), F.col(fp_col).alias("fp"),
                              _tokens_of(df, text_col).alias("__toks")))
     sh = toks.select(id_col, "fp", F.explode_outer(F.array_distinct(
-        shingles_from_tokens("__toks", shingle_n))).alias("__sh"))
+        shingles_from_tokens("__toks", _SHINGLE_N))).alias("__sh"))
     sh = sh.select(id_col, "fp", F.when(F.col("__sh").isNotNull(),
                                         F.xxhash64("__sh")).alias("__h0"))
     aggs = []
     if "minhash" in store:
         aggs.append(F.when(F.count("__h0") > 0,
-                           _minhash_sig("__h0", num_hashes)).alias("sig"))
+                           _minhash_sig("__h0")).alias("sig"))
     if "shingles" in store:
         shset = F.sort_array(F.collect_set("__h0"))
         aggs += [shset.alias("shset"), F.size(shset).alias("sz")]
@@ -160,7 +167,6 @@ def _features(df: DataFrame, id_col: str, fp_col: str, text_col: str,
 
 def corpus_index(df: DataFrame, id_col: str = "doc_id",
                  text_col: str = "text", *,
-                 num_hashes: int = 32, shingle_n: int = 3,
                  probe: str = "exact") -> DataFrame:
     """The persisted per-document dedup index frame: one row per corpus
     document with the signal ``incremental_dedup(probe=...)`` reads, so
@@ -169,14 +175,14 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
     Columns: ``id_col``, ``fp`` (the 16-byte binary md5 of
     case/whitespace-normalized text — the X1 exact-dup fingerprint), and
     the ``probe`` signal:
-    - ``"minhash"``: ``sig``, ``num_hashes`` 16-bit MinHash values over
-      word ``shingle_n``-grams packed into one ``binary`` (see
-      ``operators.dedup._minhash_sig``) — the 100 TB probe signal,
-      ``2 * num_hashes`` bytes/doc regardless of document size. With
-      the 8-byte id that is 88 B/doc at 32 hashes (~95 B/doc written as
-      snappy parquet; a hex ``fp`` and ``array<long>`` ``sig`` measured
-      297 B/doc).
-    - ``"exact"``: ``shset`` (sorted distinct xxhash64 shingle hashes)
+    - ``"minhash"``: ``sig``, 32 16-bit MinHash values over word
+      3-grams packed into one ``binary`` (see
+      ``operators.dedup._minhash_sig``; the shape is that module's
+      constants) — the 100 TB probe signal, 64 bytes/doc regardless of
+      document size. With the 8-byte id that is 88 B/doc (~95 B/doc
+      written as snappy parquet; a hex ``fp`` and ``array<long>``
+      ``sig`` measured 297 B/doc).
+    - ``"exact"``: ``shset`` (sorted distinct xxhash64 word-3-gram hashes)
       + ``sz`` — supports EXACT-Jaccard probing; ~8 bytes per distinct
       shingle, i.e. comparable to the compressed text itself. Use it
       when exactness matters more than index size (it is also the
@@ -185,11 +191,7 @@ def corpus_index(df: DataFrame, id_col: str = "doc_id",
     One read: a shingle explode and one groupBy(id, fp), with no join.
     Append-only by design: committing a new batch appends its
     survivors' rows (``commit_batch``), never rewrites existing ones."""
-    store = _probe_signal(probe)
-    if probe == "minhash" and num_hashes < 1:
-        raise ValueError(f"num_hashes={num_hashes} must be >= 1")
-    return _index_rows(df, None, id_col, text_col, store, shingle_n,
-                       num_hashes)
+    return _index_rows(df, None, id_col, text_col, _probe_signal(probe))
 
 
 def _probe_jaccard(cur: DataFrame, index: DataFrame, id_col: str,
@@ -216,16 +218,13 @@ def _probe_jaccard(cur: DataFrame, index: DataFrame, id_col: str,
 @dataclass
 class _Run:
     """One dedup run: the lazy verdicts, the exact survivors' features —
-    a checkpoint of (id, fp, the ``store`` signals computed with
-    ``shingle_n``/``num_hashes``), None when no near-dup stage ran — and
-    the checkpoint leaves the verdicts read (release them once the
-    verdicts are materialized)."""
+    a checkpoint of (id, fp, the ``store`` signals), None when no
+    near-dup stage ran — and the checkpoint leaves the verdicts read
+    (release them once the verdicts are materialized)."""
 
     verdicts: DataFrame
     features: DataFrame | None
     store: tuple[str, ...]
-    shingle_n: int
-    num_hashes: int
     leaves: list
 
 
@@ -245,7 +244,6 @@ def _carrying(verdicts: DataFrame, run: _Run | None) -> DataFrame:
 
 def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
            text_col: str, probe: str, threshold: float | None,
-           shingle_n: int, num_hashes: int, bands: int,
            within_batch: str) -> _Run:
     """``incremental_dedup``'s stages; see there."""
     signal = _probe_signal(probe)
@@ -254,8 +252,6 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
                          f"'none', got {within_batch!r}")
     wb_exact = within_batch in ("full", "exact")
     wb_neardup = within_batch == "full"
-    if probe == "minhash":
-        _check_bands(num_hashes, bands)
     if index is not None:
         _check_packed(index.schema)
         missing = {"fp"} - set(index.columns)
@@ -294,8 +290,7 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
         # probe, the within-batch signature pairs and the commit's index
         # rows all read it, and the batch is read no more often than
         # the fp joins already read it.
-        features = _features(cur, id_col, "__fp", text_col, signal,
-                             shingle_n, num_hashes)
+        features = _features(cur, id_col, "__fp", text_col, signal)
         features = features.localCheckpoint(eager=True)
         leaves.append(features)
         live = features
@@ -303,8 +298,7 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
         hits = (_probe_jaccard(features, index, id_col, threshold)
                 if probe == "exact" else
                 _banded_pairs(features.select(id_col, "sig"),
-                              index.select(id_col, "sig"), num_hashes,
-                              bands, threshold)
+                              index.select(id_col, "sig"), threshold)
                 .select(F.col("id_a").alias(id_col)).distinct())
         # materialized once: the pairs below and every execution of the
         # verdicts read the hits instead of re-running the probe
@@ -314,11 +308,10 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
         cur = cur.join(hits, id_col, "left_anti")
         live = live.join(hits, id_col, "left_anti")
     if wb_neardup and threshold is not None:
-        pairs = (ngram_jaccard_pairs(cur, id_col, text_col, n=shingle_n,
+        pairs = (ngram_jaccard_pairs(cur, id_col, text_col, n=_SHINGLE_N,
                                      threshold=threshold)
                  if probe == "exact" else
-                 _banded_pairs(live.select(id_col, "sig"), None,
-                               num_hashes, bands, threshold))
+                 _banded_pairs(live.select(id_col, "sig"), None, threshold))
         comp = neardup_components(pairs)
         leaves.append(comp)
         _drop(comp.filter(F.col("id") != F.col("component_id"))
@@ -331,33 +324,27 @@ def _dedup(batch: DataFrame, index: DataFrame | None, id_col: str,
         for d in dropped[1:]:
             reasons = reasons.unionAll(d)
         verdicts = batch.join(reasons, id_col, "left")
-    return _Run(verdicts, features, signal, shingle_n, num_hashes, leaves)
+    return _Run(verdicts, features, signal, leaves)
 
 
 def _index_rows(survivors: DataFrame, run: _Run | None, id_col: str,
-                text_col: str, store: tuple[str, ...], shingle_n: int,
-                num_hashes: int) -> DataFrame:
+                text_col: str, store: tuple[str, ...]) -> DataFrame:
     """The index rows of ``survivors`` holding the ``store`` signals:
-    their rows of the run's feature leaf when it holds those signals
-    computed with the same parameters (no text is read), else one
-    feature pass over their text."""
+    their rows of the run's feature leaf when it holds those signals (no
+    text is read), else one feature pass over their text."""
     if (run is not None and run.features is not None
-            and set(store) <= set(run.store)
-            and (run.shingle_n, run.num_hashes) == (shingle_n, num_hashes)):
+            and set(store) <= set(run.store)):
         rows = run.features.join(survivors.select(id_col), id_col,
                                  "left_semi")
     else:
         rows = _features(survivors.withColumn("__fp", _fp(text_col)),
-                         id_col, "__fp", text_col, store, shingle_n,
-                         num_hashes)
+                         id_col, "__fp", text_col, store)
     return rows.select(id_col, "fp", *_signal_cols(store))
 
 
 def incremental_dedup(batch: DataFrame, index: DataFrame | None,
                       id_col: str = "doc_id", text_col: str = "text", *,
                       probe: str = "exact", threshold: float | None = 0.5,
-                      shingle_n: int = 3, num_hashes: int = 32,
-                      bands: int = 8,
                       within_batch: str = "full") -> DataFrame:
     """Dedup a NEW batch against a PERSISTED corpus index without
     rescanning the corpus. Returns ``batch`` + ``drop_reason`` (NULL for
@@ -382,10 +369,12 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
     a separate X2 pass, or when probe-vs-index latency matters more),
     ``"none"`` (probe-only, for a batch already deduped upstream).
 
-    ``probe="minhash"`` needs ``bands`` to divide ``num_hashes``, and an
-    index that predates packed signatures (a string ``fp``, an
-    ``array<long>`` ``sig``) is refused: both raise ``ValueError`` at
-    the call, before any job runs.
+    Both probes, and the within-batch pairs, use ``operators.dedup``'s
+    fixed shape (word 3-grams; for ``"minhash"``, 8 bands of 4 hashes),
+    the one ``corpus_index`` and ``commit_batch`` write. An index that
+    predates packed signatures (a string ``fp``, an ``array<long>``
+    ``sig``) is refused with a ``ValueError`` at the call, before any
+    job runs.
 
     When a near-dup stage runs, the exact survivors and their probe
     signal are computed once into a checkpoint that stages 3-4 read, and
@@ -397,7 +386,7 @@ def incremental_dedup(batch: DataFrame, index: DataFrame | None,
     (property-tested) — the storage-layer analogue of the reference's
     redelivery discipline (py:133-137)."""
     run = _dedup(batch, index, id_col, text_col, probe, threshold,
-                 shingle_n, num_hashes, bands, within_batch)
+                 within_batch)
     return _carrying(run.verdicts, run)
 
 
@@ -415,8 +404,7 @@ def _stored_signals(spark, index_path: str) -> tuple[str, ...] | None:
 
 def commit_batch(spark, verdicts: DataFrame, corpus_path: str,
                  index_path: str, id_col: str = "doc_id",
-                 text_col: str = "text", *, shingle_n: int = 3,
-                 num_hashes: int = 32) -> int:
+                 text_col: str = "text") -> int:
     """Commit a batch: merge its survivors into the corpus (merge_upsert
     — idempotent under re-delivery) and APPEND their index rows. Returns
     the merged corpus row count. The index append writes |survivors|
@@ -447,8 +435,8 @@ def commit_batch(spark, verdicts: DataFrame, corpus_path: str,
     survivors = verdicts.filter(F.col("drop_reason").isNull()) \
         .drop("drop_reason")
     n = merge_upsert(spark, corpus_path, survivors, keys=[id_col])
-    _index_rows(survivors, run, id_col, text_col, store, shingle_n,
-                num_hashes).write.mode("append").parquet(index_path)
+    _index_rows(survivors, run, id_col, text_col,
+                store).write.mode("append").parquet(index_path)
     return n
 
 
@@ -458,9 +446,6 @@ def maintenance_stream(spark, landing_path: str, schema,
                        id_col: str = "doc_id", text_col: str = "text",
                        probe: str = "exact",
                        threshold: float | None = 0.5,
-                       shingle_n: int = 3, num_hashes: int = 32,
-                       bands: int = 8,
-                       within_batch: str = "full",
                        verdict_path: str | None = None,
                        available_now: bool = True,
                        interval_s: float = 3600.0,
@@ -471,13 +456,13 @@ def maintenance_stream(spark, landing_path: str, schema,
     Each tick's micro-batch is exactly the files landed since the last
     tick (checkpointed file source — restart-safe, never re-reads old
     landings). Every tick runs the same two steps: it probes the
-    PERSISTED index (`incremental_dedup`; corpus text is never
-    rescanned, and before the first commit there is no index, so the
-    batch is only deduped internally), then merges the survivors and
-    appends their index rows (`commit_batch` — merge_upsert keyed on
-    ``id_col``, so the at-least-once foreachBatch contract is safe: a
-    re-delivered tick re-drops everything as `exact_index` and merges
-    nothing new). Optionally appends a per-tick verdict audit log (id,
+    PERSISTED index (`incremental_dedup` with every within-batch stage;
+    corpus text is never rescanned, and before the first commit there is
+    no index, so the batch is only deduped internally), then merges the
+    survivors and appends their index rows (`commit_batch` — merge_upsert
+    keyed on ``id_col``, so the at-least-once foreachBatch contract is
+    safe: a re-delivered tick re-drops everything as `exact_index` and
+    merges nothing new). Optionally appends a per-tick verdict audit log (id,
     drop_reason, tick_id) to ``verdict_path`` — the ops trail of WHY
     each landed doc was kept or dropped.
 
@@ -514,16 +499,14 @@ def maintenance_stream(spark, landing_path: str, schema,
             return
         fs, jpath = hadoop_fs(spark, index_path)
         idx = spark.read.parquet(index_path) if fs.exists(jpath) else None
-        found = incremental_dedup(
-            batch_df, idx, id_col, text_col, probe=probe,
-            threshold=threshold, shingle_n=shingle_n,
-            num_hashes=num_hashes, bands=bands, within_batch=within_batch)
+        found = incremental_dedup(batch_df, idx, id_col, text_col,
+                                  probe=probe, threshold=threshold)
         run = _run_of(found)
         # audit log must see the same verdicts commit acts on, not
         # recompute them against a by-then-mutated index
         verdicts = _carrying(found.localCheckpoint(eager=True), run)
         commit_batch(spark, verdicts, corpus_path, index_path, id_col,
-                     text_col, shingle_n=shingle_n, num_hashes=num_hashes)
+                     text_col)
         if verdict_path is not None:
             (verdicts.select(F.col(id_col), F.col("drop_reason"),
                              F.lit(tick_id).alias("tick_id"))

@@ -834,7 +834,7 @@ def sign_lsh_plan(target_recall: float, cos_sim: float, *,
                   max_tables: int = 16, planes_range: tuple[int, int] = (4, 16),
                   max_multiprobe: int = 3) -> dict:
     """Parameter planner for the sign-LSH index (the cosine-side
-    sibling of ``lsh_plan``'s MinHash S-curve): given the cosine of
+    sibling of the MinHash banding S-curve): given the cosine of
     the neighbors you must find and a target recall, choose
     (n_tables, n_planes, multiprobe) minimizing probe cost.
 

@@ -49,8 +49,7 @@ from serverless_data_pipeline_spark.operators.util import (
 @dataclass
 class CorpusResult:
     """`cached` lists the frames `prepare_training_corpus` cached: the
-    passage output (with `passage_k`, when counts are collected or
-    embeddings given) and `clean` itself (when counts are collected).
+    passage output (with `passage_k`) and `clean` itself.
     `checkpoints` lists the stage boundaries it materialized as
     local-checkpoint leaves (the exact- and near-dup survivors; with
     embeddings, the gated rows and SemDeDup's dropped ids) and the
@@ -94,11 +93,14 @@ def prepare_training_corpus(docs: DataFrame, *,
                             semantic_dim: int | None = None,
                             max_dup_ngram_ratio: float | None = None,
                             eval_docs: DataFrame | None = None,
-                            decontam_ngram: int = 5,
-                            collect_counts: bool = True) -> CorpusResult:
+                            decontam_ngram: int = 5) -> CorpusResult:
     """docs(doc_id, text, ...) -> deduped, language- and quality-filtered
     corpus + per-language token statistics.
 
+    Near-dup pairs are `minhash_lsh_pairs` at `jaccard_threshold`, in
+    `operators.dedup`'s one MinHash shape (word 3-grams, 8 bands of 4
+    hashes) — the shape the maintenance tick's index stores, so a pair
+    this day finds is the pair a tick's probe finds.
     `exact_clusters=True` replaces the greedy edge-drop near-dup policy
     with true connected components (keep the min doc id per transitive
     cluster) — a few extra shuffle rounds, exact cluster semantics.
@@ -151,24 +153,22 @@ def prepare_training_corpus(docs: DataFrame, *,
     until `CorpusResult.unpersist()` releases the leaves (or an
     executor holding their blocks is lost).
 
-    With `collect_counts=True`, `clean` is cached too: `counts["clean"]`
-    fills the cache, and the caller's `clean` write and `stats` read it
-    instead of re-running the anti-join. Every other count rides a job
-    that runs anyway: the input, exact and near counts are
-    `Observation`s on their checkpoint jobs, each at or above the root
-    of its join so that AQE's pruning of an empty join side cannot drop
-    it (an empty day counts zeros), the passage count is its
-    cache fill, and the semantic count is the passage count less the
-    size of the dropped-id leaf (an `Observation` on its checkpoint;
-    ids key docs). No stage runs just to be counted. All of these are
-    CALLER-owned (see `CorpusResult`)."""
+    `counts` holds every stage's row count. `clean` is cached too:
+    `counts["clean"]` fills the cache, and the caller's `clean` write
+    and `stats` read it instead of re-running the anti-join (or the
+    gates). Every other count rides a job that runs anyway: the input,
+    exact and near counts are `Observation`s on their checkpoint jobs,
+    each at or above the root of its join so that AQE's pruning of an
+    empty join side cannot drop it (an empty day counts zeros), the
+    passage count is its cache fill, and the semantic count is the
+    passage count less the size of the dropped-id leaf (an
+    `Observation` on its checkpoint; ids key docs). No stage runs just
+    to be counted. All of these are CALLER-owned (see `CorpusResult`)."""
     # Each count rides a job that runs anyway: an Observation on the
     # frame a checkpoint job materializes sees each of its rows once.
     seen: dict[str, Observation] = {}
 
     def counted(df: DataFrame, name: str) -> DataFrame:
-        if not collect_counts:
-            return df
         seen[name] = Observation()
         return df.observe(seen[name], F.count(F.lit(1)).alias("n"))
 
@@ -179,7 +179,6 @@ def prepare_training_corpus(docs: DataFrame, *,
     # checkpoint job at the root of a left join that carries every doc
     # (ids key docs): AQE prunes an inner join with an empty side, and
     # with it any Observation below, whose count then never arrives.
-    # Uncounted, the filter turns the left join back into the inner one.
     keep_exact = (docs.select(id_col, fingerprint(text_col).alias("__fp"))
                   .filter(F.col("__fp").isNotNull())
                   .groupBy("__fp").agg(F.min(id_col).alias(id_col))
@@ -235,16 +234,14 @@ def prepare_training_corpus(docs: DataFrame, *,
                  .withColumn(text_col,
                              F.coalesce("__ptext", F.col(text_col)))
                  .drop("__ptext"))
-        if collect_counts or embeddings is not None:
-            # The pipeline's most expensive stage, read by the count, the
-            # gates and the semantic semi-join: cached, and filled by the
-            # count before the branches below start, so neither of them
-            # runs it. A cache, not a checkpoint: AQE may not coalesce a
-            # cached plan's join, so the gates keep its id-hash
-            # partitions.
-            stage = stage.cache()
-            cached.append(stage)
-            n_passage = stage.count()
+        # The pipeline's most expensive stage, read by the count, the
+        # gates and the semantic semi-join: cached, and filled by the
+        # count before the branches below start, so neither of them runs
+        # it. A cache, not a checkpoint: AQE may not coalesce a cached
+        # plan's join, so the gates keep its id-hash partitions.
+        stage = stage.cache()
+        cached.append(stage)
+        n_passage = stage.count()
 
     # language + quality gates (single narrow pass each)
     lang_ok = (language_id(stage, text_col)
@@ -309,28 +306,24 @@ def prepare_training_corpus(docs: DataFrame, *,
         # anti-join the DROPPED set so docs without an embedding survive
         clean = gated.join(dropped, id_col, "left_anti")
 
-    if collect_counts:
-        # read three times (the count below, the caller's write, the
-        # stats pass): the gates (or the anti-join of the two leaves)
-        # run once.
-        clean = clean.cache()
-        cached.append(clean)
+    # read three times (the count below, the caller's write, the stats
+    # pass): the gates (or the anti-join of the two leaves) run once.
+    clean = clean.cache()
+    cached.append(clean)
 
     stats = token_stats(clean.withColumn("__lang_group", F.lit("corpus")),
                         text_col, group_col="__lang_group") \
         .withColumnRenamed("__lang_group", "corpus")
 
-    counts = {}
-    if collect_counts:
-        counts = {name: obs.get["n"] for name, obs in seen.items()}
-        n_dropped = counts.pop("semantic_drops", 0)
-        if passage_k is not None:
-            counts["after_passage_dedup"] = n_passage
-        if embeddings is not None:
-            # the dropped ids are distinct live ids, and ids key docs
-            counts["after_semantic_dedup"] = (
-                counts.get("after_passage_dedup",
-                           counts["after_near_dedup"]) - n_dropped)
-        counts["clean"] = clean.count()
+    counts = {name: obs.get["n"] for name, obs in seen.items()}
+    n_dropped = counts.pop("semantic_drops", 0)
+    if passage_k is not None:
+        counts["after_passage_dedup"] = n_passage
+    if embeddings is not None:
+        # the dropped ids are distinct live ids, and ids key docs
+        counts["after_semantic_dedup"] = (
+            counts.get("after_passage_dedup", counts["after_near_dedup"])
+            - n_dropped)
+    counts["clean"] = clean.count()
     return CorpusResult(clean=clean, stats=stats, counts=counts,
                         cached=cached, checkpoints=checkpoints)

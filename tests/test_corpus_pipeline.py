@@ -61,20 +61,17 @@ def test_corpus_pipeline_repetition_and_decontamination_stages(spark):
         "doc_id long, text string")
 
     base = prepare_training_corpus(res_docs, languages=("en",),
-                                   min_quality=0.5, jaccard_threshold=0.5,
-                                   collect_counts=False)
+                                   min_quality=0.5, jaccard_threshold=0.5)
     assert sorted(r.doc_id for r in base.clean.collect()) == [1, 2, 3]
 
     rep = prepare_training_corpus(res_docs, languages=("en",),
                                   min_quality=0.5, jaccard_threshold=0.5,
-                                  max_dup_ngram_ratio=0.5,
-                                  collect_counts=False)
+                                  max_dup_ngram_ratio=0.5)
     assert sorted(r.doc_id for r in rep.clean.collect()) == [1, 2]
 
     full = prepare_training_corpus(res_docs, languages=("en",),
                                    min_quality=0.5, jaccard_threshold=0.5,
-                                   max_dup_ngram_ratio=0.5, eval_docs=ev,
-                                   collect_counts=False)
+                                   max_dup_ngram_ratio=0.5, eval_docs=ev)
     assert sorted(r.doc_id for r in full.clean.collect()) == [2]
 
 
@@ -124,8 +121,7 @@ def test_corpus_pipeline_passage_keeps_tokenless_docs(spark):
     docs = spark.createDataFrame(
         [(1, GOOD), (2, "   ")], "doc_id long, text string")
     res = prepare_training_corpus(docs, languages=("en",), min_quality=0.0,
-                                  jaccard_threshold=0.9, passage_k=8,
-                                  collect_counts=True)
+                                  jaccard_threshold=0.9, passage_k=8)
     assert res.counts["after_passage_dedup"] == 2
 
 
@@ -140,10 +136,9 @@ def test_corpus_pipeline_null_text_path_parity(spark):
         [(1, GOOD), (2, None)], "doc_id long, text string")
     with_passage = prepare_training_corpus(
         docs, languages=("en",), min_quality=0.0, jaccard_threshold=0.9,
-        passage_k=8, collect_counts=True)
+        passage_k=8)
     without = prepare_training_corpus(
-        docs, languages=("en",), min_quality=0.0, jaccard_threshold=0.9,
-        collect_counts=True)
+        docs, languages=("en",), min_quality=0.0, jaccard_threshold=0.9)
     assert ({r.doc_id for r in with_passage.clean.collect()}
             == {r.doc_id for r in without.clean.collect()})
     # and the stage itself keeps a NULL-text row that reaches it
@@ -172,8 +167,7 @@ def test_corpus_pipeline_unpersist_releases_stage_caches(spark,
     before = _persisted_rdds(spark)
     res = prepare_training_corpus(docs, languages=("en",), min_quality=0.0,
                                   jaccard_threshold=0.5, passage_k=8,
-                                  exact_clusters=exact_clusters,
-                                  collect_counts=True)
+                                  exact_clusters=exact_clusters)
     assert res.counts["after_near_dedup"] == 2      # 1 and 2 are a pair
     assert _persisted_rdds(spark) - before
     res.unpersist()
@@ -260,8 +254,7 @@ GATES = {"languages": ("en",), "min_quality": 0.3,
          "max_dup_ngram_ratio": 0.2}
 
 
-def _every_stage_run(spark, collect_counts, docs=None,
-                     emb_rows=EVERY_STAGE_EMB):
+def _every_stage_run(spark, docs=None, emb_rows=EVERY_STAGE_EMB):
     if docs is None:
         docs = spark.createDataFrame(EVERY_STAGE_DOCS,
                                      "doc_id long, text string")
@@ -270,8 +263,7 @@ def _every_stage_run(spark, collect_counts, docs=None,
     ev = spark.createDataFrame(EVAL_DOCS, "doc_id long, text string")
     return prepare_training_corpus(
         docs, jaccard_threshold=0.5, exact_clusters=True, passage_k=8,
-        embeddings=emb, eval_docs=ev, collect_counts=collect_counts,
-        **SEMANTIC, **GATES)
+        embeddings=emb, eval_docs=ev, **SEMANTIC, **GATES)
 
 
 def test_semantic_branch_beside_gates_equals_sequential_order(spark):
@@ -285,7 +277,7 @@ def test_semantic_branch_beside_gates_equals_sequential_order(spark):
 
     emb_rows = EVERY_STAGE_EMB + [(15, [1.0, 0.0012, 0.0, 0.1]),
                                   (16, [1.0, 0.0008, 0.0, 0.1])]
-    res = _every_stage_run(spark, True, emb_rows=emb_rows)
+    res = _every_stage_run(spark, emb_rows=emb_rows)
     got = ({tuple(r) for r in res.clean.collect()},
            [tuple(r) for r in res.stats.collect()])
 
@@ -356,7 +348,7 @@ def test_prepare_training_corpus_computes_each_stage_once(spark, tmp_path):
             .withColumn("text", read_text("text")))
     clean_p, stats_p = str(tmp_path / "clean"), str(tmp_path / "stats")
     res, prep_jobs = _jobs_in_group(
-        spark, "corpus-prepare", lambda: _every_stage_run(spark, True, docs))
+        spark, "corpus-prepare", lambda: _every_stage_run(spark, docs))
     # the counts filled the clean cache: the write reads it, not the
     # gate chain and the eval broadcast
     scan = res.clean._jdf.queryExecution().executedPlan()
@@ -381,12 +373,14 @@ def test_prepare_training_corpus_computes_each_stage_once(spark, tmp_path):
     stats = [tuple(r) for r in spark.read.parquet(stats_p).collect()]
     res.unpersist()
 
-    lazy = _every_stage_run(spark, False)
+    # a second run over the plain input reads the same rows and stats
+    # from its own caches as the first run's writes committed
+    again = _every_stage_run(spark)
     try:
-        assert {tuple(r) for r in lazy.clean.collect()} == rows
-        assert [tuple(r) for r in lazy.stats.collect()] == stats
+        assert {tuple(r) for r in again.clean.collect()} == rows
+        assert [tuple(r) for r in again.stats.collect()] == stats
     finally:
-        lazy.unpersist()
+        again.unpersist()
     assert {r[0] for r in rows} == {10, 11}
     assert res.counts == EVERY_STAGE_COUNTS
     assert res.counts["clean"] == len(rows) == stats[0][1]

@@ -105,7 +105,7 @@ def test_minhash_sig_sql_string_equals_column_form(spark):
         F.lpad(F.hex(F.min(F.xxhash64(F.col("h0"), F.lit(i)))
                      .bitwiseAND(F.lit(0xFFFF))), 4, "0")
         for i in range(32)]))
-    got = h0.groupBy("g").agg(_minhash_sig("h0", 32).alias("a"),
+    got = h0.groupBy("g").agg(_minhash_sig("h0").alias("a"),
                               column_form.alias("b")).collect()
     assert len(got) == 5
     assert all(len(r.a) == 64 and bytes(r.a) == bytes(r.b) for r in got)
@@ -594,32 +594,6 @@ def test_semantic_dedup_above_sample_bound_runs_distributed(spark):
     out = semantic_dedup(df, "vec_id", "embedding", n_clusters=1)
     assert "FlatMapGroupsInPandas" in _plan_text(out)
     assert out.count() == 257
-
-
-def test_lsh_plan_scurve_properties():
-    from serverless_data_pipeline_spark.operators.dedup import lsh_plan
-    import pytest
-    for t in (0.5, 0.8, 0.9):
-        p = lsh_plan(t, max_hashes=64)
-        assert p["bands"] * p["rows_per_band"] == p["num_hashes"] <= 64
-        # threshold sits above the curve's midpoint, half-threshold below
-        assert p["p_collision_at_t"] > 0.85
-        assert p["p_collision_at_half"] < 0.3
-        assert p["p_collision_at_t"] > p["p_collision_at_half"]
-    # low thresholds separate worse at fixed hash budget, but the curve
-    # must still order correctly
-    p3 = lsh_plan(0.3, max_hashes=64)
-    assert p3["p_collision_at_t"] > p3["p_collision_at_half"]
-    # tighter threshold -> more rows per band (steeper curve)
-    assert (lsh_plan(0.9, 64)["rows_per_band"]
-            > lsh_plan(0.4, 64)["rows_per_band"])
-    # weighting false negatives harder must not lower collision at t
-    assert (lsh_plan(0.8, 64, fn_weight=5.0)["p_collision_at_t"]
-            >= lsh_plan(0.8, 64, fn_weight=1.0)["p_collision_at_t"])
-    with pytest.raises(ValueError):
-        lsh_plan(0.0)
-    with pytest.raises(ValueError):
-        lsh_plan(0.5, max_hashes=1)
 
 
 def test_corpus_jaccard_exact(spark):

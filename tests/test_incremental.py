@@ -279,6 +279,33 @@ def test_minhash_verdicts_on_every_drop_reason(spark, against, store):
     assert _verdicts(v) == MH_VERDICTS[against]
 
 
+def test_corpus_day_pairs_are_the_ticks_index_hits(spark):
+    """The corpus day and the tick share one MinHash shape: at threshold
+    t, the batch docs ``minhash_lsh_pairs`` pairs with an index doc are
+    exactly those ``incremental_dedup(probe="minhash")`` drops as
+    neardup_index against that side's ``corpus_index``. Batch docs
+    100+k are doc 1 without its first k words (3-gram Jaccard
+    (24 - k) / 24), so some estimates sit near t."""
+    from serverless_data_pipeline_spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    t = 0.6
+    index = _docs(spark, MH_INDEX)
+    batch = _docs(spark, [(100 + k, " ".join(_SEA[k:]))
+                          for k in (2, 6, 9, 10, 11, 16)]
+                  + [(200, MH_BATCH[-1][1])])
+    pairs = minhash_lsh_pairs(index.unionByName(batch), "doc_id", "text",
+                              jaccard_threshold=t)
+    # index ids are below every batch id, so a cross pair is (index, batch)
+    paired = {r.id_b for r in pairs.collect() if r.id_a < 100 <= r.id_b}
+    v = _verdicts(incremental_dedup(
+        batch, corpus_index(index, probe="minhash"), probe="minhash",
+        threshold=t))
+    assert paired == {i for i, r in v.items() if r == "neardup_index"}
+    assert 102 in paired and not paired & {116, 200}
+
+
 def _jobs_in_group(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -495,21 +522,17 @@ def test_minhash_stream_stores_signatures_and_releases_its_checkpoints(
 
 
 def test_index_stores_packed_fp_and_signature(spark):
-    """fp is the md5's 16 raw bytes and sig packs num_hashes 16-bit
-    values into 2 x num_hashes bytes; a doc with no shingles has a NULL
-    sig."""
+    """fp is the md5's 16 raw bytes and sig packs 32 16-bit values into
+    64 bytes; a doc with no shingles has a NULL sig."""
     from pyspark.sql.types import BinaryType
 
-    for num_hashes in (32, 16):
-        idx = corpus_index(_docs(spark, MH_INDEX + [(9, "")]),
-                           num_hashes=num_hashes, probe="minhash")
-        assert isinstance(idx.schema["fp"].dataType, BinaryType)
-        assert isinstance(idx.schema["sig"].dataType, BinaryType)
-        got = {r.doc_id: (r.fp_len, r.sig_len) for r in idx.select(
-            "doc_id", F.length("fp").alias("fp_len"),
-            F.length("sig").alias("sig_len")).collect()}
-        assert got == {**{i: (16, 2 * num_hashes) for i, _ in MH_INDEX},
-                       9: (16, None)}
+    idx = corpus_index(_docs(spark, MH_INDEX + [(9, "")]), probe="minhash")
+    assert isinstance(idx.schema["fp"].dataType, BinaryType)
+    assert isinstance(idx.schema["sig"].dataType, BinaryType)
+    got = {r.doc_id: (r.fp_len, r.sig_len) for r in idx.select(
+        "doc_id", F.length("fp").alias("fp_len"),
+        F.length("sig").alias("sig_len")).collect()}
+    assert got == {**{i: (16, 64) for i, _ in MH_INDEX}, 9: (16, None)}
 
 
 @pytest.mark.parametrize("old", ["fp", "sig"])
@@ -538,27 +561,3 @@ def test_old_format_index_raises_before_any_write(spark, tmp_path, old):
     with pytest.raises(ValueError, match=msg):
         commit_batch(spark, verdicts, corpus_dir, old_dir)
     assert sorted(glob.glob(str(tmp_path / "*" / "*"))) == files
-
-
-def test_bands_must_divide_num_hashes(spark):
-    """A band count that does not split the signature evenly raises,
-    naming both numbers, before any job runs: 30 hashes in 8 bands would
-    leave 6 unbanded, and 8 bands of 4 hashes would be empty."""
-    from serverless_data_pipeline_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    df = _docs(spark, MH_BATCH)
-    for num_hashes, bands in ((30, 8), (4, 8), (32, 0)):
-        msg = f"bands={bands}.*num_hashes={num_hashes}"
-        with pytest.raises(ValueError, match=msg):
-            minhash_lsh_pairs(df, "doc_id", "text", num_hashes=num_hashes,
-                              bands=bands)
-        with pytest.raises(ValueError, match=msg):
-            incremental_dedup(df, None, probe="minhash",
-                              num_hashes=num_hashes, bands=bands)
-    with pytest.raises(ValueError, match="num_hashes=0"):
-        corpus_index(df, num_hashes=0, probe="minhash")
-    # 30 hashes split evenly into 5 bands of 6
-    assert incremental_dedup(df, None, probe="minhash", num_hashes=30,
-                             bands=5).count() == len(MH_BATCH)

@@ -1,7 +1,7 @@
 """Every public top-level name in the package is reached from a user path,
 or is listed in ``UNREACHED`` with the reason it stays; and every optional
 parameter of the corpus drivers is set by a user path, or is listed in
-``UNSET_OPTIONS`` with the reason it stays.
+``UNSET_OPTIONS`` with one of three fixed reasons it stays.
 
 Roots are what users run: ``__spark_entry__.py``, ``bench.py``,
 ``scripts/`` and ``perfbench/`` (its self-tests excluded). Tests are not
@@ -35,7 +35,6 @@ UNREACHED = {
     "operators.corpus.packing_stream": "versioned commit protocol",
     "operators.corpus.unpack_token_blocks": "inverse tests check packing by",
     "operators.dedup.corpus_jaccard_minhash": "X2 corpus-level estimate",
-    "operators.dedup.lsh_plan": "X2 S-curve (bands, rows) planner",
     "operators.relational.sessionize": "batch form of ST5 session windows",
     "operators.sketches.cms_merge": "G Count-Min sketch merge",
     "operators.urls.canonicalize_url": "X18 URL curation",
@@ -51,43 +50,36 @@ UNREACHED = {
 
 # the corpus drivers whose optional parameters are guarded, by module
 DRIVERS = {
+    "operators.dedup": ("minhash_signatures", "minhash_lsh_pairs"),
     "operators.incremental": ("corpus_index", "incremental_dedup",
                               "commit_batch", "maintenance_stream"),
     "plans.corpus_pipeline": ("prepare_training_corpus",),
 }
 
+# The only reasons an option no root sets may stay. A strategy choice
+# (a shape, an arm, a flag) is none of them: it becomes a constant.
 _COLUMN = "names an input column"
-_MINHASH = "the MinHash shape; must match the index it probes or extends"
+_DEPLOYMENT = "when or how much a live stream reads"
+_CURATION_BOUND = "a data-policy bound the corpus owner sets"
+REASONS = {_COLUMN, _DEPLOYMENT, _CURATION_BOUND}
 UNSET_OPTIONS = {
-    "corpus_index.num_hashes": _MINHASH,
-    "corpus_index.shingle_n": _MINHASH,
     "incremental_dedup.id_col": _COLUMN,
     "incremental_dedup.text_col": _COLUMN,
-    "incremental_dedup.shingle_n": _MINHASH,
-    "incremental_dedup.num_hashes": _MINHASH,
-    "incremental_dedup.bands": "the LSH banding; maintenance_stream forwards",
     "commit_batch.id_col": _COLUMN,
     "commit_batch.text_col": _COLUMN,
-    "commit_batch.shingle_n": _MINHASH,
-    "commit_batch.num_hashes": _MINHASH,
     "maintenance_stream.id_col": _COLUMN,
     "maintenance_stream.text_col": _COLUMN,
-    "maintenance_stream.threshold": "None: exact-only ticks",
-    "maintenance_stream.shingle_n": _MINHASH,
-    "maintenance_stream.num_hashes": _MINHASH,
-    "maintenance_stream.bands": "the LSH banding of the minhash probe",
-    "maintenance_stream.within_batch": "'exact'/'none' skip within-batch work",
-    "maintenance_stream.interval_s": "the trigger grid of a live stream",
-    "maintenance_stream.max_files_per_tick": "bounds a backlogged tick",
+    "maintenance_stream.threshold": _CURATION_BOUND,
+    "maintenance_stream.interval_s": _DEPLOYMENT,
+    "maintenance_stream.max_files_per_tick": _DEPLOYMENT,
     "prepare_training_corpus.id_col": _COLUMN,
     "prepare_training_corpus.text_col": _COLUMN,
-    "prepare_training_corpus.languages": "the language gate's keep set",
-    "prepare_training_corpus.min_quality": "the quality gate's bound",
-    "prepare_training_corpus.jaccard_threshold": "the near-dup bound",
-    "prepare_training_corpus.semantic_threshold": "the SemDeDup bound",
-    "prepare_training_corpus.semantic_clusters": "the SemDeDup codebook size",
-    "prepare_training_corpus.decontam_ngram": "the eval-overlap n-gram",
-    "prepare_training_corpus.collect_counts": "False skips the counts' cache",
+    "prepare_training_corpus.languages": _CURATION_BOUND,
+    "prepare_training_corpus.min_quality": _CURATION_BOUND,
+    "prepare_training_corpus.jaccard_threshold": _CURATION_BOUND,
+    "prepare_training_corpus.semantic_threshold": _CURATION_BOUND,
+    "prepare_training_corpus.semantic_clusters": _CURATION_BOUND,
+    "prepare_training_corpus.decontam_ngram": _CURATION_BOUND,
 }
 
 
@@ -164,7 +156,12 @@ def _callee(call: ast.Call) -> str | None:
 
 def test_every_driver_option_is_set_by_a_root_or_listed():
     """An optional parameter stays only when a user path passes it (by
-    keyword, or by position) or ``UNSET_OPTIONS`` says why it stays."""
+    keyword, or by position) or ``UNSET_OPTIONS`` gives one of the
+    ``REASONS`` it stays."""
+    assert set(UNSET_OPTIONS.values()) <= REASONS, (
+        "an unset option stays only for a reason in REASONS; make the "
+        "others constants: "
+        f"{sorted(k for k, v in UNSET_OPTIONS.items() if v not in REASONS)}")
     calls = [n for tree in _roots() for n in ast.walk(tree)
              if isinstance(n, ast.Call)]
     unset = set()
